@@ -16,7 +16,9 @@ Semantics are pinned to the numpy path: same LUT tables (lut2 sentinel
 entry makes the window compare unconditionally false), same
 zero-padded-window tail guard (a match may not run past the buffer), and
 the caller segments the input identically, so tokenization is
-bit-reproducible whichever path runs.
+bit-reproducible whichever path runs.  Symbol-table training runs its
+whole loop in C (``p4s_fsst_train``), pinned to the numpy training loop
+the same way.
 """
 
 from __future__ import annotations
@@ -29,48 +31,19 @@ import tempfile
 
 _SRC = r"""
 #include <stdint.h>
+#include <stdlib.h>
 #include <string.h>
 
-/* Greedy FSST tokenization over one segment.
-   Tables are the SymbolTable code-indexed arrays (fsst.py):
+/* Greedy FSST tokenization of one segment fused with payload emission:
+   writes the encoded byte stream (code, or 255 + literal byte on a
+   1-byte-table miss) directly; identical output to fsst._tokenize ->
+   numpy assembly.  Tables are the SymbolTable code-indexed arrays
+   (fsst.py):
    lut1[256]  byte -> 1-byte symbol code, miss = 255 (escape);
    lut2[65536] 2-byte prefix -> multi-byte symbol code, miss = 254
               (sentinel: masks[254]=0, vals[254]=~0 -> compare false);
    lens[256] / vals[256] / masks[256] code -> length / value / mask.
-   Writes token (pos, len, code) triples; returns the token count. */
-long p4s_fsst_tokenize(
-    const uint8_t *data, long n,
-    const uint8_t *lut1, const uint8_t *lut2,
-    const int8_t *lens, const uint64_t *vals, const uint64_t *masks,
-    int64_t *out_pos, int64_t *out_len, int64_t *out_code)
-{
-    long i = 0, t = 0;
-    while (i < n) {
-        uint64_t win = 0;
-        long rem = n - i;
-        if (rem >= 8) {
-            memcpy(&win, data + i, 8);
-        } else {
-            memcpy(&win, data + i, (size_t)rem);
-        }
-        uint8_t c2 = lut2[(uint16_t)win];
-        int L = lens[c2];
-        if (((win & masks[c2]) == vals[c2]) && (i + L <= n)) {
-            out_pos[t] = i; out_len[t] = L; out_code[t] = c2;
-            i += L;
-        } else {
-            out_pos[t] = i; out_len[t] = 1; out_code[t] = lut1[data[i]];
-            i += 1;
-        }
-        t++;
-    }
-    return t;
-}
-
-/* Greedy tokenize + payload emission fused: writes the encoded byte
-   stream (code, or 255 + literal byte on a 1-byte-table miss) directly.
-   Identical output to tokenize -> numpy assembly.  out needs 2n bytes
-   worst case; returns the emitted length. */
+   out needs 2n bytes worst case; returns the emitted length. */
 long p4s_fsst_encode(
     const uint8_t *data, long n,
     const uint8_t *lut1, const uint8_t *lut2,
@@ -169,6 +142,204 @@ long p4s_fsst_encode2(
     }
     *ob_out = ob;
     return oa;
+}
+
+/* FSST symbol-table training (fsst.train_symbol_table), bit-identical to
+   the numpy path: per iteration, greedy-tokenize the sample with the
+   current table (256 KiB segments, tokens never span one), count every
+   token and every adjacent token pair of <= 8 bytes as a (value, length)
+   candidate, rank by gain = count x length desc, then length asc, then
+   value asc, keep only the best multi-byte symbol per 2-byte prefix and
+   take the first 254.  Table construction mirrors SymbolTable.__init__.
+   Candidates of 1 and 2 bytes are counted in direct-indexed arrays; only
+   the longer ones go through a hash table. */
+#define P4S_SEG (1L << 18)
+#define P4S_MAX_SYMBOLS 254
+#define P4S_SENTINEL 254
+
+typedef struct { uint64_t v; int64_t cnt; int64_t len; } p4s_cand;
+
+typedef struct {
+    p4s_cand *slots;  /* len == 0 marks an empty slot */
+    long cap, used;
+} p4s_ctab;
+
+typedef struct {
+    p4s_ctab t;         /* candidates of 3..8 bytes */
+    int64_t cnt1[256];  /* 1-byte candidates by value */
+    uint32_t *cnt2;     /* 2-byte candidates by value (65536) */
+} p4s_counts;
+
+static uint64_t p4s_len_mask(long L)
+{
+    return L >= 8 ? ~0ULL : ((1ULL << (8 * L)) - 1);
+}
+
+static long p4s_slot(const p4s_ctab *t, uint64_t v, long len)
+{
+    uint64_t h = v ^ ((uint64_t)len << 58);  /* splitmix64 finalizer */
+    h = (h ^ (h >> 30)) * 0xBF58476D1CE4E5B9ULL;
+    h = (h ^ (h >> 27)) * 0x94D049BB133111EBULL;
+    long i = (long)((h ^ (h >> 31)) & (uint64_t)(t->cap - 1));
+    while (t->slots[i].len && (t->slots[i].v != v || t->slots[i].len != len))
+        i = (i + 1) & (t->cap - 1);
+    return i;
+}
+
+static int p4s_ctab_grow(p4s_ctab *t)
+{
+    p4s_ctab g = {calloc((size_t)t->cap * 2, sizeof(p4s_cand)), t->cap * 2, t->used};
+    if (!g.slots) return -1;
+    for (long i = 0; i < t->cap; i++)
+        if (t->slots[i].len) g.slots[p4s_slot(&g, t->slots[i].v, t->slots[i].len)] = t->slots[i];
+    free(t->slots);
+    *t = g;
+    return 0;
+}
+
+static int p4s_count(p4s_counts *c, uint64_t v, long len)
+{
+    if (len == 1) { c->cnt1[v]++; return 0; }
+    if (len == 2) { c->cnt2[v]++; return 0; }
+    p4s_ctab *t = &c->t;
+    long i = p4s_slot(t, v, len);
+    if (t->slots[i].len) { t->slots[i].cnt++; return 0; }
+    t->slots[i].v = v; t->slots[i].len = len; t->slots[i].cnt = 1;
+    if (2 * ++t->used > t->cap) return p4s_ctab_grow(t);
+    return 0;
+}
+
+static int p4s_cand_rank(const void *pa, const void *pb)
+{
+    const p4s_cand *a = pa, *b = pb;
+    int64_t ga = a->cnt * a->len, gb = b->cnt * b->len;
+    if (ga != gb) return ga > gb ? -1 : 1;
+    if (a->len != b->len) return a->len < b->len ? -1 : 1;
+    if (a->v != b->v) return a->v < b->v ? -1 : 1;
+    return 0;
+}
+
+/* Keep the P4S_MAX_SYMBOLS best-ranked candidates offered so far in a
+   binary heap whose root is the worst of them. */
+static void p4s_heap_offer(p4s_cand *h, long *nh, const p4s_cand *c)
+{
+    long i;
+    if (*nh < P4S_MAX_SYMBOLS) {
+        i = (*nh)++;
+        while (i > 0 && p4s_cand_rank(c, &h[(i - 1) / 2]) > 0) {
+            h[i] = h[(i - 1) / 2];
+            i = (i - 1) / 2;
+        }
+        h[i] = *c;
+        return;
+    }
+    if (p4s_cand_rank(c, &h[0]) >= 0) return;
+    i = 0;
+    for (;;) {
+        long k = 2 * i + 1;
+        if (k >= *nh) break;
+        if (k + 1 < *nh && p4s_cand_rank(&h[k + 1], &h[k]) > 0) k++;
+        if (p4s_cand_rank(&h[k], c) <= 0) break;
+        h[i] = h[k];
+        i = k;
+    }
+    h[i] = *c;
+}
+
+static void p4s_fsst_tables(
+    const uint64_t *sv, const int64_t *sl, long ns,
+    uint8_t *lut1, uint8_t *lut2, int8_t *lens, uint64_t *vals, uint64_t *masks)
+{
+    memset(vals, 0, 256 * sizeof(uint64_t));
+    memset(lens, 0, 256);
+    for (long c = 0; c < ns; c++) { vals[c] = sv[c]; lens[c] = (int8_t)sl[c]; }
+    for (long c = 0; c < 256; c++) masks[c] = p4s_len_mask(lens[c]);
+    vals[P4S_SENTINEL] = ~0ULL; masks[P4S_SENTINEL] = 0; lens[P4S_SENTINEL] = 1;
+    memset(lut1, 255, 256);
+    memset(lut2, P4S_SENTINEL, 65536);
+    for (long c = 0; c < ns; c++) {
+        if (sl[c] == 1) {
+            lut1[sv[c] & 0xFF] = (uint8_t)c;
+        } else {
+            uint16_t prefix = (uint16_t)sv[c];
+            uint8_t cur = lut2[prefix];
+            if (cur == P4S_SENTINEL || lens[cur] < sl[c]) lut2[prefix] = (uint8_t)c;
+        }
+    }
+}
+
+/* Returns the symbol count written to out_vals/out_lens (capacity 254),
+   or -1 when an allocation fails. */
+long p4s_fsst_train(
+    const uint8_t *data, long n, long iterations,
+    uint64_t *out_vals, int64_t *out_lens)
+{
+    uint8_t lut1[256], lut2[65536];
+    int8_t lens[256];
+    uint64_t vals[256], masks[256];
+    p4s_cand heap[P4S_MAX_SYMBOLS];
+    long ns = 0, rc = -1;
+    uint32_t *best = malloc(65536 * sizeof(uint32_t));
+    p4s_counts c = {{calloc(1024, sizeof(p4s_cand)), 1024, 0}, {0}, malloc(65536 * sizeof(uint32_t))};
+    if (!best || !c.t.slots || !c.cnt2) goto done;
+    for (long it = 0; it < iterations; it++) {
+        p4s_fsst_tables(out_vals, out_lens, ns, lut1, lut2, lens, vals, masks);
+        memset(c.t.slots, 0, (size_t)c.t.cap * sizeof(p4s_cand));
+        c.t.used = 0;
+        memset(c.cnt1, 0, sizeof(c.cnt1));
+        memset(c.cnt2, 0, 65536 * sizeof(uint32_t));
+        uint64_t pv = 0;
+        long pl = 0;  /* previous token (pairs span segment boundaries) */
+        for (long s0 = 0; s0 < n; s0 += P4S_SEG) {
+            long end = n - s0 < P4S_SEG ? n : s0 + P4S_SEG;
+            long i = s0;
+            while (i < end) {
+                uint64_t win = 0;
+                long rem = end - i;
+                memcpy(&win, data + i, (size_t)(rem >= 8 ? 8 : rem));
+                uint8_t c2 = lut2[(uint16_t)win];
+                long L = lens[c2];
+                if (!(((win & masks[c2]) == vals[c2]) && (i + L <= end))) L = 1;
+                uint64_t v = win & p4s_len_mask(L);
+                if (p4s_count(&c, v, L)) goto done;
+                if (pl && pl + L <= 8 && p4s_count(&c, pv | (v << (8 * pl)), pl + L)) goto done;
+                pv = v; pl = L;
+                i += L;
+            }
+        }
+        /* the kept set is every 1-byte candidate plus the best-ranked
+           multi-byte candidate per 2-byte prefix; its first 254 in rank
+           order are the 254 best, held in a worst-on-top heap */
+        long nh = 0;
+        for (long b = 0; b < 256; b++) {
+            if (!c.cnt1[b]) continue;
+            p4s_cand one = {(uint64_t)b, c.cnt1[b], 1};
+            p4s_heap_offer(heap, &nh, &one);
+        }
+        memset(best, 0, 65536 * sizeof(uint32_t));
+        for (long i = 0; i < c.t.cap; i++) {
+            const p4s_cand *x = &c.t.slots[i];
+            if (!x->len) continue;
+            uint32_t *b = &best[(uint16_t)x->v];
+            if (!*b || p4s_cand_rank(x, &c.t.slots[*b - 1]) < 0) *b = (uint32_t)i + 1;
+        }
+        for (long p = 0; p < 65536; p++) {
+            p4s_cand two = {(uint64_t)p, c.cnt2[p], 2};
+            const p4s_cand *x = c.cnt2[p] ? &two : NULL;
+            if (best[p] && (!x || p4s_cand_rank(&c.t.slots[best[p] - 1], x) < 0))
+                x = &c.t.slots[best[p] - 1];
+            if (x) p4s_heap_offer(heap, &nh, x);
+        }
+        qsort(heap, (size_t)nh, sizeof(p4s_cand), p4s_cand_rank);
+        for (ns = 0; ns < nh; ns++) {
+            out_vals[ns] = heap[ns].v;
+            out_lens[ns] = heap[ns].len;
+        }
+    }
+    rc = ns;
+done:
+    free(best); free(c.t.slots); free(c.cnt2);
+    return rc;
 }
 
 /* Decode one FSST token payload segment: codes expand from the (256 x 8)
@@ -466,13 +637,6 @@ def get_kernel():
         return None
     try:
         lib = ctypes.CDLL(so)
-        lib.p4s_fsst_tokenize.restype = ctypes.c_long
-        lib.p4s_fsst_tokenize.argtypes = [
-            ctypes.c_void_p, ctypes.c_long,
-            ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-        ]
         lib.p4s_fsst_encode.restype = ctypes.c_long
         lib.p4s_fsst_encode.argtypes = [
             ctypes.c_void_p, ctypes.c_long,
@@ -486,6 +650,11 @@ def get_kernel():
             ctypes.c_void_p, ctypes.c_void_p,
             ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
             ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
+        ]
+        lib.p4s_fsst_train.restype = ctypes.c_long
+        lib.p4s_fsst_train.argtypes = [
+            ctypes.c_void_p, ctypes.c_long, ctypes.c_long,
+            ctypes.c_void_p, ctypes.c_void_p,
         ]
         lib.p4s_fsst_decode.restype = ctypes.c_long
         lib.p4s_fsst_decode.argtypes = [

@@ -169,43 +169,6 @@ def _table_ptrs(table: SymbolTable):
     )
 
 
-def _tokenize_native(data: np.ndarray, table: SymbolTable, lib) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """C-kernel tokenization (codecs/_native.py): the same greedy rule, the
-    same 256 KiB segmenting (tokens never span a segment boundary), so the
-    token stream is bit-identical to the numpy path's."""
-    import ctypes
-
-    n = len(data)
-    if n == 0:
-        empty = np.zeros(0, dtype=np.int64)
-        return empty, empty, empty
-    if not data.flags.c_contiguous:
-        data = np.ascontiguousarray(data)
-    cap = min(n, _SEGMENT)
-    buf_pos = np.empty(cap, dtype=np.int64)
-    buf_len = np.empty(cap, dtype=np.int64)
-    buf_code = np.empty(cap, dtype=np.int64)
-    p = lambda a: a.ctypes.data_as(ctypes.c_void_p)  # noqa: E731
-    tbl_ptrs = _table_ptrs(table)
-    pos_parts, len_parts, code_parts = [], [], []
-    for s0 in range(0, n, _SEGMENT):
-        seg = data[s0 : min(s0 + _SEGMENT, n)]
-        t = lib.p4s_fsst_tokenize(
-            p(seg), len(seg), *tbl_ptrs,
-            p(buf_pos), p(buf_len), p(buf_code),
-        )
-        pos_parts.append(buf_pos[:t] + s0)
-        len_parts.append(buf_len[:t].copy())
-        code_parts.append(buf_code[:t].copy())
-    if len(pos_parts) == 1:
-        return pos_parts[0], len_parts[0], code_parts[0]
-    return (
-        np.concatenate(pos_parts),
-        np.concatenate(len_parts),
-        np.concatenate(code_parts),
-    )
-
-
 def _tokenize(data: np.ndarray, table: SymbolTable) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Greedy left-to-right tokenization; returns (positions, lengths, codes).
 
@@ -214,20 +177,15 @@ def _tokenize(data: np.ndarray, table: SymbolTable) -> tuple[np.ndarray, np.ndar
     segment boundary: the _match tail guard rejects matches that would run
     past the segment, costing at most 7 escape bytes per 256 KiB.
 
-    Dispatches to the scalar C kernel when available (codecs/_native.py;
-    P4S_NO_NATIVE=1 forces this numpy path) — ~60% of the vectorized match
-    work lands on positions the greedy chain never visits, which no
-    full-array formulation can avoid.
+    The numpy path of fsst_encode and train_symbol_table (the C kernel,
+    codecs/_native.py, fuses tokenization into both; P4S_NO_NATIVE=1 forces
+    this path) — ~60% of the vectorized match work lands on positions the
+    greedy chain never visits, which no full-array formulation can avoid.
     """
     n = len(data)
     if n == 0:
         empty = np.zeros(0, dtype=np.int64)
         return empty, empty, empty
-    from . import _native
-
-    lib = _native.get_kernel()
-    if lib is not None:
-        return _tokenize_native(data, table, lib)
     if n <= _SEGMENT:
         win = _windows(data)
         match_len, c2, ok2 = _match(data, win, table)
@@ -425,6 +383,23 @@ def train_symbol_table(sample: bytes | np.ndarray, iterations: int = 4) -> Symbo
     table = SymbolTable(np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64))
     if len(arr) == 0:
         return table
+    from . import _native
+
+    lib = _native.get_kernel()
+    if lib is not None:
+        # the whole loop below in C (codecs/_native.py p4s_fsst_train):
+        # same tokenization, candidate pool, ranking and prefix rule, so
+        # the table is bit-identical; the numpy loop is the fallback
+        import ctypes
+
+        arr = np.ascontiguousarray(arr, dtype=np.uint8)
+        vals = np.empty(_MAX_SYMBOLS, dtype=np.uint64)
+        lens = np.empty(_MAX_SYMBOLS, dtype=np.int64)
+        p = lambda a: a.ctypes.data_as(ctypes.c_void_p)  # noqa: E731
+        k = lib.p4s_fsst_train(p(arr), len(arr), iterations, p(vals), p(lens))
+        if k < 0:
+            raise MemoryError(f"FSST training on a {len(arr)}-byte sample failed to allocate")
+        return SymbolTable(vals[:k], lens[:k])
     win = _windows(arr)
     for _ in range(iterations):
         pos, lens, codes = _tokenize(arr, table)

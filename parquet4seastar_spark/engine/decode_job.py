@@ -231,8 +231,9 @@ def prune_chunks(
     # construction with zero eager work -- an absent column simply prunes
     # nothing, and decode_table's schema discovery still raises on a column
     # that truly isn't in the table.  The drop set (pruned chunks only) is
-    # the smaller side, so the broadcast stays cheap at scale.
-    drop = ch.filter(~cond).select("part_key", "chunk_seq").distinct()
+    # the smaller side, so the broadcast stays cheap at scale; a left-anti
+    # join needs no deduplicated build side, so no aggregate runs over it.
+    drop = ch.filter(~cond).select("part_key", "chunk_seq")
     return encoded.join(F.broadcast(drop), ["part_key", "chunk_seq"], "left_anti")
 
 

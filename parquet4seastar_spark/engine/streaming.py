@@ -209,7 +209,10 @@ def _write_compaction_marker(sig_dir: str, batch_id: int, checkpoint_dir: str | 
 
 
 def near_dedup_store_view(
-    spark: SparkSession, sig_dir: str, exclude_batch: int | None = None
+    spark: SparkSession,
+    sig_dir: str,
+    exclude_batch: int | None = None,
+    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Latest-wins (doc_id, sig) view of a stream_near_dedup signature
     store.
@@ -227,7 +230,13 @@ def near_dedup_store_view(
     its previous attempt's leftover partition — in particular, a retried
     compaction batch whose snapshot committed but whose marker write
     crashed would otherwise scan the very path its compacted rewrite
-    overwrites (self-overwrite = wedged stream / store loss)."""
+    overwrites (self-overwrite = wedged stream / store loss).
+
+    ``checkpoint_dir``: the running stream's checkpoint.  When the marker
+    was written under a different checkpoint, the snapshot belongs to an
+    earlier stream lifecycle: batch ids restarted at 0, so every other
+    partition is newer than the snapshot whatever its batch id, and the
+    snapshot loses every latest-wins tie."""
     from pyspark.sql import Window
 
     parts = _committed_sig_parts(sig_dir)
@@ -239,7 +248,14 @@ def near_dedup_store_view(
     by_id = dict(parts)
     if snap is not None and snap in by_id:
         snap_df = spark.read.parquet(by_id[snap]).select("doc_id", "sig")
-        recent = [p for bid, p in parts if bid > snap]
+        other_lifecycle = (
+            checkpoint_dir is not None
+            and _compaction_marker(sig_dir, checkpoint_dir) is None
+        )
+        recent = [
+            p for bid, p in parts
+            if (bid != snap if other_lifecycle else bid > snap)
+        ]
         if not recent:
             return snap_df
         rec = spark.read.option("basePath", sig_dir).parquet(*recent)
@@ -306,7 +322,7 @@ def stream_near_dedup(
 
     ``compact_every=K`` rewrites the store latest-only every K batches:
     the compaction batch's partition becomes the whole-store snapshot,
-    older partitions are deleted, and ``_compaction.json`` records the
+    every other partition is deleted, and ``_compaction.json`` records the
     snapshot id — after which every store read windows only the
     post-snapshot partitions (bounded by K) and anti-joins the snapshot
     without shuffling it (see :func:`near_dedup_store_view`).  Ordering
@@ -337,7 +353,9 @@ def stream_near_dedup(
         # exclude_batch: a retried batch must never read its own previous
         # attempt's partition (and the compacted rewrite below must never
         # read the path it overwrites, in any crash state)
-        store = near_dedup_store_view(spark, sig_dir, exclude_batch=batch_id)
+        store = near_dedup_store_view(
+            spark, sig_dir, exclude_batch=batch_id, checkpoint_dir=checkpoint_dir
+        )
         if compacting:
             # the view feeds BOTH the pairs job and the compacted rewrite;
             # persist it for the batch so the full-store window+anti-join
@@ -366,8 +384,10 @@ def stream_near_dedup(
                     f"{sig_dir}/batch_id={batch_id}"
                 )
                 _write_compaction_marker(sig_dir, batch_id, checkpoint_dir)
+                # every other partition is folded into the snapshot,
+                # including an earlier lifecycle's with higher batch ids
                 for bid, path in _committed_sig_parts(sig_dir):
-                    if bid < batch_id:
+                    if bid != batch_id:
                         shutil.rmtree(path, ignore_errors=True)
             else:
                 new_sigs.write.mode("overwrite").parquet(

@@ -296,7 +296,7 @@ def embedding_near_dups(
     # of every raw candidate); past the cap candidates are deduplicated
     # BEFORE the shuffled vector joins, the 100 TB shape.
     dim_row = embeddings.select(F.size(F.col(vec_col))).first()
-    dim = int(dim_row[0] or 0)
+    dim = int(dim_row[0] or 0) if dim_row is not None else 0  # empty corpus
     broadcast_confirm = n_vectors * (dim * 8 + 24) <= 64 << 20
 
     def _dedup_cand(c: DataFrame) -> DataFrame:
@@ -379,7 +379,7 @@ def embedding_near_dups(
 
         rows = embeddings.select(id_col, vec_col).collect()
         ids_np = np.array([r[id_col] for r in rows], dtype=np.int64)
-        mat = np.array([r[vec_col] for r in rows], dtype=np.float64)
+        mat = np.array([r[vec_col] for r in rows], dtype=np.float64).reshape(len(rows), dim)
         order = np.argsort(ids_np)
         ids_sorted = ids_np[order]
         mat = mat[order]

@@ -76,12 +76,13 @@ def test_structured_roundtrip(seed):
 
 def test_native_numpy_parity_cross_segment():
     """The C kernel (codecs/_native.py) and the numpy path must produce
-    BYTE-IDENTICAL encodings — same greedy rule, same 256 KiB segment
-    boundary behavior — and decode each other's output.  Skips silently to
-    a numpy-vs-numpy self-check when no compiler is available."""
+    BYTE-IDENTICAL encodings and symbol tables — same greedy rule, same
+    256 KiB segment boundary behavior — and decode each other's output.
+    Skips silently to a numpy-vs-numpy self-check when no compiler is
+    available."""
     import os
 
-    from parquet4seastar_spark.codecs import _native, fsst
+    from parquet4seastar_spark.codecs import _native
 
     rng = np.random.default_rng(11)
     words = [b"request", b"response", b"the", b"href=", b"<div>", b"\x00\x01", b"error"]
@@ -103,8 +104,79 @@ def test_native_numpy_parity_cross_segment():
     assert enc_native == enc_numpy
     assert fsst_decode(enc_native) == data
     assert with_numpy(lambda: fsst_decode(enc_native)) == data
-    tok_n = fsst._tokenize(np.frombuffer(data, dtype=np.uint8), table)
-    tok_p = with_numpy(
-        lambda: fsst._tokenize(np.frombuffer(data, dtype=np.uint8), table)
-    )
-    assert all((a == b).all() for a, b in zip(tok_n, tok_p))
+    # training on a sample that spans two segments: same table either path
+    table_p = with_numpy(lambda: train_symbol_table(data[: (1 << 18) + 1000]))
+    table_n = train_symbol_table(data[: (1 << 18) + 1000])
+    assert np.array_equal(table_n.values, table_p.values)
+    assert np.array_equal(table_n.lengths, table_p.lengths)
+
+
+_TRAIN_PARITY = r"""
+import hashlib, json, sys
+import numpy as np
+from parquet4seastar_spark.codecs import _native, fsst
+from parquet4seastar_spark.codecs.pages import encode_chunk
+from parquet4seastar_spark.engine.generator import _gen_batch
+
+batch = _gen_batch(np.arange(3000, dtype=np.int64), 200, 42, 1.2)
+
+
+def payload(col):
+    return b"".join(v.encode() for v in batch.column(col).to_pylist() if v)
+
+
+samples = {
+    "empty": b"",
+    "one_byte": b"q",
+    "eight_identical": b"z" * 8,
+    "all_byte_values": bytes(range(256)),
+    "random_64k": np.random.default_rng(5).integers(0, 256, 1 << 16, dtype=np.uint8).tobytes(),
+    "content": payload("content")[: 1 << 16],
+    "content_two_segments": payload("content")[: (1 << 18) + 4099],
+    "path": payload("path")[: 1 << 15],
+    "commit": payload("commit")[: 1 << 15],
+}
+out = {"kernel": _native.get_kernel() is not None}
+for name, s in samples.items():
+    t = fsst.train_symbol_table(s)
+    out["train/" + name] = [t.values.tolist(), t.lengths.tolist()]
+for col in ("content", "path", "commit"):
+    for policy in ("auto", "FSST"):
+        c = encode_chunk(batch.column(col), policy=policy)
+        pages = hashlib.sha256(b"".join(p.data for p in c.pages)).hexdigest()
+        out[f"pages/{col}/{policy}"] = [pages, c.encodings]
+print(json.dumps(out))
+"""
+
+
+def test_train_symbol_table_native_numpy_parity():
+    """The C training kernel (codecs/_native.py p4s_fsst_train) must give
+    the numpy path's symbol table bit for bit -- same codes, values and
+    lengths -- on degenerate and real samples, and encode_chunk pages of
+    the source-repo text columns must be byte-identical whichever path
+    ran.  Each path runs in its own interpreter (P4S_NO_NATIVE=1 for the
+    fallback)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    def run(**env):
+        r = subprocess.run(
+            [sys.executable, "-c", _TRAIN_PARITY], capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            env={k: v for k, v in os.environ.items() if k != "P4S_NO_NATIVE"} | env,
+        )
+        assert r.returncode == 0, r.stderr
+        return json.loads(r.stdout)
+
+    native, numpy_path = run(), run(P4S_NO_NATIVE="1")
+    assert numpy_path.pop("kernel") is False
+    native.pop("kernel")  # False without a C compiler: numpy vs numpy
+    assert native.keys() == numpy_path.keys()
+    for key in native:
+        assert native[key] == numpy_path[key], key
+    assert native["train/empty"] == [[], []]
+    assert native["train/one_byte"] == [[ord("q")], [1]]
+    assert len(native["train/random_64k"][0]) == 254  # the symbol cap
+    assert native["pages/content/FSST"][1] == ["FSST"]

@@ -792,6 +792,18 @@ def test_embedding_near_dups_overflow_split_keeps_recall(spark, embeddings):
     assert pairs == {(i, i + 1000000) for i in range(5)}
 
 
+def test_embedding_near_dups_empty_corpus(spark, embeddings):
+    """An empty corpus gives an empty pair set (the dimension probe's
+    ``.first()`` returns no row), with auto-sized and with fixed bits."""
+    from parquet4seastar_spark.operators.similarity import embedding_near_dups
+
+    empty = embeddings.select("vec_id", "embedding").limit(0)
+    for bits in (None, 4):
+        out = embedding_near_dups(empty, threshold=0.9, bits=bits)
+        assert out.columns == ["id_a", "id_b", "cosine"]
+        assert out.collect() == []
+
+
 def test_auto_bits_scales_with_corpus():
     from parquet4seastar_spark.operators.similarity import auto_bits
 
@@ -1174,6 +1186,41 @@ def test_fsst_decode_rejects_trailing_escape_both_paths():
             cwd="/root/repo",
         )
         assert "RAISED" in r.stdout, r.stderr
+
+
+def test_store_view_snapshot_from_other_lifecycle(spark, tmp_path):
+    """A snapshot compacted under an earlier checkpoint is older than every
+    partition of the running stream, whose batch ids restarted at 0: the
+    new stream's batch 0 re-delivering a snapshot doc must win, and a
+    later batch must still win over batch 0."""
+    from parquet4seastar_spark.engine.streaming import (
+        _write_compaction_marker,
+        near_dedup_store_view,
+    )
+
+    sig_dir = str(tmp_path / "sigs")
+    schema = "doc_id long, sig array<long>"
+    spark.createDataFrame([(i, [5, i]) for i in range(4)], schema).write.parquet(
+        f"{sig_dir}/batch_id=5"
+    )
+    _write_compaction_marker(sig_dir, 5, str(tmp_path / "ckpt_old"))
+    spark.createDataFrame([(1, [0, 1]), (10, [0, 10])], schema).write.parquet(
+        f"{sig_dir}/batch_id=0"
+    )
+    spark.createDataFrame([(10, [1, 10])], schema).write.parquet(
+        f"{sig_dir}/batch_id=1"
+    )
+
+    def view(**kw):
+        return {r["doc_id"]: r["sig"] for r in near_dedup_store_view(spark, sig_dir, **kw).collect()}
+
+    got = view(checkpoint_dir=str(tmp_path / "ckpt_new"))
+    assert got == {0: [5, 0], 1: [0, 1], 2: [5, 2], 3: [5, 3], 10: [1, 10]}
+    # the same lifecycle (or no checkpoint given) keeps batch_id order:
+    # batches numbered below the snapshot are older than it
+    same = {0: [5, 0], 1: [5, 1], 2: [5, 2], 3: [5, 3]}
+    assert view(checkpoint_dir=str(tmp_path / "ckpt_old")) == same
+    assert view() == same
 
 
 def test_compaction_marker_checkpoint_identity(tmp_path):

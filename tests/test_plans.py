@@ -124,3 +124,39 @@ def test_top_terms_window_group_limit(spark):
 
     n_shuffles = len(re.findall(r"\bExchange hashpartitioning", plan))
     assert n_shuffles <= 2, plan
+
+
+def _subtree(plan: str, marker: str) -> str:
+    """The lines of the first ``marker`` node and of everything below it
+    in a printed plan (children are indented deeper than their parent)."""
+    lines = plan.splitlines()
+    start = next(i for i, ln in enumerate(lines) if marker in ln)
+    col = lines[start].index(marker)
+    out = [lines[start]]
+    for ln in lines[start + 1 :]:
+        body = ln.lstrip(" :|+-")
+        if not body or ln.index(body) <= col:
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
+def test_prune_chunks_broadcasts_drop_set_without_aggregate(spark, tmp_path):
+    # the left-anti join's build side is the drop set straight off the
+    # chunk rows: no distinct, so no aggregate (and no shuffle) under the
+    # broadcast
+    from parquet4seastar_spark.engine.decode_job import prune_chunks
+    from parquet4seastar_spark.engine.encode_job import encode_table
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").alias("row_id"), "n_chars", "source"
+    )
+    encode_table(
+        docs, columns=["n_chars"], policy="plain", salt_col="source", num_partitions=2
+    ).write.parquet(str(tmp_path / "pages"))
+    stored = spark.read.parquet(str(tmp_path / "pages"))
+    plan = _plan(prune_chunks(stored, "n_chars", gt=500))
+    assert "LeftAnti" in plan, plan
+    side = _subtree(plan, "BroadcastExchange")
+    assert "FileScan" in side, side
+    assert "Aggregate" not in side and "Exchange hashpartitioning" not in side, side
