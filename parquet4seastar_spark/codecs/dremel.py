@@ -10,7 +10,10 @@ numpy over arrow buffers -- no per-row Python.
 
 Level geometry (engine-internal): EVERY node is OPTIONAL, so the geometry
 is purely type-determined and stable across chunks regardless of observed
-nulls (constant def runs cost ~nothing under RLE):
+nulls (constant def runs cost ~nothing under RLE).  ``shred`` and
+``assemble_tree`` also take an ``opts`` map (token path -> OPTIONAL) for
+standard geometries with REQUIRED nodes, which add no def level (the
+optional +1 below drops out).  With every node OPTIONAL:
 
 - struct node:        +1 def (optional)
 - list node:          +2 def (optional + repeated), +1 rep
@@ -80,13 +83,25 @@ def _validity(arr: pa.Array, idx: np.ndarray) -> np.ndarray:
     return v
 
 
-def _expand(arr, idx, defs, reps, r0):
-    """List/map node: optional (+1 def) folded in, then the repeated level.
+def _node_validity(arr, idx, path, opts) -> tuple[np.ndarray, int]:
+    """(live-and-valid mask, def levels the node adds: 1 if OPTIONAL).
+    A REQUIRED node holding a null has no def level to record it in, so
+    it fails loudly instead of shredding to a wrong value."""
+    valid = _validity(arr, idx)
+    if opts.get(path, True):
+        return valid, 1
+    if arr.null_count and (valid != (idx >= 0)).any():
+        raise ValueError(f"node {path or '<root>'!r} is REQUIRED but holds nulls")
+    return valid, 0
+
+
+def _expand(arr, idx, defs, reps, r0, valid, opt):
+    """List/map node: its OPTIONAL level (+opt def) folded in, then the
+    repeated level.
 
     Returns (child_idx, child_defs, child_reps): one entry per element of
     non-empty slots, one entry for each dead/null/empty slot.
     """
-    valid = _validity(arr, idx)
     offs = np.asarray(arr.offsets).astype(np.int64)
     m = len(idx)
     L = np.zeros(m, dtype=np.int64)
@@ -103,16 +118,19 @@ def _expand(arr, idx, defs, reps, r0):
         g = L[exp]
         within = np.arange(int(g.sum()), dtype=np.int64) - np.repeat(np.cumsum(g) - g, g)
         child_idx[np.repeat(starts[exp], g) + within] = np.repeat(offs[idx[exp]], g) + within
-    # dead/null -> defs; present-but-empty -> defs+1; element entry -> defs+2
-    base = np.where(valid, np.where(L > 0, defs + 2, defs + 1), defs).astype(np.uint32)
+    # dead/null -> defs; present-but-empty -> defs+opt; element -> defs+opt+1
+    base = np.where(valid, np.where(L > 0, defs + opt + 1, defs + opt), defs).astype(np.uint32)
     child_defs = np.repeat(base, counts)
     child_reps = np.full(total, r0 + 1, dtype=np.uint32)
     child_reps[starts] = reps
     return child_idx, child_defs, child_reps
 
 
-def shred(arr: pa.Array | pa.ChunkedArray) -> list[Leaf]:
-    """Arrow array of ANY supported nesting -> per-leaf level streams."""
+def shred(arr: pa.Array | pa.ChunkedArray, opts: dict[str, bool] | None = None) -> list[Leaf]:
+    """Arrow array of ANY supported nesting -> per-leaf level streams.
+
+    ``opts`` maps a node's token path to whether it is OPTIONAL (the same
+    map ``assemble_tree`` takes); missing entries default to True."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
@@ -120,7 +138,7 @@ def shred(arr: pa.Array | pa.ChunkedArray) -> list[Leaf]:
     defs = np.zeros(n, dtype=np.uint32)
     reps = np.zeros(n, dtype=np.uint32)
     out: list[Leaf] = []
-    _walk(arr, idx, defs, reps, 0, 0, "", out, MAX_DEPTH)
+    _walk(arr, idx, defs, reps, 0, 0, "", out, MAX_DEPTH, opts or {})
     return out
 
 
@@ -128,37 +146,37 @@ def _join(path: str, token: str) -> str:
     return f"{path}.{token}" if path else token
 
 
-def _walk(arr, idx, defs, reps, d0, r0, path, out, depth_left):
+def _walk(arr, idx, defs, reps, d0, r0, path, out, depth_left, opts):
     if depth_left <= 0:
         raise ValueError("schema nesting deeper than supported")
     t = arr.type
     if pa.types.is_dictionary(t):
         arr = arr.cast(t.value_type)
         t = arr.type
+    valid, opt = _node_validity(arr, idx, path, opts)
     if pa.types.is_struct(t):
-        valid = _validity(arr, idx)
-        nd = (defs + valid).astype(np.uint32)
+        nd = (defs + opt * valid).astype(np.uint32)
         nidx = np.where(valid, idx, -1)
         for f in t:
             _check_field_name(f.name)
             _walk(
-                arr.field(f.name), nidx, nd, reps, d0 + 1, r0,
-                _join(path, f"s{f.name}"), out, depth_left - 1,
+                arr.field(f.name), nidx, nd, reps, d0 + opt, r0,
+                _join(path, f"s{f.name}"), out, depth_left - 1, opts,
             )
     elif pa.types.is_map(t):
-        cidx, cd, cr = _expand(arr, idx, defs, reps, r0)
-        _walk(arr.keys, cidx, cd, cr, d0 + 2, r0 + 1, _join(path, "k"), out, depth_left - 1)
-        _walk(arr.items, cidx, cd, cr, d0 + 2, r0 + 1, _join(path, "v"), out, depth_left - 1)
+        cidx, cd, cr = _expand(arr, idx, defs, reps, r0, valid, opt)
+        d_elem = d0 + opt + 1
+        _walk(arr.keys, cidx, cd, cr, d_elem, r0 + 1, _join(path, "k"), out, depth_left - 1, opts)
+        _walk(arr.items, cidx, cd, cr, d_elem, r0 + 1, _join(path, "v"), out, depth_left - 1, opts)
     elif pa.types.is_list(t) or pa.types.is_large_list(t):
-        cidx, cd, cr = _expand(arr, idx, defs, reps, r0)
-        _walk(arr.values, cidx, cd, cr, d0 + 2, r0 + 1, _join(path, "l"), out, depth_left - 1)
+        cidx, cd, cr = _expand(arr, idx, defs, reps, r0, valid, opt)
+        _walk(arr.values, cidx, cd, cr, d0 + opt + 1, r0 + 1, _join(path, "l"), out, depth_left - 1, opts)
     elif pa.types.is_nested(t):
         raise TypeError(f"unsupported nested arrow type: {t}")
     else:
-        valid = _validity(arr, idx)
-        nd = (defs + valid).astype(np.uint32)
+        nd = (defs + opt * valid).astype(np.uint32)
         vals = arr.take(pa.array(idx[valid], type=pa.int64()))
-        out.append(Leaf(path, vals, nd, reps, d0 + 1, r0))
+        out.append(Leaf(path, vals, nd, reps, d0 + opt, r0))
 
 
 # ---------------------------------------------------------------------------

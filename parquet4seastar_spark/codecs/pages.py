@@ -8,10 +8,16 @@ columnar batches:
   bounded sub-slice of it).  Pages are produced per ~page_target_bytes of
   value data (caller-driven page sizing, like the reference's manual
   ``flush_page`` -- column_chunk_writer.hh:91-96, examples/example.cc:188-210).
-- V1 page layout: [u32-LE def-level length][RLE def levels][value bytes]
-  (column_chunk_writer.hh:98-139; max_rep = 0 for our flat table so no rep
-  section).  Values are encoded only for def == max_def rows (nulls skipped,
+- One page writer (``_write_pages``) and one page reader (``_read_pages``)
+  serve every shape.  V1 page layout: [u32-LE rep-level length][RLE rep
+  levels] (only when max_rep > 0), [u32-LE def-level length][RLE def
+  levels], [value bytes] (column_chunk_writer.hh:98-139).  Values are
+  encoded only for def == max_def entries (nulls skipped,
   column_chunk_writer.hh:75-89).
+- Flat chunks page by value bytes.  list<prim>, list<list<prim>> and every
+  nested leaf are shredded by the Dremel walker (codecs/dremel.py, with
+  per-node OPTIONAL flags for the standard list geometry) and page on
+  record boundaries; list decode is the same walker's assembly.
 - Dictionary fallback: pages are dictionary-encoded until, at a page flush,
   the accumulated dictionary exceeds 16 KiB; subsequent pages are PLAIN and
   the dictionary page (entries first seen up to the overflow page) is still
@@ -22,10 +28,10 @@ columnar batches:
   (FSST) and the smallest wins; the reference's static policy is always a
   candidate, so the selected total never exceeds the reference-policy size.
 
-Whole-page compression: UNCOMPRESSED or GZIP (zlib).  The reference also
-supports SNAPPY (src/compression.cc:29-158); no snappy binding is available
-in this environment, so SNAPPY raises -- the primary metric is encoded
-bytes, compression is an orthogonal layer.
+Whole-page compression: UNCOMPRESSED, GZIP (zlib, gzip framing) or SNAPPY
+(src/compression.cc:29-158) through the literal-only stream writer in
+codecs/snappy_py.py -- the primary metric is encoded bytes, compression is
+an orthogonal layer.
 """
 
 from __future__ import annotations
@@ -39,6 +45,7 @@ import numpy as np
 import pyarrow as pa
 
 from . import delta, dictionary, fsst, plain
+from .dremel import Leaf, assemble, assemble_tree, shred
 from .levels import decode_levels_v1, encode_levels_v1
 from .rle import rle_decode, rle_encode
 
@@ -94,8 +101,9 @@ class EncodedChunk:
     compressed_bytes: int = 0
     sha256: str = ""
     # Dremel level geometry (reader_schema.cc:79-93 / file_writer.hh:50-81):
-    # flat optional column -> (1, 0); list column -> max_rep = 1 and
-    # max_def = outer_optional + 1 (repeated) + elem_optional
+    # flat optional column -> (1, 0); list<prim> -> max_rep = 1 and
+    # max_def = outer_optional + 1 (repeated) + elem_optional; list<list>
+    # adds one repeated level and the inner list's optional level
     max_def: int = -1  # -1: derive from `nullable` (flat back-compat)
     max_rep: int = 0
     elem_nullable: bool = False
@@ -235,6 +243,19 @@ def _decimal_to_physical(arr: pa.Array, ptype: str) -> pa.Array:
     )
 
 
+def _to_physical(arr: pa.Array, ptype: str) -> pa.Array:
+    """Logical values -> the physical values pages store: timestamp[us] ->
+    INT64, date32 -> INT32, decimal -> _decimal_to_physical."""
+    t = arr.type
+    if pa.types.is_timestamp(t):
+        return arr.cast(pa.int64())
+    if pa.types.is_date32(t):
+        return arr.cast(pa.int32())
+    if pa.types.is_decimal(t):
+        return _decimal_to_physical(arr, ptype)
+    return arr
+
+
 def _int_to_decimal(full: np.ndarray, valid: np.ndarray, has_nulls: bool, p: int, s: int) -> pa.Array:
     n = len(full)
     pairs = np.empty((n, 2), dtype=np.int64)
@@ -341,8 +362,7 @@ def _encode_values(encoding: str, ptype: str, values, lengths=None, payload=None
     if encoding == "FSST":
         # symbol table trained once per chunk and shared across pages
         # (training costs ~60-90ms; per-page training caps throughput)
-        table = fsst_table if fsst_table is not None else fsst.train_symbol_table(payload[: 1 << 16])
-        blob = fsst.fsst_encode(payload, table)
+        blob = fsst.fsst_encode(payload, fsst_table)
         return delta.dbp_encode(lengths.astype(np.int32), 4) + blob
     if encoding == "RLE":  # boolean RLE
         # the spec prefixes RLE-encoded DATA values (booleans) with their
@@ -428,10 +448,6 @@ def _page_boundaries(row_bytes: np.ndarray, target: int) -> np.ndarray:
         base = int(cum[end - 1])
         start = end
     return np.array(ends, dtype=np.int64)
-
-
-def _train_chunk_table(payload):
-    return fsst.train_symbol_table(np.ascontiguousarray(payload[: 1 << 16]))
 
 
 def _chunk_bloom(chunk: EncodedChunk, ptype: str, values, lengths, payload) -> None:
@@ -578,8 +594,6 @@ def encode_chunk(
     compression: str = "uncompressed",
     nullable: bool | None = None,
     elem_nullable: bool | None = None,
-    _def_levels: np.ndarray | None = None,
-    _max_def: int | None = None,
     fsst_cache: dict | None = None,
     fsst_cache_key: str | None = None,
 ) -> EncodedChunk:
@@ -590,22 +604,15 @@ def encode_chunk(
             16 KiB fallback for all types except INT32/INT64 -> PLAIN is the
             baseline; see BASELINE.md), 'plain', or an explicit codec name.
 
-    List columns (one nesting level) are routed to the Dremel level path
-    (_encode_list_chunk); flat columns keep max_def <= 1, max_rep = 0.
+    Flat columns keep max_def <= 1, max_rep = 0.  list<prim> and
+    list<list<prim>> columns take the standard parquet list geometry
+    (_encode_list).  ``nullable`` / ``elem_nullable`` default to whether
+    the data holds nulls; a flag of False over data holding nulls raises.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        inner_t = arr.type.value_type
-        if pa.types.is_list(inner_t) or pa.types.is_large_list(inner_t):
-            return _encode_list2_chunk(
-                arr,
-                policy=policy,
-                page_target_bytes=page_target_bytes,
-                compression=compression,
-                nullable=nullable,
-            )
-        return _encode_list_chunk(
+        return _encode_list(
             arr,
             policy=policy,
             page_target_bytes=page_target_bytes,
@@ -614,35 +621,21 @@ def encode_chunk(
             elem_nullable=elem_nullable,
         )
     ptype, logical = pa_ptype(arr)
-    if logical == "timestamp_us":
-        arr = arr.cast(pa.int64())
-    elif logical == "date":
-        arr = arr.cast(pa.int32())
-    elif logical.startswith("decimal("):
-        arr = _decimal_to_physical(arr, ptype)
+    arr = _to_physical(arr, ptype)
     n = len(arr)
-    if _def_levels is not None:
-        # struct-field mode: caller supplies the merged Dremel def stream
-        # (e.g. {0: struct NULL, 1: field NULL, 2: value}); values exist
-        # only at def == max_def (column_chunk_writer.hh:75-89)
-        max_def = int(_max_def)
-        def_arr = np.ascontiguousarray(_def_levels, dtype=np.uint64)
-        valid = def_arr == max_def
-        num_nulls = int(n - valid.sum())
-        nullable = True
-        nn_arr = arr.filter(pa.array(valid)) if num_nulls else arr
-    else:
-        num_nulls = arr.null_count
-        if nullable is None:
-            nullable = num_nulls > 0
-        max_def = 1 if nullable else 0
-        valid = (
-            np.ones(n, dtype=bool)
-            if num_nulls == 0
-            else np.asarray(arr.is_valid())
-        )
-        def_arr = valid.astype(np.uint64)
-        nn_arr = arr.drop_null() if num_nulls else arr
+    num_nulls = arr.null_count
+    if nullable is None:
+        nullable = num_nulls > 0
+    elif not nullable and num_nulls:
+        raise ValueError(f"nullable=False but the column holds {num_nulls} nulls")
+    max_def = 1 if nullable else 0
+    valid = (
+        np.ones(n, dtype=bool)
+        if num_nulls == 0
+        else np.asarray(arr.is_valid())
+    )
+    def_arr = valid.astype(np.uint64)
+    nn_arr = arr.drop_null() if num_nulls else arr
 
     # non-null values in flat form
     values, lengths, payload, nn_row_bytes, type_length = _leaf_components(nn_arr, ptype)
@@ -669,282 +662,144 @@ def encode_chunk(
         max_def=max_def,
         max_rep=0,
     )
-    chunk.sha256 = chunk_sha256(ptype, valid, values, lengths, payload)
+    sha = _structure_sha([arr])
+    _sha_update_values(sha, ptype, values, lengths, payload)
+    chunk.sha256 = sha.hexdigest()
     _chunk_stats(chunk, ptype, values, lengths, payload)
     _chunk_bloom(chunk, ptype, values, lengths, payload)
-
-    plan = _plan_codecs(
-        policy, ptype, n, valid, values, lengths, payload, page_ends, nn_page_ends,
-        compression=compression, fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
+    _write_pages(
+        chunk, policy, values, lengths, payload, def_arr, None, page_ends, nn_page_ends,
+        fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
     )
-    # plan: (per_page_encodings, dict_page_bytes|None, dict_codes|None,
-    #        dict_cardinality, per-page cardinality-at-flush)
-    per_page_enc, dict_page_bytes, codes, cardinality, card_by_page, cached_bodies = plan
-    chunk.cardinality = cardinality
-
-    if dict_page_bytes is not None:
-        comp = _compress(dict_page_bytes, compression)
-        chunk.pages.append(
-            Page("dict", "PLAIN", cardinality, cardinality, len(dict_page_bytes), len(comp), comp)
-        )
-
-    nn_start = 0
-    row_start = 0
-    len_start = 0
-    chunk_fsst_table = None
-    for pi, row_end in enumerate(page_ends.tolist()):
-        if n == 0:
-            break
-        enc = per_page_enc[pi]
-        nn_end = int(nn_page_ends[pi])
-        if cached_bodies is not None:
-            body = cached_bodies[pi]
-        elif enc == "RLE_DICTIONARY":
-            # index bit width = bit_width(cardinality at this page's flush)
-            # (dict_encoder::index_bit_width, encoding.cc:769-771)
-            body = dictionary.encode_dict_indices(codes[nn_start:nn_end], int(card_by_page[pi]))
-        elif ptype == "BYTE_ARRAY":
-            pl = lengths[nn_start:nn_end]
-            seg = payload[len_start : len_start + int(pl.sum())]
-            if enc == "FSST" and chunk_fsst_table is None:
-                chunk_fsst_table = _train_chunk_table(payload)
-            body = _encode_values(enc, ptype, None, pl, seg, chunk_fsst_table)
-        else:
-            body = _encode_values(enc, ptype, values[nn_start:nn_end])
-        head = encode_levels_v1(def_arr[row_start:row_end], max_def)
-        page_raw = head + body
-        comp = _compress(page_raw, compression)
-        chunk.pages.append(
-            Page("data", enc, row_end - row_start, nn_end - nn_start, len(page_raw), len(comp), comp)
-        )
-        if ptype == "BYTE_ARRAY":
-            len_start += int(lengths[nn_start:nn_end].sum())
-        nn_start = nn_end
-        row_start = row_end
-
-    chunk.encodings = sorted({p.encoding for p in chunk.pages if p.kind == "data"})
-    chunk.encoded_bytes = sum(p.uncompressed_size for p in chunk.pages)
-    chunk.compressed_bytes = sum(p.compressed_size for p in chunk.pages)
     return chunk
 
 
-def chunk_sha256(ptype, valid, values, lengths, payload) -> str:
-    h = hashlib.sha256()
-    h.update(np.packbits(valid, bitorder="little").tobytes())
-    _sha_update_values(h, ptype, values, lengths, payload)
-    return h.hexdigest()
-
-
-# ---------------------------------------------------------------------------
-# list columns: Dremel rep/def levels over one repetition level
-#
-# Semantics match the reference's level computation (REPEATED => ++def,++rep;
-# OPTIONAL => ++def -- reader_schema.cc:79-93, file_writer.hh:50-81) and its
-# record assembly contract (record_reader.hh:469-505): for the standard
-# 3-level LIST with an optional outer field,
-#   def 0            = list is NULL
-#   def d_empty      = list present but empty          (d_empty = outer opt)
-#   def max_def - 1  = element slot, element NULL      (iff elem optional)
-#   def max_def      = element value present
-#   rep 0 starts a new row; rep 1 continues the current list.
-
-
-
-def _check_field_name(name: str) -> None:
-    """Leaf paths are dot-joined and '#list'/'#key'/'#value' are reserved
-    markers: a struct field name containing either would silently
-    restructure or misroute on decode (review findings: 'a.b' became
-    struct a{b}; 'x#list' hit the list-reassembly branch via endswith) —
-    fail fast instead."""
-    if "." in name or "#" in name:
-        raise ValueError(
-            f"struct field name {name!r} collides with the dot-joined leaf "
-            "path scheme ('.' and '#' are reserved); rename the field "
-            "before encoding"
-        )
-
-
-def _list_level_geometry(nullable: bool, elem_nullable: bool) -> tuple[int, int]:
-    """(max_def, d_empty) for a single-level list."""
-    d_empty = 1 if nullable else 0
-    return d_empty + 1 + (1 if elem_nullable else 0), d_empty
-
-
-def _encode_list_chunk(
-    arr: pa.Array,
-    *,
-    policy: str,
-    page_target_bytes: int,
-    compression: str,
-    nullable: bool | None,
-    elem_nullable: bool | None = None,
-) -> EncodedChunk:
-    """Single-repetition list<primitive> chunk with the STANDARD parquet
-    3-level geometry (file_writer.hh:50-81 level rule) -- the container
-    interop codec path.  Deeper/mixed nesting goes through the recursive
-    walker (encode_dremel_column)."""
-    ptype, logical = pa_ptype(arr)
-    n = len(arr)
-    num_nulls = arr.null_count
-    if nullable is None:
-        nullable = num_nulls > 0
-    leaf = arr.flatten()  # elements of non-null lists, row order
-    elem_logical = logical[5:-1]
-    if elem_logical == "timestamp_us":
-        leaf = leaf.cast(pa.int64())
-    elif elem_logical == "date":
-        leaf = leaf.cast(pa.int32())
-    elif elem_logical.startswith("decimal("):
-        leaf = _decimal_to_physical(leaf, ptype)
-    if elem_nullable is None:
-        elem_nullable = leaf.null_count > 0
-    max_def, d_empty = _list_level_geometry(nullable, elem_nullable)
-    max_rep = 1
-
-    row_valid = np.ones(n, dtype=bool) if num_nulls == 0 else np.asarray(arr.is_valid())
-    lvl = pa.compute.list_value_length(arr)
-    lengths_per_row = np.asarray(lvl.fill_null(0) if num_nulls else lvl).astype(np.int64)
-    elem_valid = (
-        np.ones(len(leaf), dtype=bool) if leaf.null_count == 0 else np.asarray(leaf.is_valid())
+def _write_pages(
+    chunk: EncodedChunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends,
+    fsst_cache=None, fsst_cache_key=None,
+) -> None:
+    """Plan the codecs, then write the chunk's dictionary page and V1 data
+    pages: [u32+rep levels (iff max_rep > 0)][u32+def levels][values]
+    (column_chunk_writer.hh:98-139).  Data page i holds the level entries
+    up to ``level_ends[i]`` and the encoded values up to
+    ``nn_page_ends[i]``."""
+    ptype = chunk.ptype
+    compression = chunk.compression
+    n_pages = len(level_ends) if len(def_) else 0
+    plan = _plan_codecs(
+        policy, ptype, len(def_), values, lengths, payload, level_ends, nn_page_ends,
+        compression=compression, fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
     )
-    nn_leaf = leaf.drop_null() if leaf.null_count else leaf
-    values, lengths, payload, nn_val_bytes, type_length = _leaf_components(nn_leaf, ptype)
-
-    # ---- level streams (one entry per element; null/empty rows get one)
-    counts = np.maximum(lengths_per_row, 1)
-    n_levels = int(counts.sum())
-    level_starts = np.zeros(n, dtype=np.int64)
-    level_starts[1:] = np.cumsum(counts)[:-1]
-    rep = np.ones(n_levels, dtype=np.uint64)
-    rep[level_starts] = 0
-    def_ = np.zeros(n_levels, dtype=np.uint64)
-    has = lengths_per_row > 0
-    if has.any():
-        g = lengths_per_row[has]
-        dst = np.repeat(level_starts[has], g) + (
-            np.arange(int(g.sum()), dtype=np.int64) - np.repeat(np.cumsum(g) - g, g)
-        )
-        elem_def = np.where(elem_valid, max_def, max_def - 1)
-        def_[dst] = elem_def.astype(np.uint64)
-    empty_rows = ~has
-    if empty_rows.any():
-        def_[level_starts[empty_rows]] = np.where(
-            row_valid[empty_rows], d_empty, 0
-        ).astype(np.uint64)
-
-    # ---- paginate in ROW space by estimated bytes (elements + level entry)
-    row_bytes = np.zeros(n, dtype=np.int64)
-    if has.any():
-        # per-row sum of element byte sizes: sizes of VALID elements only
-        elem_sizes = np.zeros(len(leaf), dtype=np.int64)
-        elem_sizes[elem_valid] = nn_val_bytes
-        cs = np.zeros(len(leaf) + 1, dtype=np.int64)
-        np.cumsum(elem_sizes, out=cs[1:])
-        leaf_starts = np.zeros(n, dtype=np.int64)
-        leaf_starts[1:] = np.cumsum(lengths_per_row)[:-1]
-        row_bytes = cs[leaf_starts + lengths_per_row] - cs[leaf_starts]
-    row_bytes = row_bytes + counts  # ~1B/level entry
-    page_ends = _page_boundaries(row_bytes, page_target_bytes)
-    n_pages = len(page_ends) if n else 0
-
-    # per-page end positions in level space and encoded-value space
-    level_ends = np.cumsum(counts)[page_ends - 1] if n else np.array([0], dtype=np.int64)
-    enc_mask = def_ == max_def  # entries carrying an encoded value
-    enc_before = np.cumsum(enc_mask, dtype=np.int64)
-    nn_page_ends = enc_before[level_ends - 1] if n else np.array([0], dtype=np.int64)
-
-    input_bytes = _plain_size(ptype, int(elem_valid.sum()), lengths, type_length)
-    chunk = EncodedChunk(
-        ptype=ptype,
-        logical=logical,
-        nullable=nullable,
-        num_rows=n,
-        num_nulls=num_nulls,
-        cardinality=0,
-        encodings=[],
-        compression=compression,
-        type_length=type_length,
-        input_bytes=input_bytes,
-        max_def=max_def,
-        max_rep=max_rep,
-        elem_nullable=elem_nullable,
-    )
-    chunk.sha256 = list_chunk_sha256(ptype, row_valid, lengths_per_row, elem_valid, values, lengths, payload)
-    _chunk_stats(chunk, ptype, values, lengths, payload)  # leaf-element stats
-
-    plan = _plan_codecs(policy, ptype, n, None, values, lengths, payload, page_ends, nn_page_ends, compression=compression)
+    # plan: (per_page_encodings, dict_page_bytes|None, dict_codes|None,
+    #        dict_cardinality, per-page cardinality-at-flush, cached bodies)
     per_page_enc, dict_page_bytes, codes, cardinality, card_by_page, cached_bodies = plan
     chunk.cardinality = cardinality
+
     if dict_page_bytes is not None:
         comp = _compress(dict_page_bytes, compression)
         chunk.pages.append(
             Page("dict", "PLAIN", cardinality, cardinality, len(dict_page_bytes), len(comp), comp)
         )
 
+    per_page_enc = per_page_enc[:n_pages]
+    bodies = cached_bodies
+    if bodies is None:
+        fsst_table = None
+        if "FSST" in per_page_enc:
+            fsst_table = fsst.train_symbol_table(np.ascontiguousarray(payload[: 1 << 16]))
+        bodies = _page_bodies(
+            per_page_enc, ptype, values, lengths, payload, nn_page_ends, codes, card_by_page, fsst_table
+        )
     nn_start = 0
     lvl_start = 0
-    len_start = 0
-    chunk_fsst_table = None
-    for pi in range(n_pages):
+    for pi, body in enumerate(bodies):
         lvl_end = int(level_ends[pi])
         nn_end = int(nn_page_ends[pi])
-        enc = per_page_enc[pi]
-        if cached_bodies is not None:
-            body = cached_bodies[pi]
-        elif enc == "RLE_DICTIONARY":
-            body = dictionary.encode_dict_indices(codes[nn_start:nn_end], int(card_by_page[pi]))
-        elif ptype == "BYTE_ARRAY":
-            pl = lengths[nn_start:nn_end]
-            seg = payload[len_start : len_start + int(pl.sum())]
-            if enc == "FSST" and chunk_fsst_table is None:
-                chunk_fsst_table = _train_chunk_table(payload)
-            body = _encode_values(enc, ptype, None, pl, seg, chunk_fsst_table)
-        else:
-            body = _encode_values(enc, ptype, values[nn_start:nn_end])
-        # V1 page: [u32+rep][u32+def][values] (column_chunk_writer.hh:98-139)
-        head = encode_levels_v1(rep[lvl_start:lvl_end], max_rep) + encode_levels_v1(
-            def_[lvl_start:lvl_end], max_def
-        )
+        head = b""
+        if chunk.max_rep > 0:
+            head = encode_levels_v1(rep[lvl_start:lvl_end], chunk.max_rep)
+        head += encode_levels_v1(def_[lvl_start:lvl_end], chunk.max_def)
         page_raw = head + body
         comp = _compress(page_raw, compression)
         chunk.pages.append(
-            Page("data", enc, lvl_end - lvl_start, nn_end - nn_start, len(page_raw), len(comp), comp)
+            Page("data", per_page_enc[pi], lvl_end - lvl_start, nn_end - nn_start, len(page_raw), len(comp), comp)
         )
-        if ptype == "BYTE_ARRAY":
-            len_start += int(lengths[nn_start:nn_end].sum())
         nn_start = nn_end
         lvl_start = lvl_end
 
     chunk.encodings = sorted({p.encoding for p in chunk.pages if p.kind == "data"})
     chunk.encoded_bytes = sum(p.uncompressed_size for p in chunk.pages)
     chunk.compressed_bytes = sum(p.compressed_size for p in chunk.pages)
-    return chunk
 
 
-def list_chunk_sha256(ptype, row_valid, lengths_per_row, elem_valid, values, lengths, payload) -> str:
+# ---------------------------------------------------------------------------
+# list columns: the standard parquet LIST geometry on the Dremel level model
+#
+# Level semantics match the reference's level computation (REPEATED =>
+# ++def,++rep; OPTIONAL => ++def -- reader_schema.cc:79-93,
+# file_writer.hh:50-81) and its record assembly contract
+# (record_reader.hh:469-505).  For list<prim> with an optional outer field:
+#   def 0            = list is NULL
+#   def d_empty      = list present but empty          (d_empty = outer opt)
+#   def max_def - 1  = element slot, element NULL      (iff elem optional)
+#   def max_def      = element value present
+#   rep 0 starts a new row; rep 1 continues the current list.
+# list<list<prim>> nests one more list level (rep 1 starts an inner list,
+# rep 2 continues it).  A list level is OPTIONAL iff it holds nulls (the
+# outer one also per ``nullable``), the element iff ``elem_nullable`` (or
+# the data, for list<list>).
+
+
+def _list_spine(arr: pa.Array) -> list[pa.Array]:
+    """[arr, its flattened elements, ...] down to the primitive leaf."""
+    spine = [arr]
+    while pa.types.is_list(spine[-1].type) or pa.types.is_large_list(spine[-1].type):
+        spine.append(spine[-1].flatten())
+    return spine
+
+
+def _list_paths(n_lists: int) -> list[str]:
+    """Dremel token paths of the list nodes and the leaf: ['', 'l', ...]."""
+    return [".".join(["l"] * i) for i in range(n_lists + 1)]
+
+
+def _encode_list(arr, *, policy, page_target_bytes, compression, nullable, elem_nullable) -> EncodedChunk:
+    ptype, logical = pa_ptype(arr)  # caps at list<list<primitive>>
+    spine = _list_spine(arr)
+    paths = _list_paths(len(spine) - 1)
+    opts = {path: level.null_count > 0 for path, level in zip(paths, spine)}
+    if nullable is not None:
+        opts[""] = nullable
+    if elem_nullable is not None and len(spine) == 2:
+        opts["l"] = elem_nullable
+    (leaf,) = shred(arr, opts)
+    return _encode_leaf(
+        leaf, _structure_sha(spine), policy=policy, page_target_bytes=page_target_bytes,
+        compression=compression, logical=logical, nullable=opts[""],
+        num_nulls=arr.null_count, elem_nullable=opts[paths[-1]],
+    )
+
+
+# ---------------------------------------------------------------------------
+# content sha256 (lineage): for each list level its validity bits and int64
+# lengths, then the leaf validity bits and the physical non-null values
+
+
+def _valid_bits(arr: pa.Array) -> bytes:
+    valid = np.ones(len(arr), dtype=bool) if arr.null_count == 0 else np.asarray(arr.is_valid())
+    return np.packbits(valid, bitorder="little").tobytes()
+
+
+def _structure_sha(spine: list[pa.Array]):
+    """sha256 fed with the structural streams of a _list_spine (a flat
+    array is a spine of one: just its validity bits)."""
     h = hashlib.sha256()
-    h.update(np.packbits(row_valid, bitorder="little").tobytes())
-    h.update(np.ascontiguousarray(lengths_per_row, dtype=np.int64).tobytes())
-    h.update(np.packbits(elem_valid, bitorder="little").tobytes())
-    _sha_update_values(h, ptype, values, lengths, payload)
-    return h.hexdigest()
-
-
-def list2_chunk_sha256(
-    ptype, row_valid, outer_len, inner_valid, inner_len, elem_valid, values, lengths, payload
-) -> str:
-    """Content sha for a list<list<T>> chunk: every structural stream
-    (validity + lengths at both repetition levels) AND the element values —
-    so value-byte corruption is detectable, same guarantee as
-    list_chunk_sha256 / chunk_sha256 give flat and single-list chunks."""
-    h = hashlib.sha256()
-    h.update(np.packbits(row_valid, bitorder="little").tobytes())
-    h.update(np.ascontiguousarray(outer_len, dtype=np.int64).tobytes())
-    h.update(np.packbits(inner_valid, bitorder="little").tobytes())
-    h.update(np.ascontiguousarray(inner_len, dtype=np.int64).tobytes())
-    h.update(np.packbits(elem_valid, bitorder="little").tobytes())
-    _sha_update_values(h, ptype, values, lengths, payload)
-    return h.hexdigest()
+    for level in spine[:-1]:
+        h.update(_valid_bits(level))
+        lens = pa.compute.list_value_length(level)
+        h.update(np.asarray(lens.fill_null(0) if level.null_count else lens).astype(np.int64).tobytes())
+    h.update(_valid_bits(spine[-1]))
+    return h
 
 
 def _sha_update_values(h, ptype, values, lengths, payload) -> None:
@@ -955,6 +810,23 @@ def _sha_update_values(h, ptype, values, lengths, payload) -> None:
         h.update(np.packbits(values, bitorder="little").tobytes())
     else:
         h.update(np.ascontiguousarray(values).tobytes())
+
+
+def chunk_content_sha(arr: pa.Array) -> str:
+    """Canonical content sha256 of an arrow array -- byte-identical to the
+    sha256 encode_chunk records in lineage for the same values.  Used by the
+    lineage audit (decode -> recompute -> compare) to detect bit rot or
+    page corruption without the source table."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    ptype, _ = pa_ptype(arr)
+    spine = _list_spine(arr)
+    h = _structure_sha(spine)
+    leaf = spine[-1]
+    leaf = _to_physical(leaf.drop_null() if leaf.null_count else leaf, ptype)
+    values, lengths, payload, _, _ = _leaf_components(leaf, ptype)
+    _sha_update_values(h, ptype, values, lengths, payload)
+    return h.hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -1042,7 +914,7 @@ def _encode_dict_page(ptype: str, dict_arr: pa.Array) -> bytes:
     return plain.plain_encode_fixed(vals)
 
 
-def _plan_codecs(policy, ptype, n, valid, values, lengths, payload, page_ends, nn_page_ends, compression="uncompressed", fsst_cache=None, fsst_cache_key=None):
+def _plan_codecs(policy, ptype, n, values, lengths, payload, page_ends, nn_page_ends, compression="uncompressed", fsst_cache=None, fsst_cache_key=None):
     """Resolve the policy into per-page encodings (+ dict state)."""
     n_pages = len(page_ends) if n else 0
     no_dict = (None, None, 0, np.zeros(n_pages, dtype=np.int64), None)
@@ -1093,25 +965,26 @@ def _ragged_take(lengths: np.ndarray, payload: np.ndarray, idx: np.ndarray) -> p
     )
 
 
-def _candidate_bodies(enc, ptype, values, lengths, payload, page_ends_nn, fsst_table=None) -> list[bytes]:
-    """Actually encode a whole-chunk single-codec candidate; returns the
-    per-page value bodies (level bytes are identical across candidates, so
-    sizes compare on bodies alone).  The winner's bodies are reused by
-    encode_chunk -- candidates are never encoded twice."""
-    bodies = []
+def _page_bodies(encs, ptype, values, lengths, payload, nn_page_ends, codes=None, card_by_page=None, fsst_table=None):
+    """Yield the value body of each page: page i encodes the non-null
+    values up to ``nn_page_ends[i]`` with ``encs[i]``.  RLE_DICTIONARY
+    pages write ``codes`` at the bit width of the dictionary size at that
+    page's flush, ``card_by_page[i]`` (dict_encoder::index_bit_width,
+    encoding.cc:769-771)."""
     start = 0
     off = 0
-    for end in page_ends_nn:
-        end = int(end)
-        if ptype == "BYTE_ARRAY":
-            pl = lengths[start:end]
-            seg = payload[off : off + int(pl.sum())]
-            bodies.append(_encode_values(enc, ptype, None, pl, seg, fsst_table))
-            off += int(pl.sum())
+    for pi, enc in enumerate(encs):
+        end = int(nn_page_ends[pi])
+        pl = lengths[start:end] if ptype == "BYTE_ARRAY" else None
+        if enc == "RLE_DICTIONARY":
+            yield dictionary.encode_dict_indices(codes[start:end], int(card_by_page[pi]))
+        elif pl is not None:
+            yield _encode_values(enc, ptype, None, pl, payload[off : off + int(pl.sum())], fsst_table)
         else:
-            bodies.append(_encode_values(enc, ptype, values[start:end]))
+            yield _encode_values(enc, ptype, values[start:end])
+        if pl is not None:
+            off += int(pl.sum())
         start = end
-    return bodies
 
 
 def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allow_fsst=True, compression="uncompressed", fsst_cache=None, fsst_cache_key=None):
@@ -1128,6 +1001,9 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
         return ([], *no_dict)
 
     nn = int(nn_page_ends[-1])
+    # candidates compare on value bodies alone (level bytes are identical
+    # across them); the winner's bodies go to _write_pages as they are, so
+    # no candidate is encoded twice
     candidates: dict[str, int] = {}
     plans: dict[str, tuple] = {}
 
@@ -1164,35 +1040,19 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
         per_page, dict_bytes, codes, card, card_by_page = _dict_plan(
             ptype, values, lengths, payload, page_ends, nn_page_ends, fallback=True
         )
-        size = len(dict_bytes) if dict_bytes else 0
-        bodies = []
-        start = 0
-        off = 0
-        for pi, end in enumerate(nn_page_ends.tolist()):
-            end = int(end)
-            if per_page[pi] == "RLE_DICTIONARY":
-                body = dictionary.encode_dict_indices(codes[start:end], int(card_by_page[pi]))
-            elif ptype == "BYTE_ARRAY":
-                pl = lengths[start:end]
-                seg = payload[off : off + int(pl.sum())]
-                body = _encode_values(per_page[pi], ptype, None, pl, seg)
-            else:
-                body = _encode_values(per_page[pi], ptype, values[start:end])
-            size += len(body)
-            bodies.append(body)
-            if ptype == "BYTE_ARRAY":
-                off += int(lengths[start:end].sum())
-            start = end
-        candidates["DICT"] = size
+        bodies = list(
+            _page_bodies(per_page, ptype, values, lengths, payload, nn_page_ends, codes, card_by_page)
+        )
+        candidates["DICT"] = (len(dict_bytes) if dict_bytes else 0) + sum(map(len, bodies))
         plans["DICT"] = (per_page, dict_bytes, codes, card, card_by_page, bodies)
 
     if ptype in ("INT32", "INT64"):
-        bodies = _candidate_bodies("DELTA_BINARY_PACKED", ptype, values, lengths, payload, nn_page_ends)
+        bodies = list(_page_bodies(["DELTA_BINARY_PACKED"] * n_pages, ptype, values, lengths, payload, nn_page_ends))
         candidates["DELTA_BINARY_PACKED"] = sum(map(len, bodies))
         plans["DELTA_BINARY_PACKED"] = (["DELTA_BINARY_PACKED"] * n_pages, *no_dict[:-1], bodies)
 
     if ptype == "BOOLEAN":
-        bodies = _candidate_bodies("RLE", ptype, values, lengths, payload, nn_page_ends)
+        bodies = list(_page_bodies(["RLE"] * n_pages, ptype, values, lengths, payload, nn_page_ends))
         candidates["RLE"] = sum(map(len, bodies))
         plans["RLE"] = (["RLE"] * n_pages, *no_dict[:-1], bodies)
 
@@ -1246,9 +1106,9 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
                 # front coding must promise real savings: long values with a
                 # short shared header (e.g. source text) skip the extra pass
                 if mean_prefix >= 4.0 and mean_prefix >= 0.25 * mean_len:
-                    bodies = _candidate_bodies(
-                        "DELTA_BYTE_ARRAY", ptype, values, lengths, payload, nn_page_ends
-                    )
+                    bodies = list(_page_bodies(
+                        ["DELTA_BYTE_ARRAY"] * n_pages, ptype, values, lengths, payload, nn_page_ends
+                    ))
                     candidates["DELTA_BYTE_ARRAY"] = sum(map(len, bodies))
                     plans["DELTA_BYTE_ARRAY"] = (
                         ["DELTA_BYTE_ARRAY"] * n_pages, *no_dict[:-1], bodies
@@ -1311,9 +1171,9 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
                     zlib.compress(gz_sample.tobytes(), 6)
                 )
             if run_fsst:
-                bodies = _candidate_bodies(
-                    "FSST", ptype, values, lengths, payload, nn_page_ends, fsst_table=table
-                )
+                bodies = list(_page_bodies(
+                    ["FSST"] * n_pages, ptype, values, lengths, payload, nn_page_ends, fsst_table=table
+                ))
                 candidates["FSST"] = sum(map(len, bodies))
                 plans["FSST"] = (["FSST"] * n_pages, *no_dict[:-1], bodies)
 
@@ -1355,114 +1215,77 @@ def _gather_dict_values(ptype: str, dict_entries, codes, len_parts, payload_part
         fixed_parts.append(np.asarray(dict_entries)[codes])
 
 
-def decode_chunk(
-    chunk: EncodedChunk,
-) -> pa.Array:
-    """Decode pages back into a (nullable) arrow array.
-
-    Mirrors column_chunk_reader::read_batch (column_chunk_reader.hh:101-157):
-    a DICTIONARY page loads the dictionary, DATA pages decode def levels then
-    values; values exist only where def == max_def.  List chunks
-    (max_rep > 0) go through Dremel record reassembly (_decode_list_chunk).
-    """
-    if chunk.max_rep == 2:
-        return _decode_list2_chunk(chunk)
-    if chunk.max_rep > 0:
-        return _decode_list_chunk(chunk)
+def _read_pages(chunk: EncodedChunk, max_def: int):
+    """Decode every page of a chunk (column_chunk_reader.hh:101-157): the
+    dictionary page loads the dictionary; a data page yields its rep levels
+    (iff max_rep > 0), def levels, and the values of its def == max_def
+    entries.  Returns (def levels, rep levels or None, (len_parts,
+    payload_parts, fixed_parts))."""
     ptype = chunk.ptype
-    max_def = chunk.max_def if chunk.max_def >= 0 else (1 if chunk.nullable else 0)
+    max_rep = chunk.max_rep
     dict_entries = None  # decoded dictionary in flat form
     dict_size = 0
-
-    masks: list[np.ndarray] = []
+    rep_parts: list[np.ndarray] = []
+    def_parts: list[np.ndarray] = []
     fixed_parts: list[np.ndarray] = []
     len_parts: list[np.ndarray] = []
     payload_parts: list[np.ndarray] = []
-
     for page in chunk.pages:
         raw = _decompress(page.data, chunk.compression)
         if page.kind == "dict":
             dict_entries = _load_dict_page(raw, ptype, chunk.type_length, page.num_values)
             dict_size = page.num_values
             continue
-        levels, consumed = decode_levels_v1(raw, max_def, page.num_values)
-        mask = levels == max_def if max_def else np.ones(page.num_values, dtype=bool)
-        nn = int(mask.sum())
-        body = memoryview(raw)[consumed:]
+        off = 0
+        if max_rep > 0:
+            rep, off = decode_levels_v1(raw, max_rep, page.num_values)
+            rep_parts.append(rep)
+        def_, c2 = decode_levels_v1(memoryview(raw)[off:], max_def, page.num_values)
+        body = memoryview(raw)[off + c2 :]
+        nn = int((def_ == max_def).sum())
+        # num_non_null == -1: unknown (pages from a standard parquet file,
+        # whose DataPageHeader carries only the level count)
+        if page.num_non_null >= 0 and nn != page.num_non_null:
+            raise ValueError(f"page value count mismatch: {nn} != {page.num_non_null}")
         if page.encoding == "RLE_DICTIONARY":
             codes = _decode_values("RLE_DICTIONARY", ptype, bytes(body), nn, dict_size)
             _gather_dict_values(ptype, dict_entries, codes, len_parts, payload_parts, fixed_parts)
         else:
-            out = _decode_values(
-                page.encoding, ptype, bytes(body), nn, type_length=chunk.type_length
-            )
+            out = _decode_values(page.encoding, ptype, bytes(body), nn, type_length=chunk.type_length)
             if ptype == "BYTE_ARRAY":
                 lens, pl = out
                 len_parts.append(lens)
                 payload_parts.append(pl)
             else:
                 fixed_parts.append(out)
-        masks.append(mask)
+        def_parts.append(def_)
+    def_all = np.concatenate(def_parts) if def_parts else np.zeros(0, dtype=np.int32)
+    rep_all = None
+    if max_rep > 0:
+        rep_all = np.concatenate(rep_parts) if rep_parts else np.zeros(0, dtype=np.int32)
+    return def_all, rep_all, (len_parts, payload_parts, fixed_parts)
 
-    valid = np.concatenate(masks) if masks else np.zeros(0, dtype=bool)
-    n = len(valid)
+
+def decode_chunk(
+    chunk: EncodedChunk,
+) -> pa.Array:
+    """Decode pages back into a (nullable) arrow array.
+
+    Mirrors column_chunk_reader::read_batch (column_chunk_reader.hh:101-157):
+    values exist only where def == max_def.  List chunks (max_rep > 0)
+    reassemble through the Dremel walker (_decode_list).
+    """
+    if chunk.max_rep > 0:
+        return _decode_list(chunk)
+    max_def = chunk.max_def if chunk.max_def >= 0 else (1 if chunk.nullable else 0)
+    def_, _, parts = _read_pages(chunk, max_def)
+    n = len(def_)
     if n != chunk.num_rows:
         raise ValueError(f"decoded row count mismatch: {n} != {chunk.num_rows}")
-
-    if ptype == "BYTE_ARRAY":
-        lens = np.concatenate(len_parts) if len_parts else np.zeros(0, dtype=np.int64)
-        payload = np.concatenate(payload_parts) if payload_parts else np.zeros(0, dtype=np.uint8)
-        full_lens = np.zeros(n, dtype=np.int64)
-        full_lens[valid] = lens
-        if chunk.logical.startswith("decimal("):
-            p, s = _parse_decimal(chunk.logical)
-            return _varbin_to_decimal(full_lens, payload, valid, bool(chunk.num_nulls), p, s)
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(full_lens, out=offsets[1:])
-        validity = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes()) if chunk.num_nulls else None
-        arr = pa.Array.from_buffers(
-            pa.large_binary(),
-            n,
-            [validity, pa.py_buffer(offsets.tobytes()), pa.py_buffer(payload.tobytes())],
-        )
-        if chunk.logical == "string":
-            return arr.cast(pa.large_string()).cast(pa.string())
-        return arr.cast(pa.binary())
-    if ptype == "BOOLEAN":
-        vals = np.concatenate([np.asarray(p, dtype=bool) for p in fixed_parts]) if fixed_parts else np.zeros(0, dtype=bool)
-        full = np.zeros(n, dtype=bool)
-        full[valid] = vals
-        return pa.array(full, type=pa.bool_(), mask=~valid if chunk.num_nulls else None)
-    if ptype == "FIXED_LEN_BYTE_ARRAY":
-        k = chunk.type_length
-        vals = (
-            np.concatenate(fixed_parts).reshape(-1, k)
-            if fixed_parts
-            else np.zeros((0, k), dtype=np.uint8)
-        )
-        full = np.zeros((n, k), dtype=np.uint8)
-        full[valid] = vals
-        if chunk.logical.startswith("decimal("):
-            p, s = _parse_decimal(chunk.logical)
-            return _flba_to_decimal(full, valid, bool(chunk.num_nulls), p, s)
-        validity = (
-            pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
-            if chunk.num_nulls
-            else None
-        )
-        return pa.Array.from_buffers(pa.binary(k), n, [validity, pa.py_buffer(full.tobytes())])
-    vals = np.concatenate(fixed_parts) if fixed_parts else np.zeros(0, dtype=_FIXED_DTYPES[ptype])
-    full = np.zeros(n, dtype=_FIXED_DTYPES[ptype])
-    full[valid] = vals
-    if chunk.logical.startswith("decimal("):
-        p, s = _parse_decimal(chunk.logical)
-        return _int_to_decimal(full, valid, bool(chunk.num_nulls), p, s)
-    out = pa.array(full, mask=~valid if chunk.num_nulls else None)
-    if chunk.logical == "timestamp_us":
-        return out.cast(pa.timestamp("us"))
-    if chunk.logical == "date":
-        return out.cast(pa.date32())
-    return out
+    return _build_leaf_array(
+        chunk.ptype, chunk.logical, chunk.type_length, bool(chunk.num_nulls),
+        def_ == max_def, n, *parts,
+    )
 
 
 _ELEM_PA_TYPES = {
@@ -1499,7 +1322,7 @@ def _build_leaf_array(
     fixed_parts: list,
 ) -> pa.Array:
     """Scatter decoded non-null values into element slots and build the
-    typed leaf arrow array (shared by the 1- and 2-rep-level decoders)."""
+    typed leaf arrow array (flat chunks and dremel leaves)."""
     elem_validity = (
         pa.py_buffer(np.packbits(elem_valid, bitorder="little").tobytes())
         if elem_nullable
@@ -1562,460 +1385,32 @@ def _build_leaf_array(
     return leaf
 
 
-def _decode_list_chunk(
-    chunk: EncodedChunk,
-) -> pa.Array:
-    """Dremel record reassembly for one list column chunk (standard
-    single-repetition geometry -- the container interop path; the engine's
-    nested columns reassemble via dremel.assemble instead).
+def _decode_list(chunk: EncodedChunk) -> pa.Array:
+    """list<prim> / list<list<prim>> chunk -> arrow, by Dremel assembly
+    (record_reader.hh:469-505) with the chunk's OPTIONAL flags: the outer
+    list per ``nullable``, the element per ``elem_nullable``, and an inner
+    list (list<list>) per the def level left in the budget.
 
-    Mirrors record_reader list logic (record_reader.hh:272-297, 469-505):
-    rep == 0 starts a row; def tells NULL list / empty list / NULL element /
-    value.  Values decode through the same codec dispatch as flat chunks.
-    """
-    ptype = chunk.ptype
-    max_def = chunk.max_def
-    max_rep = chunk.max_rep
-    _, d_empty = _list_level_geometry(chunk.nullable, chunk.elem_nullable)
-    dict_entries = None
-    dict_size = 0
-
-    rep_parts: list[np.ndarray] = []
-    def_parts: list[np.ndarray] = []
-    fixed_parts: list[np.ndarray] = []
-    len_parts: list[np.ndarray] = []
-    payload_parts: list[np.ndarray] = []
-
-    for page in chunk.pages:
-        raw = _decompress(page.data, chunk.compression)
-        if page.kind == "dict":
-            dict_entries = _load_dict_page(raw, ptype, chunk.type_length, page.num_values)
-            dict_size = page.num_values
-            continue
-        rep, c1 = decode_levels_v1(raw, max_rep, page.num_values)
-        def_, c2 = decode_levels_v1(memoryview(raw)[c1:], max_def, page.num_values)
-        body = memoryview(raw)[c1 + c2 :]
-        nn = int((def_ == max_def).sum())
-        # num_non_null == -1: unknown (pages from a standard parquet file,
-        # whose DataPageHeader carries only the level count)
-        if page.num_non_null >= 0 and nn != page.num_non_null:
-            raise ValueError(
-                f"list page value count mismatch: {nn} != {page.num_non_null}"
-            )
-        if page.encoding == "RLE_DICTIONARY":
-            codes = _decode_values("RLE_DICTIONARY", ptype, bytes(body), nn, dict_size)
-            _gather_dict_values(ptype, dict_entries, codes, len_parts, payload_parts, fixed_parts)
-        else:
-            out = _decode_values(page.encoding, ptype, bytes(body), nn, type_length=chunk.type_length)
-            if ptype == "BYTE_ARRAY":
-                lens, pl = out
-                len_parts.append(lens)
-                payload_parts.append(pl)
-            else:
-                fixed_parts.append(out)
-        rep_parts.append(rep)
-        def_parts.append(def_)
-
-    rep_all = np.concatenate(rep_parts) if rep_parts else np.zeros(0, dtype=np.int32)
-    def_all = np.concatenate(def_parts) if def_parts else np.zeros(0, dtype=np.int32)
-    row_start = rep_all == 0
-    n_rows = int(row_start.sum())
-    if n_rows != chunk.num_rows:
-        raise ValueError(f"decoded row count mismatch: {n_rows} != {chunk.num_rows}")
-
-    is_elem = def_all > d_empty
-    row_ids = np.cumsum(row_start) - 1
-    row_lengths = np.bincount(row_ids[is_elem], minlength=n_rows).astype(np.int64)
-    if chunk.nullable:
-        # the list is PRESENT (possibly empty) where the row's def reaches
-        # d_empty; below it some outer level (or the list itself) is null
-        row_valid = def_all[row_start] >= d_empty if d_empty else def_all[row_start] > 0
-    else:
-        row_valid = np.ones(n_rows, dtype=bool)
-    elem_valid = def_all[is_elem] == max_def
-    n_elems = int(is_elem.sum())
-
-    elem_logical = chunk.logical[5:-1] if chunk.logical.startswith("list<") else chunk.logical
-    leaf = _build_leaf_array(
-        ptype, elem_logical, chunk.type_length, chunk.elem_nullable, elem_valid, n_elems,
-        len_parts, payload_parts, fixed_parts,
-    )
-
-    list_offsets = np.zeros(n_rows + 1, dtype=np.int32)
-    np.cumsum(row_lengths, out=list_offsets[1:])
-    mask = None
-    if chunk.num_nulls:
-        mask = pa.array(~row_valid)
-    return pa.ListArray.from_arrays(pa.array(list_offsets, type=pa.int32()), leaf, mask=mask)
-
-
-# ---------------------------------------------------------------------------
-# struct columns (struct-of-primitives): one leaf chunk per field with the
-# merged Dremel def stream (struct optional +1, field optional +1 --
-# file_writer.hh:50-81; assembly record_reader.hh:234-247): def 0 = struct
-# NULL, def 1 = struct present / field NULL, def 2 = value.  Reuses the flat
-# chunk machinery via encode_chunk(_def_levels=...).
-
-
-
-
-
-
-# ---------------------------------------------------------------------------
-# map columns: the standard 3-level MAP group (writer_schema.cc map path;
-# assembly record_reader.hh:311-336).  A map<k,v> column is stored as TWO
-# list chunks sharing the map's offsets: keys (elements REQUIRED, so
-# max_def = outer_opt + 1) and values (elements OPTIONAL, max_def =
-# outer_opt + 2) -- exactly the level geometry parquet gives MAP leaves.
-# STRUCT values decompose further into per-field leaves ('value.<field>')
-# through the struct-list machinery, one def level per struct level.
-
-
-
-
-def chunk_content_sha(arr: pa.Array) -> str:
-    """Canonical content sha256 of an arrow array -- byte-identical to the
-    sha256 encode_chunk records in lineage for the same values.  Used by the
-    lineage audit (decode -> recompute -> compare) to detect bit rot or
-    page corruption without the source table."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if (pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)) and (
-        pa.types.is_list(arr.type.value_type) or pa.types.is_large_list(arr.type.value_type)
-    ):
-        # list<list<T>>: flatten TWICE, mirroring _encode_list2_chunk's
-        # stream decomposition exactly (same logical casts on the leaf)
-        ptype, logical = pa_ptype(arr)
-        n = len(arr)
-        row_valid = np.ones(n, dtype=bool) if arr.null_count == 0 else np.asarray(arr.is_valid())
-        olen = pa.compute.list_value_length(arr)
-        outer_len = np.asarray(olen.fill_null(0) if arr.null_count else olen).astype(np.int64)
-        inner = arr.flatten()
-        inner_valid = (
-            np.ones(len(inner), dtype=bool) if inner.null_count == 0 else np.asarray(inner.is_valid())
-        )
-        ilen = pa.compute.list_value_length(inner)
-        inner_len = np.asarray(ilen.fill_null(0) if inner.null_count else ilen).astype(np.int64)
-        leaf = inner.flatten()
-        elem_logical2 = logical[10:-2]
-        if elem_logical2 == "timestamp_us":
-            leaf = leaf.cast(pa.int64())
-        elif elem_logical2 == "date":
-            leaf = leaf.cast(pa.int32())
-        elif elem_logical2.startswith("decimal("):
-            leaf = _decimal_to_physical(leaf, ptype)
-        elem_valid = (
-            np.ones(len(leaf), dtype=bool) if leaf.null_count == 0 else np.asarray(leaf.is_valid())
-        )
-        nn_leaf = leaf.drop_null() if leaf.null_count else leaf
-        values, lengths, payload, _, _ = _leaf_components(nn_leaf, ptype)
-        return list2_chunk_sha256(
-            ptype, row_valid, outer_len, inner_valid, inner_len, elem_valid, values, lengths, payload
-        )
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        ptype, _ = pa_ptype(arr)
-        n = len(arr)
-        row_valid = np.ones(n, dtype=bool) if arr.null_count == 0 else np.asarray(arr.is_valid())
-        lvl = pa.compute.list_value_length(arr)
-        lengths_per_row = np.asarray(lvl.fill_null(0) if arr.null_count else lvl).astype(np.int64)
-        leaf = arr.flatten()
-        elem_valid = (
-            np.ones(len(leaf), dtype=bool) if leaf.null_count == 0 else np.asarray(leaf.is_valid())
-        )
-        nn_leaf = leaf.drop_null() if leaf.null_count else leaf
-        values, lengths, payload, _, _ = _leaf_components(nn_leaf, ptype)
-        return list_chunk_sha256(ptype, row_valid, lengths_per_row, elem_valid, values, lengths, payload)
-    ptype, logical = pa_ptype(arr)
-    if logical == "timestamp_us":
-        arr = arr.cast(pa.int64())
-    elif logical == "date":
-        arr = arr.cast(pa.int32())
-    elif logical.startswith("decimal("):
-        arr = _decimal_to_physical(arr, ptype)
-    n = len(arr)
-    valid = np.ones(n, dtype=bool) if arr.null_count == 0 else np.asarray(arr.is_valid())
-    nn_arr = arr.drop_null() if arr.null_count else arr
-    values, lengths, payload, _, _ = _leaf_components(nn_arr, ptype)
-    return chunk_sha256(ptype, valid, values, lengths, payload)
-
-
-
-
-
-
-# ---------------------------------------------------------------------------
-# list<list<T>> columns: TWO repetition levels (max_rep = 2), the deepest
-# shape in the reference's record assembly tests.  Level semantics
-# (reader_schema.cc:79-93 applied twice):
-#   def 0 outer null | 1 outer empty | 2 inner null | 3 inner empty |
-#   def max-1 element null (iff elem optional) | max element value
-#   rep 0 new row | 1 new inner list | 2 next element
-# Geometry: max_def = outer_opt + 1 + inner_opt + 1 + elem_opt; the middle
-# flags derive from max_def so no extra chunk metadata is needed.
-
-
-def _list2_geometry(nullable: bool, inner_nullable: bool, elem_nullable: bool):
-    d_outer_empty = 1 if nullable else 0
-    d_inner_null = d_outer_empty + 1  # valid only if inner_nullable
-    d_inner_empty = d_outer_empty + 1 + (1 if inner_nullable else 0)
-    max_def = d_inner_empty + 1 + (1 if elem_nullable else 0)
-    return max_def, d_outer_empty, d_inner_null, d_inner_empty
-
-
-def _encode_list2_chunk(
-    arr: pa.Array,
-    *,
-    policy: str,
-    page_target_bytes: int,
-    compression: str,
-    nullable: bool | None,
-) -> EncodedChunk:
-    ptype, logical = pa_ptype(arr)  # logical = "list<list<elem>>"
-    n = len(arr)
-    if nullable is None:
-        nullable = arr.null_count > 0
-    inner = arr.flatten()  # inner lists of non-null outer rows
-    inner_nullable = inner.null_count > 0
-    leaf = inner.flatten()  # elements of non-null inner lists
-    elem_logical2 = logical[10:-2]
-    if elem_logical2 == "timestamp_us":
-        leaf = leaf.cast(pa.int64())
-    elif elem_logical2 == "date":
-        leaf = leaf.cast(pa.int32())
-    elif elem_logical2.startswith("decimal("):
-        leaf = _decimal_to_physical(leaf, ptype)
-    elem_nullable = leaf.null_count > 0
-    max_def, d_oe, d_in, d_ie = _list2_geometry(nullable, inner_nullable, elem_nullable)
-
-    row_valid = np.ones(n, dtype=bool) if arr.null_count == 0 else np.asarray(arr.is_valid())
-    olen = pa.compute.list_value_length(arr)
-    outer_len = np.asarray(olen.fill_null(0) if arr.null_count else olen).astype(np.int64)
-    inner_valid = (
-        np.ones(len(inner), dtype=bool) if inner.null_count == 0 else np.asarray(inner.is_valid())
-    )
-    ilen = pa.compute.list_value_length(inner)
-    inner_len = np.asarray(ilen.fill_null(0) if inner.null_count else ilen).astype(np.int64)
-    elem_valid = (
-        np.ones(len(leaf), dtype=bool) if leaf.null_count == 0 else np.asarray(leaf.is_valid())
-    )
-    nn_leaf = leaf.drop_null() if leaf.null_count else leaf
-    values, lengths, payload, nn_val_bytes, type_length = _leaf_components(nn_leaf, ptype)
-
-    # ---- level streams: per inner slot, entries = max(len, 1); per row,
-    # entries = sum(slot entries) or 1 when the row has no slots
-    slot_entries = np.maximum(inner_len, 1)
-    m = len(inner)
-    # per-row entry counts via reduceat over slot ranges
-    row_slot_start = np.zeros(n, dtype=np.int64)
-    row_slot_start[1:] = np.cumsum(outer_len)[:-1]
-    row_entries = np.ones(n, dtype=np.int64)
-    has_slots = outer_len > 0
-    if m and has_slots.any():
-        cs = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(slot_entries, out=cs[1:])
-        row_entries[has_slots] = (
-            cs[row_slot_start[has_slots] + outer_len[has_slots]] - cs[row_slot_start[has_slots]]
-        )
-    n_levels = int(row_entries.sum())
-    def_ = np.zeros(n_levels, dtype=np.uint64)
-    rep = np.full(n_levels, 2, dtype=np.uint64)
-    row_starts = np.zeros(n, dtype=np.int64)
-    row_starts[1:] = np.cumsum(row_entries)[:-1]
-    # slot starts: absolute level position of each inner slot's first entry
-    if m:
-        cs0 = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(slot_entries, out=cs0[1:])
-        row_of_slot = np.repeat(np.arange(n, dtype=np.int64), outer_len)
-        slot_starts = row_starts[row_of_slot] + (cs0[:m] - cs0[row_slot_start[row_of_slot]])
-        rep[slot_starts] = 1
-    else:
-        slot_starts = np.zeros(0, dtype=np.int64)
-    rep[row_starts] = 0  # row start wins over slot start
-    # def values
-    empty_rows = ~has_slots
-    if empty_rows.any():
-        def_[row_starts[empty_rows]] = np.where(row_valid[empty_rows], d_oe, 0).astype(np.uint64)
-    if m:
-        has_elems = inner_len > 0
-        # slots without elements: single entry, null or empty inner
-        se = ~has_elems
-        if se.any():
-            def_[slot_starts[se]] = np.where(inner_valid[se], d_ie, d_in).astype(np.uint64)
-        # element entries
-        if has_elems.any():
-            g = inner_len[has_elems]
-            dst = np.repeat(slot_starts[has_elems], g) + (
-                np.arange(int(g.sum()), dtype=np.int64) - np.repeat(np.cumsum(g) - g, g)
-            )
-            def_[dst] = np.where(elem_valid, max_def, max_def - 1).astype(np.uint64)
-
-    # ---- paginate on rows by element bytes + level overhead
-    elem_sizes = np.zeros(len(leaf), dtype=np.int64)
-    elem_sizes[elem_valid] = nn_val_bytes
-    cse = np.zeros(len(leaf) + 1, dtype=np.int64)
-    np.cumsum(elem_sizes, out=cse[1:])
-    row_elem_count = np.zeros(n, dtype=np.int64)
-    if m:
-        ce = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(inner_len, out=ce[1:])
-        row_elem_count[has_slots] = (
-            ce[row_slot_start[has_slots] + outer_len[has_slots]] - ce[row_slot_start[has_slots]]
-        )
-    row_elem_start = np.zeros(n, dtype=np.int64)
-    row_elem_start[1:] = np.cumsum(row_elem_count)[:-1]
-    row_bytes = cse[row_elem_start + row_elem_count] - cse[row_elem_start]
-    row_bytes = row_bytes + row_entries
-    page_ends = _page_boundaries(row_bytes, page_target_bytes)
-    n_pages = len(page_ends) if n else 0
-    level_ends = np.cumsum(row_entries)[page_ends - 1] if n else np.array([0], dtype=np.int64)
-    enc_mask = def_ == max_def
-    enc_before = np.cumsum(enc_mask, dtype=np.int64)
-    nn_page_ends = enc_before[level_ends - 1] if n else np.array([0], dtype=np.int64)
-
-    chunk = EncodedChunk(
-        ptype=ptype,
-        logical=logical,
-        nullable=nullable,
-        num_rows=n,
-        num_nulls=arr.null_count,
-        cardinality=0,
-        encodings=[],
-        compression=compression,
-        type_length=type_length,
-        input_bytes=_plain_size(ptype, int(elem_valid.sum()), lengths, type_length),
-        max_def=max_def,
-        max_rep=2,
-        elem_nullable=elem_nullable,
-    )
-    chunk.sha256 = list2_chunk_sha256(
-        ptype, row_valid, outer_len, inner_valid, inner_len, elem_valid, values, lengths, payload
-    )
-    _chunk_stats(chunk, ptype, values, lengths, payload)
-
-    plan = _plan_codecs(policy, ptype, n, None, values, lengths, payload, page_ends, nn_page_ends, compression=compression)
-    per_page_enc, dict_page_bytes, codes, cardinality, card_by_page, cached_bodies = plan
-    chunk.cardinality = cardinality
-    if dict_page_bytes is not None:
-        comp = _compress(dict_page_bytes, compression)
-        chunk.pages.append(
-            Page("dict", "PLAIN", cardinality, cardinality, len(dict_page_bytes), len(comp), comp)
-        )
-    nn_start = lvl_start = len_start = 0
-    chunk_fsst_table = None
-    for pi in range(n_pages):
-        lvl_end = int(level_ends[pi])
-        nn_end = int(nn_page_ends[pi])
-        enc = per_page_enc[pi]
-        if cached_bodies is not None:
-            body = cached_bodies[pi]
-        elif enc == "RLE_DICTIONARY":
-            body = dictionary.encode_dict_indices(codes[nn_start:nn_end], int(card_by_page[pi]))
-        elif ptype == "BYTE_ARRAY":
-            pl = lengths[nn_start:nn_end]
-            seg = payload[len_start : len_start + int(pl.sum())]
-            if enc == "FSST" and chunk_fsst_table is None:
-                chunk_fsst_table = _train_chunk_table(payload)
-            body = _encode_values(enc, ptype, None, pl, seg, chunk_fsst_table)
-        else:
-            body = _encode_values(enc, ptype, values[nn_start:nn_end])
-        head = encode_levels_v1(rep[lvl_start:lvl_end], 2) + encode_levels_v1(
-            def_[lvl_start:lvl_end], max_def
-        )
-        page_raw = head + body
-        comp = _compress(page_raw, compression)
-        chunk.pages.append(
-            Page("data", enc, lvl_end - lvl_start, nn_end - nn_start, len(page_raw), len(comp), comp)
-        )
-        if ptype == "BYTE_ARRAY":
-            len_start += int(lengths[nn_start:nn_end].sum())
-        nn_start = nn_end
-        lvl_start = lvl_end
-    chunk.encodings = sorted({p.encoding for p in chunk.pages if p.kind == "data"})
-    chunk.encoded_bytes = sum(p.uncompressed_size for p in chunk.pages)
-    chunk.compressed_bytes = sum(p.compressed_size for p in chunk.pages)
-    return chunk
-
-
-def _decode_list2_chunk(chunk: EncodedChunk) -> pa.Array:
-    """Dremel reassembly for list<list<T>> (max_rep = 2)."""
-    ptype = chunk.ptype
-    max_def = chunk.max_def
-    nullable = chunk.nullable
-    elem_nullable = chunk.elem_nullable
-    inner_nullable = (max_def - (1 if nullable else 0) - (1 if elem_nullable else 0) - 2) >= 1
-    _, d_oe, d_in, d_ie = _list2_geometry(nullable, inner_nullable, elem_nullable)
-
-    dict_entries = None
-    dict_size = 0
-    rep_parts, def_parts = [], []
-    fixed_parts, len_parts, payload_parts = [], [], []
-    for page in chunk.pages:
-        raw = _decompress(page.data, chunk.compression)
-        if page.kind == "dict":
-            dict_entries = _load_dict_page(raw, ptype, chunk.type_length, page.num_values)
-            dict_size = page.num_values
-            continue
-        rep, c1 = decode_levels_v1(raw, 2, page.num_values)
-        def_, c2 = decode_levels_v1(memoryview(raw)[c1:], max_def, page.num_values)
-        body = memoryview(raw)[c1 + c2 :]
-        nn = int((def_ == max_def).sum())
-        if page.num_non_null >= 0 and nn != page.num_non_null:
-            raise ValueError("list2 page value count mismatch")
-        if page.encoding == "RLE_DICTIONARY":
-            codes = _decode_values("RLE_DICTIONARY", ptype, bytes(body), nn, dict_size)
-            _gather_dict_values(ptype, dict_entries, codes, len_parts, payload_parts, fixed_parts)
-        else:
-            out = _decode_values(page.encoding, ptype, bytes(body), nn, type_length=chunk.type_length)
-            if ptype == "BYTE_ARRAY":
-                len_parts.append(out[0])
-                payload_parts.append(out[1])
-            else:
-                fixed_parts.append(out)
-        rep_parts.append(rep)
-        def_parts.append(def_)
-
-    rep_all = np.concatenate(rep_parts) if rep_parts else np.zeros(0, dtype=np.int32)
-    def_all = np.concatenate(def_parts) if def_parts else np.zeros(0, dtype=np.int32)
-    row_start = rep_all == 0
-    n_rows = int(row_start.sum())
-    if n_rows != chunk.num_rows:
-        raise ValueError(f"decoded row count mismatch: {n_rows} != {chunk.num_rows}")
-    row_ids = np.cumsum(row_start) - 1
-    is_slot_begin = (rep_all <= 1) & (def_all >= d_oe + 1)
-    slots_per_row = (
-        np.bincount(row_ids[is_slot_begin], minlength=n_rows).astype(np.int64)
-        if n_rows
-        else np.zeros(0, dtype=np.int64)
-    )
-    m = int(is_slot_begin.sum())
-    slot_ids = np.cumsum(is_slot_begin) - 1  # entry -> slot (valid where >= 0)
-    is_elem = def_all >= d_ie + 1
-    inner_len = np.bincount(slot_ids[is_elem], minlength=m).astype(np.int64) if m else np.zeros(0, np.int64)
-    slot_begin_def = def_all[is_slot_begin]
-    inner_valid = (slot_begin_def != d_in) if inner_nullable else np.ones(m, dtype=bool)
-    row_valid = (def_all[row_start] > 0) if nullable else np.ones(n_rows, dtype=bool)
-    elem_valid = def_all[is_elem] == max_def
-    n_elems = int(is_elem.sum())
-
-    elem_logical = chunk.logical[10:-2]  # strip 'list<list<' ... '>>'
-    leaf = _build_leaf_array(
-        ptype, elem_logical, chunk.type_length, elem_nullable, elem_valid, n_elems,
-        len_parts, payload_parts, fixed_parts,
-    )
-    inner_offsets = np.zeros(m + 1, dtype=np.int32)
-    np.cumsum(inner_len, out=inner_offsets[1:])
-    inner_arr = pa.ListArray.from_arrays(
-        pa.array(inner_offsets, type=pa.int32()),
-        leaf,
-        mask=pa.array(~inner_valid) if not inner_valid.all() else None,
-    )
-    outer_offsets = np.zeros(n_rows + 1, dtype=np.int32)
-    np.cumsum(slots_per_row, out=outer_offsets[1:])
-    return pa.ListArray.from_arrays(
-        pa.array(outer_offsets, type=pa.int32()),
-        inner_arr,
-        mask=pa.array(~row_valid) if chunk.num_nulls else None,
-    )
+    A list leaf read from a standard file can sit under extra OPTIONAL
+    levels (a field of a list<struct>); every def between the element slot
+    and max_def then collapses to a null element."""
+    n_lists = chunk.max_rep
+    paths = _list_paths(n_lists)
+    opts = {"": chunk.nullable}
+    # an inner list (list<list>) is OPTIONAL iff the budget has its level
+    inner = chunk.max_def - chunk.nullable - chunk.elem_nullable - 2 >= 1
+    opts.update({p: inner for p in paths[1:-1]})
+    d_elem = n_lists + sum(opts.values())  # def of an element slot
+    opts[paths[-1]] = chunk.elem_nullable
+    leaf_max_def = d_elem + chunk.elem_nullable
+    def_, rep, vals = _decode_dremel_leaf(chunk, chunk.logical[5 * n_lists : -n_lists])
+    if chunk.max_def > leaf_max_def:
+        def_ = np.where(def_ >= chunk.max_def, leaf_max_def, np.minimum(def_, d_elem))
+    tree = ("leaf", vals.type)
+    for _ in range(n_lists):
+        tree = ("list", tree)
+    leaf = Leaf(paths[-1], vals, def_, rep, leaf_max_def, n_lists)
+    return assemble_tree(tree, {paths[-1]: leaf}, chunk.num_rows, opts)
 
 
 # ---------------------------------------------------------------------------
@@ -2030,13 +1425,13 @@ def _decode_list2_chunk(chunk: EncodedChunk) -> pa.Array:
 # ~free under RLE).
 
 
-def dremel_leaf_sha(def_, rep, ptype, values, lengths, payload) -> str:
-    """Canonical per-leaf content sha: level streams + non-null values."""
+def _levels_sha(def_, rep):
+    """sha256 fed with a dremel leaf's level streams (its content sha adds
+    the non-null values)."""
     h = hashlib.sha256()
     h.update(np.ascontiguousarray(def_, dtype="<u4").tobytes())
     h.update(np.ascontiguousarray(rep, dtype="<u4").tobytes())
-    _sha_update_values(h, ptype, values, lengths, payload)
-    return h.hexdigest()
+    return h
 
 
 def encode_dremel_column(
@@ -2047,34 +1442,31 @@ def encode_dremel_column(
     compression: str = "uncompressed",
 ) -> dict[str, "EncodedChunk"]:
     """Encode ANY nested arrow column -> {'#g<i>': leaf chunk}."""
-    from .dremel import shred
-
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     out: dict[str, EncodedChunk] = {}
     for i, leaf in enumerate(shred(arr)):
-        out[f"#g{i}"] = _encode_dremel_leaf(
-            leaf, policy=policy, page_target_bytes=page_target_bytes,
-            compression=compression,
+        _, leaf_logical = pa_ptype_scalar(leaf.values.type)
+        out[f"#g{i}"] = _encode_leaf(
+            leaf, _levels_sha(leaf.def_, leaf.rep), policy=policy,
+            page_target_bytes=page_target_bytes, compression=compression,
+            logical=f"g:{leaf.path}|{leaf_logical}", nullable=True,
+            num_nulls=len(leaf.def_) - len(leaf.values), elem_nullable=True,
         )
     return out
 
 
-def _encode_dremel_leaf(leaf, *, policy, page_target_bytes, compression) -> "EncodedChunk":
-    vals = leaf.values
-    ptype, leaf_logical = pa_ptype_scalar(vals.type)
-    if leaf_logical == "timestamp_us":
-        vals = vals.cast(pa.int64())
-    elif leaf_logical == "date":
-        vals = vals.cast(pa.int32())
-    elif leaf_logical.startswith("decimal("):
-        vals = _decimal_to_physical(vals, ptype)
+def _encode_leaf(leaf: Leaf, sha, *, policy, page_target_bytes, compression, **meta) -> EncodedChunk:
+    """One shredded leaf -> chunk, paged on record boundaries.  ``sha``
+    holds the structural part of the content hash; ``meta`` carries the
+    shape's chunk fields (logical, nullable, num_nulls, elem_nullable)."""
+    ptype, _ = pa_ptype_scalar(leaf.values.type)
+    vals = _to_physical(leaf.values, ptype)
     values, lengths, payload, nn_val_bytes, type_length = _leaf_components(vals, ptype)
     def_ = np.ascontiguousarray(leaf.def_, dtype=np.uint64)
     rep = np.ascontiguousarray(leaf.rep, dtype=np.uint64)
-    max_def, max_rep = leaf.max_def, leaf.max_rep
     n_entries = len(def_)
-    enc_mask = def_ == max_def
+    enc_mask = def_ == leaf.max_def
 
     # record-aligned paging (pages start at rep == 0 -- a parquet invariant,
     # so these pages stay export-grade); sized by value bytes + ~1B/level
@@ -2087,135 +1479,43 @@ def _encode_dremel_leaf(leaf, *, policy, page_target_bytes, compression) -> "Enc
     rec_ends = np.append(rec_starts[1:], n_entries)
     rec_bytes = cs[rec_ends] - cs[rec_starts]
     page_ends = _page_boundaries(rec_bytes, page_target_bytes)
-    n_pages = len(page_ends) if n_rows else 0
     level_ends = rec_ends[page_ends - 1] if n_rows else np.array([0], dtype=np.int64)
     enc_before = np.cumsum(enc_mask, dtype=np.int64)
     nn_page_ends = enc_before[level_ends - 1] if n_rows else np.array([0], dtype=np.int64)
 
-    input_bytes = _plain_size(ptype, int(enc_mask.sum()), lengths, type_length)
     chunk = EncodedChunk(
         ptype=ptype,
-        logical=f"g:{leaf.path}|{leaf_logical}",
-        nullable=True,
         num_rows=n_rows,
-        num_nulls=int(n_entries - enc_mask.sum()),
         cardinality=0,
         encodings=[],
         compression=compression,
         type_length=type_length,
-        input_bytes=input_bytes,
-        max_def=max_def,
-        max_rep=max_rep,
-        elem_nullable=True,
+        input_bytes=_plain_size(ptype, int(enc_mask.sum()), lengths, type_length),
+        max_def=leaf.max_def,
+        max_rep=leaf.max_rep,
+        **meta,
     )
-    chunk.sha256 = dremel_leaf_sha(def_, rep, ptype, values, lengths, payload)
+    _sha_update_values(sha, ptype, values, lengths, payload)
+    chunk.sha256 = sha.hexdigest()
     _chunk_stats(chunk, ptype, values, lengths, payload)
-
-    plan = _plan_codecs(policy, ptype, n_rows, None, values, lengths, payload, page_ends, nn_page_ends, compression=compression)
-    per_page_enc, dict_page_bytes, codes, cardinality, card_by_page, cached_bodies = plan
-    chunk.cardinality = cardinality
-    if dict_page_bytes is not None:
-        comp = _compress(dict_page_bytes, compression)
-        chunk.pages.append(
-            Page("dict", "PLAIN", cardinality, cardinality, len(dict_page_bytes), len(comp), comp)
-        )
-
-    nn_start = 0
-    lvl_start = 0
-    len_start = 0
-    chunk_fsst_table = None
-    for pi in range(n_pages):
-        lvl_end = int(level_ends[pi])
-        nn_end = int(nn_page_ends[pi])
-        enc = per_page_enc[pi]
-        if cached_bodies is not None:
-            body = cached_bodies[pi]
-        elif enc == "RLE_DICTIONARY":
-            body = dictionary.encode_dict_indices(codes[nn_start:nn_end], int(card_by_page[pi]))
-        elif ptype == "BYTE_ARRAY":
-            pl = lengths[nn_start:nn_end]
-            seg = payload[len_start : len_start + int(pl.sum())]
-            if enc == "FSST" and chunk_fsst_table is None:
-                chunk_fsst_table = _train_chunk_table(payload)
-            body = _encode_values(enc, ptype, None, pl, seg, chunk_fsst_table)
-        else:
-            body = _encode_values(enc, ptype, values[nn_start:nn_end])
-        # V1 page: [u32+rep (iff max_rep>0)][u32+def][values]
-        head = b""
-        if max_rep > 0:
-            head = encode_levels_v1(rep[lvl_start:lvl_end], max_rep)
-        head += encode_levels_v1(def_[lvl_start:lvl_end], max_def)
-        page_raw = head + body
-        comp = _compress(page_raw, compression)
-        chunk.pages.append(
-            Page("data", enc, lvl_end - lvl_start, nn_end - nn_start, len(page_raw), len(comp), comp)
-        )
-        if ptype == "BYTE_ARRAY":
-            len_start += int(lengths[nn_start:nn_end].sum())
-        nn_start = nn_end
-        lvl_start = lvl_end
-
-    chunk.encodings = sorted({p.encoding for p in chunk.pages if p.kind == "data"})
-    chunk.encoded_bytes = sum(p.uncompressed_size for p in chunk.pages)
-    chunk.compressed_bytes = sum(p.compressed_size for p in chunk.pages)
+    _write_pages(chunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends)
     return chunk
 
 
 def _decode_dremel_leaf(chunk: "EncodedChunk", leaf_logical: str):
     """Leaf chunk pages -> (def levels, rep levels, non-null typed values)."""
-    ptype = chunk.ptype
-    max_def, max_rep = chunk.max_def, chunk.max_rep
-    dict_entries = None
-    dict_size = 0
-    rep_parts: list[np.ndarray] = []
-    def_parts: list[np.ndarray] = []
-    fixed_parts: list[np.ndarray] = []
-    len_parts: list[np.ndarray] = []
-    payload_parts: list[np.ndarray] = []
-    for page in chunk.pages:
-        raw = _decompress(page.data, chunk.compression)
-        if page.kind == "dict":
-            dict_entries = _load_dict_page(raw, ptype, chunk.type_length, page.num_values)
-            dict_size = page.num_values
-            continue
-        off = 0
-        if max_rep > 0:
-            rep, off = decode_levels_v1(raw, max_rep, page.num_values)
-        else:
-            rep = np.zeros(page.num_values, dtype=np.int64)
-        def_, c2 = decode_levels_v1(memoryview(raw)[off:], max_def, page.num_values)
-        body = memoryview(raw)[off + c2 :]
-        nn = int((def_ == max_def).sum())
-        if page.num_non_null >= 0 and nn != page.num_non_null:
-            raise ValueError(f"dremel page value count mismatch: {nn} != {page.num_non_null}")
-        if page.encoding == "RLE_DICTIONARY":
-            codes = _decode_values("RLE_DICTIONARY", ptype, bytes(body), nn, dict_size)
-            _gather_dict_values(ptype, dict_entries, codes, len_parts, payload_parts, fixed_parts)
-        else:
-            out = _decode_values(page.encoding, ptype, bytes(body), nn, type_length=chunk.type_length)
-            if ptype == "BYTE_ARRAY":
-                lens, pl = out
-                len_parts.append(lens)
-                payload_parts.append(pl)
-            else:
-                fixed_parts.append(out)
-        rep_parts.append(np.asarray(rep))
-        def_parts.append(np.asarray(def_))
-    def_all = np.concatenate(def_parts) if def_parts else np.zeros(0, dtype=np.int64)
-    rep_all = np.concatenate(rep_parts) if rep_parts else np.zeros(0, dtype=np.int64)
-    nn_total = int((def_all == max_def).sum())
+    def_, rep, parts = _read_pages(chunk, chunk.max_def)
+    if rep is None:
+        rep = np.zeros(len(def_), dtype=np.uint32)
+    nn = int((def_ == chunk.max_def).sum())
     vals = _build_leaf_array(
-        ptype, leaf_logical, chunk.type_length, False,
-        np.ones(nn_total, dtype=bool), nn_total,
-        len_parts, payload_parts, fixed_parts,
+        chunk.ptype, leaf_logical, chunk.type_length, False, np.ones(nn, dtype=bool), nn, *parts
     )
-    return def_all.astype(np.uint32), rep_all.astype(np.uint32), vals
+    return def_.astype(np.uint32), rep.astype(np.uint32), vals
 
 
 def decode_dremel_column(chunks: dict[str, "EncodedChunk"]) -> pa.Array:
     """{leaf name ending '#g<i>': chunk} -> reassembled arrow column."""
-    from .dremel import Leaf, assemble
-
     leaves: dict[str, Leaf] = {}
     n_rows = 0
     for name in sorted(chunks, key=lambda s: int(s.rsplit("#g", 1)[1])):
@@ -2234,11 +1534,7 @@ def dremel_recompute_sha(chunk: "EncodedChunk") -> str:
     audit: detects page corruption without the source table)."""
     leaf_logical = chunk.logical[2:].rsplit("|", 1)[1]
     def_, rep, vals = _decode_dremel_leaf(chunk, leaf_logical)
-    if leaf_logical == "timestamp_us":
-        vals = vals.cast(pa.int64())
-    elif leaf_logical == "date":
-        vals = vals.cast(pa.int32())
-    elif leaf_logical.startswith("decimal("):
-        vals = _decimal_to_physical(vals, chunk.ptype)
-    values, lengths, payload, _, _ = _leaf_components(vals, chunk.ptype)
-    return dremel_leaf_sha(def_, rep, chunk.ptype, values, lengths, payload)
+    values, lengths, payload, _, _ = _leaf_components(_to_physical(vals, chunk.ptype), chunk.ptype)
+    h = _levels_sha(def_, rep)
+    _sha_update_values(h, chunk.ptype, values, lengths, payload)
+    return h.hexdigest()

@@ -176,7 +176,7 @@ def audit_lineage(encoded: DataFrame) -> DataFrame:
                 chunk = _rebuild_chunk(tbl, by_col[c])
                 if chunk.logical.startswith("g:"):
                     # dremel leaf ('<col>#g<i>'): sha covers level streams
-                    # + non-null values (pages.dremel_leaf_sha)
+                    # + non-null values (pages._levels_sha)
                     recomputed = dremel_recompute_sha(chunk)
                 else:
                     recomputed = chunk_content_sha(decode_chunk(chunk))

@@ -243,3 +243,20 @@ def test_sliced_input():
     s = arr.slice(1, 3)
     out = roundtrip(pa.concat_arrays([s]))
     assert out.equals(pa.array(s.to_pylist(), type=arr.type))
+
+
+def test_shred_required_nodes():
+    # a REQUIRED node adds no def level (reader_schema.cc:79-93) ...
+    arr = pa.array([[1, 2], [], [3]], type=pa.list_(pa.int64()))
+    (leaf,) = shred(arr, {"": False, "l": False})
+    assert leaf.max_def == 1 and leaf.max_rep == 1
+    assert leaf.def_.tolist() == [1, 1, 0, 1]
+    assert leaf.rep.tolist() == [0, 1, 0, 0]
+    (opt,) = shred(arr)
+    assert opt.max_def == 3 and opt.def_.tolist() == [3, 3, 1, 3]
+    # ... so one holding a null fails loudly, naming the node path
+    sarr = pa.array([{"a": 1}, {"a": None}], type=pa.struct([("a", pa.int64())]))
+    with pytest.raises(ValueError, match="'sa' is REQUIRED"):
+        shred(sarr, {"sa": False})
+    (ok,) = shred(sarr, {"": False})
+    assert ok.max_def == 1 and ok.def_.tolist() == [1, 0]

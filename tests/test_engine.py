@@ -104,6 +104,35 @@ def test_list2_sha_covers_values():
     assert chunk_content_sha(decode_chunk(cb)) == cb.sha256
 
 
+def test_audit_lineage_list_of_decimals(spark):
+    """The audit's recompute hashes list<decimal> values in the physical
+    (unscaled integer / FLBA) form the encoder hashed, so clean chunks
+    audit as ok."""
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType, DecimalType, LongType, StringType, StructField, StructType,
+    )
+
+    from parquet4seastar_spark.engine.verify import audit_lineage
+
+    schema = StructType([
+        StructField("row_id", LongType()),
+        StructField("prices", ArrayType(DecimalType(9, 2))),
+        StructField("repo", StringType()),
+    ])
+    rows = [
+        (i, None if i % 7 == 0 else [Decimal(i).scaleb(-2), None][: 1 + i % 2], f"r{i % 3}")
+        for i in range(200)
+    ]
+    enc = encode_table(
+        spark.createDataFrame(rows, schema), columns=["prices"], policy="plain",
+        num_partitions=2, salt_target_rows=2000,
+    )
+    audit = audit_lineage(enc).collect()
+    assert audit and all(r["ok"] for r in audit), [r["column"] for r in audit if not r["ok"]]
+
+
 def test_export_parquet_files_spark_reads(spark, tmp_path):
     """The export sink writes standard .parquet per chunk group; Spark's own
     parquet reader (a fully independent implementation) reads it back."""

@@ -16,7 +16,7 @@ import struct
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from parquet4seastar_spark.codecs.pages import _encode_list_chunk
+from parquet4seastar_spark.codecs.pages import encode_chunk
 from parquet4seastar_spark.codecs.parquet_file import (
     ENCODINGS,
     MAGIC,
@@ -82,10 +82,7 @@ def _legacy_file(path, chunk, n_rows, schema_emit, path_in_schema):
 def test_legacy_two_level_list(tmp_path):
     vals = [[1, 2, 3], None, [], [4], [5, 6]] * 20
     arr = pa.array(vals, type=pa.list_(pa.int32()))
-    chunk = _encode_list_chunk(
-        arr, policy="plain", page_target_bytes=1 << 20,
-        compression="uncompressed", nullable=True, elem_nullable=False,
-    )
+    chunk = encode_chunk(arr, policy="plain", nullable=True, elem_nullable=False)
     assert (chunk.max_def, chunk.max_rep) == (2, 1)
 
     def emit(w):
@@ -108,10 +105,7 @@ def test_legacy_one_level_repeated_leaf(tmp_path):
     # absent == empty (max_def = 1, d_empty = 0)
     vals = [[1, 2], [], [3], [4, 5, 6], []] * 20
     arr = pa.array(vals, type=pa.list_(pa.int32()))
-    chunk = _encode_list_chunk(
-        arr, policy="plain", page_target_bytes=1 << 20,
-        compression="uncompressed", nullable=False, elem_nullable=False,
-    )
+    chunk = encode_chunk(arr, policy="plain", nullable=False, elem_nullable=False)
     assert (chunk.max_def, chunk.max_rep) == (1, 1)
 
     def emit(w):
@@ -314,10 +308,7 @@ def test_legacy_top_level_shapes_via_tree_reader(tmp_path):
     reader now (same values as the read_column level-budget path)."""
     vals = [[1, 2, 3], None, [], [4], [5, 6]] * 20
     arr = pa.array(vals, type=pa.list_(pa.int32()))
-    chunk = _encode_list_chunk(
-        arr, policy="plain", page_target_bytes=1 << 20,
-        compression="uncompressed", nullable=True, elem_nullable=False,
-    )
+    chunk = encode_chunk(arr, policy="plain", nullable=True, elem_nullable=False)
 
     def emit(w):
         _emit_element(w, "xs", repetition=1, num_children=1, converted=3)
@@ -332,10 +323,7 @@ def test_legacy_top_level_shapes_via_tree_reader(tmp_path):
 
     vals1 = [[1, 2], [], [3], [4, 5, 6], []] * 20
     arr1 = pa.array(vals1, type=pa.list_(pa.int32()))
-    chunk1 = _encode_list_chunk(
-        arr1, policy="plain", page_target_bytes=1 << 20,
-        compression="uncompressed", nullable=False, elem_nullable=False,
-    )
+    chunk1 = encode_chunk(arr1, policy="plain", nullable=False, elem_nullable=False)
 
     def emit1(w):
         _emit_element(w, "xs", ptype="INT32", repetition=2)

@@ -305,6 +305,49 @@ def test_list_level_streams_match_reference_semantics():
     assert deflv.tolist() == [3, 0, 1, 3, 2]
 
 
+@pytest.mark.parametrize(
+    "typ", [pa.decimal128(7, 2), pa.decimal128(15, 3), pa.decimal128(25, 4)]
+)
+@pytest.mark.parametrize("depth", [1, 2])
+def test_list_decimal_content_sha_matches_lineage(typ, depth):
+    # the lineage audit recomputes chunk_content_sha over the decoded chunk:
+    # it must hash the same physical (unscaled) decimal values the encoder
+    # hashed, or every list<decimal> chunk audits as corrupt
+    import decimal
+
+    from parquet4seastar_spark.codecs.pages import chunk_content_sha
+
+    d = decimal.Decimal
+    vals = [[d("1.50"), None, d("-3.25")], None, [], [d("0.01")]] * 10
+    t = pa.list_(typ)
+    if depth == 2:
+        vals, t = [vals[:3], None, [], vals[3:7]], pa.list_(t)
+    arr = pa.array(vals, type=t)
+    chunk = encode_chunk(arr, policy="plain")
+    assert chunk_content_sha(arr) == chunk.sha256
+    assert chunk_content_sha(decode_chunk(chunk)) == chunk.sha256
+
+
+def test_flat_nullable_false_over_nulls_raises():
+    # a REQUIRED column has no def level to record a null in
+    with pytest.raises(ValueError, match="nullable=False"):
+        encode_chunk(pa.array([1, None, 3], type=pa.int64()), nullable=False)
+
+
+def test_list_nullable_false_over_null_rows_raises():
+    # a REQUIRED list cannot tell a null row from an empty one
+    arr = pa.array([[1, None, 3], None, [4]], type=pa.list_(pa.int64()))
+    with pytest.raises(ValueError, match="'<root>' is REQUIRED"):
+        encode_chunk(arr, nullable=False)
+
+
+def test_list_elem_nullable_false_over_null_elements_raises():
+    # a REQUIRED element has no def level for a null element
+    arr = pa.array([[1, None, 3], None, [4]], type=pa.list_(pa.int64()))
+    with pytest.raises(ValueError, match="'l' is REQUIRED"):
+        encode_chunk(arr, elem_nullable=False)
+
+
 def test_list_dict_fallback_and_fsst():
     # string elements: low-card -> dict; repetitive text -> FSST under auto
     arr = pa.array([["py", "c", "py"], ["go"], ["py", "c"]] * 500, type=pa.list_(pa.string()))
