@@ -9,8 +9,12 @@ match work is at positions the chain never visits.  A ~40-line scalar C
 loop does exactly the same greedy rule at memory speed.  The kernel is
 compiled ON FIRST USE with the system C compiler (cc -O3) into a cached
 shared object; any failure (no compiler, read-only cache, sandbox) falls
-back to the numpy path silently.  Set ``P4S_NO_NATIVE=1`` to force the
-fallback (tests exercise both paths and assert byte-identical output).
+back to the numpy path.  The reason is kept in ``error`` (the exception
+text plus the tail of the compiler's stderr) and named in one
+RuntimeWarning per process.  The fallback changes speed only: both paths
+write the same bytes.  Set ``P4S_NO_NATIVE=1`` to force the fallback
+without a warning (tests exercise both paths and assert byte-identical
+output).
 
 Semantics are pinned to the numpy path: same LUT tables (lut2 sentinel
 entry makes the window compare unconditionally false), same
@@ -28,6 +32,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import warnings
 
 _SRC = r"""
 #include <stdint.h>
@@ -591,6 +596,7 @@ void p4s_minhash(
 
 _lib = None
 _tried = False
+error: str | None = None  # why the kernel did not load (None: loaded or not tried)
 
 
 def _cache_dir() -> str:
@@ -600,43 +606,37 @@ def _cache_dir() -> str:
     return os.path.join(base, "p4s_native")
 
 
-def _build() -> str | None:
-    """Compile (or reuse) the kernel .so; returns its path or None."""
+def _build() -> str:
+    """Compile (or reuse) the kernel .so; returns its path, raises on failure."""
     tag = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
     d = _cache_dir()
     so = os.path.join(d, f"fsst_{tag}.so")
     if os.path.exists(so):
         return so
-    try:
-        os.makedirs(d, exist_ok=True)
-        with tempfile.TemporaryDirectory(dir=d) as td:
-            c = os.path.join(td, "k.c")
-            tmp_so = os.path.join(td, "k.so")
-            with open(c, "w") as f:
-                f.write(_SRC)
-            subprocess.run(
-                ["cc", "-O3", "-fPIC", "-shared", "-o", tmp_so, c],
-                check=True, capture_output=True, timeout=60,
-            )
-            os.replace(tmp_so, so)  # atomic: concurrent workers race safely
-        return so
-    except Exception:
-        return None
+    os.makedirs(d, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=d) as td:
+        c = os.path.join(td, "k.c")
+        tmp_so = os.path.join(td, "k.so")
+        with open(c, "w") as f:
+            f.write(_SRC)
+        subprocess.run(
+            ["cc", "-O3", "-fPIC", "-shared", "-o", tmp_so, c],
+            check=True, capture_output=True, timeout=60,
+        )
+        os.replace(tmp_so, so)  # atomic: concurrent workers race safely
+    return so
 
 
 def get_kernel():
     """The loaded ctypes library, or None (numpy fallback)."""
-    global _lib, _tried
+    global _lib, _tried, error
     if _tried:
         return _lib
     _tried = True
     if os.environ.get("P4S_NO_NATIVE"):
         return None
-    so = _build()
-    if so is None:
-        return None
     try:
-        lib = ctypes.CDLL(so)
+        lib = ctypes.CDLL(_build())
         lib.p4s_fsst_encode.restype = ctypes.c_long
         lib.p4s_fsst_encode.argtypes = [
             ctypes.c_void_p, ctypes.c_long,
@@ -685,6 +685,12 @@ def get_kernel():
             ctypes.c_void_p, ctypes.c_void_p,
         ]
         _lib = lib
-    except Exception:
-        _lib = None
+    except Exception as e:
+        stderr = getattr(e, "stderr", None) or b""
+        tail = stderr[-2000:].decode(errors="replace").strip()
+        error = f"{type(e).__name__}: {e}" + (f"\n{tail}" if tail else "")
+        warnings.warn(
+            f"p4s native kernel unavailable, using the numpy fallback: {error}",
+            RuntimeWarning, stacklevel=2,
+        )
     return _lib

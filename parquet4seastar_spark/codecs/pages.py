@@ -29,9 +29,10 @@ columnar batches:
   candidate, so the selected total never exceeds the reference-policy size.
 
 Whole-page compression: UNCOMPRESSED, GZIP (zlib, gzip framing) or SNAPPY
-(src/compression.cc:29-158) through the literal-only stream writer in
-codecs/snappy_py.py -- the primary metric is encoded bytes, compression is
-an orthogonal layer.
+(src/compression.cc:29-158, through pyarrow's snappy) -- the primary metric
+is encoded bytes, compression is an orthogonal layer.  Pages are a function
+of the input, the policy and the compression alone: the C kernels and their
+numpy fallbacks write the same bytes.
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ import numpy as np
 import pyarrow as pa
 
 from . import delta, dictionary, fsst, plain
+from .bitpack import uleb128_decode
 from .dremel import Leaf, assemble, assemble_tree, shred
 from .levels import decode_levels_v1, encode_levels_v1
 from .rle import rle_decode, rle_encode
@@ -318,9 +320,7 @@ def _compress(data: bytes, compression: str) -> bytes:
         co = zlib.compressobj(6, zlib.DEFLATED, 31)
         return co.compress(bytes(data)) + co.flush()
     if compression == "snappy":
-        from .snappy_py import snappy_compress
-
-        return snappy_compress(bytes(data))
+        return pa.compress(data, "snappy", asbytes=True)
     raise ValueError(f"unsupported compression: {compression}")
 
 
@@ -332,9 +332,14 @@ def _decompress(data: bytes, compression: str) -> bytes:
         # format and pages written before the framing switch)
         return zlib.decompress(bytes(data), 47)
     if compression == "snappy":
-        from .snappy_py import snappy_decompress
-
-        return snappy_decompress(data)
+        # the size comes from the stream's own ULEB128 preamble (a bad one
+        # raises VarintError, a ValueError): given a larger size,
+        # pa.decompress returns trailing garbage, not an error
+        size = uleb128_decode(data, 0)[0]
+        try:
+            return pa.decompress(data, size, "snappy", asbytes=True)
+        except OSError as e:
+            raise ValueError(f"snappy: corrupt stream ({e})") from None
     raise ValueError(f"unsupported compression: {compression}")
 
 
@@ -482,70 +487,22 @@ def _chunk_stats(chunk: EncodedChunk, ptype: str, values, lengths, payload) -> N
         chunk.stat_min_num = float(np.nextafter(lo, -np.inf))
         chunk.stat_max_num = float(np.nextafter(hi, np.inf))
     elif ptype == "BYTE_ARRAY" and lengths is not None and len(lengths):
-        offs = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offs[1:])
         k = min(16, int(lengths.max()))
         if k == 0:  # every value is the empty string: exact degenerate bounds
             chunk.stat_min_bin = b""
             chunk.stat_max_bin = b""
             return
-        from . import _native
-
-        lib = _native.get_kernel()
-        if lib is not None:
-            # C scan with the numpy path's exact tie rules (min keeps the
-            # first tied row, max the last, shortest tied min prefix)
-            import ctypes
-
-            pl = np.ascontiguousarray(payload[: int(offs[-1])])
-            ln = np.ascontiguousarray(lengths, dtype=np.int64)
-            out3 = np.empty(3, dtype=np.int64)
-            lib.p4s_ba_stats(
-                ctypes.c_void_p(pl.ctypes.data), ctypes.c_void_p(ln.ctypes.data),
-                len(ln), k, ctypes.c_void_p(out3.ctypes.data),
-            )
-            lo_i, hi_i, min_len = int(out3[0]), int(out3[1]), int(out3[2])
-            chunk.stat_min_bin = pl[offs[lo_i] : offs[lo_i] + min_len].tobytes()
-            hi_prefix = bytearray(
-                pl[offs[hi_i] : offs[hi_i] + min(k, int(lengths[hi_i]))]
-            )
-            for j in range(len(hi_prefix) - 1, -1, -1):
-                if hi_prefix[j] != 0xFF:
-                    hi_prefix[j] += 1
-                    chunk.stat_max_bin = bytes(hi_prefix[: j + 1])
-                    break
-            return
-        # width padded to a multiple of 8 so rows view as big-endian uint64
-        # words: comparing those words IS byte-lexicographic comparison of
-        # the zero-padded prefixes (the extra zero columns never affect
-        # order), so the stable lexsort runs over 1-2 uint64 keys instead
-        # of 16 byte columns -- same order, same tie rows, 8x fewer key
-        # passes
-        kpad = ((k + 7) // 8) * 8
-        mat = np.zeros((len(lengths), kpad), dtype=np.uint8)
-        take = np.minimum(lengths, k)
-        tot = int(take.sum())
-        if tot:
-            rows = np.repeat(np.arange(len(lengths), dtype=np.int64), take)
-            rel = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(take) - take, take)
-            mat[rows, rel] = payload[np.repeat(offs[:-1], take) + rel]
-        words = mat.view(np.uint64).reshape(len(lengths), kpad // 8).byteswap()
-        order = np.lexsort(tuple(words[:, j] for j in reversed(range(kpad // 8))))
-        lo_i = int(order[0])
-        hi_i = int(order[-1])
-        mat = mat[:, :k]
-        # lower bound: a prefix of some value is <= that value <= the rest.
-        # Zero padding can TIE a longer value containing NUL bytes with a
-        # shorter one (b'a\x00' vs b'a'); take the shortest tied length so
-        # the stored prefix is <= every tied value too.
-        ties = (mat == mat[lo_i]).all(axis=1)
-        min_len = int(np.minimum(lengths[ties], k).min())
-        chunk.stat_min_bin = mat[lo_i, :min_len].tobytes()
+        lo_i, hi_i, min_len = plain.byte_array_extremes(lengths, payload, k)
+        offs = np.zeros(len(lengths) + 1, dtype=np.int64)
+        np.cumsum(lengths, out=offs[1:])
+        # lower bound: the shortest prefix among the values tied with the
+        # minimum (see byte_array_extremes), so it is <= every tied value
+        chunk.stat_min_bin = payload[offs[lo_i] : offs[lo_i] + min_len].tobytes()
         # upper bound: ALWAYS truncate-and-increment (strictly greater than
         # every value sharing the prefix -- covers embedded-NUL ties and
         # >16-byte values alike); an all-0xFF prefix can't increment -> no
         # upper stat, never prune on that side
-        hi_prefix = bytearray(mat[hi_i, : min(k, int(lengths[hi_i]))])
+        hi_prefix = bytearray(payload[offs[hi_i] : offs[hi_i] + min(k, int(lengths[hi_i]))])
         for j in range(len(hi_prefix) - 1, -1, -1):
             if hi_prefix[j] != 0xFF:
                 hi_prefix[j] += 1
@@ -1113,18 +1070,12 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
                     plans["DELTA_BYTE_ARRAY"] = (
                         ["DELTA_BYTE_ARRAY"] * n_pages, *no_dict[:-1], bodies
                     )
-        # FSST: estimate from a sample; the full encode pass runs only when
-        # the estimate beats the best cheap candidate.  The demanded margin
-        # depends on which kernel is loaded: under the numpy fallback FSST
-        # encode is ~15x slower than dict/DLBA, so the estimate must win by
-        # >10% ("sample gain per CPU second"); with the C kernel
-        # (codecs/_native.py, ~12x faster) the pass costs about as much as
-        # the cheap codecs and any estimated win takes it.
+        # FSST: estimate from a sample; the full encode pass runs when the
+        # estimate beats the best cheap candidate.  The rule is the same
+        # whichever FSST kernel runs, so pages depend only on the input,
+        # the policy and the compression.
         sample = payload[: 1 << 15]
         if allow_fsst and len(sample) >= 1024:
-            from . import _native
-
-            margin = 1.0 if _native.get_kernel() is not None else 0.9
             # per-task symbol-table cache (encode_job wires one dict per
             # partition, keyed by (column, part_key)): training is a fixed
             # ~9 ms per chunk, which dominated auto encode on
@@ -1152,22 +1103,20 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
                 + 300 * n_pages
                 + est_ratio * payload_len
             )
-            run_fsst = est_fsst < margin * min(candidates.values())
+            run_fsst = est_fsst < min(candidates.values())
             if run_fsst and compression == "gzip":
                 # the pages gzip AFTER encoding, and deflate recovers much
                 # of what FSST would have squeezed (both are entropy
                 # reductions of the same redundancy; measured on bench
                 # content the post-gzip FSST gain is ~8% vs ~55% without
-                # gzip): demand >=10% POST-GZIP gain over the raw byte
-                # stream before paying the ~15x-slower full encode pass.
-                # The probe uses a 128 KiB slice — a 32 KiB one understates
-                # the converged gain (deflate's window covers the whole
-                # sample there; 2.4% vs the true 8.3% on bench content).
-                # Margin as above: >=10% post-gzip gain under the numpy
-                # fallback, any gain with the C kernel.
+                # gzip): FSST must also win AFTER gzip over the raw byte
+                # stream before the full encode pass runs.  The probe uses
+                # a 128 KiB slice — a 32 KiB one understates the converged
+                # gain (deflate's window covers the whole sample there;
+                # 2.4% vs the true 8.3% on bench content).
                 gz_sample = payload[: 1 << 17]
                 enc_blob = fsst.fsst_encode(gz_sample, table)
-                run_fsst = len(zlib.compress(bytes(enc_blob), 6)) < margin * len(
+                run_fsst = len(zlib.compress(bytes(enc_blob), 6)) < len(
                     zlib.compress(gz_sample.tobytes(), 6)
                 )
             if run_fsst:

@@ -254,7 +254,7 @@ def _column_leaves(name: str, spec) -> list[tuple[tuple[str, ...], EncodedChunk]
     return [((name,), spec)]
 
 
-def _page_header(page: Page, max_rep: int) -> bytes:
+def _page_header(page: Page) -> bytes:
     w = CompactWriter()
     if page.kind == "dict":
         w.field_i32(1, 2)  # PageType DICTIONARY_PAGE
@@ -405,7 +405,7 @@ def write_parquet_file(
                     dict_off = off
                 elif data_off == 0:
                     data_off = off
-                header = _page_header(page, c.max_rep)
+                header = _page_header(page)
                 out += header
                 out += page.data
                 uncomp += len(header) + page.uncompressed_size

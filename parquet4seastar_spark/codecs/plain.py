@@ -30,6 +30,7 @@ __all__ = [
     "plain_decode_byte_array",
     "plain_encode_flba",
     "plain_decode_flba",
+    "byte_array_extremes",
 ]
 
 
@@ -148,3 +149,50 @@ def plain_decode_flba(buf: bytes, type_length: int, n: int) -> bytes:
     if len(buf) < need:
         raise ValueError("PLAIN FLBA buffer too short")
     return bytes(buf[:need])
+
+
+def byte_array_extremes(lengths: np.ndarray, payload: np.ndarray, k: int) -> tuple[int, int, int]:
+    """Rows holding the byte-lexicographic min and max of the values'
+    ``k``-byte zero-padded prefixes, as ``(lo_i, hi_i, min_len)``.
+
+    Ties keep the first row for the min and the last for the max.  Zero
+    padding can TIE a longer value containing NUL bytes with a shorter one
+    (b'a\\x00' vs b'a'); ``min_len`` is the shortest prefix length (capped
+    at ``k``) among the rows tied with the min, so that prefix is <= every
+    tied value.  C kernel when available; the numpy fallback gives the
+    same three numbers."""
+    from . import _native
+
+    lib = _native.get_kernel()
+    if lib is not None:
+        import ctypes
+
+        pl = np.ascontiguousarray(payload[: int(lengths.sum())])
+        ln = np.ascontiguousarray(lengths, dtype=np.int64)
+        out3 = np.empty(3, dtype=np.int64)
+        lib.p4s_ba_stats(
+            ctypes.c_void_p(pl.ctypes.data), ctypes.c_void_p(ln.ctypes.data),
+            len(ln), k, ctypes.c_void_p(out3.ctypes.data),
+        )
+        return int(out3[0]), int(out3[1]), int(out3[2])
+    offs = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offs[1:])
+    # width padded to a multiple of 8 so rows view as big-endian uint64
+    # words: comparing those words IS byte-lexicographic comparison of
+    # the zero-padded prefixes (the extra zero columns never affect
+    # order), so the stable lexsort runs over 1-2 uint64 keys instead
+    # of 16 byte columns -- same order, same tie rows, 8x fewer key
+    # passes
+    kpad = ((k + 7) // 8) * 8
+    mat = np.zeros((len(lengths), kpad), dtype=np.uint8)
+    take = np.minimum(lengths, k)
+    tot = int(take.sum())
+    if tot:
+        rows = np.repeat(np.arange(len(lengths), dtype=np.int64), take)
+        rel = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(take) - take, take)
+        mat[rows, rel] = payload[np.repeat(offs[:-1], take) + rel]
+    words = mat.view(np.uint64).reshape(len(lengths), kpad // 8).byteswap()
+    order = np.lexsort(tuple(words[:, j] for j in reversed(range(kpad // 8))))
+    lo_i = int(order[0])
+    ties = (mat[:, :k] == mat[lo_i, :k]).all(axis=1)
+    return lo_i, int(order[-1]), int(np.minimum(lengths[ties], k).min())

@@ -44,7 +44,7 @@ from .bitpack import (
     unpack_bits,
 )
 
-__all__ = ["rle_encode", "rle_decode", "rle_max_size", "rle_min_buffer_size"]
+__all__ = ["rle_encode", "rle_decode"]
 
 _MAX_LITERAL_VALUES = 63 * 8  # literal run closed at 63 groups = 504 values
 
@@ -176,18 +176,3 @@ def rle_decode(buf: bytes, width: int, n: int) -> np.ndarray:
             out[got : got + take] = value
             got += take
     return out[:got]
-
-
-def rle_min_buffer_size(width: int) -> int:
-    """RleEncoder::MinBufferSize (rle_encoding.hh:167-177)."""
-    max_literal = 1 + (512 * width + 7) // 8
-    max_repeated = 5 + (width + 7) // 8
-    return max(max_literal, max_repeated)
-
-
-def rle_max_size(width: int, num_values: int) -> int:
-    """RleEncoder::MaxBufferSize upper bound (rle_encoding.hh:180-196)."""
-    num_runs = (num_values + 7) // 8
-    literal_max = num_runs + num_runs * width
-    repeated_max = num_runs * (1 + (width + 7) // 8)
-    return max(literal_max, repeated_max)

@@ -34,7 +34,7 @@ def _legacy_file(path, chunk, n_rows, schema_emit, path_in_schema):
     out = bytearray(MAGIC)
     data_off = len(out)
     for p in chunk.pages:
-        out += _page_header(p, chunk.max_rep)
+        out += _page_header(p)
         out += p.data
     total = len(out) - data_off
 

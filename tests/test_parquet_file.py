@@ -214,13 +214,26 @@ def test_read_v2_data_pages(tmp_path, comp):
     assert out.to_pylist() == emb.column("embedding").combine_chunks().to_pylist()
 
 
+# literal-only snappy streams as the former pure-Python writer emitted
+# them (one-byte literal tag; 60-tag with a one-byte length)
+_LITERAL_ONLY_SNAPPY = [
+    ("185c68656c6c6f20776f726c642c2068656c6c6f20776f726c64", b"hello world, hello world"),
+    ("5ff05e" + bytes(range(32, 127)).hex(), bytes(range(32, 127))),
+]
+
+
 def test_snappy_codec_roundtrip():
     import os
 
-    from parquet4seastar_spark.codecs.snappy_py import snappy_compress, snappy_decompress
+    from parquet4seastar_spark.codecs.pages import _compress, _decompress
 
     for data in [b"", b"a", b"hello world" * 1000, os.urandom(65536), bytes(65536)]:
-        assert snappy_decompress(snappy_compress(data)) == data
+        assert _decompress(_compress(data, "snappy"), "snappy") == data
+    # copy tags: repetitive input shrinks
+    assert len(_compress(b"hello world" * 1000, "snappy")) < 1000
+    # pages stored with the literal-only writer stay readable
+    for hex_stream, data in _LITERAL_ONLY_SNAPPY:
+        assert _decompress(bytes.fromhex(hex_stream), "snappy") == data
 
 
 def test_read_pyarrow_snappy_file(tmp_path):
@@ -271,16 +284,21 @@ def test_multi_row_group_rejects_geometry_mismatch(tmp_path):
 
 
 def test_snappy_rejects_truncated_stream():
-    from parquet4seastar_spark.codecs.snappy_py import snappy_compress, snappy_decompress
+    from parquet4seastar_spark.codecs.pages import _compress, _decompress
 
-    data = snappy_compress(b"hello world, hello world")
-    with pytest.raises(ValueError):
-        snappy_decompress(data[: len(data) - 3])
-    # EVERY truncation point must raise ValueError (never a bare IndexError
-    # from the copy-offset reads, never a garbage offset from a short slice)
-    for cut in range(len(data)):
+    streams = [_compress(b"hello world, hello world", "snappy")]
+    streams += [bytes.fromhex(h) for h, _ in _LITERAL_ONLY_SNAPPY]
+    for data in streams:
         with pytest.raises(ValueError):
-            snappy_decompress(data[:cut])
+            _decompress(data[: len(data) - 3], "snappy")
+        # EVERY truncation point must raise ValueError (never pyarrow's
+        # OSError, never a short or garbage-padded result)
+        for cut in range(len(data)):
+            with pytest.raises(ValueError):
+                _decompress(data[:cut], "snappy")
+    # a preamble that disagrees with the stream is corrupt too
+    with pytest.raises(ValueError):
+        _decompress(b"\x19" + streams[1][1:], "snappy")
 
 
 def test_boolean_rle_interop_both_directions(tmp_path):
@@ -364,10 +382,9 @@ def test_write_parquet_nested_lists(tmp_path):
 def test_column_metadata_sizes(tmp_path):
     # total_uncompressed_size must be headers + uncompressed page bodies,
     # total_compressed_size the on-disk bytes; equal when uncompressed,
-    # strictly larger when the codec shrinks the pages (gzip here — our
-    # snappy writer is literal-only by design and never shrinks)
+    # strictly larger when the codec shrinks the pages (gzip, snappy)
     data = pa.array([("the quick brown fox " * 9) + str(i % 7) for i in range(4000)])
-    for comp, check in (("uncompressed", "eq"), ("gzip", "gt")):
+    for comp, check in (("uncompressed", "eq"), ("gzip", "gt"), ("snappy", "gt")):
         chunk = encode_chunk(data, policy="plain", compression=comp)
         path = str(tmp_path / f"{comp}.parquet")
         write_parquet_file(path, {"t": chunk}, len(data))

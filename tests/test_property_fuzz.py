@@ -121,9 +121,9 @@ def test_delta_byte_array_roundtrip_fuzz(vals):
 @settings(max_examples=25, deadline=None)
 @given(st.binary(max_size=8000))
 def test_snappy_roundtrip_fuzz(data):
-    from parquet4seastar_spark.codecs.snappy_py import snappy_compress, snappy_decompress
+    from parquet4seastar_spark.codecs.pages import _compress, _decompress
 
-    assert snappy_decompress(snappy_compress(data)) == data
+    assert _decompress(_compress(data, "snappy"), "snappy") == data
 
 
 # ---- round-3: mixed nested trees (struct/list at one repetition level) ----
