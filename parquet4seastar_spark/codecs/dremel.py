@@ -175,7 +175,10 @@ def _walk(arr, idx, defs, reps, d0, r0, path, out, depth_left, opts):
         raise TypeError(f"unsupported nested arrow type: {t}")
     else:
         nd = (defs + opt * valid).astype(np.uint32)
-        vals = arr.take(pa.array(idx[valid], type=pa.int64()))
+        if path == "":  # the column itself: idx is the identity, skip the copy
+            vals = arr.drop_null() if arr.null_count else arr
+        else:
+            vals = arr.take(pa.array(idx[valid], type=pa.int64()))
         out.append(Leaf(path, vals, nd, reps, d0 + opt, r0))
 
 

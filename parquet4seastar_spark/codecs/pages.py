@@ -14,10 +14,13 @@ columnar batches:
   levels], [value bytes] (column_chunk_writer.hh:98-139).  Values are
   encoded only for def == max_def entries (nulls skipped,
   column_chunk_writer.hh:75-89).
-- Flat chunks page by value bytes.  list<prim>, list<list<prim>> and every
-  nested leaf are shredded by the Dremel walker (codecs/dremel.py, with
-  per-node OPTIONAL flags for the standard list geometry) and page on
-  record boundaries; list decode is the same walker's assembly.
+- Every chunk -- flat, list<prim>, list<list<prim>> and every nested
+  leaf -- is shredded by the Dremel walker (codecs/dremel.py, with
+  per-node OPTIONAL flags for the standard list geometry; a flat column is
+  a leaf of its own) and written by one leaf encoder (``_encode_leaf``)
+  on record boundaries.  One sizing rule: an entry counts its value
+  bytes, plus ~1 B for its levels when the leaf is repeated (max_rep > 0).
+  List decode is the same walker's assembly.
 - Dictionary fallback: pages are dictionary-encoded until, at a page flush,
   the accumulated dictionary exceeds 16 KiB; subsequent pages are PLAIN and
   the dictionary page (entries first seen up to the overflow page) is still
@@ -561,74 +564,32 @@ def encode_chunk(
             16 KiB fallback for all types except INT32/INT64 -> PLAIN is the
             baseline; see BASELINE.md), 'plain', or an explicit codec name.
 
-    Flat columns keep max_def <= 1, max_rep = 0.  list<prim> and
-    list<list<prim>> columns take the standard parquet list geometry
-    (_encode_list).  ``nullable`` / ``elem_nullable`` default to whether
-    the data holds nulls; a flag of False over data holding nulls raises.
+    Every shape takes one path: ``shred(arr, opts)`` (opts = token path
+    -> OPTIONAL, from the flags and the data), then the leaf encoder the
+    nested '#g' leaves use.  Flat columns keep max_def <= 1, max_rep = 0;
+    list<prim> and list<list<prim>> columns take the standard parquet list
+    geometry.  ``nullable`` / ``elem_nullable`` (list<prim> only) default
+    to whether the data holds nulls; a flag of False over data holding
+    nulls raises.  ``fsst_cache`` maps ``fsst_cache_key`` to a trained
+    FSST symbol table reused by later chunks of the same column.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        return _encode_list(
-            arr,
-            policy=policy,
-            page_target_bytes=page_target_bytes,
-            compression=compression,
-            nullable=nullable,
-            elem_nullable=elem_nullable,
-        )
-    ptype, logical = pa_ptype(arr)
-    arr = _to_physical(arr, ptype)
-    n = len(arr)
-    num_nulls = arr.null_count
-    if nullable is None:
-        nullable = num_nulls > 0
-    elif not nullable and num_nulls:
-        raise ValueError(f"nullable=False but the column holds {num_nulls} nulls")
-    max_def = 1 if nullable else 0
-    valid = (
-        np.ones(n, dtype=bool)
-        if num_nulls == 0
-        else np.asarray(arr.is_valid())
+    ptype, logical = pa_ptype(arr)  # caps at list<list<primitive>>
+    spine = _list_spine(arr)
+    paths = _list_paths(len(spine) - 1)
+    opts = {path: level.null_count > 0 for path, level in zip(paths, spine)}
+    if nullable is not None:
+        opts[""] = nullable
+    if elem_nullable is not None and len(spine) == 2:
+        opts["l"] = elem_nullable
+    (leaf,) = shred(arr, opts)
+    return _encode_leaf(
+        leaf, _structure_sha(spine), policy=policy, page_target_bytes=page_target_bytes,
+        compression=compression, fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
+        logical=logical, nullable=opts[""], num_nulls=arr.null_count,
+        elem_nullable=len(spine) > 1 and opts[paths[-1]],
     )
-    def_arr = valid.astype(np.uint64)
-    nn_arr = arr.drop_null() if num_nulls else arr
-
-    # non-null values in flat form
-    values, lengths, payload, nn_row_bytes, type_length = _leaf_components(nn_arr, ptype)
-
-    # map to row domain (nulls occupy a row with 0 value bytes)
-    row_bytes = np.zeros(n, dtype=np.int64)
-    row_bytes[valid] = nn_row_bytes
-    page_ends = _page_boundaries(row_bytes, page_target_bytes)
-    nn_before = np.cumsum(valid, dtype=np.int64)  # non-null count up to row (inclusive)
-    nn_page_ends = nn_before[page_ends - 1] if n else np.array([0], dtype=np.int64)
-
-    input_bytes = _plain_size(ptype, int(valid.sum()), lengths, type_length)
-    chunk = EncodedChunk(
-        ptype=ptype,
-        logical=logical,
-        nullable=nullable,
-        num_rows=n,
-        num_nulls=num_nulls,
-        cardinality=0,
-        encodings=[],
-        compression=compression,
-        type_length=type_length,
-        input_bytes=input_bytes,
-        max_def=max_def,
-        max_rep=0,
-    )
-    sha = _structure_sha([arr])
-    _sha_update_values(sha, ptype, values, lengths, payload)
-    chunk.sha256 = sha.hexdigest()
-    _chunk_stats(chunk, ptype, values, lengths, payload)
-    _chunk_bloom(chunk, ptype, values, lengths, payload)
-    _write_pages(
-        chunk, policy, values, lengths, payload, def_arr, None, page_ends, nn_page_ends,
-        fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
-    )
-    return chunk
 
 
 def _write_pages(
@@ -718,23 +679,6 @@ def _list_spine(arr: pa.Array) -> list[pa.Array]:
 def _list_paths(n_lists: int) -> list[str]:
     """Dremel token paths of the list nodes and the leaf: ['', 'l', ...]."""
     return [".".join(["l"] * i) for i in range(n_lists + 1)]
-
-
-def _encode_list(arr, *, policy, page_target_bytes, compression, nullable, elem_nullable) -> EncodedChunk:
-    ptype, logical = pa_ptype(arr)  # caps at list<list<primitive>>
-    spine = _list_spine(arr)
-    paths = _list_paths(len(spine) - 1)
-    opts = {path: level.null_count > 0 for path, level in zip(paths, spine)}
-    if nullable is not None:
-        opts[""] = nullable
-    if elem_nullable is not None and len(spine) == 2:
-        opts["l"] = elem_nullable
-    (leaf,) = shred(arr, opts)
-    return _encode_leaf(
-        leaf, _structure_sha(spine), policy=policy, page_target_bytes=page_target_bytes,
-        compression=compression, logical=logical, nullable=opts[""],
-        num_nulls=arr.null_count, elem_nullable=opts[paths[-1]],
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1251,6 +1195,9 @@ _ELEM_PA_TYPES = {
 
 
 def _elem_pa_type(elem_logical: str, type_length: int) -> pa.DataType:
+    """The one logical -> arrow type map (list<...> logicals included)."""
+    if elem_logical.startswith("list<"):
+        return pa.list_(_elem_pa_type(elem_logical[5:-1], type_length))
     if elem_logical.startswith("decimal("):
         p, s = _parse_decimal(elem_logical)
         return pa.decimal128(p, s)
@@ -1405,10 +1352,14 @@ def encode_dremel_column(
     return out
 
 
-def _encode_leaf(leaf: Leaf, sha, *, policy, page_target_bytes, compression, **meta) -> EncodedChunk:
-    """One shredded leaf -> chunk, paged on record boundaries.  ``sha``
-    holds the structural part of the content hash; ``meta`` carries the
-    shape's chunk fields (logical, nullable, num_nulls, elem_nullable)."""
+def _encode_leaf(
+    leaf: Leaf, sha, *, policy, page_target_bytes, compression, fsst_cache=None, fsst_cache_key=None, **meta
+) -> EncodedChunk:
+    """One shredded leaf -> chunk, paged on record boundaries: the one
+    leaf encoder behind every chunk shape (column_chunk_writer::put,
+    column_chunk_writer.hh:75-89).  ``sha`` holds the structural part of
+    the content hash; ``meta`` carries the shape's chunk fields (logical,
+    nullable, num_nulls, elem_nullable)."""
     ptype, _ = pa_ptype_scalar(leaf.values.type)
     vals = _to_physical(leaf.values, ptype)
     values, lengths, payload, nn_val_bytes, type_length = _leaf_components(vals, ptype)
@@ -1418,10 +1369,11 @@ def _encode_leaf(leaf: Leaf, sha, *, policy, page_target_bytes, compression, **m
     enc_mask = def_ == leaf.max_def
 
     # record-aligned paging (pages start at rep == 0 -- a parquet invariant,
-    # so these pages stay export-grade); sized by value bytes + ~1B/level
+    # so these pages stay export-grade), sized by value bytes; a repeated
+    # leaf's record spans several entries, each counting ~1 B of levels
     rec_starts = np.flatnonzero(rep == 0)
     n_rows = len(rec_starts)
-    entry_bytes = np.ones(n_entries, dtype=np.int64)
+    entry_bytes = np.full(n_entries, int(leaf.max_rep > 0), dtype=np.int64)
     entry_bytes[enc_mask] += nn_val_bytes
     cs = np.zeros(n_entries + 1, dtype=np.int64)
     np.cumsum(entry_bytes, out=cs[1:])
@@ -1447,7 +1399,12 @@ def _encode_leaf(leaf: Leaf, sha, *, policy, page_target_bytes, compression, **m
     _sha_update_values(sha, ptype, values, lengths, payload)
     chunk.sha256 = sha.hexdigest()
     _chunk_stats(chunk, ptype, values, lengths, payload)
-    _write_pages(chunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends)
+    if leaf.path == "":  # the leaf is the column: prune_chunks(eq=) probes it
+        _chunk_bloom(chunk, ptype, values, lengths, payload)
+    _write_pages(
+        chunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends,
+        fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
+    )
     return chunk
 
 

@@ -572,23 +572,25 @@ class ParquetFileReader:
             return matches[0]
         return next(l for l in self.leaves if l.path == tuple(name_or_path))
 
-    def _logical(self, leaf: LeafColumn) -> str:
+    @staticmethod
+    def _base_logical(leaf: LeafColumn) -> tuple[str, str, int]:
+        """(ptype, base logical, type_length) of a leaf: the one
+        SchemaElement -> logical mapping (INT96 reads as opaque 12-byte
+        FLBA values)."""
         if leaf.converted == 5 and leaf.precision is not None:
-            base = f"decimal({leaf.precision},{leaf.scale})"
-        elif leaf.ptype == "BYTE_ARRAY":
-            base = "string" if leaf.converted in (0, 4, 19) else "binary"
-        elif leaf.ptype == "INT96":
-            base = "flba"  # read INT96 as opaque 12-byte values
-        elif leaf.ptype == "FIXED_LEN_BYTE_ARRAY":
-            base = "flba"
-        elif leaf.converted == 6:
-            base = "date"
-        elif leaf.converted == 10:
-            base = "timestamp_us"
-        else:
-            base = {"BOOLEAN": "bool", "INT32": "int32", "INT64": "int64",
-                    "FLOAT": "float", "DOUBLE": "double"}[leaf.ptype]
-        return f"list<{base}>" if leaf.max_rep else base
+            return leaf.ptype, f"decimal({leaf.precision},{leaf.scale or 0})", leaf.type_length
+        if leaf.ptype == "INT96":
+            return "FIXED_LEN_BYTE_ARRAY", "flba", 12
+        if leaf.ptype == "FIXED_LEN_BYTE_ARRAY":
+            return leaf.ptype, "flba", leaf.type_length
+        if leaf.ptype == "BYTE_ARRAY":
+            return leaf.ptype, "string" if leaf.converted in (0, 4, 19) else "binary", 0
+        if leaf.converted == 6:
+            return leaf.ptype, "date", 0
+        if leaf.converted == 10:
+            return leaf.ptype, "timestamp_us", 0
+        return leaf.ptype, {"BOOLEAN": "bool", "INT32": "int32", "INT64": "int64",
+                            "FLOAT": "float", "DOUBLE": "double"}[leaf.ptype], 0
 
     def read_column(self, name_or_path):
         """Decode one leaf column to an arrow array (flat or list<...>),
@@ -622,8 +624,7 @@ class ParquetFileReader:
         codec = {0: "uncompressed", 1: "snappy", 2: "gzip"}.get(cm[4])
         if codec is None:
             raise ValueError(f"{leaf.path}: unsupported compression codec id {cm[4]}")
-        ptype = "FIXED_LEN_BYTE_ARRAY" if leaf.ptype == "INT96" else leaf.ptype
-        type_length = 12 if leaf.ptype == "INT96" else leaf.type_length
+        ptype, base, type_length = self._base_logical(leaf)
         num_values = cm[5]
         pos = cm.get(11) or cm[9]  # dictionary_page_offset ?? data_page_offset
         pages: list[Page] = []
@@ -665,10 +666,9 @@ class ParquetFileReader:
             pages.append(Page("data", enc, dp[1], -1, len(raw), len(raw), raw))
             seen_values += dp[1]
 
-        logical = self._logical(leaf)
         chunk = EncodedChunk(
             ptype=ptype,
-            logical=logical,
+            logical=f"list<{base}>" if leaf.max_rep else base,
             nullable=(leaf.outer_optional if leaf.max_rep else leaf.max_def > 0),
             num_rows=-1,  # filled below
             num_nulls=1,  # force validity reconstruction from def levels
@@ -706,26 +706,6 @@ class ParquetFileReader:
             return {"el": el, "children": [walk() for _ in range(n)] if n else []}
 
         return [walk() for _ in range(elements[0].get(5, 0))]
-
-    def _el_base_logical(self, el: dict) -> tuple[str, str, int]:
-        """(ptype, base logical, type_length) for a leaf SchemaElement."""
-        ptype = PHYSICAL[el[1]]
-        type_length = el.get(2, 0)
-        conv = el.get(6)
-        if conv == 5 and el.get(8) is not None:
-            return ptype, f"decimal({el[8]},{el.get(7, 0)})", type_length
-        if ptype == "INT96":
-            return "FIXED_LEN_BYTE_ARRAY", "flba", 12
-        if ptype == "FIXED_LEN_BYTE_ARRAY":
-            return ptype, "flba", type_length
-        if ptype == "BYTE_ARRAY":
-            return ptype, "string" if conv in (0, 4, 19) else "binary", 0
-        if conv == 6:
-            return ptype, "date", 0
-        if conv == 10:
-            return ptype, "timestamp_us", 0
-        return ptype, {"BOOLEAN": "bool", "INT32": "int32", "INT64": "int64",
-                       "FLOAT": "float", "DOUBLE": "double"}[ptype], 0
 
     def _column_token_tree(self, name: str):
         """Top-level column -> (token tree, opts, [(token_path, leaf_index,
@@ -772,8 +752,8 @@ class ParquetFileReader:
                 return ("list", conv_node(node, join(prefix, "l"), spath, True))
             opts[prefix] = rep == 1
             if not kids:
-                ptype, base, tl = self._el_base_logical(el)
                 li = leaf_by_path[spath]
+                _, base, tl = self._base_logical(self.leaves[li])
                 leaf_infos.append((prefix, li, base))
                 return ("leaf", _elem_pa_type(base, tl))
             # ConvertedType LIST=3 / MAP=1 / MAP_KEY_VALUE=2;

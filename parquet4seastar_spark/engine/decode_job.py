@@ -31,56 +31,6 @@ from ..codecs.pages import (
     decode_dremel_column,
 )
 
-_SPARK_TYPES = {
-    "string": "string",
-    "binary": "binary",
-    "flba": "binary",
-    "int32": "int",
-    "int64": "long",
-    "timestamp_us": "timestamp_ntz",
-    "date": "date",
-    "float": "float",
-    "double": "double",
-    "bool": "boolean",
-}
-
-_PA_TYPES = {
-    "string": pa.string(),
-    "binary": pa.binary(),
-    "flba": pa.binary(),
-    "int32": pa.int32(),
-    "int64": pa.int64(),
-    "timestamp_us": pa.timestamp("us"),
-    "date": pa.date32(),
-    "float": pa.float32(),
-    "double": pa.float64(),
-    "bool": pa.bool_(),
-}
-
-
-def _spark_type(logical: str) -> str:
-    if logical.startswith("list<") and logical.endswith(">"):
-        return f"array<{_spark_type(logical[5:-1])}>"
-    if logical.startswith("decimal("):
-        return logical  # 'decimal(p,s)' is valid Spark DDL as-is
-    return _SPARK_TYPES[logical]
-
-
-def _pa_type(logical: str) -> pa.DataType:
-    if logical.startswith("list<") and logical.endswith(">"):
-        return pa.list_(_pa_type(logical[5:-1]))
-    if logical.startswith("decimal("):
-        p, s = logical[8:-1].split(",")
-        return pa.decimal128(int(p), int(s))
-    return _PA_TYPES[logical]
-
-
-def _spark_type_of_pa(t: pa.DataType):
-    from pyspark.sql.pandas.types import from_arrow_type
-
-    return from_arrow_type(t)
-
-
 _META_FIELDS = (
     "ptype", "logical", "nullable", "num_rows", "num_nulls", "cardinality",
     "encodings", "compression", "type_length", "max_def", "max_rep", "elem_nullable",
@@ -317,33 +267,31 @@ def decode_table(
     if "row_id" not in schema:
         raise ValueError("row_id column not present in encoded table")
 
-    def _target_pa(c: str) -> pa.DataType:
-        tree = build_tree(
-            [(path, _elem_pa_type(lgl, tl)) for _, path, lgl, tl in members[c]]
-        )
-        return tree_arrow_type(tree)
-
-    # build the output schema as a real StructType (a DDL string would need
-    # backtick-escaping of every nested field name; types.from_arrow_type
-    # sidesteps parsing entirely)
-    from pyspark.sql.types import LongType, StructField, StructType
-    from pyspark.sql.types import _parse_datatype_string
+    # every output type, flat, list or nested, comes from the pages'
+    # logical -> arrow map, read by Spark with timestamp_us as timestamp_ntz.
+    # The output schema is a real StructType (a DDL string would need
+    # backtick-escaping of every nested field name); the arrow targets are
+    # Spark's own arrow form of it (flba leaves arrive as plain binary).
+    from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     def _spark_col_type(c: str):
         if members[c] is None:
-            return _parse_datatype_string(_spark_type(schema[c][0]))
-        return _spark_type_of_pa(_target_pa(c))
+            t = _elem_pa_type(*schema[c])
+        else:
+            t = tree_arrow_type(
+                build_tree([(path, _elem_pa_type(lgl, tl)) for _, path, lgl, tl in members[c]])
+            )
+        return from_arrow_type(t, prefer_timestamp_ntz=True)
 
-    from pyspark.sql.types import StringType
-
+    col_types = {c: _spark_col_type(c) for c in columns}
     out_schema = StructType(
         ([StructField("_part_key", StringType())] if include_part_key else [])
         + [StructField("row_id", LongType())]
-        + [StructField(c, _spark_col_type(c)) for c in columns]
+        + [StructField(c, col_types[c]) for c in columns]
     )
     cols = columns
-    logicals = schema
-    targets = {c: _target_pa(c) for c in columns if members[c] is not None}
+    targets = {c: to_arrow_type(t) for c, t in col_types.items()}
 
     def decode_group(tbl: pa.Table) -> pa.Table:
         from parquet4seastar_spark import _alloc
@@ -362,14 +310,12 @@ def decode_table(
         for c in cols:
             if members[c] is None:
                 arr = decode_chunk(_rebuild_chunk(tbl, by_col[c]))
-                target = _pa_type(logicals[c][0])
             else:
                 arr = decode_dremel_column(
                     {name: _rebuild_chunk(tbl, by_col[name]) for name, _, _, _ in members[c]}
                 )
-                target = targets[c]
-            if arr.type != target:
-                arr = arr.cast(target)
+            if arr.type != targets[c]:
+                arr = arr.cast(targets[c])
             out_arrays.append(arr)
             names.append(c)
         return pa.table(dict(zip(names, out_arrays)))

@@ -794,3 +794,49 @@ def test_verify_fast_empty_top_salt_bucket(spark):
     assert out and all(r["match"] for r in out)
     assert sum(r["rows_src"] for r in out) == 9
     enc.unpersist()
+
+
+def test_nested_timestamp_roundtrip(spark):
+    """Timestamps decode the same at any depth: flat, list, struct, map
+    and list<struct> leaves all come back as Spark timestamp_ntz holding
+    the source's UTC wall time (every output type is derived from one
+    logical -> arrow map)."""
+    import datetime
+
+    from parquet4seastar_spark.engine.decode_job import decode_table
+
+    t0 = datetime.datetime(2021, 3, 4, 5, 6, 7, 891011)
+    rows = []
+    for i in range(60):
+        t = t0 + datetime.timedelta(hours=7 * i, microseconds=i)
+        rows.append((
+            i, i % 3, t,
+            None if i % 11 == 0 else [t, None] if i % 4 else [],
+            None if i % 7 == 0 else {"t": None if i % 5 == 0 else t},
+            None if i % 9 == 0 else {f"k{j}": (None if j == 1 else t) for j in range(i % 4)},
+            [] if i % 6 == 0 else [{"t": t}, None, {"t": None}],
+        ))
+    cols = ["ts", "a", "s", "m", "ls"]
+    ntz = spark.createDataFrame(
+        rows,
+        "row_id long, salt int, ts timestamp_ntz, a array<timestamp_ntz>, "
+        "s struct<t: timestamp_ntz>, m map<string, timestamp_ntz>, "
+        "ls array<struct<t: timestamp_ntz>>",
+    )
+    # the map and list<struct> leaves hold session-zone (UTC) timestamps
+    src = ntz.select(
+        "row_id", "salt", "ts", "a", "s",
+        F.col("m").cast("map<string, timestamp>").alias("m"),
+        F.col("ls").cast("array<struct<t: timestamp>>").alias("ls"),
+    )
+    enc = encode_table(
+        src, columns=cols, policy="plain", salt_col="salt",
+        num_partitions=2, salt_target_rows=50,
+    )
+    dec = decode_table(enc, cols)
+    assert [f.dataType.simpleString() for f in dec.schema.fields[1:]] == [
+        "timestamp_ntz", "array<timestamp_ntz>", "struct<t:timestamp_ntz>",
+        "map<string,timestamp_ntz>", "array<struct<t:timestamp_ntz>>",
+    ]
+    got = [r.asDict(recursive=True) for r in dec.orderBy("row_id").collect()]
+    assert got == [dict(zip(["row_id", *cols], (i, *rest))) for i, _, *rest in rows]

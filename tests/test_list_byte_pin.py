@@ -1,4 +1,4 @@
-"""Byte pin for list<prim> and list<list<prim>> chunks.
+"""Byte pin for flat, list<prim> and list<list<prim>> chunks.
 
 Every page byte and every chunk metadata field that ``encode_chunk``
 writes for a fixed corpus is folded into one sha256 per (shape, policy,
@@ -6,9 +6,11 @@ compression).  The corpus covers twelve element types, null rows, null
 inner lists and null elements, sizes 0 / 1 / 40, a multi-page size that
 overflows the 16 KiB dictionary (and takes FSST or DELTA_BYTE_ARRAY
 under ``auto`` for text), a sliced input, and every nullability flag
-combination that the data does not contradict.  The digests pin the
-wire bytes of the standard list geometry: a change to how list chunks
-are encoded must leave them unchanged.
+combination that the data does not contradict.  Flat chunks also pin
+their bloom filter bytes and one FSST symbol table shared through
+``fsst_cache`` by two slices of a text column.  The digests pin the
+wire bytes: a change to how any of these chunks are encoded must leave
+them unchanged.
 """
 
 import datetime
@@ -172,6 +174,31 @@ def _list2_cases():
                 yield f"{name}/{tag}/{nullable}", arr, kw, target
 
 
+def _flat_cases():
+    """(case id, arr, encode kwargs, page_target_bytes) for flat columns."""
+    r = random.Random(10172026)
+    for name, typ, elem in ELEMENTS:
+        arrays = []
+        for null_p in (0.0, 0.3):
+            for n in (0, 1, 40):
+                rows = [None if r.random() < null_p else elem(r) for _ in range(n)]
+                arrays.append((f"{null_p}/{n}", pa.array(rows, type=typ), 256))
+        big = pa.array([None if r.random() < 0.1 else elem(r) for _ in range(3000)], type=typ)
+        arrays.append(("big", big, 2048))
+        arrays.append(("slice", big.slice(11, 700), 1024))
+        for tag, arr, target in arrays:
+            for nullable in FLAGS:
+                if nullable is False and arr.null_count:
+                    continue
+                kw = {} if nullable is None else {"nullable": nullable}
+                yield f"{name}/{tag}/{nullable}", arr, kw, target
+    # two slices of one text column sharing an FSST symbol table: the
+    # second slice encodes with the table the first one trained
+    text = pa.array([_text(r) for _ in range(4000)], type=pa.string())
+    for i, part in enumerate((text.slice(0, 2000), text.slice(2000))):
+        yield f"fsst_cache/{i}", part, {"fsst_cache_key": "text"}, 1 << 20
+
+
 def _chunk_bytes(chunk) -> bytes:
     meta = (
         chunk.ptype, chunk.logical, chunk.nullable, chunk.elem_nullable, chunk.num_rows,
@@ -185,11 +212,29 @@ def _chunk_bytes(chunk) -> bytes:
         out.append(repr((p.kind, p.encoding, p.num_values, p.num_non_null,
                          p.uncompressed_size, p.compressed_size)).encode())
         out.append(p.data)
+    if chunk.bloom is not None:
+        out.append(chunk.bloom.tobytes())
     return b"".join(out)
 
 
 # sha256 over every case of the shape, in corpus order
 PINNED = {
+    ("flat", "auto", "uncompressed"):
+        "90dfa3c6ff09d5d49694c6cd57f16129dba235b5c109e5e74573bf28ea1802d2",
+    ("flat", "auto", "gzip"):
+        "2d37c8281e2403429bd2d8fd11421cbd920cf3cdf95babcd4d189109d9d5fa4a",
+    ("flat", "plain", "uncompressed"):
+        "ef00b71e575612924a68a4bd3760a8f3487354118ed49df37fbb8b829b0b7cbf",
+    ("flat", "plain", "gzip"):
+        "54b6877e9e979055598e3e7b6174eac1a85cb01d2e2609406217c52a79728fdb",
+    ("flat", "dict", "uncompressed"):
+        "ab4c6f5bb7148c04fe4e6bf01e98765e99df15e41ac16e183c6b932302a3e372",
+    ("flat", "dict", "gzip"):
+        "526bff1acb9e70ffdeee9d8431aef47c5e1983856ddcd60de0bcfa05ce1b0973",
+    ("flat", "reference", "uncompressed"):
+        "eb8d98c61838daecffa9034cff53be187589701b243501221776a7d0ec3ce778",
+    ("flat", "reference", "gzip"):
+        "24ecec7e9717afc81d70338fce3898c12c9208e9249da5bf18497fff61fcea0e",
     ("list", "auto", "uncompressed"):
         "7170a2deddbff8f3b8c75793af5cc40fbcddeb1ae5e4c8a80a58fb35be2e9073",
     ("list", "auto", "gzip"):
@@ -224,13 +269,16 @@ PINNED = {
         "7d515e5996feb57f52c370251db45774c662e2c2f1385c5e00c1666dce0a906b",
 }
 
-CASES = {"list": list(_list_cases()), "list2": list(_list2_cases())}
+CASES = {"flat": list(_flat_cases()), "list": list(_list_cases()), "list2": list(_list2_cases())}
 
 
 @pytest.mark.parametrize("shape,policy,compression", sorted(PINNED))
 def test_list_pages_byte_identical(shape, policy, compression):
     h = hashlib.sha256()
+    fsst_cache = {}  # fresh per digest: the shared table is trained here
     for case_id, arr, kw, target in CASES[shape]:
+        if "fsst_cache_key" in kw:
+            kw = {**kw, "fsst_cache": fsst_cache}
         chunk = encode_chunk(
             arr, policy=policy, compression=compression, page_target_bytes=target, **kw
         )

@@ -330,7 +330,7 @@ def test_list_decimal_content_sha_matches_lineage(typ, depth):
 
 def test_flat_nullable_false_over_nulls_raises():
     # a REQUIRED column has no def level to record a null in
-    with pytest.raises(ValueError, match="nullable=False"):
+    with pytest.raises(ValueError, match="'<root>' is REQUIRED"):
         encode_chunk(pa.array([1, None, 3], type=pa.int64()), nullable=False)
 
 
