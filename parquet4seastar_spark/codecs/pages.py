@@ -132,8 +132,7 @@ class EncodedChunk:
         return self.compressed_bytes
 
 
-def pa_ptype(arr: pa.Array) -> tuple[str, str]:
-    t = arr.type
+def pa_ptype(t: pa.DataType) -> tuple[str, str]:
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         # up to TWO levels of repetition (standard parquet 3-level LIST,
         # writer_schema.cc:30-134); ptype reports the LEAF physical type
@@ -200,6 +199,14 @@ def pa_ptype_scalar(t: pa.DataType) -> tuple[str, str]:
             logical = "string" if pa.types.is_string(t) or pa.types.is_large_string(t) else "binary"
         return ptype, logical
     raise TypeError(f"unsupported arrow type for chunk encoding: {t}")
+
+
+def flba_width(t: pa.DataType) -> int:
+    """chunk.type_length of a leaf of arrow type ``t``: its
+    FIXED_LEN_BYTE_ARRAY width (decimals past 18 digits included), else 0."""
+    if pa.types.is_decimal(t):
+        return _decimal_byte_width(t.precision) if t.precision > 18 else 0
+    return t.byte_width if pa.types.is_fixed_size_binary(t) else 0
 
 
 def ba_components(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -575,7 +582,7 @@ def encode_chunk(
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    ptype, logical = pa_ptype(arr)  # caps at list<list<primitive>>
+    ptype, logical = pa_ptype(arr.type)  # caps at list<list<primitive>>
     spine = _list_spine(arr)
     paths = _list_paths(len(spine) - 1)
     opts = {path: level.null_count > 0 for path, level in zip(paths, spine)}
@@ -720,7 +727,7 @@ def chunk_content_sha(arr: pa.Array) -> str:
     page corruption without the source table."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    ptype, _ = pa_ptype(arr)
+    ptype, _ = pa_ptype(arr.type)
     spine = _list_spine(arr)
     h = _structure_sha(spine)
     leaf = spine[-1]
@@ -1330,6 +1337,11 @@ def _levels_sha(def_, rep):
     return h
 
 
+def dremel_leaf_logical(leaf: Leaf) -> str:
+    """chunk.logical of a '#g' leaf: 'g:<node path>|<leaf logical>'."""
+    return f"g:{leaf.path}|{pa_ptype_scalar(leaf.values.type)[1]}"
+
+
 def encode_dremel_column(
     arr: pa.Array,
     *,
@@ -1342,11 +1354,10 @@ def encode_dremel_column(
         arr = arr.combine_chunks()
     out: dict[str, EncodedChunk] = {}
     for i, leaf in enumerate(shred(arr)):
-        _, leaf_logical = pa_ptype_scalar(leaf.values.type)
         out[f"#g{i}"] = _encode_leaf(
             leaf, _levels_sha(leaf.def_, leaf.rep), policy=policy,
             page_target_bytes=page_target_bytes, compression=compression,
-            logical=f"g:{leaf.path}|{leaf_logical}", nullable=True,
+            logical=dremel_leaf_logical(leaf), nullable=True,
             num_nulls=len(leaf.def_) - len(leaf.values), elem_nullable=True,
         )
     return out

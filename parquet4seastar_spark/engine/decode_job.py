@@ -19,6 +19,8 @@ objects.
 
 from __future__ import annotations
 
+import json
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
@@ -30,6 +32,7 @@ from ..codecs.pages import (
     decode_chunk,
     decode_dremel_column,
 )
+from .encode_job import DECODED_SCHEMA_KEY
 
 _META_FIELDS = (
     "ptype", "logical", "nullable", "num_rows", "num_nulls", "cardinality",
@@ -179,12 +182,30 @@ def prune_chunks(
     # PROVE no row matches are removed; everything else (missing stats, or
     # a typo'd/absent column -> empty drop set) survives.  Fail-safe by
     # construction with zero eager work -- an absent column simply prunes
-    # nothing, and decode_table's schema discovery still raises on a column
-    # that truly isn't in the table.  The drop set (pruned chunks only) is
-    # the smaller side, so the broadcast stays cheap at scale; a left-anti
-    # join needs no deduplicated build side, so no aggregate runs over it.
+    # nothing, and decode_table still raises on a column that truly isn't
+    # in the table (the recorded schema, which survives this join, lacks
+    # it, so discovery runs and finds no chunk of it).  The drop set
+    # (pruned chunks only) is the smaller side, so the broadcast stays
+    # cheap at scale; a left-anti join needs no deduplicated build side,
+    # so no aggregate runs over it.
     drop = ch.filter(~cond).select("part_key", "chunk_seq")
     return encoded.join(F.broadcast(drop), ["part_key", "chunk_seq"], "left_anti")
+
+
+def _planned_schema(encoded: DataFrame, columns: list[str]) -> dict | None:
+    """The decoded schema encode_table recorded on the frame's ``logical``
+    field, cut to row_id + ``columns``; None unless it covers them all."""
+    raw = encoded.schema["logical"].metadata.get(DECODED_SCHEMA_KEY)
+    if raw is None:
+        return None
+    planned = {name: tuple(v) for name, v in json.loads(raw).items()}
+    out = {}
+    for c in ["row_id", *columns]:
+        got = {n: v for n, v in planned.items() if n == c or n.startswith(f"{c}#g")}
+        if not got:
+            return None
+        out.update(got)
+    return out
 
 
 def decode_table(
@@ -197,23 +218,35 @@ def decode_table(
     """Decode the given columns from a pages DataFrame.
 
     Returns a DataFrame (row_id, *columns).  Output types follow the chunk
-    metadata (logical types).  ``schema`` (leaf name -> logical type, or
-    -> (logical, type_length) for FLBA leaves) skips discovery entirely;
-    otherwise logical types are read from the tiny ``kind='chunk'`` lineage
-    rows (one row per chunk, payload column never touched) -- not from a
-    scan of the page rows.
+    metadata (logical types), taken from the first of:
 
-    Schema discovery is EAGER (the output schema must be known at plan
-    time), so on a freshly-built encode plan it would run the entire encode
-    job once for discovery and AGAIN for the decode pass.  When the pages
-    frame is COMPUTED (its plan contains a Python stage, i.e. it chains
-    straight off encode_table) and the caller has not already persisted it,
-    it is persisted here before the discovery collect.  A storage-backed
-    frame (plain file scan — the 100 TB deployment shape) is NOT persisted:
-    discovery's kind='chunk' filter pushes down to the scan and touches
-    only the tiny chunk rows, and caching the full pages table would block
-    exactly that pushdown.  Pass ``schema=`` to skip discovery and keep
-    the plan fully lazy.
+    - ``schema`` (leaf name -> logical type, or -> (logical, type_length)
+      for FLBA leaves);
+    - the decoded schema encode_table records on the frame's ``logical``
+      field (``DECODED_SCHEMA_KEY``), when it covers row_id and every
+      requested column.  It survives filters, selects, prune_chunks,
+      persist and a store write + read_store, so neither a chained nor a
+      store-backed decode runs a job to plan;
+    - DISCOVERY: an eager collect of the tiny ``kind='chunk'`` lineage
+      rows (one row per chunk, payload column never touched).  It still
+      runs for frames without the record (pages written before it
+      existed, or a plain ``spark.read.parquet`` of a store whose footer
+      lacks it) and for a union whose FIRST child's record lacks a
+      requested column (a union keeps only that child's metadata).
+
+    Every rebuilt chunk is checked against its planned (logical,
+    type_length) entry; a mismatch raises a ValueError naming the chunk.
+
+    Discovery would run a freshly-built encode plan once for the collect
+    and AGAIN for the decode pass.  So when the pages frame is COMPUTED
+    (its plan contains a Python stage, i.e. it chains straight off
+    encode_table) and the caller has not already persisted it, it is
+    persisted here (lazily) whenever ``schema`` is not given -- the
+    round-trip queries' repeat runs hit Spark's cache through it.  A
+    storage-backed frame (plain file scan — the 100 TB deployment shape)
+    is NOT persisted: discovery's kind='chunk' filter pushes down to the
+    scan and touches only the tiny chunk rows, and caching the full pages
+    table would block exactly that pushdown.
     """
     # nested columns are stored as '<col>#g<i>' dremel leaf chunks
     name_filter = F.col("column").isin(["row_id", *columns])
@@ -234,13 +267,15 @@ def decode_table(
             computed = True  # storage-backed frame is wasteful but correct
         if computed and not (lvl.useMemory or lvl.useDisk):
             encoded = encoded.persist()
-        schema = {
-            r["column"]: (r["logical"], int(r["type_length"] or 0))
-            for r in encoded.filter((F.col("kind") == "chunk") & name_filter)
-            .select("column", "logical", "type_length")
-            .distinct()
-            .collect()
-        }
+        schema = _planned_schema(encoded, columns)
+        if schema is None:
+            schema = {
+                r["column"]: (r["logical"], int(r["type_length"] or 0))
+                for r in encoded.filter((F.col("kind") == "chunk") & name_filter)
+                .select("column", "logical", "type_length")
+                .distinct()
+                .collect()
+            }
     else:
         # values may be 'logical' or ('logical', type_length) -- FLBA leaves
         # need the width to build their target type
@@ -301,18 +336,32 @@ def decode_table(
         by_col: dict[str, list[int]] = {}
         for i, c in enumerate(tbl.column("column").to_pylist()):
             by_col.setdefault(c, []).append(i)
-        out_arrays = [decode_chunk(_rebuild_chunk(tbl, by_col["row_id"])).cast(pa.int64())]
+        pk = tbl.column("part_key")[0].as_py()
+
+        def planned_chunk(name: str) -> EncodedChunk:
+            # the output types were planned, not read from these pages: a
+            # chunk that disagrees would cast wrongly or fail obscurely
+            chunk = _rebuild_chunk(tbl, by_col[name])
+            if (chunk.logical, chunk.type_length) != schema[name]:
+                raise ValueError(
+                    f"column {name!r} chunk part_key={pk!r} "
+                    f"chunk_seq={tbl.column('chunk_seq')[0].as_py()} holds "
+                    f"{chunk.logical!r} (type_length {chunk.type_length}), but "
+                    f"the decode planned {schema[name][0]!r} (type_length {schema[name][1]})"
+                )
+            return chunk
+
+        out_arrays = [decode_chunk(planned_chunk("row_id")).cast(pa.int64())]
         names = ["row_id"]
         if include_part_key:
-            pk = tbl.column("part_key")[0].as_py()
             out_arrays.insert(0, pa.array([pk] * len(out_arrays[0]), type=pa.string()))
             names.insert(0, "_part_key")
         for c in cols:
             if members[c] is None:
-                arr = decode_chunk(_rebuild_chunk(tbl, by_col[c]))
+                arr = decode_chunk(planned_chunk(c))
             else:
                 arr = decode_dremel_column(
-                    {name: _rebuild_chunk(tbl, by_col[name]) for name, _, _, _ in members[c]}
+                    {name: planned_chunk(name) for name, _, _, _ in members[c]}
                 )
             if arr.type != targets[c]:
                 arr = arr.cast(targets[c])

@@ -26,14 +26,23 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
+import json
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
-from ..codecs.pages import encode_chunk, encode_dremel_column
+from ..codecs.dremel import shred
+from ..codecs.pages import (
+    dremel_leaf_logical,
+    encode_chunk,
+    encode_dremel_column,
+    flba_width,
+    pa_ptype,
+)
 
 ENCODED_SCHEMA = (
     "kind string, part_key string, chunk_id string, column string, chunk_seq int, "
@@ -48,6 +57,11 @@ ENCODED_SCHEMA = (
 )
 
 DATA_COLUMNS = ["repo", "path", "commit", "lang", "content"]
+
+# field-metadata key on the pages frame's ``logical`` field: JSON
+# {leaf chunk name: [logical, type_length]} of every chunk the encode
+# writes, so decode_table and read_store need no job to learn the schema
+DECODED_SCHEMA_KEY = "p4s.decoded_schema"
 
 # NULL salt keys group under this sentinel: an equi-join on the raw salt
 # column would silently DROP every null-keyed row (null never equals null
@@ -189,6 +203,40 @@ def _out_schema_pa() -> pa.Schema:
     return _OUT_SCHEMA_PA
 
 
+def _leaf_dispatch(col: str, t: pa.DataType, fixed_len) -> tuple[pa.DataType, bool]:
+    """(arrow type column ``col`` is encoded as, whether it takes the
+    Dremel walker): the one dispatch the encode task and
+    :func:`decoded_schema` share."""
+    if fixed_len and col in fixed_len:
+        # FIXED_LEN_BYTE_ARRAY route: spark has no fixed-size binary type,
+        # so equal-length binary columns opt in here
+        t = pa.binary(fixed_len[col])
+    plain_list = (
+        pa.types.is_list(t) or pa.types.is_large_list(t)
+    ) and not pa.types.is_nested(t.value_type)
+    # ANY nested shape beyond list<primitive> (struct, map, list<struct>,
+    # list<list<...>>, any composition/depth) goes through the ONE recursive
+    # Dremel walker: leaf chunks '<col>#g<i>', tree spec in chunk.logical
+    return t, pa.types.is_nested(t) and not plain_list
+
+
+def decoded_schema(types: dict[str, pa.DataType], fixed_len) -> dict[str, tuple[str, int]]:
+    """{leaf chunk name: (logical, type_length)} of every chunk an encode
+    of columns with these arrow types writes, from the types alone.  The
+    leaf paths and order come from shredding an EMPTY array: the walk the
+    encoder takes, with no codec or kernel run."""
+    out = {}
+    for col, t in types.items():
+        t, dremel = _leaf_dispatch(col, t, fixed_len)
+        for i, leaf in enumerate(shred(pa.array([], type=t))):
+            if dremel:
+                name, logical = f"{col}#g{i}", dremel_leaf_logical(leaf)
+            else:
+                name, logical = col, pa_ptype(t)[1]
+            out[name] = (logical, flba_width(leaf.values.type))
+    return out
+
+
 def _encode_partition_factory(
     columns, policy, page_target_bytes, chunk_target_bytes, compression, fixed_len=None
 ):
@@ -247,10 +295,9 @@ def _encode_partition_factory(
             leaf_chunks: list[tuple[str, object]] = []
             for col in ["row_id", *columns]:
                 arr = tbl.column(col).combine_chunks()
-                if fixed_len and col in fixed_len:
-                    # FIXED_LEN_BYTE_ARRAY route: spark has no fixed-size
-                    # binary type, so equal-length binary columns opt in here
-                    arr = arr.cast(pa.binary(fixed_len[col]))
+                t, dremel = _leaf_dispatch(col, arr.type, fixed_len)
+                if t != arr.type:
+                    arr = arr.cast(t)
                 # row_id gets int auto-selection regardless of the value
                 # policy (sequential ids -> DBP ~free; random ids -> PLAIN);
                 # a dict policy maps column -> policy (default auto)
@@ -260,14 +307,7 @@ def _encode_partition_factory(
                     cpolicy = policy.get(col, "auto")
                 else:
                     cpolicy = policy
-                is_plain_list = (
-                    pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
-                ) and not pa.types.is_nested(arr.type.value_type)
-                if pa.types.is_nested(arr.type) and not is_plain_list:
-                    # ANY nested shape beyond list<primitive> (struct, map,
-                    # list<struct>, list<list<...>>, any composition/depth)
-                    # goes through the ONE recursive Dremel walker: leaf
-                    # chunks '<col>#g<i>', tree spec in chunk.logical
+                if dremel:
                     for suffix, gchunk in encode_dremel_column(
                         arr,
                         policy=cpolicy,
@@ -470,5 +510,17 @@ def encode_table(
         columns, policy, page_target_bytes, chunk_target_bytes, compression, fixed_len
     )
     return salted.select("part_key", "salt_buckets", "row_id", *columns).mapInArrow(
-        fn, schema=ENCODED_SCHEMA
+        fn, schema=_encoded_schema(df, columns, fixed_len)
     )
+
+
+def _encoded_schema(df: DataFrame, columns: list[str], fixed_len) -> StructType:
+    """ENCODED_SCHEMA with the decoded schema recorded on ``logical``."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    types = {c: to_arrow_type(df.schema[c].dataType) for c in ["row_id", *columns]}
+    plan = {DECODED_SCHEMA_KEY: json.dumps(decoded_schema(types, fixed_len))}
+    return StructType([
+        StructField(f.name, f.dataType, f.nullable, plan if f.name == "logical" else None)
+        for f in StructType.fromDDL(ENCODED_SCHEMA)
+    ])

@@ -25,23 +25,39 @@ The layout is plain Hive partitioning — any parquet reader understands
 it, and the ``column`` values round-trip through Spark's partition-path
 escaping (``#`` -> ``%23``).
 
+:func:`read_store` also reads the Spark schema from ONE data file's
+footer on the driver (pyarrow; Spark's writer records it under
+``org.apache.spark.sql.parquet.row.metadata``, together with the decoded
+schema encode_table put on the ``logical`` field) and hands it to
+``spark.read.schema``: no schema-inference job, and decode_table needs no
+discovery job either.  A footer without that key reads as before, with
+Spark's inference.
+
 LOCAL-FS LIMITATION (ADVICE r6): :func:`is_column_store`,
 :func:`store_column_dirs` and :func:`read_store` resolve partition
-directories with ``os.listdir``, so driver-side auto-detection and
-guaranteed pruning only work for paths the driver's filesystem can see
+directories with ``os.listdir`` and read that footer from the driver's
+filesystem, so driver-side auto-detection, guaranteed pruning and the
+job-free schema only work for paths the driver's filesystem can see
 (local disk, NFS, fuse mounts).  On HDFS/S3 URLs the CLI's auto-detect
 degrades to the plain-read path — which STILL prunes via Catalyst's
 partition filters (the second read path above), just without the
-``inputFiles``-provable guarantee.  Porting to the Hadoop FileSystem API
-is the known follow-up for remote stores.
+``inputFiles``-provable guarantee, and decode_table still plans from the
+recorded schema once Spark has inferred it.  Porting to the Hadoop
+FileSystem API is the known follow-up for remote stores.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
+
+# the footer key under which Spark's parquet writer records the row schema
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def write_store(encoded: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -85,4 +101,20 @@ def read_store(
         raise ValueError(
             f"no matching column partitions under {path!r} for {columns!r}"
         )
-    return spark.read.option("basePath", path).parquet(*dirs)
+    reader = spark.read.option("basePath", path)
+    schema = _footer_schema(dirs[0])
+    if schema is not None:  # else Spark infers it, with a job
+        reader = reader.schema(schema.add(StructField("column", StringType())))
+    return reader.parquet(*dirs)
+
+
+def _footer_schema(column_dir: str) -> StructType | None:
+    """The Spark schema Spark's writer recorded in the footer of one data
+    file under ``column_dir`` (None if there is no such file or key)."""
+    for name in sorted(os.listdir(column_dir)):
+        if name.startswith(("_", ".")):
+            continue
+        meta = pq.read_schema(os.path.join(column_dir, name)).metadata or {}
+        row = meta.get(SPARK_ROW_METADATA)
+        return StructType.fromJson(json.loads(row)) if row else None
+    return None

@@ -840,3 +840,153 @@ def test_nested_timestamp_roundtrip(spark):
     ]
     got = [r.asDict(recursive=True) for r in dec.orderBy("row_id").collect()]
     assert got == [dict(zip(["row_id", *cols], (i, *rest))) for i, _, *rest in rows]
+
+
+def _planned_map(enc) -> dict:
+    import json
+
+    from parquet4seastar_spark.engine.encode_job import DECODED_SCHEMA_KEY
+
+    raw = json.loads(enc.schema["logical"].metadata[DECODED_SCHEMA_KEY])
+    return {name: tuple(v) for name, v in raw.items()}
+
+
+def _discovered_map(enc) -> dict:
+    """The map decode_table's discovery collects from the chunk rows."""
+    return {
+        r["column"]: (r["logical"], int(r["type_length"] or 0))
+        for r in enc.filter(F.col("kind") == "chunk")
+        .select("column", "logical", "type_length").distinct().collect()
+    }
+
+
+def _docs(spark):
+    """500 rows of (row_id, text, lang, source): a small text corpus."""
+    rows = [
+        (i, f"doc {i} " + "lorem ipsum " * (i % 9), ("en", "de", "fr")[i % 3], f"src{i % 4}")
+        for i in range(500)
+    ]
+    return spark.createDataFrame(rows, "row_id long, text string, lang string, source string")
+
+
+def test_decoded_schema_map_equals_discovery(spark):
+    """The decoded schema encode_table records from the input's types alone
+    names the same chunks with the same (logical, type_length) as the chunk
+    rows the encode writes, for every flat, list and Dremel shape."""
+    import datetime
+    import decimal
+
+    from parquet4seastar_spark.engine.decode_job import decode_table
+
+    t0 = datetime.datetime(2022, 1, 2, 3, 4, 5, 6)
+    rows = []
+    for i in range(40):
+        rows.append((
+            i, i % 2, None if i % 5 == 0 else i, i * 7, i / 3, i % 3 == 0,
+            decimal.Decimal(i * 101) / 100, decimal.Decimal(10**20 + i) / 100,
+            t0 + datetime.timedelta(seconds=i), t0 - datetime.timedelta(days=i),
+            bytes([i, i + 1, i + 2]), [i, None] if i % 4 else None,
+            [[i], [], None] if i % 3 else [], {"a": i, "b": str(i)} if i % 6 else None,
+            {f"k{j}": j for j in range(i % 3)}, [{"x": i / 2, "y": None}, None],
+        ))
+    cols = ["i32", "i64", "d", "b", "dec", "dec_flba", "ts", "tsn", "fl",
+            "l", "ll", "st", "m", "ls"]
+    src = spark.createDataFrame(
+        rows,
+        "row_id long, salt int, i32 int, i64 long, d double, b boolean, "
+        "dec decimal(12,2), dec_flba decimal(25,2), ts timestamp, tsn timestamp_ntz, "
+        "fl binary, l array<int>, ll array<array<long>>, st struct<a:int,b:string>, "
+        "m map<string,int>, ls array<struct<x:double,y:string>>",
+    )
+    enc = encode_table(
+        src, columns=cols, policy="plain", salt_col="salt", num_partitions=2,
+        salt_target_rows=50, fixed_len={"fl": 3},
+    ).persist()
+    planned = _planned_map(enc)
+    assert planned == _discovered_map(enc)
+    assert planned["fl"] == ("flba", 3) and planned["dec_flba"] == ("decimal(25,2)", 11)
+    assert {n for n in planned if "#g" in n} >= {"ll#g0", "st#g1", "m#g1", "ls#g1"}
+    # every planned entry passes decode_group's per-chunk check
+    assert decode_table(enc, cols).count() == 40
+    enc.unpersist()
+
+
+def test_decode_rejects_chunk_that_contradicts_planned_schema(spark):
+    """A recorded schema that disagrees with the pages fails loudly, naming
+    the column, the chunk and both logicals, instead of casting wrongly."""
+    import json
+
+    from parquet4seastar_spark.engine.decode_job import decode_table
+    from parquet4seastar_spark.engine.encode_job import DECODED_SCHEMA_KEY
+
+    enc = encode_table(_docs(spark), columns=["lang"], policy="plain", salt_col="source", num_partitions=2)
+    forged = enc.withMetadata("logical", {
+        DECODED_SCHEMA_KEY: json.dumps({"row_id": ["int64", 0], "lang": ["int64", 0]})
+    })
+    dec = decode_table(forged, ["lang"])
+    assert dec.schema["lang"].dataType.simpleString() == "bigint"
+    with pytest.raises(Exception, match=(
+        r"column 'lang' chunk part_key='[^']+' chunk_seq=\d+ holds 'string' "
+        r"\(type_length 0\), but the decode planned 'int64'"
+    )):
+        dec.collect()
+    forged.unpersist()
+
+
+def _row_hashes(dec, cols) -> list[int]:
+    return sorted(r[0] for r in dec.select(F.xxhash64("row_id", *cols)).collect())
+
+
+def test_store_without_recorded_schema_decodes_through_discovery(spark, tmp_path, jobs_launched):
+    """Stores written before the decoded schema was recorded still decode:
+    a footer whose Spark schema lacks the map, and a footer with no Spark
+    schema at all, both fall back to discovery with identical row hashes."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from parquet4seastar_spark.engine.decode_job import decode_table
+    from parquet4seastar_spark.engine.store import read_store, write_store
+
+    enc = encode_table(_docs(spark), columns=["text", "lang"], salt_col="source", num_partitions=2).persist()
+    planned, legacy, bare = (str(tmp_path / n) for n in ("planned", "legacy", "bare"))
+    write_store(enc, planned)
+    write_store(enc.withMetadata("logical", {}), legacy)
+    write_store(enc.withMetadata("logical", {}), bare)
+    enc.unpersist()
+    for root, _, files in os.walk(bare):  # footers with no Spark schema key
+        for name in files:
+            if name.endswith(".parquet"):
+                f = os.path.join(root, name)
+                pq.write_table(pq.ParquetFile(f).read().replace_schema_metadata(None), f)
+                os.remove(os.path.join(root, f".{name}.crc"))  # now stale
+
+    cols = ["text", "lang"]
+    want, jobs = jobs_launched(lambda: decode_table(read_store(spark, planned, cols), cols))
+    assert jobs == 0
+    want_h = _row_hashes(want, cols)
+    assert len(want_h) == 500
+    for store in (legacy, bare):
+        got, jobs = jobs_launched(lambda: decode_table(read_store(spark, store, cols), cols))
+        assert jobs >= 1  # discovery (and for the bare footer, inference) ran
+        assert got.columns == want.columns
+        assert _row_hashes(got, cols) == want_h
+
+
+def test_union_missing_requested_column_falls_back_to_discovery(spark, jobs_launched):
+    """A union keeps only its first child's recorded schema: when that map
+    lacks a requested column, decode_table discovers the schema instead."""
+    from parquet4seastar_spark.engine.decode_job import decode_table
+
+    src = _docs(spark)
+    # map_only keys chunks by input partition, so both encodes cut the
+    # same (part_key, chunk_seq) chunks in the same row order
+    first = encode_table(src, columns=["lang"], policy="plain", map_only=True)
+    second = encode_table(src, columns=["text"], policy="plain", map_only=True)
+    both = first.unionByName(second.filter(F.col("column") != "row_id"))
+    assert "text" not in _planned_map(both)
+    dec, jobs = jobs_launched(lambda: decode_table(both, ["lang", "text"]))
+    assert jobs >= 1
+    want = {r["row_id"]: (r["lang"], r["text"]) for r in src.collect()}
+    assert {r["row_id"]: (r["lang"], r["text"]) for r in dec.collect()} == want
+    both.unpersist()

@@ -160,3 +160,36 @@ def test_prune_chunks_broadcasts_drop_set_without_aggregate(spark, tmp_path):
     side = _subtree(plan, "BroadcastExchange")
     assert "FileScan" in side, side
     assert "Aggregate" not in side and "Exchange hashpartitioning" not in side, side
+
+
+def test_store_and_chained_decodes_launch_no_planning_jobs(spark, tmp_path, jobs_launched):
+    # the decoded schema rides on the pages frame: read_store takes Spark's
+    # schema from one footer (no inference job) and decode_table reads the
+    # recorded map (no discovery collect), so building either decode plan
+    # launches no Spark job before its action
+    from parquet4seastar_spark.engine.decode_job import decode_table
+    from parquet4seastar_spark.engine.encode_job import encode_table
+    from parquet4seastar_spark.engine.store import read_store, write_store
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").alias("row_id"), "text", "lang", "source"
+    )
+    store = str(tmp_path / "store")
+    write_store(
+        encode_table(docs, columns=["text", "lang"], salt_col="source", num_partitions=2),
+        store,
+    )
+    stored, n = jobs_launched(lambda: decode_table(read_store(spark, store, ["lang"]), ["lang"]))
+    assert n == 0
+    assert stored.count() == 500
+
+    enc = {}
+
+    def chained():
+        enc["df"] = encode_table(docs, columns=["text"], salt_col="source", num_partitions=2)
+        return decode_table(enc["df"], ["text"])
+
+    dec, n = jobs_launched(chained)
+    assert n == 0
+    assert dec.count() == 500
+    enc["df"].unpersist()
