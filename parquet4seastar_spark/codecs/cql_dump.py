@@ -12,7 +12,7 @@ uuid) is pinned to the reference byte for byte.
 
 from __future__ import annotations
 
-from .parquet_file import LeafColumn, ParquetFileReader
+from .parquet_file import REPEATED, LeafColumn, ParquetFileReader
 
 # parquet.thrift ConvertedType ids
 _CONV_UINT = {11: 8, 12: 16, 13: 32, 14: 64}
@@ -170,6 +170,15 @@ def _render(v, kind: str, leaf: LeafColumn) -> str:
     return str(int(v))
 
 
+def _struct_fields(node: dict) -> list[dict]:
+    """Field nodes of a list<struct> column (column -> repeated group ->
+    struct), or [] for any other shape."""
+    kids = node["children"]
+    if len(kids) != 1 or kids[0]["el"].get(3) != REPEATED or len(kids[0]["children"]) != 1:
+        return []
+    return kids[0]["children"][0]["children"]
+
+
 def parquet_to_cql(path: str, table: str = "parquet", pk: str = "row_number") -> str:
     """Dump a parquet file as CREATE TABLE + INSERT statements, matching the
     reference's output format exactly."""
@@ -183,12 +192,23 @@ def parquet_to_cql(path: str, table: str = "parquet", pk: str = "row_number") ->
         else:
             fields.append((top, [leaf]))
 
+    def fits(ok: bool, top: str, shape: str) -> None:
+        # each rendering below reads only the leaves its shape names; a
+        # column with other leaves would lose them from the dump
+        if not ok:
+            raise ValueError(f"column {top!r}: its leaves do not fit a CQL {shape}")
+
     cols = []  # (name, cql_type, render_fn over row index)
     udts: list[str] = []  # CREATE TYPE statements, numbered in encounter order
     for top, leaves in fields:
         if len(leaves[0].path) >= 4 and leaves[0].path[-1] != "key":
             # list<struct<...>>: one leaf per struct field -> a UDT
             # (cql_reader.cc:277-323 renders struct nodes as numbered UDTs)
+            struct = _struct_fields(next(n for n in r.schema if n["el"][4] == top))
+            fits(
+                len(struct) == len(leaves) and not any(f["children"] for f in struct),
+                top, "list of a struct of primitive fields",
+            )
             udt_name = f"{table}_udt_{len(udts)}"
             kinds = [_leaf_kind(l) for l in leaves]
             udt_fields = ", ".join(
@@ -214,7 +234,11 @@ def parquet_to_cql(path: str, table: str = "parquet", pk: str = "row_number") ->
                 return "[" + ", ".join(out_elems) + "]"
 
             cols.append((top, f'frozen<list<"{udt_name}">>', render_udt_list))
-        elif len(leaves) == 2 and leaves[0].path[-1] == "key":  # map
+        elif leaves[0].path[-1] == "key" and leaves[0].max_rep:  # map
+            fits(
+                len(leaves) == 2 and leaves[0].path[:-1] == leaves[1].path[:-1],
+                top, "map of a primitive key and value",
+            )
             kleaf, vleaf = leaves
             kkind, vkind = _leaf_kind(kleaf), _leaf_kind(vleaf)
             ktype, vtype = _CQL_TYPES[kkind], _CQL_TYPES[vkind]
@@ -232,6 +256,7 @@ def parquet_to_cql(path: str, table: str = "parquet", pk: str = "row_number") ->
 
             cols.append((top, f"frozen<map<{ktype}, {vtype}>>", render_map))
         elif leaves[0].max_rep:  # list
+            fits(len(leaves) == 1, top, "list of a primitive")
             leaf = leaves[0]
             kind = _leaf_kind(leaf)
             arr = r.read_column(leaf.path).to_pylist()
@@ -244,6 +269,7 @@ def parquet_to_cql(path: str, table: str = "parquet", pk: str = "row_number") ->
 
             cols.append((top, f"frozen<list<{_CQL_TYPES[kind]}>>", render_list))
         else:
+            fits(len(leaves) == 1, top, "scalar")
             leaf = leaves[0]
             kind = _leaf_kind(leaf)
             arr = r.read_column(leaf.path).to_pylist()

@@ -1166,6 +1166,25 @@ def _read_pages(chunk: EncodedChunk, max_def: int):
     return def_all, rep_all, (len_parts, payload_parts, fixed_parts)
 
 
+def effective_max_def(chunk: EncodedChunk) -> int:
+    """The chunk's max_def, with -1 (flat back-compat) derived from
+    ``nullable``."""
+    return chunk.max_def if chunk.max_def >= 0 else int(chunk.nullable)
+
+
+def optional_flags(chunk: EncodedChunk) -> list[bool]:
+    """OPTIONAL flag of each node on a flat, list<prim> or list<list<prim>>
+    chunk's path, outermost first: the column, each inner list, then the
+    element.  A flat column is OPTIONAL iff its max_def is positive; a
+    list column follows ``nullable``, its element ``elem_nullable``, and
+    an inner list (list<list>) is OPTIONAL iff the def budget has its
+    level."""
+    if not chunk.max_rep:
+        return [effective_max_def(chunk) > 0]
+    inner = chunk.max_def - chunk.nullable - chunk.elem_nullable - 2 >= 1
+    return [chunk.nullable, *[inner] * (chunk.max_rep - 1), chunk.elem_nullable]
+
+
 def decode_chunk(
     chunk: EncodedChunk,
 ) -> pa.Array:
@@ -1177,7 +1196,7 @@ def decode_chunk(
     """
     if chunk.max_rep > 0:
         return _decode_list(chunk)
-    max_def = chunk.max_def if chunk.max_def >= 0 else (1 if chunk.nullable else 0)
+    max_def = effective_max_def(chunk)
     def_, _, parts = _read_pages(chunk, max_def)
     n = len(def_)
     if n != chunk.num_rows:
@@ -1290,21 +1309,17 @@ def _build_leaf_array(
 
 def _decode_list(chunk: EncodedChunk) -> pa.Array:
     """list<prim> / list<list<prim>> chunk -> arrow, by Dremel assembly
-    (record_reader.hh:469-505) with the chunk's OPTIONAL flags: the outer
-    list per ``nullable``, the element per ``elem_nullable``, and an inner
-    list (list<list>) per the def level left in the budget.
+    (record_reader.hh:469-505) with the chunk's OPTIONAL flags
+    (``optional_flags``, the rule the container writer's schema follows).
 
     A list leaf read from a standard file can sit under extra OPTIONAL
     levels (a field of a list<struct>); every def between the element slot
     and max_def then collapses to a null element."""
     n_lists = chunk.max_rep
     paths = _list_paths(n_lists)
-    opts = {"": chunk.nullable}
-    # an inner list (list<list>) is OPTIONAL iff the budget has its level
-    inner = chunk.max_def - chunk.nullable - chunk.elem_nullable - 2 >= 1
-    opts.update({p: inner for p in paths[1:-1]})
-    d_elem = n_lists + sum(opts.values())  # def of an element slot
-    opts[paths[-1]] = chunk.elem_nullable
+    flags = optional_flags(chunk)
+    opts = dict(zip(paths, flags))
+    d_elem = n_lists + sum(flags[:-1])  # def of an element slot
     leaf_max_def = d_elem + chunk.elem_nullable
     def_, rep, vals = _decode_dremel_leaf(chunk, chunk.logical[5 * n_lists : -n_lists])
     if chunk.max_def > leaf_max_def:

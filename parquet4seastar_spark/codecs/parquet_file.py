@@ -1,16 +1,18 @@
 """Real Apache Parquet container interop: PAR1 writer/reader.
 
 The engine's primary storage is the pages+lineage DataFrame (SURVEY.md
-§2.3), but this module closes the container gap: a minimal single-row-group
-.parquet writer/reader speaking the standard wire format --
+§2.3), but this module closes the container gap: a .parquet writer/reader
+over one or more row groups, speaking the standard wire format --
 
+- schema: one tree of SchemaElement nodes for both directions, and one
+  level rule over it (``_walk_schema``, reader_schema.cc:34-93) that gives
+  the reader each leaf's Dremel levels and checks the writer's chunks.
 - writer: PAR1 magic, V1 data pages with Thrift PageHeaders, optional PLAIN
   dictionary page per chunk, Thrift FileMetaData footer + u32 length + PAR1
-  (file_writer.hh:84-107 magic at :100, flush_row_group :122-155, footer
-  :157-175).  Output is readable by any parquet reader (pyarrow-verified in
-  tests).
+  (file_writer.hh:84-107 magic at :100, flush_row_group per row group
+  :122-155, footer :157-175).  Output is readable by any parquet reader
+  (pyarrow-verified in tests).
 - reader: footer parse (file_reader.cc:28-64, rejects encrypted 'PARE'),
-  schema tree walk with Dremel level computation (reader_schema.cc:34-93),
   incremental Thrift PageHeader scan per chunk (column_chunk_reader.cc:27-50),
   decode through the same codec kernels as the pages table.  Reads the
   reference's own golden fixtures (tests/test_data/alltypes/,
@@ -25,10 +27,9 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 
-import numpy as np
 import pyarrow as pa
 
-from .pages import EncodedChunk, Page, decode_chunk
+from .pages import EncodedChunk, Page, decode_chunk, effective_max_def, optional_flags
 from .thrift_compact import (
     CT_BINARY,
     CT_I32,
@@ -67,28 +68,104 @@ _STANDARD_ENCODINGS = {
 
 
 # ---------------------------------------------------------------------------
+# schema tree: one column model for the writer and the reader.  A node is
+# {'el': {SchemaElement field id: value}, 'children': [...]}; a writer leaf
+# also carries the 'chunk' written under it.
+
+REQUIRED, OPTIONAL, REPEATED = 0, 1, 2  # SchemaElement.repetition_type
+
+
+@dataclass
+class LeafColumn:
+    path: tuple[str, ...]
+    ptype: str
+    type_length: int
+    max_def: int
+    max_rep: int
+    outer_optional: bool  # repetition of the first-level field
+    elem_optional: bool  # leaf's own OPTIONAL flag (lists)
+    converted: int | None
+    precision: int | None
+    scale: int | None
+    logical_raw: dict | None = None  # parquet.thrift LogicalType union (field 10)
+    chunk_meta: dict = field(default_factory=dict)
+
+
+def _walk_schema(nodes: list[dict], def_lvl=0, rep_lvl=0, path=(), outer=None) -> list[LeafColumn]:
+    """Schema tree -> its leaves, in column-chunk order, with their Dremel
+    levels (reader_schema.cc:34-93: REPEATED => ++def,++rep; OPTIONAL =>
+    ++def).  The one level rule: the reader applies it to the footer, the
+    writer to the trees it emits and checks each chunk against it."""
+    leaves = []
+    for node in nodes:
+        el = node["el"]
+        rep = el.get(3, REQUIRED)
+        d, r = def_lvl + (rep != REQUIRED), rep_lvl + (rep == REPEATED)
+        top = rep == OPTIONAL if outer is None else outer
+        p = path + (el[4],)
+        if node["children"]:
+            leaves += _walk_schema(node["children"], d, r, p, top)
+            continue
+        leaves.append(LeafColumn(
+            path=p, ptype=PHYSICAL[el[1]], type_length=el.get(2, 0), max_def=d,
+            max_rep=r, outer_optional=top, elem_optional=rep == OPTIONAL,
+            converted=el.get(6), precision=el.get(8), scale=el.get(7),
+            logical_raw=el.get(10),
+        ))
+    return leaves
+
+
+def _parse_schema(elements: list[dict]) -> list[dict]:
+    """Footer SchemaElement list (depth first, root first) -> the column
+    nodes of its tree, names decoded."""
+    pos = 1  # skip the root
+
+    def walk():
+        nonlocal pos
+        el = elements[pos]
+        pos += 1
+        n = el.get(5)
+        return {"el": {**el, 4: el[4].decode()}, "children": [walk() for _ in range(n)] if n else []}
+
+    return [walk() for _ in range(elements[0].get(5, 0))]
+
+
+# ---------------------------------------------------------------------------
 # writer
 
 
-@dataclass
-class MapColumn:
-    """Container spec for reference-parity goldens: map<k,v> written as the
-    STANDARD MAP group (key REQUIRED) from key/value list chunks encoded
-    with the single-rep standard geometry (encode_chunk on the key/value
-    list arrays).  General nested export goes through DremelColumn."""
-
-    key: EncodedChunk
-    value: EncodedChunk
+def group_node(name: str, repetition: int, children: list, converted=None) -> dict:
+    """A group SchemaElement node: ``{'el': {field id: value}, 'children'}``,
+    the form the reader parses a footer into (num_children comes from
+    ``children``)."""
+    el = {3: repetition, 4: name, 6: converted}
+    return {"el": {k: v for k, v in el.items() if v is not None}, "children": children}
 
 
-@dataclass
-class StructListColumn:
-    """Container spec for reference-parity goldens: list<struct<...>> from
-    per-field single-rep list chunks sharing offsets.  General nested
-    export goes through DremelColumn."""
+def leaf_node(name: str, chunk: EncodedChunk, repetition: int) -> dict:
+    """A leaf SchemaElement node carrying the chunk written under it; the
+    physical type and annotations come from the chunk."""
+    logical = chunk.logical.rsplit("|", 1)[-1]  # dremel leaf: 'g:<path>|<leaf logical>'
+    while logical.startswith("list<"):
+        logical = logical[5:-1]
+    el = {1: PHYS_ID[chunk.ptype], 2: chunk.type_length or None, 3: repetition, 4: name}
+    if logical.startswith("decimal("):
+        p, s = logical[8:-1].split(",")
+        el.update({6: CONVERTED["decimal"], 7: int(s), 8: int(p)})
+    else:
+        el[6] = CONVERTED.get(logical)
+    return {"el": {k: v for k, v in el.items() if v is not None}, "children": [], "chunk": chunk}
 
-    struct_name: str
-    fields: dict[str, EncodedChunk]
+
+def _chunk_node(name: str, chunk: EncodedChunk) -> dict:
+    """Flat column, or the standard 3-level LIST per list level
+    (writer_schema.cc:30-134), OPTIONAL where ``optional_flags`` says."""
+    *groups, elem = optional_flags(chunk)
+    node = leaf_node("element" if groups else name, chunk, elem)
+    for depth in reversed(range(len(groups))):
+        inner = group_node("list", REPEATED, [node])
+        node = group_node("element" if depth else name, groups[depth], [inner], converted=3)
+    return node
 
 
 @dataclass
@@ -107,151 +184,59 @@ class DremelColumn:
 
     leaves: dict[str, EncodedChunk]
 
-    def tree(self):
+    def node(self, name: str) -> dict:
         from .dremel import build_tree
 
         ordered = sorted(
             self.leaves.items(), key=lambda kv: int(kv[0].rsplit("#g", 1)[1])
         )
-        return build_tree(
-            [(c.logical[2:].rsplit("|", 1)[0], c) for _, c in ordered]
-        )
+        tree = build_tree([(c.logical[2:].rsplit("|", 1)[0], c) for _, c in ordered])
+
+        def convert(ename, t):
+            kind = t[0]
+            if kind == "leaf":
+                return leaf_node(ename, t[1], OPTIONAL)
+            if kind == "struct":
+                return group_node(ename, OPTIONAL, [convert(f, ch) for f, ch in t[1]])
+            if kind == "list":
+                kids = [convert("element", t[1])]
+            else:  # map: LIST of REQUIRED struct<key, value>
+                kv = [convert("key", t[1]), convert("value", t[2])]
+                kids = [group_node("element", REQUIRED, kv)]
+            return group_node(ename, OPTIONAL, [group_node("list", REPEATED, kids)], converted=3)
+
+        return convert(name, tree)
 
 
-def _emit_element(w: CompactWriter, ename, *, ptype=None, type_length=0, repetition=None,
-                  num_children=None, converted=None, precision=None, scale=None):
+def _column_node(name: str, spec) -> dict:
+    """One ``{name: spec}`` entry -> its schema tree, named ``name``."""
+    if isinstance(spec, EncodedChunk):
+        return _chunk_node(name, spec)
+    if isinstance(spec, DremelColumn):
+        return spec.node(name)
+    return {**spec, "el": {**spec["el"], 4: name}}
+
+
+def _elements(node: dict):
+    """SchemaElements of a tree, depth first (num_children from the tree)."""
+    kids = node["children"]
+    yield {**node["el"], 5: len(kids)} if kids else node["el"]
+    for k in kids:
+        yield from _elements(k)
+
+
+def _emit_element(w: CompactWriter, el: dict) -> None:
+    """One SchemaElement struct, its fields in id order."""
     w.elem_struct_begin()
-    if ptype is not None:
-        w.field_i32(1, PHYS_ID[ptype])
-    if type_length:
-        w.field_i32(2, type_length)
-    if repetition is not None:
-        w.field_i32(3, repetition)  # 0 REQUIRED, 1 OPTIONAL, 2 REPEATED
-    w.field_string(4, ename)
-    if num_children is not None:
-        w.field_i32(5, num_children)
-    if converted is not None:
-        w.field_i32(6, converted)
-    if scale is not None:
-        w.field_i32(7, scale)
-    if precision is not None:
-        w.field_i32(8, precision)
+    for fid in sorted(el):
+        (w.field_string if isinstance(el[fid], str) else w.field_i32)(fid, el[fid])
     w.end_struct()
 
 
-def _leaf_annotations(chunk: EncodedChunk):
-    logical = chunk.logical
-    if logical.startswith("g:"):  # dremel leaf: 'g:<path>|<leaf logical>'
-        logical = logical.rsplit("|", 1)[1]
-    elem_logical = logical[5:-1] if logical.startswith("list<") else logical
-    if elem_logical.startswith("decimal("):
-        p, s = elem_logical[8:-1].split(",")
-        return CONVERTED["decimal"], int(p), int(s)
-    return CONVERTED.get(elem_logical), None, None
-
-
-def _emit_leaf(w: CompactWriter, ename: str, chunk: EncodedChunk, repetition: int):
-    conv, prec, scale = _leaf_annotations(chunk)
-    _emit_element(
-        w, ename, ptype=chunk.ptype, type_length=chunk.type_length,
-        repetition=repetition, converted=conv, precision=prec, scale=scale,
-    )
-
-
-def _emit_dremel_node(w: CompactWriter, name: str, node) -> int:
-    """Recursive SchemaElement emission for a walker tree (every node
-    OPTIONAL, matching the dremel level geometry exactly)."""
-    kind = node[0]
-    if kind == "leaf":
-        _emit_leaf(w, name, node[1], repetition=1)
-        return 1
-    if kind == "struct":
-        _emit_element(w, name, repetition=1, num_children=len(node[1]))
-        return 1 + sum(_emit_dremel_node(w, fn, ch) for fn, ch in node[1])
-    if kind == "list":
-        _emit_element(w, name, repetition=1, num_children=1, converted=3)
-        _emit_element(w, "list", repetition=2, num_children=1)
-        return 2 + _emit_dremel_node(w, "element", node[1])
-    if kind == "map":
-        # LIST of REQUIRED struct<key, value> (see DremelColumn docstring):
-        # def budget = outer optional (+1) + repeated (+1), then key/value
-        # carry their own optional levels -- exactly the walker geometry
-        _emit_element(w, name, repetition=1, num_children=1, converted=3)
-        _emit_element(w, "list", repetition=2, num_children=1)
-        _emit_element(w, "element", repetition=0, num_children=2)
-        n = _emit_dremel_node(w, "key", node[1])
-        return 3 + n + _emit_dremel_node(w, "value", node[2])
-    raise ValueError(kind)
-
-
-def _dremel_leaf_paths(name: str, node, prefix: tuple[str, ...]) -> list:
-    """(path_in_schema, chunk) leaves in emission order."""
-    kind = node[0]
-    if kind == "leaf":
-        return [(prefix + (name,), node[1])]
-    if kind == "struct":
-        return [
-            lf for fn, ch in node[1] for lf in _dremel_leaf_paths(fn, ch, prefix + (name,))
-        ]
-    if kind == "list":
-        return _dremel_leaf_paths("element", node[1], prefix + (name, "list"))
-    if kind == "map":
-        p = prefix + (name, "list", "element")
-        return _dremel_leaf_paths("key", node[1], p) + _dremel_leaf_paths("value", node[2], p)
-    raise ValueError(kind)
-
-
-def _schema_elements(w: CompactWriter, name: str, spec) -> int:
-    """Write the SchemaElement(s) for one column spec; returns element count."""
-    if isinstance(spec, DremelColumn):
-        return _emit_dremel_node(w, name, spec.tree())
-    if isinstance(spec, MapColumn):
-        # standard MAP group (writer_schema.cc map path)
-        _emit_element(w, name, repetition=1 if spec.key.nullable else 0, num_children=1, converted=1)
-        _emit_element(w, "key_value", repetition=2, num_children=2)
-        _emit_leaf(w, "key", spec.key, repetition=0)
-        _emit_leaf(w, "value", spec.value, repetition=1 if spec.value.elem_nullable else 0)
-        return 4
-    if isinstance(spec, StructListColumn):
-        any_chunk = next(iter(spec.fields.values()))
-        _emit_element(w, name, repetition=1 if any_chunk.nullable else 0, num_children=1, converted=3)
-        _emit_element(w, "list", repetition=2, num_children=1)
-        _emit_element(w, spec.struct_name, repetition=1, num_children=len(spec.fields))
-        for fname, c in spec.fields.items():
-            d_e = 1 if c.nullable else 0
-            if "." in fname or c.max_def > d_e + 3:
-                raise ValueError(
-                    f"StructListColumn field {fname!r}: nested struct fields "
-                    "need DremelColumn for container export"
-                )
-            # OPTIONAL iff the chunk carries the 4th def level
-            _emit_leaf(w, fname, c, repetition=1 if c.max_def == d_e + 3 else 0)
-        return 3 + len(spec.fields)
-    chunk = spec
-    if chunk.max_rep == 0:
-        _emit_leaf(w, name, chunk, repetition=1 if (chunk.max_def or 0) > 0 else 0)
-        return 1
-    # standard 3-level LIST (writer_schema.cc:30-134)
-    _emit_element(w, name, repetition=1 if chunk.nullable else 0, num_children=1, converted=3)
-    _emit_element(w, "list", repetition=2, num_children=1)
-    _emit_leaf(w, "element", chunk, repetition=1 if chunk.elem_nullable else 0)
-    return 3
-
-
-def _column_leaves(name: str, spec) -> list[tuple[tuple[str, ...], EncodedChunk]]:
-    """Linearize a column spec into (path_in_schema, chunk) leaves."""
-    if isinstance(spec, DremelColumn):
-        return _dremel_leaf_paths(name, spec.tree(), ())
-    if isinstance(spec, MapColumn):
-        return [
-            ((name, "key_value", "key"), spec.key),
-            ((name, "key_value", "value"), spec.value),
-        ]
-    if isinstance(spec, StructListColumn):
-        return [((name, "list", spec.struct_name, f), c) for f, c in spec.fields.items()]
-    if spec.max_rep:
-        return [((name, "list", "element"), spec)]
-    return [((name,), spec)]
+def _leaf_chunks(node: dict) -> list[EncodedChunk]:
+    if not node["children"]:
+        return [node["chunk"]]
+    return [c for k in node["children"] for c in _leaf_chunks(k)]
 
 
 def _page_header(page: Page) -> bytes:
@@ -280,15 +265,19 @@ def _page_header(page: Page) -> bytes:
 
 def write_parquet_file(
     path: str,
-    chunks: "dict[str, EncodedChunk] | list[dict[str, EncodedChunk]]",
+    chunks: "dict[str, object] | list[dict[str, object]]",
     num_rows: int | list[int],
 ) -> None:
     """Write pre-encoded chunks as a standard .parquet file.
 
     ``chunks``/``num_rows`` may be a single row group (dict/int) or a list
     of row groups (file_writer flush_row_group per entry,
-    file_writer.hh:122-155).  Column specs are EncodedChunk (flat or list),
-    MapColumn (map<k,v> group) or StructListColumn (list<struct<...>>).
+    file_writer.hh:122-155).  Each ``{name: spec}`` entry becomes one
+    schema tree: an EncodedChunk (flat, list<prim> or list<list<prim>>)
+    takes the standard LIST geometry, a DremelColumn the walker's
+    all-OPTIONAL geometry, and a node built with ``group_node`` /
+    ``leaf_node`` is written as given.  Every leaf chunk must carry the
+    levels the reader's rule (``_walk_schema``) derives for its leaf.
     Compression: uncompressed / snappy / gzip per chunk; encodings must be
     standard (FSST is ours alone -- re-encode with policy
     'auto_fast'/'reference' for interop output).
@@ -297,83 +286,35 @@ def write_parquet_file(
     group_rows = num_rows if isinstance(num_rows, list) else [num_rows]
     if len(groups) != len(group_rows) or not groups:
         raise ValueError("chunks and num_rows must list the same row groups")
-    schema_cols = list(groups[0].keys())
     codec_ids = {"uncompressed": 0, "snappy": 1, "gzip": 2}
-    # linearize each group's column specs into schema leaves
-    group_leaves: list[list[tuple[tuple[str, ...], EncodedChunk]]] = []
-    for g, nrows in zip(groups, group_rows):
-        if list(g.keys()) != schema_cols:
-            raise ValueError("all row groups must share one column set/order")
-        leaves = [lf for name, spec in g.items() for lf in _column_leaves(name, spec)]
-        group_leaves.append(leaves)
-        for (lpath0, c0), (lpath, c) in zip(group_leaves[0], leaves):
-            # the SchemaElements come from group 0: every group must share
-            # its level geometry, or later groups' level streams would be
-            # misread (e.g. REQUIRED schema vs a def-prefixed page).  Pass
-            # nullable=True (and elem_nullable=True where applicable) to
-            # encode_chunk for a column null-free in some slices only.
-            same = (
-                lpath == lpath0
-                and c.ptype == c0.ptype
-                and c.logical == c0.logical
-                and c.max_def == c0.max_def
-                and c.max_rep == c0.max_rep
-                and c.elem_nullable == c0.elem_nullable
-                and c.type_length == c0.type_length
+    elements = None
+    group_leaves: list[list[tuple[LeafColumn, EncodedChunk]]] = []
+    for k, (g, nrows) in enumerate(zip(groups, group_rows)):
+        root = {"el": {4: "schema"}, "children": [_column_node(n, s) for n, s in g.items()]}
+        els = list(_elements(root))
+        if elements is None:
+            elements = els
+        elif els != elements:
+            # the footer holds group 0's schema: a later group with other
+            # levels would be misread (e.g. a REQUIRED column over
+            # def-prefixed pages).  Pass nullable=True (and elem_nullable)
+            # to encode_chunk for a column null-free in some slices only.
+            raise ValueError(
+                f"row group {k}: schema geometry differs from group 0 "
+                "(columns, nullability, levels and types must match)"
             )
-            if not same:
+        leaves = list(zip(_walk_schema(root["children"]), _leaf_chunks(root)))
+        for leaf, c in leaves:
+            lpath = leaf.path
+            got = (c.ptype, c.type_length, effective_max_def(c), c.max_rep)
+            want = (leaf.ptype, leaf.type_length, leaf.max_def, leaf.max_rep)
+            if got != want:
                 raise ValueError(
-                    f"{lpath}: row-group schema geometry differs from group 0 "
-                    f"(nullable/levels/type must match across groups)"
+                    f"{lpath}: chunk {c.ptype}/{c.type_length} (max_def={got[2]}, "
+                    f"max_rep={c.max_rep}) does not match its schema leaf "
+                    f"{leaf.ptype}/{leaf.type_length} (max_def={leaf.max_def}, "
+                    f"max_rep={leaf.max_rep})"
                 )
-            if c.logical.startswith("g:") and not isinstance(
-                groups[0][lpath[0]], DremelColumn
-            ):
-                # a raw dremel leaf passed as a flat column spec would write
-                # a level-mismatched (corrupt) file: its def/rep streams
-                # only make sense under the recursive schema DremelColumn
-                # emits
-                raise ValueError(
-                    f"{lpath}: dremel leaf chunk must be wrapped in "
-                    "DremelColumn for container export"
-                )
-            if not c.logical.startswith("g:"):
-                # legacy standard-geometry specs: the def/rep budgets must
-                # match what the emitted schema implies, or readers decode
-                # levels at the wrong bit width / positions (review finding:
-                # merged-def chunks wrote files pyarrow read back with WRONG
-                # values, silently).  DremelColumn leaves skip these checks:
-                # their schema is generated from the same tree as their
-                # streams, consistent by construction.
-                if c.max_rep > 1:
-                    raise ValueError(
-                        f"{lpath}: max_rep={c.max_rep} not writable as a "
-                        "standard single-repetition LIST schema; encode the "
-                        "column with encode_dremel_column and pass a "
-                        "DremelColumn spec instead"
-                    )
-                d_el = 1 if c.nullable else 0
-                if c.max_rep == 0 and c.max_def > d_el:
-                    raise ValueError(
-                        f"{lpath}: flat chunk with max_def={c.max_def} carries "
-                        "merged struct def levels; wrap the column's dremel "
-                        "leaves in DremelColumn for container export"
-                    )
-                if c.max_rep == 1:
-                    # StructListColumn leaves (name/list/struct/field) add
-                    # the always-OPTIONAL struct group (+1) and may add an
-                    # OPTIONAL field (+1, emitted as such)
-                    is_sl_leaf = len(lpath) == 4 and lpath[1] == "list"
-                    if is_sl_leaf:
-                        allowed = {d_el + 2, d_el + 3}
-                    else:
-                        allowed = {d_el + 1 + (1 if c.elem_nullable else 0)}
-                    if c.max_def not in allowed:
-                        raise ValueError(
-                            f"{lpath}: list chunk max_def={c.max_def} does not "
-                            f"match the emitted schema's def budget "
-                            f"{sorted(allowed)}"
-                        )
             if c.compression not in codec_ids:
                 raise ValueError(f"{lpath}: unsupported compression {c.compression}")
             bad = set(c.encodings) - _STANDARD_ENCODINGS
@@ -388,13 +329,14 @@ def write_parquet_file(
                 )
             if c.num_rows != nrows:
                 raise ValueError(f"{lpath}: row count {c.num_rows} != {nrows}")
+        group_leaves.append(leaves)
 
     out = bytearray(MAGIC)
     # per group: [(path, chunk, dict_off, data_off, total_bytes, uncomp_bytes)]
     group_meta: list[list[tuple[tuple[str, ...], EncodedChunk, int, int, int, int]]] = []
     for leaves in group_leaves:
         col_meta = []
-        for lpath, c in leaves:
+        for leaf, c in leaves:
             dict_off = 0
             data_off = 0
             start = len(out)
@@ -409,22 +351,14 @@ def write_parquet_file(
                 out += header
                 out += page.data
                 uncomp += len(header) + page.uncompressed_size
-            col_meta.append((lpath, c, dict_off, data_off, len(out) - start, uncomp))
+            col_meta.append((leaf.path, c, dict_off, data_off, len(out) - start, uncomp))
         group_meta.append(col_meta)
 
     footer = CompactWriter()
     footer.field_i32(1, 1)  # version (parquet 2.0 semantics, file_writer.hh)
-    first_group = groups[0]
-    n_elems = 1 + sum(
-        _schema_elements(CompactWriter(), n, s) for n, s in first_group.items()
-    )
-    footer.begin_field_list(2, CT_STRUCT, n_elems)
-    footer.elem_struct_begin()  # root
-    footer.field_string(4, "schema")
-    footer.field_i32(5, len(first_group))
-    footer.end_struct()
-    for n, s in first_group.items():
-        _schema_elements(footer, n, s)
+    footer.begin_field_list(2, CT_STRUCT, len(elements))
+    for el in elements:
+        _emit_element(footer, el)
     footer.field_i64(3, sum(group_rows))
     footer.begin_field_list(4, CT_STRUCT, len(group_meta))  # row_groups
     for col_meta, nrows in zip(group_meta, group_rows):
@@ -471,22 +405,6 @@ def write_parquet_file(
 # reader
 
 
-@dataclass
-class LeafColumn:
-    path: tuple[str, ...]
-    ptype: str
-    type_length: int
-    max_def: int
-    max_rep: int
-    outer_optional: bool  # repetition of the first-level field
-    elem_optional: bool  # leaf's own OPTIONAL flag (lists)
-    converted: int | None
-    precision: int | None
-    scale: int | None
-    logical_raw: dict | None = None  # parquet.thrift LogicalType union (field 10)
-    chunk_meta: dict = field(default_factory=dict)
-
-
 class ParquetFileReader:
     """Minimal standard-parquet reader: footer, schema walk, page scan,
     decode via the engine's codec kernels."""
@@ -502,7 +420,8 @@ class ParquetFileReader:
         meta_start = len(self.buf) - 8 - meta_len
         self.meta = CompactReader(self.buf, meta_start).read_struct()
         self.num_rows = self.meta[3]
-        self.leaves = self._walk_schema(self.meta[2])
+        self.schema = _parse_schema(self.meta[2])
+        self.leaves = _walk_schema(self.schema)
         row_groups = self.meta[4]
         # columns appear in leaf order per the spec; match by position (some
         # writers -- including the reference's fixture generator -- emit
@@ -517,52 +436,6 @@ class ParquetFileReader:
             self._group_rows.append(int(rg[3]))
         for i, leaf in enumerate(self.leaves):
             leaf.chunk_meta = self._groups[0][i]
-
-    @staticmethod
-    def _walk_schema(elements: list[dict]) -> list[LeafColumn]:
-        """Flat SchemaElement list -> leaves with Dremel levels
-        (reader_schema.cc:34-93: REPEATED => ++def,++rep; OPTIONAL => ++def)."""
-        leaves: list[LeafColumn] = []
-        pos = [1]  # skip root
-
-        def walk(def_lvl: int, rep_lvl: int, path: tuple, depth: int, outer_opt: bool):
-            el = elements[pos[0]]
-            pos[0] += 1
-            rep = el.get(3, 0)
-            name = el[4].decode()
-            d, r = def_lvl, rep_lvl
-            if rep == 1:
-                d += 1
-            elif rep == 2:
-                d += 1
-                r += 1
-            if depth == 0:
-                outer_opt = rep == 1
-            n_children = el.get(5)
-            if n_children:
-                for _ in range(n_children):
-                    walk(d, r, path + (name,), depth + 1, outer_opt)
-            else:
-                leaves.append(
-                    LeafColumn(
-                        path=path + (name,),
-                        ptype=PHYSICAL[el[1]],
-                        type_length=el.get(2, 0),
-                        max_def=d,
-                        max_rep=r,
-                        outer_optional=outer_opt,
-                        elem_optional=rep == 1,
-                        converted=el.get(6),
-                        precision=el.get(8),
-                        scale=el.get(7),
-                        logical_raw=el.get(10),
-                    )
-                )
-
-        root_children = elements[0].get(5, 0)
-        for _ in range(root_children):
-            walk(0, 0, (), 0, False)
-        return leaves
 
     def column(self, name_or_path) -> LeafColumn:
         if isinstance(name_or_path, str):
@@ -693,20 +566,6 @@ class ParquetFileReader:
 
     # ---- general nested read: schema tree -> Dremel assembly -------------
 
-    def _schema_raw_tree(self) -> list[dict]:
-        """Nested SchemaElement form: [{'el': dict, 'children': [...]}] for
-        each top-level column."""
-        elements = self.meta[2]
-        pos = [1]
-
-        def walk():
-            el = elements[pos[0]]
-            pos[0] += 1
-            n = el.get(5)
-            return {"el": el, "children": [walk() for _ in range(n)] if n else []}
-
-        return [walk() for _ in range(elements[0].get(5, 0))]
-
     def _column_token_tree(self, name: str):
         """Top-level column -> (token tree, opts, [(token_path, leaf_index,
         base_logical)] in schema-leaf order).  Covers modern 3-level
@@ -726,7 +585,7 @@ class ParquetFileReader:
         from .pages import _elem_pa_type
 
         raw = next(
-            (r for r in self._schema_raw_tree() if r["el"][4].decode() == name), None
+            (r for r in self.schema if r["el"][4] == name), None
         )
         if raw is None:
             raise KeyError(name)
@@ -763,26 +622,26 @@ class ParquetFileReader:
             if (is_list or is_map) and len(kids) == 1 and kids[0]["el"].get(3) == 2:
                 mid = kids[0]
                 mkids = mid["children"]
-                mname = mid["el"][4].decode()
+                mname = mid["el"][4]
                 if is_map and len(mkids) == 2:
                     k = conv_node(mkids[0], join(prefix, "k"),
-                                  spath + (mname, mkids[0]["el"][4].decode()))
+                                  spath + (mname, mkids[0]["el"][4]))
                     v = conv_node(mkids[1], join(prefix, "v"),
-                                  spath + (mname, mkids[1]["el"][4].decode()))
+                                  spath + (mname, mkids[1]["el"][4]))
                     return ("map", k, v)
                 # backward-compat rule 2 name test is EXACT (reader_schema.cc:
                 # 131-132): the repeated group must be named "array" or
                 # "<parent_list_name>_tuple".  A suffix match would misread a
                 # standard 3-level list whose middle group happens to end in
                 # "_tuple" under a differently-named parent.
-                pname = el[4].decode()
+                pname = el[4]
                 if len(mkids) == 1 and not (
                     mname == "array" or mname == f"{pname}_tuple"
                 ):
                     # standard 3-level LIST: the repeated middle group's
                     # single child is the element
                     child = conv_node(mkids[0], join(prefix, "l"),
-                                      spath + (mname, mkids[0]["el"][4].decode()))
+                                      spath + (mname, mkids[0]["el"][4]))
                     return ("list", child)
                 # legacy 2-level list (backward-compat rule 2): the repeated
                 # child (primitive, multi-field group, or array/_tuple-named
@@ -791,7 +650,7 @@ class ParquetFileReader:
                 return ("list", child)
             fields = []
             for k in kids:
-                fname = k["el"][4].decode()
+                fname = k["el"][4]
                 fields.append((fname, conv_node(k, join(prefix, f"s{fname}"), spath + (fname,))))
             return ("struct", fields)
 

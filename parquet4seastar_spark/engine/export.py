@@ -61,11 +61,7 @@ def export_parquet_files(
                 if not leaves:
                     raise ValueError(f"column not present in encoded table: {c}")
                 chunks[c] = DremelColumn(leaves)
-        num_rows = next(
-            c.num_rows if not isinstance(c, DremelColumn)
-            else next(iter(c.leaves.values())).num_rows
-            for c in chunks.values()
-        )
+        num_rows = chunks["row_id"].num_rows
         safe_key = "".join(ch if ch.isalnum() else "_" for ch in part_key)
         path = os.path.join(out_dir, f"part-{safe_key}-{chunk_seq:05d}.parquet")
         write_parquet_file(path, chunks, num_rows)

@@ -3,6 +3,7 @@ dump each alltypes fixture to CQL and compare STRING-IDENTICAL against the
 reference's inline golden text (tests/cql_reader_alltypes_test.cc:32-94;
 golden constants :32-75, ported like the byte vectors elsewhere)."""
 
+import pyarrow as pa
 import pytest
 
 from parquet4seastar_spark.codecs.cql_dump import parquet_to_cql
@@ -79,14 +80,19 @@ INSERT INTO "parquet"("row_number", "Map", "List") VALUES(1, {'key1': 1, 'key2':
 """
 
 
-def test_file_writer_full_roundtrip_golden(tmp_path):
+def write_file_writer_golden(path):
+    """The reference's two-group file: the standard MAP group (REQUIRED key,
+    converted MAP) and list<struct> (OPTIONAL struct, REQUIRED fields) as
+    explicit schema trees over list chunks."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from parquet4seastar_spark.codecs.pages import encode_chunk
     from parquet4seastar_spark.codecs.parquet_file import (
-        MapColumn,
-        StructListColumn,
+        OPTIONAL,
+        REPEATED,
+        REQUIRED,
+        group_node,
+        leaf_node,
         write_parquet_file,
     )
 
@@ -98,25 +104,38 @@ def test_file_writer_full_roundtrip_golden(tmp_path):
         )
 
     def group(map_keys, map_vals, f1, f2):
+        key = lchunk(map_keys, pa.string(), policy="dict", compression="gzip",
+                     elem_nullable=False)
+        value = lchunk(map_vals, pa.int32(), policy="plain", compression="snappy",
+                       elem_nullable=False)
+        fields = [
+            leaf_node("Struct field 1", lchunk(f1, pa.float32(), elem_nullable=True), REQUIRED),
+            leaf_node("Struct field 2", lchunk(f2, pa.float64(), elem_nullable=True), REQUIRED),
+        ]
+        key_value = [leaf_node("key", key, REQUIRED), leaf_node("value", value, REQUIRED)]
         return {
-            "Map": MapColumn(
-                key=lchunk(map_keys, pa.string(), policy="dict", compression="gzip",
-                           elem_nullable=False),
-                value=lchunk(map_vals, pa.int32(), policy="plain", compression="snappy",
-                             elem_nullable=False),
+            "Map": group_node(
+                "Map", OPTIONAL, [group_node("key_value", REPEATED, key_value)], converted=1
             ),
-            "List": StructListColumn("Struct", {
-                "Struct field 1": lchunk(f1, pa.float32(), elem_nullable=True),
-                "Struct field 2": lchunk(f2, pa.float64(), elem_nullable=True),
-            }),
+            "List": group_node(
+                "List", OPTIONAL,
+                [group_node("list", REPEATED, [group_node("Struct", OPTIONAL, fields)])],
+                converted=3,
+            ),
         }
 
     # row group 1: {Map: null, List: null}; row group 2: one row with a
     # 2-entry map and [null struct, struct(1, 1)] (file_writer_test.cc:96-115)
     g1 = group([None], [None], [None], [None])
     g2 = group([["key1", "key2"]], [[1, 1]], [[None, 1.0]], [[None, 1.0]])
-    path = str(tmp_path / "full.parquet")
     write_parquet_file(path, [g1, g2], [1, 1])
+
+
+def test_file_writer_full_roundtrip_golden(tmp_path):
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "full.parquet")
+    write_file_writer_golden(path)
 
     assert parquet_to_cql(path) == FILE_WRITER_GOLDEN
 
@@ -129,3 +148,29 @@ def test_file_writer_full_roundtrip_golden(tmp_path):
             "List": [None, {"Struct field 1": 1.0, "Struct field 2": 1.0}],
         },
     ]
+
+
+@pytest.mark.parametrize(
+    "typ,rows",
+    [
+        # two leaves under one scalar-looking column: "b" would be dropped
+        (pa.struct([("a", pa.int32()), ("b", pa.string())]), [{"a": 1, "b": "x"}, None]),
+        # map values nested deeper than one leaf: the values would be dropped
+        (
+            pa.map_(pa.string(), pa.struct([("x", pa.int32()), ("y", pa.int32())])),
+            [[("k", {"x": 1, "y": 2})], None],
+        ),
+        # a struct around a list is not a list<struct>
+        (pa.struct([("a", pa.list_(pa.int32()))]), [{"a": [1, 2]}, None]),
+    ],
+    ids=["struct", "map_of_struct", "struct_of_list"],
+)
+def test_parquet_to_cql_rejects_columns_it_cannot_render(tmp_path, typ, rows):
+    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.parquet_file import DremelColumn, write_parquet_file
+
+    arr = pa.array(rows, type=typ)
+    path = str(tmp_path / "c.parquet")
+    write_parquet_file(path, {"c": DremelColumn(encode_dremel_column(arr, policy="plain"))}, 2)
+    with pytest.raises(ValueError, match="column 'c'"):
+        parquet_to_cql(path)

@@ -20,17 +20,27 @@ from parquet4seastar_spark.codecs.pages import encode_chunk
 from parquet4seastar_spark.codecs.parquet_file import (
     ENCODINGS,
     MAGIC,
+    OPTIONAL,
     PHYS_ID,
+    REPEATED,
+    REQUIRED,
     CompactWriter,
     ParquetFileReader,
+    _elements,
     _emit_element,
     _page_header,
+    group_node,
 )
 from parquet4seastar_spark.codecs.thrift_compact import CT_BINARY, CT_I32, CT_STRUCT
 
 
-def _legacy_file(path, chunk, n_rows, schema_emit, path_in_schema):
-    """Minimal single-chunk file with a caller-supplied schema shape."""
+def _int32(name, repetition):
+    """An INT32 leaf SchemaElement node."""
+    return {"el": {1: PHYS_ID["INT32"], 3: repetition, 4: name}, "children": []}
+
+
+def _legacy_file(path, chunk, n_rows, column, path_in_schema):
+    """Minimal single-chunk file with a caller-supplied schema tree."""
     out = bytearray(MAGIC)
     data_off = len(out)
     for p in chunk.pages:
@@ -40,13 +50,10 @@ def _legacy_file(path, chunk, n_rows, schema_emit, path_in_schema):
 
     f = CompactWriter()
     f.field_i32(1, 1)
-    n_elems = schema_emit(CompactWriter())
-    f.begin_field_list(2, CT_STRUCT, 1 + n_elems)
-    f.elem_struct_begin()
-    f.field_string(4, "schema")
-    f.field_i32(5, 1)
-    f.end_struct()
-    schema_emit(f)
+    elements = list(_elements({"el": {4: "schema"}, "children": [column]}))
+    f.begin_field_list(2, CT_STRUCT, len(elements))
+    for el in elements:
+        _emit_element(f, el)
     f.field_i64(3, n_rows)
     f.begin_field_list(4, CT_STRUCT, 1)
     f.elem_struct_begin()
@@ -85,13 +92,10 @@ def test_legacy_two_level_list(tmp_path):
     chunk = encode_chunk(arr, policy="plain", nullable=True, elem_nullable=False)
     assert (chunk.max_def, chunk.max_rep) == (2, 1)
 
-    def emit(w):
-        _emit_element(w, "xs", repetition=1, num_children=1, converted=3)
-        _emit_element(w, "element", ptype="INT32", repetition=2)
-        return 2
+    column = group_node("xs", OPTIONAL, [_int32("element", REPEATED)], converted=3)
 
     path = str(tmp_path / "legacy2.parquet")
-    _legacy_file(path, chunk, len(arr), emit, ("xs", "element"))
+    _legacy_file(path, chunk, len(arr), column, ("xs", "element"))
     r = ParquetFileReader(path)
     leaf = r.column("xs")
     assert (leaf.max_def, leaf.max_rep, leaf.outer_optional) == (2, 1, True)
@@ -108,12 +112,10 @@ def test_legacy_one_level_repeated_leaf(tmp_path):
     chunk = encode_chunk(arr, policy="plain", nullable=False, elem_nullable=False)
     assert (chunk.max_def, chunk.max_rep) == (1, 1)
 
-    def emit(w):
-        _emit_element(w, "xs", ptype="INT32", repetition=2)
-        return 1
+    column = _int32("xs", REPEATED)
 
     path = str(tmp_path / "legacy1.parquet")
-    _legacy_file(path, chunk, len(arr), emit, ("xs",))
+    _legacy_file(path, chunk, len(arr), column, ("xs",))
     r = ParquetFileReader(path)
     leaf = r.column("xs")
     assert (leaf.max_def, leaf.max_rep, leaf.outer_optional) == (1, 1, False)
@@ -164,14 +166,11 @@ def test_legacy_two_level_under_struct_tree(tmp_path):
             vals += row["xs"]
     page = _levels_page(rep, def_, vals, 1, 3)
 
-    def emit(w):
-        _emit_element(w, "s", repetition=1, num_children=1)
-        _emit_element(w, "xs", repetition=1, num_children=1, converted=3)
-        _emit_element(w, "element", ptype="INT32", repetition=2)
-        return 3
+    xs = group_node("xs", OPTIONAL, [_int32("element", REPEATED)], converted=3)
+    column = group_node("s", OPTIONAL, [xs])
 
     path = str(tmp_path / "legacy2_struct.parquet")
-    _legacy_file(path, _FakeChunk([page], 1), len(rows), emit, ("s", "xs", "element"))
+    _legacy_file(path, _FakeChunk([page], 1), len(rows), column, ("s", "xs", "element"))
     got = ParquetFileReader(path).read_column_tree("s").to_pylist()
     assert got == rows
     assert pq.read_table(path).column("s").to_pylist() == rows
@@ -193,13 +192,10 @@ def test_legacy_bare_repeated_under_struct_tree(tmp_path):
             vals += row["xs"]
     page = _levels_page(rep, def_, vals, 1, 2)
 
-    def emit(w):
-        _emit_element(w, "s", repetition=1, num_children=1)
-        _emit_element(w, "xs", ptype="INT32", repetition=2)
-        return 2
+    column = group_node("s", OPTIONAL, [_int32("xs", REPEATED)])
 
     path = str(tmp_path / "legacy1_struct.parquet")
-    _legacy_file(path, _FakeChunk([page], 1), len(rows), emit, ("s", "xs"))
+    _legacy_file(path, _FakeChunk([page], 1), len(rows), column, ("s", "xs"))
     got = ParquetFileReader(path).read_column_tree("s").to_pylist()
     assert got == rows
     assert pq.read_table(path).column("s").to_pylist() == rows
@@ -221,14 +217,11 @@ def test_legacy_array_named_group_tree(tmp_path):
             vals += [e["a"] for e in row]
     page = _levels_page(rep, def_, vals, 1, 2)
 
-    def emit(w):
-        _emit_element(w, "xs", repetition=1, num_children=1, converted=3)
-        _emit_element(w, "array", repetition=2, num_children=1)
-        _emit_element(w, "a", ptype="INT32", repetition=0)
-        return 3
+    array = group_node("array", REPEATED, [_int32("a", REQUIRED)])
+    column = group_node("xs", OPTIONAL, [array], converted=3)
 
     path = str(tmp_path / "legacy_array.parquet")
-    _legacy_file(path, _FakeChunk([page], 1), len(rows), emit, ("xs", "array", "a"))
+    _legacy_file(path, _FakeChunk([page], 1), len(rows), column, ("xs", "array", "a"))
     got = ParquetFileReader(path).read_column_tree("xs").to_pylist()
     assert got == rows
     assert pq.read_table(path).column("xs").to_pylist() == rows
@@ -253,14 +246,11 @@ def test_tuple_name_rule_is_exact_match(tmp_path):
             vals += row
     page = _levels_page(rep, def_, vals, 1, 2)
 
-    def emit(w):
-        _emit_element(w, "bar", repetition=1, num_children=1, converted=3)
-        _emit_element(w, "foo_tuple", repetition=2, num_children=1)
-        _emit_element(w, "element", ptype="INT32", repetition=0)
-        return 3
+    foo_tuple = group_node("foo_tuple", REPEATED, [_int32("element", REQUIRED)])
+    column = group_node("bar", OPTIONAL, [foo_tuple], converted=3)
 
     path = str(tmp_path / "foo_tuple_3level.parquet")
-    _legacy_file(path, _FakeChunk([page], 1), len(rows), emit,
+    _legacy_file(path, _FakeChunk([page], 1), len(rows), column,
                  ("bar", "foo_tuple", "element"))
     got = ParquetFileReader(path).read_column_tree("bar").to_pylist()
     assert got == rows
@@ -289,14 +279,11 @@ def test_tuple_name_rule_exact_match_is_legacy(tmp_path):
             vals += [e["a"] for e in row]
     page = _levels_page(rep, def_, vals, 1, 2)
 
-    def emit(w):
-        _emit_element(w, "bar", repetition=1, num_children=1, converted=3)
-        _emit_element(w, "bar_tuple", repetition=2, num_children=1)
-        _emit_element(w, "a", ptype="INT32", repetition=0)
-        return 3
+    bar_tuple = group_node("bar_tuple", REPEATED, [_int32("a", REQUIRED)])
+    column = group_node("bar", OPTIONAL, [bar_tuple], converted=3)
 
     path = str(tmp_path / "bar_tuple_legacy.parquet")
-    _legacy_file(path, _FakeChunk([page], 1), len(rows), emit,
+    _legacy_file(path, _FakeChunk([page], 1), len(rows), column,
                  ("bar", "bar_tuple", "a"))
     got = ParquetFileReader(path).read_column_tree("bar").to_pylist()
     assert got == rows
@@ -310,13 +297,10 @@ def test_legacy_top_level_shapes_via_tree_reader(tmp_path):
     arr = pa.array(vals, type=pa.list_(pa.int32()))
     chunk = encode_chunk(arr, policy="plain", nullable=True, elem_nullable=False)
 
-    def emit(w):
-        _emit_element(w, "xs", repetition=1, num_children=1, converted=3)
-        _emit_element(w, "element", ptype="INT32", repetition=2)
-        return 2
+    column = group_node("xs", OPTIONAL, [_int32("element", REPEATED)], converted=3)
 
     path = str(tmp_path / "legacy2_tree.parquet")
-    _legacy_file(path, chunk, len(arr), emit, ("xs", "element"))
+    _legacy_file(path, chunk, len(arr), column, ("xs", "element"))
     r = ParquetFileReader(path)
     assert r.read_column_tree("xs").to_pylist() == vals
     assert r.read_column("xs").to_pylist() == vals
@@ -325,12 +309,10 @@ def test_legacy_top_level_shapes_via_tree_reader(tmp_path):
     arr1 = pa.array(vals1, type=pa.list_(pa.int32()))
     chunk1 = encode_chunk(arr1, policy="plain", nullable=False, elem_nullable=False)
 
-    def emit1(w):
-        _emit_element(w, "xs", ptype="INT32", repetition=2)
-        return 1
+    column1 = _int32("xs", REPEATED)
 
     path1 = str(tmp_path / "legacy1_tree.parquet")
-    _legacy_file(path1, chunk1, len(arr1), emit1, ("xs",))
+    _legacy_file(path1, chunk1, len(arr1), column1, ("xs",))
     r1 = ParquetFileReader(path1)
     assert r1.read_column_tree("xs").to_pylist() == vals1
     assert r1.read_column("xs").to_pylist() == vals1

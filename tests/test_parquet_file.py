@@ -323,8 +323,8 @@ def test_boolean_rle_interop_both_directions(tmp_path):
 
 def test_write_parquet_rejects_engine_internal_def_levels(tmp_path):
     # a raw dremel leaf passed as a flat column spec would write a
-    # level-mismatched (corrupt) file: the writer must demand the
-    # DremelColumn wrapper whose schema matches the leaf streams
+    # level-mismatched (corrupt) file: its max_def counts the struct level
+    # the flat schema lacks, so the writer's level check refuses it
     from parquet4seastar_spark.codecs.pages import encode_dremel_column
 
     sarr = pa.array(
@@ -334,9 +334,37 @@ def test_write_parquet_rejects_engine_internal_def_levels(tmp_path):
     leaves = encode_dremel_column(sarr, policy="plain")
     (leaf,) = leaves.values()
     assert leaf.max_def == 2 and leaf.max_rep == 0
-    with pytest.raises(ValueError, match="DremelColumn"):
+    with pytest.raises(ValueError, match="does not match its schema leaf"):
         write_parquet_file(str(tmp_path / "a.parquet"), {"x": leaf}, len(sarr))
 
+
+def test_write_parquet_rejects_chunk_levels_off_the_schema(tmp_path):
+    # one check covers every column: a list chunk whose max_def is one
+    # above its schema leaf's names the leaf path and both level pairs
+    import dataclasses
+
+    arr = pa.array([[1, None], None, [], [3]], type=pa.list_(pa.int64()))
+    chunk = encode_chunk(arr, policy="plain")
+    assert (chunk.max_def, chunk.max_rep) == (3, 1)
+    bad = dataclasses.replace(chunk, max_def=4)
+    with pytest.raises(ValueError) as err:
+        write_parquet_file(str(tmp_path / "x.parquet"), {"l": bad}, len(arr))
+    msg = str(err.value)
+    assert "('l', 'list', 'element')" in msg
+    assert "(max_def=4, max_rep=1)" in msg and "(max_def=3, max_rep=1)" in msg
+
+
+def test_write_parquet_derives_unset_max_def_from_nullable(tmp_path):
+    # max_def = -1 means "derive from nullable" (a pages frame without
+    # max_def rebuilds chunks that way): the column must be written
+    # OPTIONAL, as decode_chunk reads it
+    import dataclasses
+
+    chunk = dataclasses.replace(encode_chunk(pa.array([1, None, 3, None, 5])), max_def=-1)
+    path = str(tmp_path / "m.parquet")
+    write_parquet_file(path, {"x": chunk}, 5)
+    assert pq.read_table(path).column("x").to_pylist() == [1, None, 3, None, 5]
+    assert ParquetFileReader(path).read_column("x").to_pylist() == [1, None, 3, None, 5]
 
 
 def test_struct_rejects_reserved_field_names():
@@ -362,21 +390,37 @@ def test_struct_rejects_reserved_field_names():
 
 
 def test_write_parquet_nested_lists(tmp_path):
-    # legacy standard-geometry rep-2 chunks still refuse (their schema
-    # emitter is single-repetition), but the SAME column exports fine as a
-    # DremelColumn: recursive schema, pyarrow reads it back equal
+    # list<list<prim>> chunks export directly (3-level LIST per level,
+    # the inner list OPTIONAL iff the def budget has its level); the SAME
+    # column also exports as a DremelColumn.  pyarrow and our tree reader
+    # read both back equal
     from parquet4seastar_spark.codecs.pages import encode_dremel_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn
 
-    arr = pa.array([[[1, 2], [3]], [[4]], None, [[], [5, None]]], type=pa.list_(pa.list_(pa.int64())))
-    chunk = encode_chunk(arr, policy="plain")
-    assert chunk.max_rep == 2
-    with pytest.raises(ValueError, match="max_rep"):
-        write_parquet_file(str(tmp_path / "x.parquet"), {"ll": chunk}, len(arr))
-    ch = encode_dremel_column(arr, policy="plain")
-    path = str(tmp_path / "ll.parquet")
-    write_parquet_file(path, {"ll": DremelColumn(ch)}, len(arr))
-    assert pq.read_table(path).column("ll").combine_chunks().to_pylist() == arr.to_pylist()
+    ll = pa.list_(pa.list_(pa.int64()))
+    arrays = [
+        pa.array([[[1, 2], [3]], [[4]], None, [[], [5, None]]], type=ll),
+        pa.array([[[1, 2], None], [[4]], [], [[], [5]]], type=ll),
+        pa.array(
+            [[["a", None], None], None, [[], ["bc"]], [[""]]],
+            type=pa.list_(pa.list_(pa.string())),
+        ),
+    ]
+    for i, arr in enumerate(arrays):
+        chunk = encode_chunk(arr, policy="plain")
+        assert chunk.max_rep == 2
+        for name, spec in [
+            (f"ll{i}", chunk),
+            (f"dremel{i}", DremelColumn(encode_dremel_column(arr, policy="plain"))),
+        ]:
+            path = str(tmp_path / f"{name}.parquet")
+            write_parquet_file(path, {"ll": spec}, len(arr))
+            back = pq.read_table(path).column("ll").combine_chunks()
+            # the leaf keeps its annotation under both list levels
+            assert back.type.value_type.value_type == arr.type.value_type.value_type, name
+            assert back.to_pylist() == arr.to_pylist(), name
+            out = ParquetFileReader(path).read_column_tree("ll")
+            assert out.cast(arr.type).to_pylist() == arr.to_pylist(), name
 
 
 def test_column_metadata_sizes(tmp_path):
