@@ -8,7 +8,21 @@
 - LSH-bucketed variant (random hyperplane signatures): map-side signature,
   bucket equi-join, exact re-scoring inside buckets only -- the scale path
   when the query set is large.
-- embedding-cosine near-duplicate detection reuses the LSH bucketing.
+- IVF: a coarse k-means quantizer; exact cosine only within each query's
+  ``n_probe`` nearest clusters.
+- PQ: product-quantization codes scored in the compressed domain
+  (asymmetric distance), optionally exact-cosine re-ranked over a
+  per-query shortlist.
+- embedding-cosine near-duplicate detection reuses the LSH bucketing
+  (banded) and confirms candidates by exact cosine.
+
+LSH, IVF, PQ and banding are filters; one exact cosine verifies what they
+pass: :func:`_cosine` on the JVM, :func:`_cosine_np` in numpy, both
+``dot / (|a| * |b|)``, and every top-k goes through :func:`_rank_topk`.  One zero-norm rule: a pair whose norm
+product is 0 (a zero vector, or norms so small the product underflows)
+has no cosine -- NULL -- so it is never a neighbour and never a
+near-duplicate.  PQ's unit normalisation (:func:`_unit_rows`) is not a
+cosine: it keeps a zero row zero.
 """
 
 from __future__ import annotations
@@ -17,9 +31,15 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ._util import fan_out
+
+# embedding_near_dups confirms map-side against a broadcast corpus matrix
+# when n_vectors * (dim * 8 + 24) bytes fit this budget, else through
+# shuffled vector joins
+_BROADCAST_CONFIRM_BYTES = 64 << 20
 
 
 def auto_bits(n_rows: int, target_bucket_rows: int = 64, lo: int = 4, hi: int = 24) -> int:
@@ -37,25 +57,77 @@ def auto_bits(n_rows: int, target_bucket_rows: int = 64, lo: int = 4, hi: int = 
     return max(lo, min(hi, math.ceil(math.log2(n_rows / target_bucket_rows))))
 
 
-def _list_to_mat(arr) -> np.ndarray:
+def _list_to_mat(arr, vec_col: str) -> np.ndarray:
     """Arrow list<float> column -> (n, dim) float64 matrix, zero per-row
-    Python (flatten + reshape on the arrow value buffer)."""
+    Python (flatten + reshape on the arrow value buffer).  Every row must
+    hold one vector of one length: a null or ragged row raises, naming
+    ``vec_col`` and the first bad row (the reshape would silently shift
+    every row after it)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
     if n == 0:
         return np.zeros((0, 0), dtype=np.float64)
-    flat = np.asarray(arr.flatten(), dtype=np.float64)
-    if flat.size % n:
-        raise ValueError("ragged embedding column: all vectors must share one dim")
-    return flat.reshape(n, flat.size // n)
+    if arr.null_count:
+        raise ValueError(f"vector column {vec_col!r}: row {pc.index(arr.is_null(), True).as_py()} is null")
+    lens = np.asarray(pc.list_value_length(arr))
+    bad = np.flatnonzero(lens != lens[0])
+    if bad.size:
+        raise ValueError(
+            f"vector column {vec_col!r}: row {bad[0]} has {lens[bad[0]]} values, row 0 has {lens[0]}"
+        )
+    return np.asarray(arr.flatten(), dtype=np.float64).reshape(n, lens[0])
 
 
-def _cosine_expr(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
+def _norm(side: str):
+    """Column ``n<side>``: the L2 norm of the vector column ``v<side>``."""
+    v = f"v{side}"
+    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)).alias(f"n{side}")
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str, side: str, norm: bool = True) -> DataFrame:
+    """(id_as, v<side>, n<side>): the vector as array<double> and its norm.
+    Filter paths take the corpus with ``norm=False`` and add :func:`_norm`
+    after the candidate join, so only the pairs the filter passes pay it."""
+    out = df.select(F.col(id_col).alias(id_as), F.col(vec_col).cast("array<double>").alias(f"v{side}"))
+    return out.withColumn(f"n{side}", _norm(side)) if norm else out
+
+
+def _cosine(a: str, b: str):
+    """Exact cosine between sides ``a`` and ``b`` of two :func:`_vectors`
+    frames: ``dot / (n_a * n_b)``, NULL when the norm product is 0."""
+    dot = F.aggregate(
+        F.zip_with(f"v{a}", f"v{b}", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+    )
+    return F.try_divide(dot, F.col(f"n{a}") * F.col(f"n{b}"))
+
+
+def _cosine_np(a: np.ndarray, b: np.ndarray, na: np.ndarray, nb: np.ndarray) -> pa.Array:
+    """Numpy twin of :func:`_cosine`, row-wise over (n, dim) matrices and
+    their norms: NULL where the norm product is 0.  Values differ from the
+    JVM fold at ~1e-15 (numpy's summation order)."""
+    den = na * nb
+    zero = den == 0
+    return pa.array((a * b).sum(axis=1) / np.where(zero, 1.0, den), mask=zero)
+
+
+def _rank_topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """(query_id, neighbor_id, rank): the ``k`` best rows per query by
+    ``score``, ties to the smaller neighbor_id.  A NULL score never ranks:
+    it sorts after every score and is dropped after the window (a filter
+    below it would be pushed into the join and score every pair twice)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc_nulls_last(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter((F.col("rank") <= k) & F.col(score).isNotNull())
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """``mat`` with L2-normalised rows (PQ works on unit vectors); a zero
+    row stays zero."""
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
 
 
 def brute_force_topk(
@@ -68,37 +140,15 @@ def brute_force_topk(
     fires on small inputs, where the scoring would otherwise serialize
     onto the scan's task count).
 
-    Norms are computed ONCE per side before the cross join — the naive
-    per-pair cosine evaluates |q| and |v| for every (query, vector) pair,
-    i.e. |Q| times per corpus row.  ``dot/(na*nb)`` over the precomputed
-    norms is the bit-identical expression (same fold order, same
-    operands), so scores and ranks are unchanged.
+    Norms are computed ONCE per side before the cross join (:func:`_vectors`),
+    not |Q| times per corpus row.
     """
-    norm = lambda c: F.sqrt(  # noqa: E731 — shared with _cosine_expr
-        F.aggregate(c, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    emb = fan_out(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("nv")
-        )
-    ).withColumn("_nn", norm(F.col("nv")))
-    q = queries.select(
-        "query_id", F.col("query_vec").cast("array<double>").alias("qv")
-    ).withColumn("_qn", norm(F.col("qv")))
-    dot = F.aggregate(
-        F.zip_with("qv", "nv", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
+    emb = _vectors(fan_out(embeddings.select(id_col, vec_col)), id_col, vec_col, "neighbor_id", "n")
+    q = _vectors(queries, "query_id", "query_vec", "query_id", "q")
     scored = emb.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        (dot / (F.col("_qn") * F.col("_nn"))).alias("cosine"),
+        "query_id", "neighbor_id", _cosine("q", "n").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def random_hyperplane_signatures(
@@ -113,7 +163,7 @@ def random_hyperplane_signatures(
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
-            mat = _list_to_mat(tbl.column(vec_col))
+            mat = _list_to_mat(tbl.column(vec_col), vec_col)
             if planes is None:
                 rng = np.random.default_rng(seed)
                 planes = rng.standard_normal((mat.shape[1], bits))
@@ -151,7 +201,7 @@ def banded_hyperplane_buckets(
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
-            mat = _list_to_mat(tbl.column(vec_col))
+            mat = _list_to_mat(tbl.column(vec_col), vec_col)
             n = mat.shape[0]
             if planes is None:
                 rng = np.random.default_rng(seed)
@@ -195,22 +245,17 @@ def lsh_topk(
     if bits is None:
         bits = auto_bits(embeddings.count(), target_bucket_rows)
     sig_e = random_hyperplane_signatures(embeddings, bits=bits, seed=seed, id_col=id_col, vec_col=vec_col)
-    emb = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("nv"))
+    emb = _vectors(embeddings, id_col, vec_col, "neighbor_id", "n", norm=False)
     sig_e = sig_e.withColumnRenamed(id_col, "neighbor_id")
     q_emb = queries.select(F.col("query_id").alias(id_col), F.col("query_vec").alias(vec_col))
     sig_q = random_hyperplane_signatures(q_emb, bits=bits, seed=seed, id_col=id_col, vec_col=vec_col)
-    q = queries.select("query_id", F.col("query_vec").cast("array<double>").alias("qv")).join(
+    q = _vectors(queries, "query_id", "query_vec", "query_id", "q").join(
         sig_q.withColumnRenamed(id_col, "query_id"), "query_id"
     )
-    cand = emb.join(sig_e, "neighbor_id").join(q, "bucket").select(
-        "query_id", "neighbor_id", _cosine_expr(F.col("qv"), F.col("nv")).alias("cosine")
+    cand = emb.join(sig_e, "neighbor_id").join(q, "bucket").withColumn("nn", _norm("n")).select(
+        "query_id", "neighbor_id", _cosine("q", "n").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(cand, k)
 
 
 def embedding_near_dups(
@@ -246,38 +291,35 @@ def embedding_near_dups(
       representative in a STAR instead of all-pairs — the dup group stays
       discoverable (via its representative) at linear, not quadratic, cost,
       and nothing is silently dropped.
+
+    A zero vector has no cosine, so it is never a near-duplicate.  ``id_col``
+    must be unique: a duplicated id raises ``ValueError``.
     """
     # several subtrees consume the signatures (size tables + join sides):
     # persist so the projection matmul runs once.  Both sig and sig2 stay
     # cached for the query's lifetime (ids-only triples, bounded size); at
     # cluster scale you'd materialize them to tables and drop the caches.
+    # auto-sizing (bits=None) without a separate counting pass over the raw
+    # embeddings: compute signatures at the auto_bits cap (hi), count the
+    # PERSISTED ids-only signature frame (it materializes here instead of
+    # at the first size aggregation -- same total work, one fewer scan of
+    # the vectors), then MASK the packed bucket down to the effective
+    # bits.  Masking keeps the low `eff` signs of THIS plane layout --
+    # not the same hyperplanes a direct bits=eff run would draw (plane
+    # layout depends on the packed width), but any random planes are
+    # valid LSH and the sign-preservation guarantees are unchanged.
+    hi = 24
+    sig = banded_hyperplane_buckets(
+        embeddings, bands=bands, bits=hi if bits is None else bits, seed=seed,
+        extra_bits=split_bits, id_col=id_col, vec_col=vec_col,
+    ).persist()
+    n_vectors = sig.count() // bands
     if bits is None:
-        # auto-sizing without a separate counting pass over the raw
-        # embeddings: compute signatures at the auto_bits cap (hi), count the
-        # PERSISTED ids-only signature frame (it materializes here instead of
-        # at the first size aggregation -- same total work, one fewer scan of
-        # the vectors), then MASK the packed bucket down to the effective
-        # bits.  Masking keeps the low `eff` signs of THIS plane layout --
-        # not the same hyperplanes a direct bits=eff run would draw (plane
-        # layout depends on the packed width), but any random planes are
-        # valid LSH and the sign-preservation guarantees are unchanged.
-        hi = 24
-        sig = banded_hyperplane_buckets(
-            embeddings, bands=bands, bits=hi, seed=seed, extra_bits=split_bits,
-            id_col=id_col, vec_col=vec_col,
-        ).persist()
-        n_vectors = sig.count() // bands
         bits = auto_bits(n_vectors, target_bucket_rows, hi=hi)
         if bits < hi:
             sig = sig.withColumn(
                 "bucket", F.col("bucket").bitwiseAND(F.lit((1 << bits) - 1))
             )
-    else:
-        sig = banded_hyperplane_buckets(
-            embeddings, bands=bands, bits=bits, seed=seed, extra_bits=split_bits,
-            id_col=id_col, vec_col=vec_col,
-        ).persist()
-        n_vectors = sig.count() // bands
     # size table: small relative to data (one row per non-empty bucket);
     # AQE picks broadcast when it fits, shuffle join otherwise
     sizes = sig.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_n"))
@@ -290,29 +332,44 @@ def embedding_near_dups(
         sizes.filter(F.col("_n") > max_bucket_size).limit(1).count() > 0
     )
     # broadcast-confirm sizing decided up front: when the (id, vector,
-    # norm) map fits a broadcast, the confirm joins run map-side and the
+    # norm) map fits a broadcast, the confirm runs map-side and the
     # cross-band duplicate drop moves AFTER the threshold filter (only
     # rows that pass — near-dup-rate-sized — reach that shuffle, instead
     # of every raw candidate); past the cap candidates are deduplicated
-    # BEFORE the shuffled vector joins, the 100 TB shape.
+    # BEFORE the shuffled vector joins, the 100 TB shape.  Either side
+    # refuses a duplicated id the same way.
     dim_row = embeddings.select(F.size(F.col(vec_col))).first()
     dim = int(dim_row[0] or 0) if dim_row is not None else 0  # empty corpus
-    broadcast_confirm = n_vectors * (dim * 8 + 24) <= 64 << 20
+    broadcast_confirm = n_vectors * (dim * 8 + 24) <= _BROADCAST_CONFIRM_BYTES
+    if broadcast_confirm:
+        corpus = embeddings.select(id_col, vec_col).toArrow()
+        ids = np.asarray(corpus.column(id_col), dtype=np.int64)
+        order = np.argsort(ids)
+        ids, mat = ids[order], _list_to_mat(corpus.column(vec_col), vec_col)[order]
+        dups = ids[1:][ids[1:] == ids[:-1]]
+        dup = int(dups[0]) if dups.size else None
+    else:
+        dup = (
+            sig.filter(F.col("band") == 0)
+            .groupBy(id_col).count()
+            .filter(F.col("count") > 1)
+            .agg(F.min(id_col))
+            .first()[0]
+        )
+    if dup is not None:
+        raise ValueError(f"embedding_near_dups: {id_col} is not unique ({dup} appears more than once)")
 
-    def _dedup_cand(c: DataFrame) -> DataFrame:
-        return c if broadcast_confirm else c.dropDuplicates(["id_a", "id_b"])
+    def _bucket_pairs(s: DataFrame) -> DataFrame:
+        left, right = s.alias("l"), s.alias("r")
+        return left.join(
+            right,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        ).select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
 
     if not has_big:
-        left, right = sig.alias("l"), sig.alias("r")
-        cand = _dedup_cand(
-            left.join(
-                right,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        )
+        cand = _bucket_pairs(sig)
     else:
         eb = F.when(F.col("_n") <= max_bucket_size, F.lit(0)).otherwise(
             F.least(
@@ -337,56 +394,28 @@ def embedding_near_dups(
         # triples once instead of re-running both size aggregations per
         # consumer
         sig2 = sig2.join(sizes2, ["band", "bucket"]).persist()
-        ok = sig2.filter(F.col("_n2") <= max_bucket_size)
         big = sig2.filter(F.col("_n2") > max_bucket_size)
-        left, right = ok.alias("l"), ok.alias("r")
-        cand_ok = (
-            left.join(
-                right,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        )
         reps = big.groupBy("band", "bucket").agg(F.min(id_col).alias("id_a"))
         cand_big = (
             big.join(reps, ["band", "bucket"])
             .filter(F.col(id_col) != F.col("id_a"))
             .select("id_a", F.col(id_col).alias("id_b"))
         )
-        cand = _dedup_cand(cand_ok.unionByName(cand_big))
-    # exact confirm: norms are computed ONCE per vector (not per pair — the
-    # naive per-pair cosine re-folds |v| for every candidate the vector
-    # appears in); dot/(na*nb) over precomputed norms is the bit-identical
-    # expression, so pair membership is unchanged
-    emb = embeddings.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn(
-        "_n", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    )
+        cand = _bucket_pairs(sig2.filter(F.col("_n2") <= max_bucket_size)).unionByName(cand_big)
     # candidate pairs outnumber corpus rows by the bucket factor.  Under
     # broadcast_confirm the whole confirm is ONE vectorized mapInArrow
     # over the (id_a, id_b) stream with the corpus matrix broadcast
     # (gather + row-wise dot; pairs never shuffle, vectors never join),
     # and only rows clearing the threshold pay the distinct shuffle.
-    # Past the cap the (already deduplicated) candidates take the
-    # shuffled vector joins with per-id precomputed norms — the naive
-    # per-pair cosine re-folds |v| for every candidate the vector
-    # appears in — which is the correct 100 TB shape.
+    # Past the cap the deduplicated candidates take the shuffled vector
+    # joins, norms folded once per vector (:func:`_vectors`) — the
+    # correct 100 TB shape.
     if broadcast_confirm:
-        from typing import Iterator as _It
+        bc = embeddings.sparkSession.sparkContext.broadcast(
+            (ids, mat, np.linalg.norm(mat, axis=1))
+        )
 
-        rows = embeddings.select(id_col, vec_col).collect()
-        ids_np = np.array([r[id_col] for r in rows], dtype=np.int64)
-        mat = np.array([r[vec_col] for r in rows], dtype=np.float64).reshape(len(rows), dim)
-        order = np.argsort(ids_np)
-        ids_sorted = ids_np[order]
-        mat = mat[order]
-        norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-300)
-        bc = embeddings.sparkSession.sparkContext.broadcast((ids_sorted, mat, norms))
-
-        def confirm(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
+        def confirm(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             sids, smat, snorm = bc.value
             for rb in batches:
                 if rb.num_rows == 0:
@@ -395,27 +424,20 @@ def embedding_near_dups(
                 ib = np.asarray(rb.column(1), dtype=np.int64)
                 ra = np.searchsorted(sids, ia)
                 rb_ = np.searchsorted(sids, ib)
-                cos = (smat[ra] * smat[rb_]).sum(axis=1) / (snorm[ra] * snorm[rb_])
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(ia), pa.array(ib), pa.array(cos)],
+                    [pa.array(ia), pa.array(ib), _cosine_np(smat[ra], smat[rb_], snorm[ra], snorm[rb_])],
                     names=["id_a", "id_b", "cosine"],
                 )
 
-        pairs = cand.select("id_a", "id_b").mapInArrow(
-            confirm, schema="id_a long, id_b long, cosine double"
-        )
+        pairs = cand.mapInArrow(confirm, schema="id_a long, id_b long, cosine double")
         return pairs.filter(F.col("cosine") >= threshold).dropDuplicates(
             ["id_a", "id_b"]
         )
-    va = emb.select(F.col(id_col).alias("id_a"), F.col("v").alias("v_a"), F.col("_n").alias("n_a"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col("v").alias("v_b"), F.col("_n").alias("n_b"))
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
     pairs = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", (dot / (F.col("n_a") * F.col("n_b"))).alias("cosine"))
+        cand.dropDuplicates(["id_a", "id_b"])
+        .join(_vectors(embeddings, id_col, vec_col, "id_a", "a"), "id_a")
+        .join(_vectors(embeddings, id_col, vec_col, "id_b", "b"), "id_b")
+        .select("id_a", "id_b", _cosine("a", "b").alias("cosine"))
     )
     return pairs.filter(F.col("cosine") >= threshold)
 
@@ -453,7 +475,7 @@ def ivf_assignments(
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
-            mat = _list_to_mat(tbl.column(vec_col))
+            mat = _list_to_mat(tbl.column(vec_col), vec_col)
             d = (mat * mat).sum(axis=1)[:, None] - 2.0 * (mat @ cb.T) + cn[None, :]
             order = np.argsort(d, axis=1)[:, :n_probe]
             ids = np.repeat(np.asarray(tbl.column(id_col).combine_chunks().cast(pa.int64())), n_probe)
@@ -489,9 +511,11 @@ def _hash_sample_matrix(
             <= F.lit(thresh)
         )
         .select(vec_col)
-        .collect()
+        .toArrow()
     )
-    return np.stack([r[vec_col] for r in sample]).astype(np.float64)
+    if sample.num_rows == 0:
+        raise ValueError(f"vector column {vec_col!r}: the quantizer training sample is empty")
+    return _list_to_mat(sample.column(vec_col), vec_col)
 
 
 def ivf_topk(
@@ -563,26 +587,19 @@ def ivf_query(
     """Search a built IVF index: exact cosine only within each query's
     n_probe nearest clusters (``assignments`` may come straight from
     :func:`ivf_build` or from a stored table)."""
-    emb = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("nv")
-    ).join(assignments.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id")
+    emb = _vectors(embeddings, id_col, vec_col, "neighbor_id", "n", norm=False).join(
+        assignments.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
+    )
 
     q_emb = queries.select(F.col("query_id").alias(id_col), F.col("query_vec").alias(vec_col))
     probes = ivf_assignments(q_emb, centroids, n_probe, id_col, vec_col).withColumnRenamed(
         id_col, "query_id"
     )
-    q = queries.select("query_id", F.col("query_vec").cast("array<double>").alias("qv")).join(
-        probes, "query_id"
+    q = _vectors(queries, "query_id", "query_vec", "query_id", "q").join(probes, "query_id")
+    cand = emb.join(q, "cluster").withColumn("nn", _norm("n")).select(
+        "query_id", "neighbor_id", _cosine("q", "n").alias("cosine")
     )
-    cand = emb.join(q, "cluster").select(
-        "query_id", "neighbor_id", _cosine_expr(F.col("qv"), F.col("nv")).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(cand, k)
 
 
 # ---- product quantization (PQ): compressed-domain ANN ----------------------
@@ -610,8 +627,7 @@ def pq_train(
     Training follows ivf_build's pattern: the shared deterministic md5
     hash sample (bounded driver-side by design; no limit() partition-order
     bias), one numpy k-means per subspace."""
-    mat = _hash_sample_matrix(embeddings, train_sample, id_col, vec_col)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    mat = _unit_rows(_hash_sample_matrix(embeddings, train_sample, id_col, vec_col))
     dim = mat.shape[1]
     if dim % m:
         raise ValueError(f"embedding dim {dim} not divisible by m={m}")
@@ -646,8 +662,7 @@ def pq_encode(
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
-            mat = _list_to_mat(tbl.column(vec_col))
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+            mat = _unit_rows(_list_to_mat(tbl.column(vec_col), vec_col))
             n = len(mat)
             codes = np.empty((n, m), dtype=np.int32)
             for j in range(m):
@@ -696,8 +711,7 @@ def pq_topk(
     m, _, sub = cb.shape
     qrows = queries.select("query_id", "query_vec").collect()
     qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    qmat = np.stack([r["query_vec"] for r in qrows]).astype(np.float64)
-    qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
+    qmat = _unit_rows(np.stack([r["query_vec"] for r in qrows]).astype(np.float64))
     # luts[q, j, code] = <q_j, cb[j, code]>
     luts = np.stack(
         [qmat[:, j * sub : (j + 1) * sub] @ cb[j].T for j in range(m)], axis=1
@@ -734,34 +748,18 @@ def pq_topk(
     cand = codes.mapInArrow(
         score, schema="query_id long, neighbor_id long, adc_score double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
     if rerank is None:
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank")
-        )
-    short = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-        .select("query_id", "neighbor_id")
-    )
-    nv = rerank.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("nv"),
-    )
-    qv = queries.select("query_id", F.col("query_vec").cast("array<double>").alias("qv"))
+        return _rank_topk(cand, k, "adc_score")
+    short = _rank_topk(cand, kk, "adc_score").select("query_id", "neighbor_id")
+    nv = _vectors(rerank, id_col, "embedding", "neighbor_id", "n", norm=False)
+    qv = _vectors(queries, "query_id", "query_vec", "query_id", "q")
     # the shortlist (k x queries rows) broadcasts so the embeddings table
     # is scanned but never shuffled (ADVICE r6: without the hint a planner
     # fallback could sort-merge-shuffle the full vector column here)
     exact = (
         F.broadcast(short).join(nv, "neighbor_id")
         .join(F.broadcast(qv), "query_id")
-        .select("query_id", "neighbor_id", _cosine_expr(F.col("qv"), F.col("nv")).alias("cosine"))
+        .withColumn("nn", _norm("n"))
+        .select("query_id", "neighbor_id", _cosine("q", "n").alias("cosine"))
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(exact, k)

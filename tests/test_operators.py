@@ -738,18 +738,35 @@ def test_stream_encode_roundtrip(spark, tmp_path):
     assert joined.count() == docs.count()
 
 
-def test_embedding_near_dups_planted(spark, embeddings):
+def _confirm_budgets(monkeypatch):
+    """Force embedding_near_dups' exact confirm onto each side of its
+    budget in turn, yielding the side's name."""
+    from parquet4seastar_spark.operators import similarity
+
+    for side, budget in (("broadcast", 1 << 62), ("shuffled", -1)):
+        monkeypatch.setattr(similarity, "_BROADCAST_CONFIRM_BYTES", budget)
+        yield side
+
+
+def test_embedding_near_dups_planted(spark, embeddings, monkeypatch):
     from parquet4seastar_spark.operators.similarity import embedding_near_dups
 
     # scaled copies keep every projection sign -> guaranteed band collision;
-    # original vectors are near-orthogonal so only planted pairs survive 0.9
+    # original vectors are near-orthogonal so only planted pairs survive 0.9.
+    # Two zero vectors share every band bucket but have no cosine, so they
+    # are never a pair, on either side of the confirm budget.
     planted = embeddings.filter(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
         F.transform("embedding", lambda x: (x * F.lit(1.01)).cast("float")).alias("embedding"),
     )
-    both = embeddings.select("vec_id", "embedding").union(planted)
-    pairs = {(r["id_a"], r["id_b"]) for r in embedding_near_dups(both, threshold=0.9).collect()}
-    assert pairs == {(i, i + 1000000) for i in range(5)}
+    dim = len(embeddings.first()["embedding"])
+    zeros = spark.createDataFrame(
+        [(2000000, [0.0] * dim), (2000001, [0.0] * dim)], "vec_id long, embedding array<float>"
+    )
+    both = embeddings.select("vec_id", "embedding").union(planted).union(zeros)
+    for side in _confirm_budgets(monkeypatch):
+        pairs = {(r["id_a"], r["id_b"]) for r in embedding_near_dups(both, threshold=0.9).collect()}
+        assert pairs == {(i, i + 1000000) for i in range(5)}, side
 
 
 def test_embedding_near_dups_bucket_cap_star_fallback(spark, embeddings):
@@ -792,16 +809,18 @@ def test_embedding_near_dups_overflow_split_keeps_recall(spark, embeddings):
     assert pairs == {(i, i + 1000000) for i in range(5)}
 
 
-def test_embedding_near_dups_empty_corpus(spark, embeddings):
+def test_embedding_near_dups_empty_corpus(spark, embeddings, monkeypatch):
     """An empty corpus gives an empty pair set (the dimension probe's
-    ``.first()`` returns no row), with auto-sized and with fixed bits."""
+    ``.first()`` returns no row), with auto-sized and with fixed bits, on
+    either side of the confirm budget."""
     from parquet4seastar_spark.operators.similarity import embedding_near_dups
 
     empty = embeddings.select("vec_id", "embedding").limit(0)
-    for bits in (None, 4):
-        out = embedding_near_dups(empty, threshold=0.9, bits=bits)
-        assert out.columns == ["id_a", "id_b", "cosine"]
-        assert out.collect() == []
+    for side in _confirm_budgets(monkeypatch):
+        for bits in (None, 4):
+            out = embedding_near_dups(empty, threshold=0.9, bits=bits)
+            assert out.columns == ["id_a", "id_b", "cosine"], side
+            assert out.collect() == [], side
 
 
 def test_auto_bits_scales_with_corpus():
@@ -1091,6 +1110,90 @@ def test_ivf_persisted_index_matches_oneshot(spark, tmp_path):
         ).collect()
     }
     assert split == oneshot
+
+
+def test_list_to_mat_refuses_ragged_and_null_vectors():
+    """A ragged or null vector raises, naming the column and the first bad
+    row, instead of silently shifting every row after it into the wrong
+    vector."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet4seastar_spark.operators.similarity import _list_to_mat
+
+    with pytest.raises(ValueError, match=r"'embedding': row 1 has 3 values, row 0 has 1"):
+        _list_to_mat(pa.array([[1.0], [2.0, 3.0, 4.0]]), "embedding")
+    with pytest.raises(ValueError, match=r"'embedding': row 1 is null"):
+        _list_to_mat(pa.array([[1.0, 2.0], None]), "embedding")
+    sliced = pa.array([[0.0, 1.0], [2.0, 3.0], [4.0, 5.0]]).slice(1)
+    assert (_list_to_mat(sliced, "embedding") == np.array([[2.0, 3.0], [4.0, 5.0]])).all()
+
+
+def test_quantizer_training_refuses_empty_corpus(spark, embeddings):
+    from parquet4seastar_spark.operators import similarity
+
+    empty = embeddings.select("vec_id", "embedding").limit(0)
+    queries = embeddings.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    for run in (
+        lambda: similarity.ivf_topk(empty, queries),
+        lambda: similarity.ivf_build(empty),
+        lambda: similarity.pq_train(empty),
+    ):
+        with pytest.raises(ValueError, match="'embedding': the quantizer training sample is empty"):
+            run()
+
+
+def test_ann_zero_vectors_are_never_neighbours(spark):
+    """A zero vector has no cosine: as a query it gets no neighbours, in the
+    corpus it is nobody's neighbour, and every other row ranks exactly as
+    in the corpus without it.  IVF probes every cluster and the PQ
+    shortlist covers the corpus, so both are exact here."""
+    import numpy as np
+
+    from parquet4seastar_spark.operators import similarity
+
+    rng = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
+    zeros = [(100, [0.0] * 8), (101, [0.0] * 8)]
+
+    def corpus(rs):
+        return spark.createDataFrame(rs, "vec_id long, embedding array<float>")
+
+    def queries(emb):
+        return emb.filter(F.col("vec_id").isin(0, 1, 2, 100)).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+        )
+
+    def pq_rerank(emb, q):
+        cb = similarity.pq_train(emb, m=2, k=4)
+        return similarity.pq_topk(similarity.pq_encode(emb, cb), cb, q, k=5, rerank=emb, shortlist=50)
+
+    paths = {
+        "brute_force": lambda emb, q: similarity.brute_force_topk(emb, q, k=5),
+        "lsh": lambda emb, q: similarity.lsh_topk(emb, q, k=5, bits=2),
+        "ivf": lambda emb, q: similarity.ivf_topk(emb, q, k=5, n_clusters=4, n_probe=4),
+        "pq_rerank": pq_rerank,
+    }
+    clean, dirty = corpus(rows), corpus(rows + zeros)
+    for name, run in paths.items():
+        want = {tuple(r) for r in run(clean, queries(clean)).collect()}
+        got = {tuple(r) for r in run(dirty, queries(dirty)).collect()}
+        assert want and got == want, name
+
+
+def test_embedding_near_dups_refuses_duplicate_ids(spark, embeddings, monkeypatch):
+    from parquet4seastar_spark.operators.similarity import embedding_near_dups
+
+    dup = embeddings.filter(F.col("vec_id") == 7).select(
+        F.lit(5).cast("long").alias("vec_id"), "embedding"
+    )
+    both = embeddings.select("vec_id", "embedding").union(dup)
+    for side in _confirm_budgets(monkeypatch):
+        with pytest.raises(ValueError) as err:
+            embedding_near_dups(both, threshold=0.9)
+        assert str(err.value) == "embedding_near_dups: vec_id is not unique (5 appears more than once)", side
 
 
 def test_minhash_kernel_matches_numpy_fallback():

@@ -88,6 +88,27 @@ def test_ann_corpus_never_shuffles(spark):
     assert "WindowGroupLimit" in plan  # top-k rank pushdown before the sort
 
 
+def test_ann_scores_each_pair_once(spark):
+    # the NULL-score drop must sit after the top-k window: a filter on the
+    # score below it is pushed into the candidate join's condition, and
+    # every pair's dot product is then computed twice
+    from parquet4seastar_spark.operators import similarity as S
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    q = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    cb = S.pq_train(emb, m=2, k=4)
+    paths = {
+        "brute_force": S.brute_force_topk(emb, q, k=5),
+        "lsh": S.lsh_topk(emb, q, k=5, bits=4),
+        "ivf": S.ivf_topk(emb, q, k=5, n_clusters=4),
+        "pq_rerank": S.pq_topk(S.pq_encode(emb, cb), cb, q, k=5, rerank=emb),
+    }
+    for name, df in paths.items():
+        assert _optimized(df).count("zip_with") == 1, name
+
+
 def test_stratified_sample_is_map_side_only(spark):
     # hash-prefix sampling must be a pure scan+filter: no Exchange, no
     # Python stage -- the filter rides whole-stage codegen past pruning
