@@ -150,12 +150,28 @@ def dbp_encode(values: np.ndarray, nbytes: int) -> bytes:
     return b"".join(out)
 
 
+def _unpack(packed: np.ndarray, w: int, m: int) -> np.ndarray:
+    """``m`` LSB-first ``w``-bit values from ``packed`` (8 bytes of tail
+    slack): one unaligned 8-byte read per value, shifted and masked.  A
+    width over 56 can straddle nine bytes and goes to unpack_bits."""
+    if w > 56:
+        return unpack_bits(packed, w, m)
+    bitpos = np.arange(m, dtype=np.int64) * w
+    words = np.ndarray((len(packed) - 7,), dtype="<u8", buffer=packed, strides=(1,))
+    return (words[bitpos >> 3] >> (bitpos & 7).astype(np.uint64)) & np.uint64((1 << w) - 1)
+
+
 def dbp_decode(buf, nbytes: int, pos: int = 0) -> tuple[np.ndarray, int]:
     """Decode a DBP stream; returns (values, end_pos).
 
     ``end_pos`` is past the final consumed miniblock (the reference's
     eat_final_padding semantics, encoding.cc:246-255), i.e. where a
     DELTA_LENGTH_BYTE_ARRAY payload would begin.
+
+    Block headers are read once per block; then every miniblock of one bit
+    width is unpacked in a single pass (vpmb is a multiple of 8, so the
+    miniblocks of one width concatenate into one packed stream) -- the
+    shape dbp_encode's numpy path packs with.
     """
     sdtype = np.int32 if nbytes == 4 else np.int64
     udtype = np.uint32 if nbytes == 4 else np.uint64
@@ -173,29 +189,46 @@ def dbp_decode(buf, nbytes: int, pos: int = 0) -> tuple[np.ndarray, int]:
         raise ValueError("DELTA_BINARY_PACKED: miniblock size must be a positive multiple of 8")
     mask = (1 << (nbytes * 8)) - 1
     remaining = total - 1
-    deltas: list[np.ndarray] = []
-    raw = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray)) else buf
+    # per used miniblock: byte offset of its packed values, bit width, and
+    # its block's min_delta (masked to the value width)
+    offs: list[int] = []
+    mb_widths: list[int] = []
+    mins: list[int] = []
+    n = len(buf)
     while remaining > 0:
         zz, pos = uleb128_decode(buf, pos, max_bytes=10)
         min_delta = zigzag64_decode(zz)
-        if pos + num_mb > len(buf):
+        if pos + num_mb > n:
             raise ValueError("DELTA_BINARY_PACKED: truncated miniblock widths")
-        widths = bytes(buf[pos : pos + num_mb])
-        pos += num_mb
         in_block = min(remaining, block_size)
-        used_mbs = (in_block + vpmb - 1) // vpmb
-        md_u = np.uint64(min_delta & mask)
-        for mb in range(used_mbs):
-            w = widths[mb]
-            nb = vpmb * w // 8
-            if pos + nb > len(buf):
-                raise ValueError("DELTA_BINARY_PACKED: unexpected end of data")
-            vals = unpack_bits(raw[pos : pos + nb], w, vpmb)
-            pos += nb
-            take = min(remaining, vpmb)
-            deltas.append(((vals[:take] + md_u) & np.uint64(mask)).astype(np.uint64))
-            remaining -= take
-    all_deltas = np.concatenate(deltas) if deltas else np.zeros(0, dtype=np.uint64)
+        used = (in_block + vpmb - 1) // vpmb
+        if used > num_mb:
+            raise ValueError("DELTA_BINARY_PACKED: block size is not a multiple of the miniblock count")
+        widths = list(bytes(buf[pos : pos + used]))
+        pos += num_mb
+        for w in widths:
+            offs.append(pos)
+            pos += vpmb * w // 8
+        if pos > n:
+            raise ValueError("DELTA_BINARY_PACKED: unexpected end of data")
+        mb_widths.extend(widths)
+        mins.extend([min_delta & mask] * used)
+        remaining -= in_block
+    raw = buf if isinstance(buf, np.ndarray) else np.frombuffer(buf, dtype=np.uint8)
+    width_arr = np.array(mb_widths, dtype=np.int64)
+    off_arr = np.array(offs, dtype=np.int64)
+    deltas = np.zeros((len(mb_widths), vpmb), dtype=np.uint64)
+    for w in np.unique(width_arr).tolist():
+        if w == 0:
+            continue
+        sel = np.flatnonzero(width_arr == w)
+        nb = vpmb * w // 8
+        # this width's miniblocks back to back, plus 8 bytes of read slack
+        packed = np.zeros(len(sel) * nb + 8, dtype=np.uint8)
+        packed[:-8] = raw[(off_arr[sel, None] + np.arange(nb, dtype=np.int64)).reshape(-1)]
+        deltas[sel] = _unpack(packed, w, len(sel) * vpmb).reshape(len(sel), vpmb)
+    deltas += np.array(mins, dtype=np.uint64)[:, None]
+    all_deltas = deltas.reshape(-1)[: total - 1]
     # cumsum with wraparound in the target unsigned dtype
     acc = np.empty(total, dtype=udtype)
     acc[0] = udtype(first & mask)

@@ -2,10 +2,14 @@
 
 Mirrors the reference read path (SURVEY.md §3.2): pages grouped per chunk,
 dictionary page loaded first, values reassembled with nulls from def levels.
-Spark shape: groupBy(part_key, chunk_seq) -> applyInArrow over the page
-rows of the row_id chunk + the requested column chunks; output is
-(row_id, <column values>) rows, joinable back to the source for the
-round-trip sha256 verification (BASELINE.json per-row invariant).
+Spark shape (``_by_chunk``, shared with verify.audit_lineage and
+export.export_parquet_files): repartition(part_key, chunk_seq), a sort
+within each partition by (part_key, chunk_seq, column, page_idx), then ONE
+mapInArrow that cuts every Arrow batch into (part_key, chunk_seq) runs --
+one Python call per batch, not one Arrow round trip per chunk.  Output is
+(row_id, <column values>) rows over the row_id chunk + the requested
+column chunks, joinable back to the source for the round-trip sha256
+verification (BASELINE.json per-row invariant).
 
 Nested columns arrive as '<col>#g<i>' leaf chunks from the ONE recursive
 Dremel walker (codecs/dremel.py); each leaf's chunk.logical carries the
@@ -20,8 +24,11 @@ objects.
 from __future__ import annotations
 
 import json
+from collections import Counter
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.dremel import build_tree, tree_arrow_type
@@ -43,15 +50,31 @@ _META_FIELDS = (
 def _rebuild_chunk(tbl: pa.Table, idxs: list[int]) -> EncodedChunk:
     """Build an EncodedChunk from page rows ``idxs`` of an arrow table.
 
-    Metadata scalars are read per row (tens of rows); page payloads stay
-    zero-copy arrow buffers -- they never round-trip through Python bytes.
+    The rows, in order, must hold page_idx exactly 0..n_pages-1 (``n_pages``
+    rides on every page row; _by_chunk sorts each chunk's pages); an
+    incomplete or duplicated page set -- e.g. a union of two encodes that
+    share a part_key -- raises a ValueError naming the chunk instead of
+    decoding or exporting wrong.  Metadata scalars are
+    read per row (tens of rows); page payloads stay zero-copy arrow buffers
+    -- they never round-trip through Python bytes.
     """
     cols = {name: tbl.column(name) for name in (
         "page_idx", "page_kind", "encoding", "num_values", "num_non_null",
-        "uncompressed_size", "compressed_size", "data", *_META_FIELDS,
+        "uncompressed_size", "compressed_size", "data", "n_pages", *_META_FIELDS,
     )}
-    idxs = sorted(idxs, key=lambda i: cols["page_idx"][i].as_py())
     f = idxs[0]
+    got = [cols["page_idx"][i].as_py() for i in idxs]
+    n_pages = cols["n_pages"][f].as_py()
+    if got != list(range(n_pages)):
+        seen = Counter(got)
+        raise ValueError(
+            f"column {tbl.column('column')[f].as_py()!r} chunk "
+            f"part_key={tbl.column('part_key')[f].as_py()!r} "
+            f"chunk_seq={tbl.column('chunk_seq')[f].as_py()} has an incomplete or "
+            f"duplicated page set: n_pages={n_pages}, {len(got)} page rows, "
+            f"missing page_idx {sorted(set(range(n_pages)) - set(seen))}, "
+            f"duplicated page_idx {sorted(p for p, k in seen.items() if k > 1)}"
+        )
     chunk = EncodedChunk(
         ptype=cols["ptype"][f].as_py(),
         logical=cols["logical"][f].as_py(),
@@ -80,6 +103,77 @@ def _rebuild_chunk(tbl: pa.Table, idxs: list[int]) -> EncodedChunk:
             )
         )
     return chunk
+
+
+class _ChunkGroup:
+    """The rows of one (part_key, chunk_seq) group: ``tbl`` (one arrow
+    chunk per column), the key, and ``page_rows``: column -> its page rows."""
+
+    def __init__(self, tbl: pa.Table):
+        self.tbl = tbl.combine_chunks()
+        self.part_key = self.tbl.column("part_key")[0].as_py()
+        self.chunk_seq = int(self.tbl.column("chunk_seq")[0].as_py())
+        self.page_rows: dict[str, list[int]] = {}
+        kinds = self.tbl.column("kind").to_pylist()
+        for i, (k, c) in enumerate(zip(kinds, self.tbl.column("column").to_pylist())):
+            if k == "page":
+                self.page_rows.setdefault(c, []).append(i)
+
+    def chunk(self, name: str) -> EncodedChunk:
+        return _rebuild_chunk(self.tbl, self.page_rows[name])
+
+
+def _key_runs(batch: pa.RecordBatch) -> list[tuple[int, int]]:
+    """[start, end) row ranges of equal (part_key, chunk_seq) in ``batch``.
+    A NULL key cuts a run; the caller rejoins runs with equal keys."""
+    n = batch.num_rows
+    if n == 0:
+        return []
+    cut = np.zeros(n - 1, dtype=bool)
+    for name in ("part_key", "chunk_seq"):
+        col = batch.column(name)
+        cut |= pc.fill_null(pc.not_equal(col.slice(0, n - 1), col.slice(1)), True).to_numpy(
+            zero_copy_only=False
+        )
+    bounds = [0, *(np.flatnonzero(cut) + 1).tolist(), n]
+    return list(zip(bounds[:-1], bounds[1:]))
+
+
+def _by_chunk(frame: DataFrame, fn, schema) -> DataFrame:
+    """``fn(_ChunkGroup) -> pa.Table`` (rows of ``schema``) once per
+    (part_key, chunk_seq) group of ``frame``.
+
+    One exchange on the key with no partition count (AQE may coalesce it),
+    a sort within each partition by key, column and page_idx, then one
+    mapInArrow that cuts each Arrow batch into key runs.  The run that
+    reaches the end of a batch is carried into the next one, so a group
+    split by a batch boundary still reaches ``fn`` whole; the carry never
+    holds more than one group.
+    """
+
+    def by_chunk(batches):
+        from parquet4seastar_spark import _alloc
+
+        _alloc.tune_allocator()
+        carry: list[pa.RecordBatch] = []
+        key = None
+        for batch in batches:
+            pks, seqs = batch.column("part_key"), batch.column("chunk_seq")
+            for lo, hi in _key_runs(batch):
+                k = (pks[lo].as_py(), seqs[lo].as_py())
+                if carry and k != key:
+                    yield from fn(_ChunkGroup(pa.Table.from_batches(carry))).to_batches()
+                    carry = []
+                carry.append(batch.slice(lo, hi - lo))
+                key = k
+        if carry:
+            yield from fn(_ChunkGroup(pa.Table.from_batches(carry))).to_batches()
+
+    return (
+        frame.repartition("part_key", "chunk_seq")
+        .sortWithinPartitions("part_key", "chunk_seq", "column", "page_idx")
+        .mapInArrow(by_chunk, schema)
+    )
 
 
 def prune_chunks(
@@ -328,24 +422,17 @@ def decode_table(
     cols = columns
     targets = {c: to_arrow_type(t) for c, t in col_types.items()}
 
-    def decode_group(tbl: pa.Table) -> pa.Table:
-        from parquet4seastar_spark import _alloc
-
-        _alloc.tune_allocator()
-        tbl = tbl.combine_chunks()
-        by_col: dict[str, list[int]] = {}
-        for i, c in enumerate(tbl.column("column").to_pylist()):
-            by_col.setdefault(c, []).append(i)
-        pk = tbl.column("part_key")[0].as_py()
+    def decode_group(group: _ChunkGroup) -> pa.Table:
+        pk = group.part_key
 
         def planned_chunk(name: str) -> EncodedChunk:
             # the output types were planned, not read from these pages: a
             # chunk that disagrees would cast wrongly or fail obscurely
-            chunk = _rebuild_chunk(tbl, by_col[name])
+            chunk = group.chunk(name)
             if (chunk.logical, chunk.type_length) != schema[name]:
                 raise ValueError(
                     f"column {name!r} chunk part_key={pk!r} "
-                    f"chunk_seq={tbl.column('chunk_seq')[0].as_py()} holds "
+                    f"chunk_seq={group.chunk_seq} holds "
                     f"{chunk.logical!r} (type_length {chunk.type_length}), but "
                     f"the decode planned {schema[name][0]!r} (type_length {schema[name][1]})"
                 )
@@ -369,4 +456,4 @@ def decode_table(
             names.append(c)
         return pa.table(dict(zip(names, out_arrays)))
 
-    return pages.groupBy("part_key", "chunk_seq").applyInArrow(decode_group, schema=out_schema)
+    return _by_chunk(pages, decode_group, out_schema)

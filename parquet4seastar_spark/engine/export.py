@@ -9,9 +9,10 @@ reader (and pyarrow, DuckDB, ...) reads the output directly.  FSST chunks
 are rejected with guidance -- FSST is not a standard parquet encoding, so
 export from the 'auto' profile requires re-encoding.
 
-Scale shape: one applyInArrow pass over the page groups (the same shuffle
-the decoder uses); each task writes its own file to the (shared) output
-directory -- no driver-side collection of data.
+Scale shape: the decoder's one per-chunk pass (decode_job._by_chunk: a
+repartition on (part_key, chunk_seq) and one mapInArrow over key runs);
+each task writes its own files to the (shared) output directory -- no
+driver-side collection of data.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.parquet_file import DremelColumn, write_parquet_file
-from .decode_job import _rebuild_chunk
+from .decode_job import _by_chunk, _ChunkGroup
 
 
 def export_parquet_files(
@@ -38,30 +39,20 @@ def export_parquet_files(
     pages = encoded.filter((F.col("kind") == "page") & name_filter)
     cols = ["row_id", *columns]
 
-    def write_group(tbl: pa.Table) -> pa.Table:
-        from parquet4seastar_spark import _alloc
-
-        _alloc.tune_allocator()
-        tbl = tbl.combine_chunks()
-        by_col: dict[str, list[int]] = {}
-        for i, c in enumerate(tbl.column("column").to_pylist()):
-            by_col.setdefault(c, []).append(i)
-        part_key = tbl.column("part_key")[0].as_py()
-        chunk_seq = int(tbl.column("chunk_seq")[0].as_py())
+    def write_group(group: _ChunkGroup) -> pa.Table:
         chunks = {}
         for c in cols:
-            if c in by_col:
-                chunks[c] = _rebuild_chunk(tbl, by_col[c])
+            if c in group.page_rows:
+                chunks[c] = group.chunk(c)
             else:
                 leaves = {
-                    name: _rebuild_chunk(tbl, idxs)
-                    for name, idxs in by_col.items()
-                    if name.startswith(f"{c}#g")
+                    name: group.chunk(name) for name in group.page_rows if name.startswith(f"{c}#g")
                 }
                 if not leaves:
                     raise ValueError(f"column not present in encoded table: {c}")
                 chunks[c] = DremelColumn(leaves)
         num_rows = chunks["row_id"].num_rows
+        part_key, chunk_seq = group.part_key, group.chunk_seq
         safe_key = "".join(ch if ch.isalnum() else "_" for ch in part_key)
         path = os.path.join(out_dir, f"part-{safe_key}-{chunk_seq:05d}.parquet")
         write_parquet_file(path, chunks, num_rows)
@@ -74,6 +65,6 @@ def export_parquet_files(
             }
         )
 
-    return pages.groupBy("part_key", "chunk_seq").applyInArrow(
-        write_group, schema="part_key string, chunk_seq int, file string, num_rows long"
+    return _by_chunk(
+        pages, write_group, "part_key string, chunk_seq int, file string, num_rows long"
     )

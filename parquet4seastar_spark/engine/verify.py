@@ -146,34 +146,29 @@ def audit_lineage(encoded: DataFrame) -> DataFrame:
     page corruption WITHOUT the source table.  Returns one row per chunk:
     (part_key, chunk_seq, column, ok, stored_sha, recomputed_sha).
 
-    Scale shape: the same single (part_key, chunk_seq) shuffle as decode;
+    Scale shape: the decoder's one per-chunk pass (decode_job._by_chunk);
     each group audits independently.
     """
     import pyarrow as pa
 
     from ..codecs.pages import chunk_content_sha, decode_chunk, dremel_recompute_sha
-    from .decode_job import _rebuild_chunk
+    from .decode_job import _by_chunk, _ChunkGroup
 
-    def audit_group(tbl: pa.Table) -> pa.Table:
-        from parquet4seastar_spark import _alloc
-
-        _alloc.tune_allocator()
-        tbl = tbl.combine_chunks()
-        kinds = tbl.column("kind").to_pylist()
-        names = tbl.column("column").to_pylist()
-        by_col: dict[str, list[int]] = {}
-        stored: dict[str, str] = {}
-        for i, (k, c) in enumerate(zip(kinds, names)):
-            if k == "page":
-                by_col.setdefault(c, []).append(i)
-            elif k == "chunk":
-                stored[c] = tbl.column("sha256")[i].as_py()
-        part_key = tbl.column("part_key")[0].as_py()
-        chunk_seq = int(tbl.column("chunk_seq")[0].as_py())
+    def audit_group(group: _ChunkGroup) -> pa.Table:
+        tbl = group.tbl
+        stored = {
+            c: sha
+            for k, c, sha in zip(
+                tbl.column("kind").to_pylist(),
+                tbl.column("column").to_pylist(),
+                tbl.column("sha256").to_pylist(),
+            )
+            if k == "chunk"
+        }
         cols, oks, st, rec = [], [], [], []
         for c, sha in stored.items():
             try:
-                chunk = _rebuild_chunk(tbl, by_col[c])
+                chunk = group.chunk(c)
                 if chunk.logical.startswith("g:"):
                     # dremel leaf ('<col>#g<i>'): sha covers level streams
                     # + non-null values (pages._levels_sha)
@@ -189,8 +184,8 @@ def audit_lineage(encoded: DataFrame) -> DataFrame:
         n = len(cols)
         return pa.table(
             {
-                "part_key": pa.array([part_key] * n, type=pa.string()),
-                "chunk_seq": pa.array([chunk_seq] * n, type=pa.int32()),
+                "part_key": pa.array([group.part_key] * n, type=pa.string()),
+                "chunk_seq": pa.array([group.chunk_seq] * n, type=pa.int32()),
                 "column": pa.array(cols, type=pa.string()),
                 "ok": pa.array(oks, type=pa.bool_()),
                 "stored_sha": pa.array(st, type=pa.string()),
@@ -198,12 +193,11 @@ def audit_lineage(encoded: DataFrame) -> DataFrame:
             }
         )
 
-    return encoded.groupBy("part_key", "chunk_seq").applyInArrow(
+    return _by_chunk(
+        encoded,
         audit_group,
-        schema=(
-            "part_key string, chunk_seq int, column string, ok boolean, "
-            "stored_sha string, recomputed_sha string"
-        ),
+        "part_key string, chunk_seq int, column string, ok boolean, "
+        "stored_sha string, recomputed_sha string",
     )
 
 

@@ -248,3 +248,132 @@ def test_dbp_kernel_matches_numpy_fallback():
         capture_output=True, env=env, cwd="/root/repo",
     )
     assert "PARITY" in r.stdout, r.stderr
+
+
+def _uleb(v):
+    out = bytearray()
+    while v > 0x7F:
+        out.append((v & 0x7F) | 0x80)
+        v >>= 7
+    out.append(v)
+    return bytes(out)
+
+
+def _zz(v):
+    return 2 * v if v >= 0 else -2 * v - 1
+
+
+def _dbp_scalar(buf, nbytes):
+    """One value at a time, straight from the spec, raising where the
+    stream runs out with dbp_decode's messages: (values, end_pos)."""
+    mask = (1 << (8 * nbytes)) - 1
+    pos = 0
+
+    def uleb():
+        nonlocal pos
+        v = 0
+        for i in range(10):
+            if pos >= len(buf):
+                raise ValueError("incomplete ULEB128")
+            b = buf[pos]
+            pos += 1
+            v |= (b & 0x7F) << (7 * i)
+            if not b & 0x80:
+                return v
+        raise ValueError("ULEB128 overflow")
+
+    block, nmb, total = uleb(), uleb(), uleb()
+    zz = uleb()
+    vals = [((zz >> 1) ^ -(zz & 1)) & mask] if total else []
+    vpmb = block // nmb
+    while len(vals) < total:
+        zz = uleb()
+        min_delta = (zz >> 1) ^ -(zz & 1)
+        if pos + nmb > len(buf):
+            raise ValueError("DELTA_BINARY_PACKED: truncated miniblock widths")
+        widths = buf[pos : pos + nmb]
+        pos += nmb
+        for w in widths:
+            if len(vals) == total:
+                break
+            nb = vpmb * w // 8
+            if pos + nb > len(buf):
+                raise ValueError("DELTA_BINARY_PACKED: unexpected end of data")
+            bits = int.from_bytes(buf[pos : pos + nb], "little")
+            pos += nb
+            for i in range(vpmb):
+                if len(vals) < total:
+                    rel = (bits >> (i * w)) & ((1 << w) - 1)
+                    vals.append((vals[-1] + min_delta + rel) & mask)
+    sign = 1 << (8 * nbytes - 1)
+    return [v - (sign << 1) if v & sign else v for v in vals], pos
+
+
+def _mixed_width_stream(rng, nbytes, total):
+    """A hand-built stream (256-value blocks of 8 miniblocks) whose blocks
+    mix widths 0..64 -- for int32 too, where the encoder stops at 32."""
+    out = bytearray(_uleb(256) + _uleb(8) + _uleb(total) + _uleb(_zz(-5)))
+    left = total - 1
+    choices = [0, 1, 3, 7, 8, 13, 16, 31, 32, 33, 57, 63, 64]
+    while left > 0:
+        out += _uleb(_zz(int(rng.integers(-(2**40), 2**40))))
+        widths = rng.choice(choices, 8)
+        out += bytes(widths.astype(np.uint8).tolist())
+        for w in widths[: (min(left, 256) + 31) // 32]:
+            out += bytes(rng.integers(0, 256, 4 * int(w), dtype=np.uint8))
+        left -= min(left, 256)
+    return bytes(out)
+
+
+def test_dbp_decode_mixed_miniblock_widths():
+    rng = np.random.default_rng(11)
+    for nbytes in (4, 8):
+        for total in (2, 33, 257, 700, 1025):
+            buf = _mixed_width_stream(rng, nbytes, total)
+            out, end = dbp_decode(buf, nbytes)
+            want, want_end = _dbp_scalar(buf, nbytes)
+            assert out.dtype == (np.int32 if nbytes == 4 else np.int64)
+            assert out.tolist() == want and end == want_end == len(buf)
+    # the encoder's own mixed streams: constant runs (width 0) beside
+    # full-range runs (width 32 / 64)
+    for nbytes, dt in ((4, np.int32), (8, np.int64)):
+        info = np.iinfo(dt)
+        parts = [np.full(40, 9), rng.integers(info.min, info.max, 70, dtype=dt, endpoint=True),
+                 np.arange(300), rng.integers(-50, 50, 100)]
+        vals = np.concatenate([p.astype(dt) for p in parts])
+        enc = dbp_encode(vals, nbytes)
+        assert dbp_decode(enc, nbytes)[0].tolist() == vals.tolist() == _dbp_scalar(enc, nbytes)[0]
+
+
+def test_dbp_decode_block_boundaries():
+    rng = np.random.default_rng(12)
+    for nbytes, dt in ((4, np.int32), (8, np.int64)):
+        for n in (1, 2, 31, 32, 33, 255, 256, 257, 258, 288, 289, 512, 513, 769):
+            vals = rng.integers(-(2**20), 2**20, n).astype(dt)
+            enc = dbp_encode(vals, nbytes)
+            out, end = dbp_decode(enc + b"tail", nbytes)
+            assert out.tolist() == vals.tolist() and end == len(enc)
+            assert _dbp_scalar(enc, nbytes) == (vals.tolist(), len(enc))
+
+
+def test_dbp_decode_truncation_messages():
+    # every prefix of a multi-block stream fails with the message of the
+    # part it cuts: header varint, block widths or miniblock data
+    import pytest
+
+    rng = np.random.default_rng(13)
+    for nbytes in (4, 8):
+        buf = _mixed_width_stream(rng, nbytes, 600)
+        messages = set()
+        for cut in range(len(buf)):
+            with pytest.raises(ValueError) as err:
+                dbp_decode(buf[:cut], nbytes)
+            with pytest.raises(ValueError) as want:
+                _dbp_scalar(buf[:cut], nbytes)
+            assert str(err.value) == str(want.value), cut
+            messages.add(str(err.value))
+        assert messages == {
+            "incomplete ULEB128",
+            "DELTA_BINARY_PACKED: truncated miniblock widths",
+            "DELTA_BINARY_PACKED: unexpected end of data",
+        }

@@ -214,3 +214,38 @@ def test_store_and_chained_decodes_launch_no_planning_jobs(spark, tmp_path, jobs
     assert n == 0
     assert dec.count() == 500
     enc["df"].unpersist()
+
+
+def test_chunk_passes_repartition_once_then_map_in_arrow(spark, tmp_path):
+    # decode, audit and export share one per-chunk pass: a single
+    # repartition on (part_key, chunk_seq) with no partition count (AQE may
+    # coalesce it) and one mapInArrow over key runs -- no grouped-map stage
+    import re
+
+    from parquet4seastar_spark.engine.decode_job import decode_table
+    from parquet4seastar_spark.engine.encode_job import encode_table
+    from parquet4seastar_spark.engine.export import export_parquet_files
+    from parquet4seastar_spark.engine.store import read_store, write_store
+    from parquet4seastar_spark.engine.verify import audit_lineage
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").alias("row_id"), "lang", "n_chars", "source"
+    )
+    store = str(tmp_path / "store")
+    write_store(
+        encode_table(docs, columns=["lang", "n_chars"], policy="plain", salt_col="source",
+                     num_partitions=2),
+        store,
+    )
+    stored = read_store(spark, store, ["lang", "n_chars"])
+    plans = {
+        "decode": _plan(decode_table(stored, ["lang"])),
+        "audit": _plan(audit_lineage(stored)),
+        "export": _plan(export_parquet_files(stored, ["lang", "n_chars"], str(tmp_path / "x"))),
+    }
+    for name, plan in plans.items():
+        assert "FlatMapGroupsIn" not in plan, (name, plan)
+        assert "MapInArrow" in plan, (name, plan)
+        assert plan.count("Exchange ") == 1, (name, plan)
+        pattern = r"Exchange hashpartitioning\(part_key#\d+, chunk_seq#\d+, \d+\), REPARTITION_BY_COL"
+        assert len(re.findall(pattern, plan)) == 1, (name, plan)
