@@ -88,6 +88,15 @@ def unpack_bits(buf: bytes | np.ndarray, width: int, n: int) -> np.ndarray:
         return np.frombuffer(raw.tobytes(), dtype=np.uint32).astype(np.uint64)
     if width == 64 and need == n * 8:
         return np.frombuffer(raw.tobytes(), dtype=np.uint64).copy()
+    if width <= 56:
+        # one unaligned little-endian 8-byte read per value, shifted and
+        # masked; 8 zero bytes of slack keep the last reads in bounds.  A
+        # wider value can straddle nine bytes and takes the bit path below.
+        padded = np.zeros(need + 8, dtype=np.uint8)
+        padded[:need] = raw
+        bitpos = np.arange(n, dtype=np.int64) * width
+        words = np.ndarray((need + 1,), dtype="<u8", buffer=padded, strides=(1,))
+        return (words[bitpos >> 3] >> (bitpos & 7).astype(np.uint64)) & np.uint64((1 << width) - 1)
     bits = np.unpackbits(raw, bitorder="little")[: n * width]
     weights = (np.uint64(1) << np.arange(width, dtype=np.uint64))
     return (bits.reshape(n, width).astype(np.uint64) * weights).sum(axis=1, dtype=np.uint64)

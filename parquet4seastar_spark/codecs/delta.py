@@ -150,17 +150,6 @@ def dbp_encode(values: np.ndarray, nbytes: int) -> bytes:
     return b"".join(out)
 
 
-def _unpack(packed: np.ndarray, w: int, m: int) -> np.ndarray:
-    """``m`` LSB-first ``w``-bit values from ``packed`` (8 bytes of tail
-    slack): one unaligned 8-byte read per value, shifted and masked.  A
-    width over 56 can straddle nine bytes and goes to unpack_bits."""
-    if w > 56:
-        return unpack_bits(packed, w, m)
-    bitpos = np.arange(m, dtype=np.int64) * w
-    words = np.ndarray((len(packed) - 7,), dtype="<u8", buffer=packed, strides=(1,))
-    return (words[bitpos >> 3] >> (bitpos & 7).astype(np.uint64)) & np.uint64((1 << w) - 1)
-
-
 def dbp_decode(buf, nbytes: int, pos: int = 0) -> tuple[np.ndarray, int]:
     """Decode a DBP stream; returns (values, end_pos).
 
@@ -223,10 +212,9 @@ def dbp_decode(buf, nbytes: int, pos: int = 0) -> tuple[np.ndarray, int]:
             continue
         sel = np.flatnonzero(width_arr == w)
         nb = vpmb * w // 8
-        # this width's miniblocks back to back, plus 8 bytes of read slack
-        packed = np.zeros(len(sel) * nb + 8, dtype=np.uint8)
-        packed[:-8] = raw[(off_arr[sel, None] + np.arange(nb, dtype=np.int64)).reshape(-1)]
-        deltas[sel] = _unpack(packed, w, len(sel) * vpmb).reshape(len(sel), vpmb)
+        # this width's miniblocks back to back
+        packed = raw[(off_arr[sel, None] + np.arange(nb, dtype=np.int64)).reshape(-1)]
+        deltas[sel] = unpack_bits(packed, w, len(sel) * vpmb).reshape(len(sel), vpmb)
     deltas += np.array(mins, dtype=np.uint64)[:, None]
     all_deltas = deltas.reshape(-1)[: total - 1]
     # cumsum with wraparound in the target unsigned dtype

@@ -58,7 +58,7 @@ def test_uleb128_overflow():
         uleb128_decode(buf, 0, max_bytes=5)
 
 
-@pytest.mark.parametrize("width", [1, 2, 3, 5, 7, 8, 12, 16, 23, 31, 32, 41, 56, 63, 64])
+@pytest.mark.parametrize("width", [1, 2, 3, 5, 7, 8, 12, 16, 23, 31, 32, 41, 55, 56, 57, 63, 64])
 def test_pack_unpack_roundtrip(width):
     rng = np.random.default_rng(42)
     n = 1000
@@ -70,6 +70,9 @@ def test_pack_unpack_roundtrip(width):
     assert len(packed) == (n * width + 7) // 8
     out = unpack_bits(packed, width, n)
     assert (out == vals).all()
+    # bytes after the packed values (the next miniblock, run or page) must
+    # not leak into the last values
+    assert (unpack_bits(packed + b"\xff" * 9, width, n) == vals).all()
 
 
 def test_zigzag_extremes():

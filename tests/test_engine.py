@@ -628,13 +628,16 @@ def test_roundtrip_verify_fast_no_row_shuffle(spark):
     assert rows and all(r["match"] for r in rows)
     assert sum(r["rows_src"] for r in rows) == docs.count()
     # plan: the decoded side aggregates in place -- no Exchange between the
-    # decode (MapInArrow) and its partial aggregate
+    # decode (MapInArrow by_chunk) and its partial aggregate
     plan = out._jdf.queryExecution().executedPlan().toString()
     # plans print parents above children: the segment between the decode's
-    # partial HashAggregate (nearest above) and the MapInArrow node
+    # partial HashAggregate (nearest above) and the MapInArrow by_chunk node
     # must carry no Exchange -- the page-grouping shuffle BELOW the decode
-    # is decode's own and inherent
-    pre = plan[: plan.index("MapInArrow")]
+    # is decode's own and inherent.  The name matters: the cached encode's
+    # MapInArrow encode_partition prints higher up, under the source side's
+    # broadcast of the salt buckets
+    assert "MapInArrow by_chunk" in plan, plan
+    pre = plan[: plan.index("MapInArrow by_chunk")]
     last_agg = pre.rindex("HashAggregate")
     assert "Exchange" not in pre[last_agg:], pre[last_agg:]
     # corruption detection: flip a byte in one text page

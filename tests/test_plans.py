@@ -245,7 +245,7 @@ def test_chunk_passes_repartition_once_then_map_in_arrow(spark, tmp_path):
     }
     for name, plan in plans.items():
         assert "FlatMapGroupsIn" not in plan, (name, plan)
-        assert "MapInArrow" in plan, (name, plan)
+        assert "MapInArrow by_chunk" in plan, (name, plan)
         assert plan.count("Exchange ") == 1, (name, plan)
         pattern = r"Exchange hashpartitioning\(part_key#\d+, chunk_seq#\d+, \d+\), REPARTITION_BY_COL"
         assert len(re.findall(pattern, plan)) == 1, (name, plan)
