@@ -274,13 +274,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         src = _docs(spark, sf_dir).select(
             F.col("doc_id").alias("row_id"), "n_chars"
         )
-        # persist the pages frame: prune_chunks consumes it twice (drop-set
-        # subtree + the main decode pass) and an unpersisted lineage would
-        # re-run the ENTIRE encode job for the drop set (r3 bench regression;
-        # at cluster scale the encoded table is a stored table and the drop
-        # set reads only its tiny chunk rows).  The cache deliberately lives
-        # for the session (decode is lazy, so there is no safe unpersist
-        # point inside this function); each invocation caches one small
+        # persist the pages frame: it is read twice (prune_chunks' one
+        # toArrow of the chunk index, then the decode pass) and an
+        # unpersisted lineage would re-run the ENTIRE encode job for the
+        # index (r3 bench regression; at cluster scale the encoded table
+        # is a stored table, whose index prune_chunks reads with pyarrow).
+        # The cache deliberately lives for the session (decode is lazy, so
+        # there is no safe unpersist point inside this function); each
+        # invocation caches one small
         # single-column pages frame, bounded by how often the harness runs
         # the query (once or twice per session).
         # cluster_by (round 6): range-partitioned + sorted layout — chunk

@@ -7,9 +7,9 @@ chunk and touching one).
 
 Layout: fixed m = 131072 bits (2048 int64 words, 16 KiB) per chunk, k = 6
 probes at (h1 + i*h2) mod m.  A FIXED m keeps the probe positions pure
-python constants for any literal, so the Spark-side membership test is a
-handful of element_at/shift expressions over the tiny chunk-row frame —
-no UDF, no per-chunk modulus arithmetic.
+python constants for any literal, so ``prune_chunks`` reads only the k
+words those positions fall in (never a whole bloom) and tests the bits
+with numpy on the driver — no UDF, no per-chunk modulus arithmetic.
 
 Hashes (identical math scalar-side and vectorized):
 - bytes values: two FNV-1a-64 variants (different offset basis);

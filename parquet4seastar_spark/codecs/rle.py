@@ -142,37 +142,58 @@ def rle_encode(values: np.ndarray, width: int) -> bytes:
 
 def rle_decode(buf: bytes, width: int, n: int) -> np.ndarray:
     """Decode up to ``n`` values; returns fewer on truncated input
-    (mirrors RleDecoder::GetBatch returning a short count)."""
-    out = np.empty(n, dtype=np.uint64)
-    got = 0
-    pos = 0
+    (mirrors RleDecoder::GetBatch returning a short count).
+
+    One loop reads the run headers; then every literal run is unpacked
+    by ONE ``unpack_bits`` call.  A literal run holds ``groups*8`` values
+    of a fixed width, so it ends on a byte boundary and the literal runs'
+    bytes, laid end to end, are one bit-packed stream.  Repeated runs are
+    filled with ``np.repeat``.
+    """
     raw = np.frombuffer(buf, dtype=np.uint8)
     vbytes = (width + 7) // 8
+    is_lit: list[bool] = []  # per run: literal?
+    takes: list[int] = []  # per run: values it contributes
+    rep_values: list[int] = []  # per repeated run: its value
+    lit_spans: list[tuple[int, int]] = []  # per literal run: byte [start, end)
+    got = 0
+    pos = 0
+    end = len(buf)
     while got < n:
-        try:
-            indicator, pos = uleb128_decode(buf, pos, max_bytes=5)
-        except VarintError:
-            break
+        if pos < end and buf[pos] < 0x80:  # one-byte header: the common case
+            indicator = buf[pos]
+            pos += 1
+        else:
+            try:
+                indicator, pos = uleb128_decode(buf, pos, max_bytes=5)
+            except VarintError:
+                break
         if indicator & 1:
             groups = indicator >> 1
             if groups > (1 << 31) // 8:
                 break
-            nvals = groups * 8
-            need = (nvals * width + 7) // 8
-            if pos + need > len(buf):
+            need = groups * width  # (groups*8 values * width bits) / 8
+            if pos + need > end:
                 break
-            vals = unpack_bits(raw[pos : pos + need], width, nvals)
+            lit_spans.append((pos, pos + need))
             pos += need
-            take = min(nvals, n - got)
-            out[got : got + take] = vals[:take]
-            got += take
+            take = min(groups * 8, n - got)
         else:
-            count = indicator >> 1
-            if pos + vbytes > len(buf):
+            if pos + vbytes > end:
                 break
-            value = int.from_bytes(buf[pos : pos + vbytes], "little")
+            rep_values.append(int.from_bytes(buf[pos : pos + vbytes], "little"))
             pos += vbytes
-            take = min(count, n - got)
-            out[got : got + take] = value
-            got += take
-    return out[:got]
+            take = min(indicator >> 1, n - got)
+        is_lit.append(bool(indicator & 1))
+        takes.append(take)
+        got += take
+    lit, counts = np.array(is_lit, dtype=bool), np.array(takes, dtype=np.int64)
+    lit_bytes = np.concatenate([raw[a:b] for a, b in lit_spans] or [raw[:0]])
+    literal = unpack_bits(lit_bytes, width, int(counts[lit].sum()))
+    if lit.all():  # literal runs only (high-cardinality indices)
+        return literal
+    mask = np.repeat(lit, counts)
+    out = np.empty(got, dtype=np.uint64)
+    out[mask] = literal
+    out[~mask] = np.repeat(np.array(rep_values, dtype=np.uint64), counts[~lit])
+    return out

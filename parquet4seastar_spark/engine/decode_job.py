@@ -24,13 +24,20 @@ objects.
 from __future__ import annotations
 
 import json
+import operator
 from collections import Counter
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
+from ..codecs.bloom import probe_positions
 from ..codecs.dremel import build_tree, tree_arrow_type
 from ..codecs.pages import (
     EncodedChunk,
@@ -176,6 +183,114 @@ def _by_chunk(frame: DataFrame, fn, schema) -> DataFrame:
     )
 
 
+def _cmp(x, op: str, v) -> np.ndarray:
+    """``x <op> v`` per chunk under Spark's ordering: ``x`` is a list of
+    bytes (unsigned lexicographic, as in Python; None compares false) or
+    a float64 array (Spark orders NaN above every double and equal to
+    itself)."""
+    if isinstance(v, bytes):
+        test = getattr(operator, op)
+        return np.array([b is not None and test(b, v) for b in x], dtype=bool)
+    x_nan, v_nan = np.isnan(x), bool(np.isnan(v))
+    gt = (x > v) | (x_nan & (not v_nan))
+    eq = (x == v) | (x_nan & v_nan)
+    return {"gt": gt, "ge": gt | eq, "lt": ~(gt | eq), "le": ~gt}[op]
+
+
+def _local_scan_files(encoded: DataFrame) -> list[tuple[str, str | None]] | None:
+    """``(path, column partition value or None)`` of every file of a frame
+    whose analyzed plan is a bare parquet file scan over local ``file:``
+    paths, flat or ``column=``-partitioned (``read_store`` and a plain
+    ``spark.read.parquet`` of a store); None for any other frame."""
+    try:
+        plan = encoded._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = plan.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation" or rel.fileFormat().toString() != "Parquet":
+            return None
+        parts = [f["name"] for f in json.loads(rel.partitionSchema().json())["fields"]]
+        # the file URIs in one py4j call, not one per file (a URI escapes
+        # any newline)
+        jvm = encoded.sparkSession._jvm
+        listed = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(rel.location().inputFiles())
+        files = [f for f in listed.mkString("\n").split("\n") if f]
+    except Py4JError:
+        return None
+    if parts not in ([], ["column"]) or not all(f.startswith("file:") for f in files):
+        return None
+    out = []
+    for f in files:
+        path = unquote(urlparse(f).path)
+        value = None
+        if parts:
+            dirs = [d for d in path.split("/")[:-1] if d.startswith("column=")]
+            if not dirs:
+                return None
+            value = unquote(dirs[-1].split("=", 1)[1])  # Hive path escaping
+        out.append((path, value))
+    return out
+
+
+def _probe_words(bloom: pa.ListArray, words: list[int]) -> dict[str, pa.Array]:
+    """Column ``w<i>``: the i-th int64 word of each bloom; null where the
+    bloom is null or shorter.  Only these words are kept, never a whole
+    bloom."""
+    starts = bloom.offsets.to_numpy()[:-1]
+    length = pc.fill_null(pc.list_value_length(bloom), 0).to_numpy()
+    return {f"w{w}": bloom.values.take(pa.array(starts + w, mask=length <= w)) for w in words}
+
+
+def _read_index_local(files, column: str, want: list[str], words: list[int], schema: StructType):
+    """``(keys, chunks)`` read with pyarrow: the (part_key, chunk_seq) of
+    every row, and (part_key, chunk_seq, *want, probe words) of the
+    ``column`` chunk rows.  A column a file lacks reads as nulls."""
+    keys, chunks = [], []
+    for path, value in files:
+        pf = pq.ParquetFile(path)
+        have = set(pf.schema_arrow.names)
+        probed = value is None or value == column
+        cols = ["part_key", "chunk_seq"]
+        if probed:
+            cols += ["kind", *(["column"] if value is None else []), *want]
+            cols += ["bloom"] if words else []
+        for batch in pf.iter_batches(columns=[c for c in cols if c in have]):
+            keys.append(pa.table({k: batch.column(k) for k in ("part_key", "chunk_seq")}))
+            if not probed:
+                continue
+            hit = pc.equal(batch.column("kind"), "chunk")
+            if value is None:
+                hit = pc.and_(hit, pc.equal(batch.column("column"), column))
+            hit = pc.fill_null(hit, False)
+            if not pc.any(hit).as_py():
+                continue
+            batch = batch.filter(hit)
+            cols_out = {
+                c: batch.column(c) if c in have
+                else pa.nulls(batch.num_rows, to_arrow_type(schema[c].dataType))
+                for c in ("part_key", "chunk_seq", *want)
+            }
+            if words:
+                bloom = batch.column("bloom") if "bloom" in have else pa.nulls(
+                    batch.num_rows, pa.list_(pa.int64()))
+                cols_out.update(_probe_words(bloom, words))
+            chunks.append(pa.table(cols_out))
+    return keys, chunks
+
+
+def _read_index_spark(encoded: DataFrame, column: str, want: list[str], words: list[int]):
+    """``(keys, chunks)`` as ``_read_index_local`` returns them, from ONE
+    ``toArrow()`` of the frame projected to its keys plus, on the
+    ``column`` chunk rows, the index columns."""
+    hit = F.coalesce((F.col("kind") == "chunk") & (F.col("column") == column), F.lit(False))
+    tbl = encoded.select(
+        "part_key", "chunk_seq", hit.alias("_hit"),
+        *[F.when(hit, F.col(c)).alias(c) for c in want],
+        *[F.when(hit, F.try_element_at("bloom", F.lit(w + 1))).alias(f"w{w}") for w in words],
+    ).toArrow()
+    return [tbl.select(["part_key", "chunk_seq"])], [tbl.filter(tbl.column("_hit")).drop(["_hit"])]
+
+
 def prune_chunks(
     encoded: DataFrame,
     column: str,
@@ -187,103 +302,123 @@ def prune_chunks(
     eq=None,
     isin=None,
 ) -> DataFrame:
-    """Stats-based chunk skipping (beyond the reference: it never writes
-    ColumnMetaData statistics).
+    """Stats- and bloom-based chunk skipping (beyond the reference: it
+    never writes ColumnMetaData statistics).
 
-    Drops every (part_key, chunk_seq) group whose ``column`` chunk min/max
-    range provably cannot satisfy the predicate -- the other columns' pages
-    for those rows go with it.  Pruning is CONSERVATIVE (stats are
+    Drops every (part_key, chunk_seq) group whose ``column`` chunk
+    provably cannot satisfy the predicate -- the other columns' pages for
+    those rows go with it.  Pruning is CONSERVATIVE (stats are
     ulp-widened doubles / truncate-and-incremented byte prefixes): decode
-    output must still be filtered exactly; this only avoids decoding chunks
-    that cannot match.  At 100 TB this is the difference between decoding
-    every page and touching only the value-range-relevant ones.
+    output must still be filtered exactly; this only avoids decoding
+    chunks that cannot match.
+
+    The decision is made once, on the driver, from the frame's chunk
+    index: every row's (part_key, chunk_seq) plus, on the ``column``
+    chunk rows, ptype, the stats of the literal's domain and only the
+    bloom words at the literals' probe positions.  A bare parquet scan of
+    local files (``read_store``, or ``spark.read.parquet`` of a flat or
+    column-partitioned store) is read with pyarrow, with no Spark job;
+    any other frame with one ``toArrow()`` of that projection, so a
+    computed frame should be persisted (it is read again to decode).  The
+    result is a plain filter, with no join: the frame itself when nothing
+    is dropped, an empty relation (same schema and metadata) when every
+    key is, else one IN predicate over the surviving keys.  Chunk rows
+    with missing stats or bloom survive, and a key with no ``column``
+    chunk row survives -- an absent column prunes nothing, and
+    decode_table still raises on a column that truly isn't in the table.
     """
-    ch = encoded.filter((F.col("kind") == "chunk") & (F.col("column") == column))
-    probe = (
-        eq
-        if eq is not None
-        else (isin[0] if isin else (gt if gt is not None else (ge if ge is not None else (lt if lt is not None else le))))
-    )
+    points = [eq] if eq is not None else []
+    ranges = [(op, v) for op, v in (("gt", gt), ("ge", ge), ("lt", lt), ("le", le)) if v is not None]
+    if not (points or isin or ranges):
+        return encoded
+    probe = (points or list(isin or []) or [v for _, v in ranges])[0]
     is_bin = isinstance(probe, (str, bytes))
-    lo_col = F.col("stat_min_bin") if is_bin else F.col("stat_min_num")
-    hi_col = F.col("stat_max_bin") if is_bin else F.col("stat_max_num")
 
-    def _lit(v):
-        if isinstance(v, str):
-            return F.encode(F.lit(v), "utf-8")
-        if isinstance(v, bytes):
-            return F.lit(v)
-        return F.lit(float(v))
+    def lit(v):
+        if isinstance(v, (str, bytes)) != is_bin:
+            raise TypeError(f"prune_chunks: {v!r} and {probe!r} compare against different stats")
+        return v.encode("utf-8") if isinstance(v, str) else v if is_bin else float(v)
 
-    # a chunk SURVIVES unless its stats prove no row can match; missing
-    # stats always survive
-    cond = F.lit(True)
-    if gt is not None:
-        cond = cond & (hi_col.isNull() | (hi_col > _lit(gt)))
-    if ge is not None:
-        cond = cond & (hi_col.isNull() | (hi_col >= _lit(ge)))
-    if lt is not None:
-        cond = cond & (lo_col.isNull() | (lo_col < _lit(lt)))
-    if le is not None:
-        cond = cond & (lo_col.isNull() | (lo_col <= _lit(le)))
-    # point-lookup conditions (eq / isin): range test + bloom membership.
-    # min/max cannot prune point lookups on unsorted data (every chunk's
-    # range contains the literal); the bloom proves ABSENCE, so a chunk
-    # additionally survives only if its bloom is missing or reports all k
-    # probe bits set.  The fixed bloom size makes the probe positions pure
-    # python constants -> a handful of element_at/shift JVM expressions
-    # over the tiny chunk rows.
-    def _point_cond(v):
-        c = (lo_col.isNull() | (lo_col <= _lit(v))) & (
-            hi_col.isNull() | (hi_col >= _lit(v))
-        )
-        if (
-            "bloom" in encoded.columns
-            and "ptype" in encoded.columns
-            and isinstance(v, (str, bytes, int))
-            and not isinstance(v, bool)
-        ):
-            from ..codecs.bloom import probe_positions
+    # the bloom only speaks the column's PHYSICAL value domain: a str
+    # literal against an int column (or vice versa) hashes in a different
+    # domain than the stored bits, so consulting it would wrongly drop
+    # chunks that match under Spark's cast-equality -- it is consulted
+    # only for chunks whose ptype matches the literal
+    blooms = "bloom" in encoded.columns and "ptype" in encoded.columns
+    probes = {
+        i: probe_positions(v)
+        for i, v in enumerate([*points, *(isin or [])])
+        if blooms and isinstance(v, (str, bytes, int)) and not isinstance(v, bool)
+    }
+    words = sorted({b // 64 for pos in probes.values() for b in pos})
+    want = ["stat_min_bin", "stat_max_bin"] if is_bin else ["stat_min_num", "stat_max_num"]
+    want += ["ptype"] if probes else []
+    files = _local_scan_files(encoded)
+    keys, chunks = (
+        _read_index_local(files, column, want, words, encoded.schema)
+        if files is not None
+        else _read_index_spark(encoded, column, want, words)
+    )
+    chunks = [t for t in chunks if t.num_rows]
+    if not chunks:
+        return encoded
+    ch = pa.concat_tables(chunks)
+    n = ch.num_rows
 
-            # the bloom only speaks the column's PHYSICAL value domain: a
-            # str literal against an int column (or vice versa) hashes in
-            # a different domain than the stored bits, so consulting it
-            # would wrongly drop chunks that match under Spark's
-            # cast-equality — gate on the chunk's ptype and fall back to
-            # conservative survival on any mismatch
-            applicable = (
-                F.col("ptype") == "BYTE_ARRAY"
-                if isinstance(v, (str, bytes))
-                else F.col("ptype").isin("INT32", "INT64")
-            )
-            present = F.lit(True)
-            for b in probe_positions(v):
-                word = F.element_at(F.col("bloom"), b // 64 + 1)
-                present = present & (
-                    F.shiftrightunsigned(word, b % 64).bitwiseAND(F.lit(1)) == 1
-                )
-            c = c & (~applicable | F.col("bloom").isNull() | present)
+    def stat(name):  # (values, null mask); a null stat never drops a chunk
+        col = ch.column(name)
+        values = col.to_pylist() if is_bin else col.fill_null(0.0).to_numpy()
+        return values, col.is_null().to_numpy(zero_copy_only=False)
+
+    (lo, lo_null), (hi, hi_null) = stat(want[0]), stat(want[1])
+
+    def below(op, v):  # may hold a value with lo <op> v
+        return lo_null | _cmp(lo, op, v)
+
+    def above(op, v):  # may hold a value with hi <op> v
+        return hi_null | _cmp(hi, op, v)
+
+    def point(i, v):  # may hold v: inside [lo, hi] and not refuted by the bloom
+        c = below("le", lit(v)) & above("ge", lit(v))
+        if i in probes:
+            domain = ("BYTE_ARRAY",) if isinstance(v, (str, bytes)) else ("INT32", "INT64")
+            absent = np.zeros(n, bool)  # a probe bit is known to be 0
+            for b in probes[i]:
+                # a null word (no bloom) reads as all ones: no bit refutes
+                word = ch.column(f"w{b // 64}").fill_null(-1).to_numpy().view(np.uint64)
+                absent |= ((word >> np.uint64(b % 64)) & np.uint64(1)) == 0
+            c &= ~(np.array([p in domain for p in ch.column("ptype").to_pylist()]) & absent)
         return c
 
+    may = np.ones(n, bool)
+    for op, v in ranges:
+        may &= above(op, lit(v)) if op in ("gt", "ge") else below(op, lit(v))
     if eq is not None:
-        cond = cond & _point_cond(eq)
+        may &= point(0, eq)
     if isin:
-        any_v = _point_cond(isin[0])
-        for v in isin[1:]:
-            any_v = any_v | _point_cond(v)
-        cond = cond & any_v
-    # DROP-set anti-join, not a keep-set semi-join: chunks whose stats
-    # PROVE no row matches are removed; everything else (missing stats, or
-    # a typo'd/absent column -> empty drop set) survives.  Fail-safe by
-    # construction with zero eager work -- an absent column simply prunes
-    # nothing, and decode_table still raises on a column that truly isn't
-    # in the table (the recorded schema, which survives this join, lacks
-    # it, so discovery runs and finds no chunk of it).  The drop set
-    # (pruned chunks only) is the smaller side, so the broadcast stays
-    # cheap at scale; a left-anti join needs no deduplicated build side,
-    # so no aggregate runs over it.
-    drop = ch.filter(~cond).select("part_key", "chunk_seq")
-    return encoded.join(F.broadcast(drop), ["part_key", "chunk_seq"], "left_anti")
+        may &= np.logical_or.reduce([point(len(points) + j, v) for j, v in enumerate(isin)])
+
+    # a null key never matched the anti-join this rule was written as: it
+    # is never dropped
+    drop = {
+        k for k, m in zip(zip(ch.column("part_key").to_pylist(), ch.column("chunk_seq").to_pylist()), may)
+        if not m and None not in k
+    }
+    universe = pa.concat_tables(keys).group_by(["part_key", "chunk_seq"]).aggregate([])
+    keys_all = set(zip(universe.column("part_key").to_pylist(), universe.column("chunk_seq").to_pylist()))
+    kept = keys_all - drop
+    if len(kept) == len(keys_all):
+        return encoded
+    if not kept:
+        return encoded.filter(F.lit(False))  # PruneFilters: an empty LocalRelation
+    # one IN over the key "<chunk_seq>:<part_key>" (the first ':' splits
+    # it, so it is injective), its literals handed to the JVM as one list
+    key = F.concat(F.col("chunk_seq").cast("string"), F.lit(":"), F.col("part_key"))
+    literals = sorted(f"{q}:{p}" for p, q in kept if None not in (p, q))
+    pred = Column(key._jc.isin(encoded.sparkSession._jvm.PythonUtils.toSeq(literals)))
+    if any(None in k for k in kept):
+        pred = pred | F.col("part_key").isNull() | F.col("chunk_seq").isNull()
+    return encoded.filter(pred)
 
 
 def _planned_schema(encoded: DataFrame, columns: list[str]) -> dict | None:
@@ -401,8 +536,8 @@ def decode_table(
     # The output schema is a real StructType (a DDL string would need
     # backtick-escaping of every nested field name); the arrow targets are
     # Spark's own arrow form of it (flba leaves arrive as plain binary).
-    from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import LongType, StringType, StructField
 
     def _spark_col_type(c: str):
         if members[c] is None:

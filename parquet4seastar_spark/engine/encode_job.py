@@ -423,13 +423,13 @@ def encode_table(
     POSITIONAL, not a pure function of row data: separate evaluations of
     an unmaterialized plan can sample different range boundaries (the
     sampler is seeded from the RDD id), so PERSIST OR WRITE the returned
-    frame before feeding it to anything that evaluates it from two
-    subtrees (prune_chunks' drop-set anti-join; the repo's own callers
-    persist/write already — pruned_scan persists, the CLI writes to
-    parquet).  For the same reason ``resume_lineage`` is refused in this
-    mode and round-trip verification uses the row-level join
-    (``roundtrip_verify_fast`` rejects unsalted part keys).  The salting
-    parameters are ignored in this mode.
+    frame before feeding it to anything that evaluates it more than once
+    (prune_chunks reads the chunk index, then the decode reads the pages;
+    the repo's own callers persist/write already — pruned_scan persists,
+    the CLI writes to parquet).  For the same reason ``resume_lineage``
+    is refused in this mode and round-trip verification uses the
+    row-level join (``roundtrip_verify_fast`` rejects unsalted part
+    keys).  The salting parameters are ignored in this mode.
 
     ``map_only``: encode each SCAN partition in place — ZERO value
     shuffle.  At corpus scale the salted exchange moves every input byte

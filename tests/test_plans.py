@@ -147,40 +147,58 @@ def test_top_terms_window_group_limit(spark):
     assert n_shuffles <= 2, plan
 
 
-def _subtree(plan: str, marker: str) -> str:
-    """The lines of the first ``marker`` node and of everything below it
-    in a printed plan (children are indented deeper than their parent)."""
-    lines = plan.splitlines()
-    start = next(i for i, ln in enumerate(lines) if marker in ln)
-    col = lines[start].index(marker)
-    out = [lines[start]]
-    for ln in lines[start + 1 :]:
-        body = ln.lstrip(" :|+-")
-        if not body or ln.index(body) <= col:
-            break
-        out.append(ln)
-    return "\n".join(out)
-
-
-def test_prune_chunks_broadcasts_drop_set_without_aggregate(spark, tmp_path):
-    # the left-anti join's build side is the drop set straight off the
-    # chunk rows: no distinct, so no aggregate (and no shuffle) under the
-    # broadcast
-    from parquet4seastar_spark.engine.decode_job import prune_chunks
+def _bloom_store(spark, tmp_path) -> str:
+    """A column store of a unique-key column ``k`` with per-chunk blooms."""
     from parquet4seastar_spark.engine.encode_job import encode_table
+    from parquet4seastar_spark.engine.store import write_store
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("doc_id").alias("row_id"), "n_chars", "source"
+        F.col("doc_id").alias("row_id"),
+        F.concat(F.lit("key-"), F.format_string("%04d", F.col("doc_id"))).alias("k"),
+        "source",
     )
-    encode_table(
-        docs, columns=["n_chars"], policy="plain", salt_col="source", num_partitions=2
-    ).write.parquet(str(tmp_path / "pages"))
-    stored = spark.read.parquet(str(tmp_path / "pages"))
-    plan = _plan(prune_chunks(stored, "n_chars", gt=500))
-    assert "LeftAnti" in plan, plan
-    side = _subtree(plan, "BroadcastExchange")
-    assert "FileScan" in side, side
-    assert "Aggregate" not in side and "Exchange hashpartitioning" not in side, side
+    store = str(tmp_path / "store")
+    write_store(
+        encode_table(docs, columns=["k"], policy="plain", salt_col="source", num_partitions=2), store
+    )
+    return store
+
+
+def test_prune_chunks_is_a_key_filter_on_the_scan(spark, tmp_path):
+    # the survivors are decided on the driver: the pruned frame is the
+    # stored scan under one predicate on (part_key, chunk_seq) -- no join,
+    # no broadcast, no aggregate
+    from parquet4seastar_spark.engine.decode_job import prune_chunks
+    from parquet4seastar_spark.engine.store import read_store
+
+    stored = read_store(spark, _bloom_store(spark, tmp_path), ["k"])
+    plan = _plan(prune_chunks(stored, "k", eq="key-0123"))
+    for marker in ("Join", "BroadcastExchange", "Aggregate", "Exchange"):
+        assert marker not in plan, plan
+    top = plan.splitlines()[0]
+    assert "Filter" in top and "part_key" in top and "chunk_seq" in top, plan
+    assert "FileScan parquet" in plan, plan
+
+
+def test_prune_chunks_on_a_store_launches_no_jobs(spark, tmp_path, jobs_launched):
+    # a read_store frame's chunk index is read with pyarrow on the driver;
+    # a miss that drops every chunk is an empty local relation, so its
+    # plan scans no file at all
+    from parquet4seastar_spark.engine.decode_job import prune_chunks
+    from parquet4seastar_spark.engine.store import read_store
+
+    store = _bloom_store(spark, tmp_path)
+    hit, n = jobs_launched(lambda: prune_chunks(read_store(spark, store, ["k"]), "k", eq="key-0123"))
+    assert n == 0
+    miss, n = jobs_launched(lambda: prune_chunks(read_store(spark, store, ["k"]), "k", eq="key-00x0"))
+    assert n == 0
+    plan = _plan(miss)
+    assert "LocalTableScan" in plan and "FileScan" not in plan, plan
+    assert miss.count() == 0
+    assert miss.schema == read_store(spark, store, ["k"]).schema
+    assert "p4s.decoded_schema" in miss.schema["logical"].metadata
+    rows = hit.filter((F.col("kind") == "chunk") & (F.col("column") == "k")).count()
+    assert rows >= 1
 
 
 def test_store_and_chained_decodes_launch_no_planning_jobs(spark, tmp_path, jobs_launched):

@@ -129,3 +129,59 @@ def test_roundtrip_sweep(width, kind):
     enc = rle_encode(vals, width)
     out = rle_decode(enc, width, len(vals))
     assert out.tolist() == vals.tolist()
+
+
+def _rle_decode_per_run(buf: bytes, width: int, n: int) -> list[int]:
+    """One ``unpack_bits`` call per literal run: the run-at-a-time decode
+    the batched ``rle_decode`` must equal, truncations included."""
+    from parquet4seastar_spark.codecs.bitpack import VarintError, uleb128_decode, unpack_bits
+
+    out: list[int] = []
+    pos = 0
+    while len(out) < n:
+        try:
+            indicator, pos = uleb128_decode(buf, pos, max_bytes=5)
+        except VarintError:
+            break
+        if indicator & 1:
+            nvals = (indicator >> 1) * 8
+            need = (nvals * width + 7) // 8
+            if pos + need > len(buf):
+                break
+            vals = unpack_bits(buf[pos : pos + need], width, nvals)
+            pos += need
+            out.extend(vals[: n - len(out)].tolist())
+        else:
+            vbytes = (width + 7) // 8
+            if pos + vbytes > len(buf):
+                break
+            value = int.from_bytes(buf[pos : pos + vbytes], "little")
+            pos += vbytes
+            out.extend([value] * min(indicator >> 1, n - len(out)))
+    return out
+
+
+@pytest.mark.parametrize("width", [1, 3, 10, 20])
+def test_decode_truncation_matches_per_run_decode(width):
+    # every byte cut of a stream mixing literal and repeated runs (long
+    # literals with two-byte headers too) decodes to the same values and
+    # the same short count as the run-at-a-time decode
+    rng = np.random.default_rng(width)
+    hi = 1 << width
+    parts = []
+    for _ in range(12):
+        if rng.random() < 0.5:
+            parts.append(rng.integers(0, hi, int(rng.integers(1, 600)), dtype=np.uint64))
+        else:
+            parts.append(np.full(int(rng.integers(8, 200)), rng.integers(0, hi), dtype=np.uint64))
+    vals = np.concatenate(parts)
+    enc = rle_encode(vals, width)
+    assert rle_decode(enc, width, len(vals)).tolist() == vals.tolist()
+    counts = set()
+    for cut in range(len(enc) + 1):
+        for n in (len(vals), len(vals) // 3):
+            got = rle_decode(enc[:cut], width, n)
+            assert got.dtype == np.uint64
+            assert got.tolist() == _rle_decode_per_run(enc[:cut], width, n), (cut, n)
+            counts.add(len(got))
+    assert len(counts) > 8  # the cuts end the decode in many different runs

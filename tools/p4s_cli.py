@@ -177,13 +177,15 @@ def cmd_lookup(args):
     from parquet4seastar_spark.engine.store import is_column_store, read_store
 
     spark = _spark(args)
+    # not persisted: prune_chunks reads the stored chunk index with
+    # pyarrow on the driver, so Spark scans the pages once, to decode
     if is_column_store(args.encoded):
         # column-partitioned store: the lookup lists only the probed
         # column's directory (plus row_id) — the text payload of every
         # other column is never opened
-        enc = read_store(spark, args.encoded, [args.column]).persist()
+        enc = read_store(spark, args.encoded, [args.column])
     else:
-        enc = spark.read.parquet(args.encoded).persist()
+        enc = spark.read.parquet(args.encoded)
     values = args.values.split(",")
     if args.type == "int":
         values = [int(v) for v in values]
