@@ -60,36 +60,3 @@ def decode_levels_v1(buf, max_level: int, num_values: int) -> tuple[np.ndarray, 
     if len(out) and int(out.max()) > max_level:
         raise ValueError("level value out of range")
     return out, 4 + length
-
-
-def encode_levels_v2(levels: np.ndarray, max_level: int) -> bytes:
-    """V2 level stream: RLE hybrid without the u32 length prefix
-    (level_decoder::reset_v2, src/encoding.cc:68-79)."""
-    width = bit_width(max_level)
-    if width == 0:
-        return b""
-    return rle_encode(np.asarray(levels, dtype=np.uint64), width)
-
-
-def decode_levels_v2(buf, max_level: int, num_values: int) -> np.ndarray:
-    width = bit_width(max_level)
-    if width == 0:
-        return np.zeros(num_values, dtype=np.int32)
-    levels = rle_decode(bytes(buf), width, num_values)
-    if len(levels) != num_values:
-        raise ValueError(f"level stream truncated: {len(levels)} of {num_values}")
-    return levels.astype(np.int32)
-
-
-def decode_levels_bit_packed(buf, max_level: int, num_values: int) -> np.ndarray:
-    """Deprecated BIT_PACKED level encoding (LSB-first bit-packed, no RLE)
-    -- decode-only, like the reference (encoding.cc:51-63)."""
-    from .bitpack import unpack_bits
-
-    width = bit_width(max_level)
-    if width == 0:
-        return np.zeros(num_values, dtype=np.int32)
-    byte_len = (num_values * width + 7) // 8
-    if byte_len > len(buf):
-        raise ValueError("end of page while reading BIT_PACKED levels")
-    return unpack_bits(bytes(buf[:byte_len]), width, num_values).astype(np.int32)

@@ -532,6 +532,14 @@ class ParquetFileReader:
             if ph[1] != 0:
                 raise ValueError(f"unsupported page type {ph[1]}")
             dp = ph[5]
+            # levels are read as RLE; a max-0 level stream is absent, and
+            # writers declare BIT_PACKED for it
+            for field, kind, max_level in ((3, "definition", leaf.max_def), (4, "repetition", leaf.max_rep)):
+                if max_level and dp.get(field, ENCODINGS["RLE"]) != ENCODINGS["RLE"]:
+                    raise ValueError(
+                        f"{'.'.join(leaf.path)}: {kind} levels declared "
+                        f"{ENC_NAME.get(dp[field], dp[field])}, only RLE levels are read"
+                    )
             enc = ENC_NAME[dp[2]]
             if enc == "PLAIN_DICTIONARY":
                 enc = "RLE_DICTIONARY"

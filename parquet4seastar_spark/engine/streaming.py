@@ -239,6 +239,14 @@ def near_dedup_store_view(
     snapshot loses every latest-wins tie."""
     from pyspark.sql import Window
 
+    def latest(df: DataFrame) -> DataFrame:
+        w = Window.partitionBy("doc_id").orderBy(F.col("batch_id").desc())
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("doc_id", "sig")
+        )
+
     parts = _committed_sig_parts(sig_dir)
     if exclude_batch is not None:
         parts = [(bid, p) for bid, p in parts if bid != exclude_batch]
@@ -258,25 +266,13 @@ def near_dedup_store_view(
         ]
         if not recent:
             return snap_df
-        rec = spark.read.option("basePath", sig_dir).parquet(*recent)
-        w = Window.partitionBy("doc_id").orderBy(F.col("batch_id").desc())
-        rec_latest = (
-            rec.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id", "sig")
-        )
+        rec_latest = latest(spark.read.option("basePath", sig_dir).parquet(*recent))
         return snap_df.join(
             F.broadcast(rec_latest.select("doc_id")), "doc_id", "left_anti"
         ).union(rec_latest)
     # no snapshot yet: latest-wins over the whole store (bounded only by
     # how many batches have run before the first compaction)
-    raw = spark.read.option("basePath", sig_dir).parquet(*(p for _, p in parts))
-    w = Window.partitionBy("doc_id").orderBy(F.col("batch_id").desc())
-    return (
-        raw.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "sig")
-    )
+    return latest(spark.read.option("basePath", sig_dir).parquet(*(p for _, p in parts)))
 
 
 def stream_near_dedup(

@@ -6,6 +6,11 @@ space stays linear-ish instead of O(n^2).  At cluster scale the bucket join
 is a standard shuffled equi-join Catalyst/AQE can re-plan (skewed buckets
 split by AQE).
 
+One banded join and one confirm serve every near-duplicate path, the
+embedding near-dups of ``similarity`` included: :func:`_band_pairs` joins
+(id, band, bucket) triples on (band, bucket), and :func:`_confirm` scores
+each candidate pair ONCE (a filter over the aliased score would not).
+
 Vectorization: shingle hashing runs over ONE concatenated buffer per Arrow
 batch (mapInArrow + the offsets/payload layout from codecs.pages), with
 doc-boundary masking -- no per-document Python loop anywhere.  Signatures
@@ -21,7 +26,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.pages import ba_components
 from ._util import fan_out
@@ -222,9 +227,24 @@ def minhash_signatures(
     )
 
 
-def _banded_buckets(sigs: DataFrame, bands: int, r: int) -> DataFrame:
-    """(doc_id, band, bucket): ONLY ids ride the band explode -- the full
-    signature does not get duplicated x bands through the shuffle.
+def _explode_bands(df: DataFrame, id_col: str, buckets: list) -> DataFrame:
+    """(id_col, band, bucket): one row per band, ``buckets[i]`` being band
+    i's bucket expression.  ONLY ids ride the band explode -- the value the
+    buckets come from does not get duplicated x bands through the
+    shuffle."""
+    return df.select(
+        id_col,
+        F.explode(
+            F.array(*[F.struct(F.lit(i).alias("band"), c.alias("bucket")) for i, c in enumerate(buckets)])
+        ).alias("bb"),
+    ).select(id_col, "bb.band", "bb.bucket")
+
+
+def _banded_buckets(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc_id, band, bucket) of MinHash signatures, ``bands`` bands of r =
+    num_hashes/bands positions.  More bands than hashes would slice every
+    band empty and put every doc in one bucket (a quadratic join), so that
+    raises.
 
     The band hash is xxhash64 over the sliced signature values DIRECTLY
     (hash functions take complex types): the former rendering of every
@@ -232,20 +252,66 @@ def _banded_buckets(sigs: DataFrame, bands: int, r: int) -> DataFrame:
     the hash.  Equal slices still collide and unequal ones spread, so LSH
     recall properties are unchanged (identical signatures collide in
     every band under any hash)."""
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(F.slice("sig", i * r + 1, r)).alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    if bands > num_hashes:
+        raise ValueError(f"bands={bands} exceeds num_hashes={num_hashes}")
+    r = num_hashes // bands
+    return _explode_bands(sigs, "doc_id", [F.xxhash64(F.slice("sig", i * r + 1, r)) for i in range(bands)])
+
+
+def _band_pairs(
+    banded: DataFrame, id_col: str, a: str, b: str, new: DataFrame | None = None, distinct: bool = True
+) -> DataFrame:
+    """(a, b): id pairs sharing a (band, bucket) in (id_col, band, bucket)
+    frames, ``a < b`` -- the one candidate join of every LSH path.
+
+    All-vs-all by default (``l.id < r.id``).  With ``new``, only pairs
+    with a side in ``new`` (new-vs-all, ``banded`` holding every id, new
+    ones included): ``l.id != r.id``, ordered by least/greatest, so a
+    new-new pair found from both sides collapses in the dedup.  A pair
+    sharing several bands is one candidate after the dedup;
+    ``distinct=False`` leaves that to the caller."""
+    left = (banded if new is None else new).alias("l")
+    li, ri = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    on = (F.col("l.band") == F.col("r.band")) & (F.col("l.bucket") == F.col("r.bucket"))
+    if new is None:
+        pairs = left.join(banded.alias("r"), on & (li < ri)).select(li.alias(a), ri.alias(b))
+    else:
+        pairs = left.join(banded.alias("r"), on & (li != ri)).select(
+            F.least(li, ri).alias(a), F.greatest(li, ri).alias(b)
+        )
+    return pairs.dropDuplicates([a, b]) if distinct else pairs
+
+
+def _confirm(cand: DataFrame, side, score, keep, name: str) -> DataFrame:
+    """(a, b, name): the candidate pairs whose ``score`` passes ``keep``,
+    scored ONCE per pair.  ``side(s)`` is the value frame keyed by the
+    pair's id column of side ``s`` ("a" or "b"); each joins back once.
+
+    A ``score >= t`` filter over the aliased score is pushed below its
+    projection and evaluates the score a second time; a predicate inside
+    the generator (``explode(filter(array(score), keep))``) cannot be, so
+    the plan holds the score once."""
+    a, b = cand.columns
+    return cand.join(side("a"), a).join(side("b"), b).select(
+        a, b, F.explode(F.filter(F.array(score), keep)).alias(name)
+    )
+
+
+def _minhash_confirm(cand: DataFrame, sigs: DataFrame, num_hashes: int, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard): the fraction of equal signature
+    positions, kept when >= ``threshold``."""
+    est = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    ) / F.lit(num_hashes)
+    return _confirm(
+        cand,
+        lambda s: sigs.select(F.col("doc_id").alias(f"doc_{s}"), F.col("sig").alias(f"sig_{s}")),
+        est,
+        lambda e: e >= threshold,
+        "est_jaccard",
+    )
 
 
 def minhash_lsh_pairs(
@@ -264,38 +330,18 @@ def minhash_lsh_pairs(
     are deduplicated, THEN the signatures join back once to estimate
     Jaccard (fraction of equal signature positions) >= threshold.
     """
-    r = num_hashes // bands
+    sigs = minhash_signatures(docs, num_hashes, shingle_k, seed)
+    banded = _banded_buckets(sigs, num_hashes, bands)  # raises before anything is cached
     # three subtrees consume the signatures (banding + both join-backs);
     # persist so the shingle/minhash UDF runs once, not three times.  At
     # cluster scale you'd materialize signatures to a table instead.
-    sigs = minhash_signatures(docs, num_hashes, shingle_k, seed).persist()
+    sigs.persist()
     # the self-join consumes the banded triples twice; persisting the
     # (tiny, ids-only) frame guarantees the explode runs once even when
     # the planner does not reuse the exchange
-    banded = _banded_buckets(sigs, bands, r).persist()
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    cand = cand.join(sa, "doc_a").join(sb, "doc_b")
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(num_hashes)
-    return cand.select("doc_a", "doc_b", est.alias("est_jaccard")).filter(
-        F.col("est_jaccard") >= threshold
-    )
+    banded.persist()
+    cand = _band_pairs(banded, "doc_id", "doc_a", "doc_b")
+    return _minhash_confirm(cand, sigs, num_hashes, threshold)
 
 
 def minhash_lsh_pairs_incremental(
@@ -332,39 +378,15 @@ def minhash_lsh_pairs_incremental(
     ``new_sigs`` is persisted here (three consumers); the CALLER owns the
     unpersist once the pairs and the store union are materialized.
     """
-    r = num_hashes // bands
-    new_sigs = minhash_signatures(new_docs, num_hashes, shingle_k, seed).persist()
+    new_sigs = minhash_signatures(new_docs, num_hashes, shingle_k, seed)
+    banded_new = _banded_buckets(new_sigs, num_hashes, bands)  # raises before anything is cached
+    new_sigs.persist()
     sig_store = sig_store.join(
         F.broadcast(new_sigs.select("doc_id")), "doc_id", "left_anti"
     )
-    banded_new = _banded_buckets(new_sigs, bands, r)
-    banded_all = _banded_buckets(sig_store, bands, r).union(banded_new)
-    cand = (
-        banded_new.alias("l")
-        .join(
-            banded_all.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") != F.col("r.doc_id")),
-        )
-        .select(
-            F.least("l.doc_id", "r.doc_id").alias("doc_a"),
-            F.greatest("l.doc_id", "r.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    all_sigs = sig_store.union(new_sigs)
-    sa = all_sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = all_sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    cand = cand.join(sa, "doc_a").join(sb, "doc_b")
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(num_hashes)
-    pairs = cand.select("doc_a", "doc_b", est.alias("est_jaccard")).filter(
-        F.col("est_jaccard") >= threshold
-    )
+    banded_all = _banded_buckets(sig_store, num_hashes, bands).union(banded_new)
+    cand = _band_pairs(banded_all, "doc_id", "doc_a", "doc_b", new=banded_new)
+    pairs = _minhash_confirm(cand, sig_store.union(new_sigs), num_hashes, threshold)
     return pairs, new_sigs
 
 
@@ -442,7 +464,7 @@ def connected_components(
     return labels
 
 
-def simhash(docs: DataFrame, bits: int = 64, shingle_k: int = 6, seed: int = 7) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 64, shingle_k: int = 6) -> DataFrame:
     """(doc_id, simhash long): bit-vote fingerprint over unique shingles.
 
     mapInArrow + segmented bit-voting: per bit, ones = np.add.reduceat over
@@ -475,7 +497,7 @@ def simhash(docs: DataFrame, bits: int = 64, shingle_k: int = 6, seed: int = 7) 
 
 
 def simhash_near_dups(
-    docs: DataFrame, max_hamming: int = 3, bits: int = 64, shingle_k: int = 6, seed: int = 7
+    docs: DataFrame, max_hamming: int = 3, bits: int = 64, shingle_k: int = 6
 ) -> DataFrame:
     """(doc_a, doc_b, hamming): near-duplicate pairs via banded SimHash.
 
@@ -491,41 +513,16 @@ def simhash_near_dups(
     width = bits // nb
     mask = (1 << width) - 1
     # banding + both join-backs consume the fingerprints: persist once
-    fp = simhash(docs, bits, shingle_k, seed).persist()
-    banded = fp.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("simhash", i * width).bitwiseAND(F.lit(mask)).alias("bval"),
-                    )
-                    for i in range(nb)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bval")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bval") == F.col("r.bval"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
+    fp = simhash(docs, bits, shingle_k).persist()
+    banded = _explode_bands(
+        fp, "doc_id", [F.shiftrightunsigned("simhash", i * width).bitwiseAND(F.lit(mask)) for i in range(nb)]
     )
-    fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("fp_a"))
-    fb = fp.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("fp_b"))
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        cand.join(fa, "doc_a")
-        .join(fb, "doc_b")
-        .select("doc_a", "doc_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    return _confirm(
+        _band_pairs(banded, "doc_id", "doc_a", "doc_b"),
+        lambda s: fp.select(F.col("doc_id").alias(f"doc_{s}"), F.col("simhash").alias(f"fp_{s}")),
+        F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))),
+        lambda h: h <= max_hamming,
+        "hamming",
     )
 
 

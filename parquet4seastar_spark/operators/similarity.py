@@ -13,8 +13,9 @@
 - PQ: product-quantization codes scored in the compressed domain
   (asymmetric distance), optionally exact-cosine re-ranked over a
   per-query shortlist.
-- embedding-cosine near-duplicate detection reuses the LSH bucketing
-  (banded) and confirms candidates by exact cosine.
+- embedding-cosine near-duplicate detection takes its candidate pairs
+  from the banded join the text near-dups use (``dedup._band_pairs``)
+  and confirms them by exact cosine.
 
 LSH, IVF, PQ and banding are filters; one exact cosine verifies what they
 pass: :func:`_cosine` on the JVM, :func:`_cosine_np` in numpy, both
@@ -35,6 +36,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ._util import fan_out
+from .dedup import _band_pairs, _confirm
 
 # embedding_near_dups confirms map-side against a broadcast corpus matrix
 # when n_vectors * (dim * 8 + 24) bytes fit this budget, else through
@@ -359,17 +361,8 @@ def embedding_near_dups(
     if dup is not None:
         raise ValueError(f"embedding_near_dups: {id_col} is not unique ({dup} appears more than once)")
 
-    def _bucket_pairs(s: DataFrame) -> DataFrame:
-        left, right = s.alias("l"), s.alias("r")
-        return left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        ).select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-
     if not has_big:
-        cand = _bucket_pairs(sig)
+        cand = _band_pairs(sig, id_col, "id_a", "id_b", distinct=False)
     else:
         eb = F.when(F.col("_n") <= max_bucket_size, F.lit(0)).otherwise(
             F.least(
@@ -401,7 +394,9 @@ def embedding_near_dups(
             .filter(F.col(id_col) != F.col("id_a"))
             .select("id_a", F.col(id_col).alias("id_b"))
         )
-        cand = _bucket_pairs(sig2.filter(F.col("_n2") <= max_bucket_size)).unionByName(cand_big)
+        cand = _band_pairs(
+            sig2.filter(F.col("_n2") <= max_bucket_size), id_col, "id_a", "id_b", distinct=False
+        ).unionByName(cand_big)
     # candidate pairs outnumber corpus rows by the bucket factor.  Under
     # broadcast_confirm the whole confirm is ONE vectorized mapInArrow
     # over the (id_a, id_b) stream with the corpus matrix broadcast
@@ -433,13 +428,13 @@ def embedding_near_dups(
         return pairs.filter(F.col("cosine") >= threshold).dropDuplicates(
             ["id_a", "id_b"]
         )
-    pairs = (
-        cand.dropDuplicates(["id_a", "id_b"])
-        .join(_vectors(embeddings, id_col, vec_col, "id_a", "a"), "id_a")
-        .join(_vectors(embeddings, id_col, vec_col, "id_b", "b"), "id_b")
-        .select("id_a", "id_b", _cosine("a", "b").alias("cosine"))
+    return _confirm(
+        cand.dropDuplicates(["id_a", "id_b"]),
+        lambda s: _vectors(embeddings, id_col, vec_col, f"id_{s}", s),
+        _cosine("a", "b"),
+        lambda c: c >= threshold,
+        "cosine",
     )
-    return pairs.filter(F.col("cosine") >= threshold)
 
 
 def _kmeans(mat: np.ndarray, k: int, iters: int = 10, seed: int = 5) -> np.ndarray:

@@ -844,20 +844,39 @@ def test_map_chunk_roundtrip():
         assert out.to_pylist() == arr.to_pylist(), policy
 
 
-def test_levels_v2_and_bit_packed():
-    from parquet4seastar_spark.codecs.levels import (
-        decode_levels_bit_packed,
-        decode_levels_v2,
-        encode_levels_v2,
-    )
-    from parquet4seastar_spark.codecs.bitpack import pack_bits
+def _declare_bit_packed_levels(path, rep: bool) -> None:
+    """Rewrite the V1 data page header of a one-page, one-column pyarrow
+    file to declare BIT_PACKED definition (and, if ``rep``, repetition)
+    levels; the level bytes stay RLE."""
+    import pyarrow.parquet as pq
 
-    lv = np.array([0, 1, 2, 3, 2, 1, 0, 3, 3, 3], dtype=np.uint64)
-    enc = encode_levels_v2(lv, 3)
-    assert decode_levels_v2(enc, 3, len(lv)).tolist() == lv.tolist()
-    # deprecated BIT_PACKED decode (decode-only, like the reference)
-    packed = pack_bits(lv, 2)
-    assert decode_levels_bit_packed(packed, 3, len(lv)).tolist() == lv.tolist()
+    off = pq.ParquetFile(path).metadata.row_group(0).column(0).data_page_offset
+    buf = bytearray(path.read_bytes())
+    # DataPageHeader fields 2-4: PLAIN values, RLE def, RLE rep (zigzag 0, 3, 3)
+    old = b"\x15\x00\x15\x06\x15\x06"
+    assert buf.count(old, off, off + 64) == 1
+    at = buf.index(old, off)
+    buf[at : at + 6] = b"\x15\x00\x15\x08\x15" + (b"\x08" if rep else b"\x06")  # 4 = BIT_PACKED
+    path.write_bytes(bytes(buf))
+
+
+def test_reader_refuses_non_rle_levels(tmp_path):
+    import pyarrow.parquet as pq
+
+    from parquet4seastar_spark.codecs.parquet_file import ParquetFileReader
+
+    vals = [None if i % 7 == 0 else i for i in range(100)]
+    path = tmp_path / "opt.parquet"
+    pq.write_table(pa.table({"c": pa.array(vals, pa.int64())}), path, use_dictionary=False, compression="NONE")
+    _declare_bit_packed_levels(path, rep=False)
+    with pytest.raises(ValueError, match="c: definition levels declared BIT_PACKED"):
+        ParquetFileReader(path).read_column("c")
+    # a required column has no level streams: BIT_PACKED is declared for absent ones
+    path = tmp_path / "req.parquet"
+    schema = pa.schema([pa.field("c", pa.int64(), nullable=False)])
+    pq.write_table(pa.table({"c": list(range(100))}, schema=schema), path, use_dictionary=False, compression="NONE")
+    _declare_bit_packed_levels(path, rep=True)
+    assert ParquetFileReader(path).read_column("c").to_pylist() == list(range(100))
 
 
 def test_nested_level_sequences():

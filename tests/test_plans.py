@@ -109,6 +109,26 @@ def test_ann_scores_each_pair_once(spark):
         assert _optimized(df).count("zip_with") == 1, name
 
 
+def test_near_dups_score_each_pair_once(spark, monkeypatch):
+    # a filter over the aliased score is pushed below its projection and
+    # evaluates the score twice; every near-dup confirm keeps it once
+    from parquet4seastar_spark.operators import dedup as D, similarity as S
+
+    monkeypatch.setattr(S, "_BROADCAST_CONFIRM_BYTES", -1)  # the shuffled confirm
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    store = D.minhash_signatures(docs.filter(F.col("doc_id") < 100))
+    incremental, _ = D.minhash_lsh_pairs_incremental(docs.filter(F.col("doc_id") >= 100), store)
+    paths = {
+        "minhash": D.minhash_lsh_pairs(docs),
+        "incremental": incremental,
+        "embedding": S.embedding_near_dups(emb, threshold=0.5),
+    }
+    for name, df in paths.items():
+        assert _optimized(df).count("zip_with") == 1, name
+    assert _optimized(D.simhash_near_dups(docs)).count("bit_count") == 1
+
+
 def test_stratified_sample_is_map_side_only(spark):
     # hash-prefix sampling must be a pure scan+filter: no Exchange, no
     # Python stage -- the filter rides whole-stage codegen past pruning
