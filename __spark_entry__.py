@@ -610,7 +610,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- real-Parquet container interop: encode -> PAR1 file (Thrift page
     # headers + footer) -> read back with OUR reader -> identity oracle.
-    # Includes a NESTED column (struct via DremelColumn + read_column_tree:
+    # Includes a NESTED column (struct via DremelColumn + read_column:
     # the general recursive container write+read path), projected to
     # scalars for the compare harness.
     def roundtrip_parquet_file(spark, sf_dir):
@@ -646,7 +646,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 a = r.read_column(c)
                 want = tbl.column(c).type
                 arrays[c] = a.cast(want) if a.type != want else a
-            m = r.read_column_tree("meta")
+            m = r.read_column("meta")
             arrays["m_lang"] = m.field("lang")
             arrays["m_n"] = m.field("n_chars").cast(pa.int64())
             out = pa.table(arrays)

@@ -5,14 +5,16 @@ rendering :150-222; driven by apps/parquet2cql/main.cc).
 The reference's own golden end-to-end test (cql_reader_alltypes_test.cc:
 32-94) compares the dump of its six alltypes fixtures against inline CQL
 strings; tests/test_cql_dump.py runs the SAME comparison against this
-renderer, so every logical type's rendering (unsigned widening, varint
-INT96, duration intervals, unscaled-decimal notation, time formatting,
-uuid) is pinned to the reference byte for byte.
+renderer, over the six fixtures rebuilt from the golden text with our
+writer (and over the reference's files where a checkout is present), so
+every logical type's rendering (unsigned widening, varint INT96, duration
+intervals, unscaled-decimal notation, time formatting, uuid) is pinned to
+the reference byte for byte.
 """
 
 from __future__ import annotations
 
-from .parquet_file import REPEATED, LeafColumn, ParquetFileReader
+from .parquet_file import LeafColumn, ParquetFileReader
 
 # parquet.thrift ConvertedType ids
 _CONV_UINT = {11: 8, 12: 16, 13: 32, 14: 64}
@@ -170,121 +172,80 @@ def _render(v, kind: str, leaf: LeafColumn) -> str:
     return str(int(v))
 
 
-def _struct_fields(node: dict) -> list[dict]:
-    """Field nodes of a list<struct> column (column -> repeated group ->
-    struct), or [] for any other shape."""
-    kids = node["children"]
-    if len(kids) != 1 or kids[0]["el"].get(3) != REPEATED or len(kids[0]["children"]) != 1:
-        return []
-    return kids[0]["children"][0]["children"]
+def _shape(tree) -> tuple[str, list[str]]:
+    """CQL shape of a column's token tree and, for a UDT list, its field
+    names; ``("", [])`` for a shape with no CQL rendering."""
+    kind, elem = tree[0], tree[1] if tree[0] == "list" else None
+    if kind == "leaf":
+        return "scalar", []
+    if kind == "map" and tree[1][0] == tree[2][0] == "leaf":
+        return "map", []
+    if elem and elem[0] == "leaf":
+        return "list", []
+    if elem and elem[0] == "struct" and all(t[0] == "leaf" for _, t in elem[1]):
+        names = [f for f, _ in elem[1]]
+        # DremelColumn writes a map as a LIST of struct<key, value>
+        return ("map", []) if names == ["key", "value"] else ("udt", names)
+    return "", []
+
+
+def _wrap(brackets: str, items) -> str:
+    return brackets[0] + ", ".join(items) + brackets[1]
+
+
+def _entry(e) -> tuple:
+    """A map entry as (key, value): arrow map entries are tuples already,
+    struct<key, value> entries are dicts."""
+    return tuple(e.values()) if isinstance(e, dict) else e
 
 
 def parquet_to_cql(path: str, table: str = "parquet", pk: str = "row_number") -> str:
     """Dump a parquet file as CREATE TABLE + INSERT statements, matching the
-    reference's output format exactly."""
+    reference's output format exactly.  Each top-level column is read once
+    (``ParquetFileReader.read_column``) and its assembled shape picks the
+    CQL type: a leaf is a scalar, list(leaf) a list, map(leaf, leaf) a map,
+    and list(struct of leaves) a list of a numbered UDT
+    (cql_reader.cc:277-323)."""
     r = ParquetFileReader(path)
-    # group leaves into top-level fields in schema order
-    fields: list[tuple[str, list[LeafColumn]]] = []
-    for leaf in r.leaves:
-        top = leaf.path[0]
-        if fields and fields[-1][0] == top:
-            fields[-1][1].append(leaf)
-        else:
-            fields.append((top, [leaf]))
-
-    def fits(ok: bool, top: str, shape: str) -> None:
-        # each rendering below reads only the leaves its shape names; a
-        # column with other leaves would lose them from the dump
-        if not ok:
-            raise ValueError(f"column {top!r}: its leaves do not fit a CQL {shape}")
-
-    cols = []  # (name, cql_type, render_fn over row index)
+    cols = []  # (name, cql type, cell renderer, the column's values)
     udts: list[str] = []  # CREATE TYPE statements, numbered in encounter order
-    for top, leaves in fields:
-        if len(leaves[0].path) >= 4 and leaves[0].path[-1] != "key":
-            # list<struct<...>>: one leaf per struct field -> a UDT
-            # (cql_reader.cc:277-323 renders struct nodes as numbered UDTs)
-            struct = _struct_fields(next(n for n in r.schema if n["el"][4] == top))
-            fits(
-                len(struct) == len(leaves) and not any(f["children"] for f in struct),
-                top, "list of a struct of primitive fields",
+    for node in r.schema:
+        name = node["el"][4]
+        tree, _, infos = r._column_token_tree(name)
+        shape, fields = _shape(tree)
+        if not shape:
+            raise ValueError(f"column {name!r}: a {tree[0]} of this shape has no CQL type")
+        leaves = [r.leaves[li] for _, li, _ in infos]
+        kinds = [_leaf_kind(l) for l in leaves]
+        cql = [_CQL_TYPES[k] for k in kinds]
+        fn = [lambda v, k=k, l=l: _render(v, k, l) for k, l in zip(kinds, leaves)]
+        if shape == "scalar":
+            ctype, cell = cql[0], fn[0]
+        elif shape == "list":
+            ctype = f"frozen<list<{cql[0]}>>"
+            cell = lambda vs, f=fn[0]: _wrap("[]", map(f, vs))
+        elif shape == "map":
+            ctype = f"frozen<map<{cql[0]}, {cql[1]}>>"
+            cell = lambda vs, fk=fn[0], fv=fn[1]: _wrap(
+                "{}", (f"{fk(k)}: {fv(v)}" for k, v in map(_entry, vs))
             )
-            udt_name = f"{table}_udt_{len(udts)}"
-            kinds = [_leaf_kind(l) for l in leaves]
-            udt_fields = ", ".join(
-                f'"{l.path[-1]}" {_CQL_TYPES[k]}' for l, k in zip(leaves, kinds)
-            )
-            udts.append(f'CREATE TYPE "{udt_name}" ({udt_fields});\n')
-            arrs = [r.read_column(l.path).to_pylist() for l in leaves]
-
-            def render_udt_list(i, arrs=arrs, kinds=kinds, leaves=leaves):
-                rows = [a[i] for a in arrs]
-                if rows[0] is None:
-                    return "null"
-                out_elems = []
-                for j in range(len(rows[0])):
-                    if rows[0][j] is None:  # null struct element
-                        out_elems.append("null")
-                    else:
-                        inner = ", ".join(
-                            f'"{l.path[-1]}": {_render(a[i][j], k, l)}'
-                            for l, k, a in zip(leaves, kinds, arrs)
-                        )
-                        out_elems.append("{" + inner + "}")
-                return "[" + ", ".join(out_elems) + "]"
-
-            cols.append((top, f'frozen<list<"{udt_name}">>', render_udt_list))
-        elif leaves[0].path[-1] == "key" and leaves[0].max_rep:  # map
-            fits(
-                len(leaves) == 2 and leaves[0].path[:-1] == leaves[1].path[:-1],
-                top, "map of a primitive key and value",
-            )
-            kleaf, vleaf = leaves
-            kkind, vkind = _leaf_kind(kleaf), _leaf_kind(vleaf)
-            ktype, vtype = _CQL_TYPES[kkind], _CQL_TYPES[vkind]
-            karr = r.read_column(kleaf.path).to_pylist()
-            varr = r.read_column(vleaf.path).to_pylist()
-
-            def render_map(i, karr=karr, varr=varr, kk=kkind, vk=vkind, kl=kleaf, vl=vleaf):
-                ks, vs = karr[i], varr[i]
-                if ks is None:
-                    return "null"
-                items = ", ".join(
-                    f"{_render(k, kk, kl)}: {_render(v, vk, vl)}" for k, v in zip(ks, vs)
-                )
-                return "{" + items + "}"
-
-            cols.append((top, f"frozen<map<{ktype}, {vtype}>>", render_map))
-        elif leaves[0].max_rep:  # list
-            fits(len(leaves) == 1, top, "list of a primitive")
-            leaf = leaves[0]
-            kind = _leaf_kind(leaf)
-            arr = r.read_column(leaf.path).to_pylist()
-
-            def render_list(i, arr=arr, kind=kind, leaf=leaf):
-                vs = arr[i]
-                if vs is None:
-                    return "null"
-                return "[" + ", ".join(_render(v, kind, leaf) for v in vs) + "]"
-
-            cols.append((top, f"frozen<list<{_CQL_TYPES[kind]}>>", render_list))
         else:
-            fits(len(leaves) == 1, top, "scalar")
-            leaf = leaves[0]
-            kind = _leaf_kind(leaf)
-            arr = r.read_column(leaf.path).to_pylist()
-
-            def render_scalar(i, arr=arr, kind=kind, leaf=leaf):
-                return _render(arr[i], kind, leaf)
-
-            cols.append((top, _CQL_TYPES[kind], render_scalar))
+            udt = f"{table}_udt_{len(udts)}"
+            udt_fields = ", ".join(f'"{f}" {t}' for f, t in zip(fields, cql))
+            udts.append(f'CREATE TYPE "{udt}" ({udt_fields});\n')
+            ctype = f'frozen<list<"{udt}">>'
+            elem = lambda e, fields=fields, fn=fn: "null" if e is None else _wrap(
+                "{}", (f'"{n}": {f(e[n])}' for n, f in zip(fields, fn))
+            )
+            cell = lambda vs, elem=elem: _wrap("[]", map(elem, vs))
+        cols.append((name, ctype, cell, r.read_column(name).to_pylist()))
 
     out = ["\n"]
     out.extend(udts)
-    ddl_cols = ", ".join(f'"{n}" {t}' for n, t, _ in cols)
+    ddl_cols = ", ".join(f'"{n}" {t}' for n, t, _, _ in cols)
     out.append(f'CREATE TABLE "{table}"("{pk}" bigint PRIMARY KEY, {ddl_cols});\n')
-    names = ", ".join(f'"{n}"' for n, _, _ in cols)
+    names = ", ".join(f'"{n}"' for n, *_ in cols)
     for i in range(r.num_rows):
-        vals = ", ".join(fn(i) for _, _, fn in cols)
+        vals = ", ".join("null" if v[i] is None else cell(v[i]) for _, _, cell, v in cols)
         out.append(f'INSERT INTO "{table}"("{pk}", {names}) VALUES({i}, {vals});\n')
     return "".join(out)

@@ -14,9 +14,11 @@ over one or more row groups, speaking the standard wire format --
   (pyarrow-verified in tests).
 - reader: footer parse (file_reader.cc:28-64, rejects encrypted 'PARE'),
   incremental Thrift PageHeader scan per chunk (column_chunk_reader.cc:27-50),
-  decode through the same codec kernels as the pages table.  Reads the
-  reference's own golden fixtures (tests/test_data/alltypes/,
-  cql_reader_alltypes_test.cc:32-94).
+  decode through the same codec kernels as the pages table, and one
+  Dremel assembly per top-level column (``read_column``,
+  record_reader.hh:469-505).  The tests build the reference's alltypes
+  fixtures (cql_reader_alltypes_test.cc:32-94) with this writer, and
+  read the reference's own files too where a checkout is present.
 
 Field ids follow the public parquet.thrift (vendored by the reference as
 doc/parquet/parquet.thrift).
@@ -25,11 +27,11 @@ doc/parquet/parquet.thrift).
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyarrow as pa
 
-from .pages import EncodedChunk, Page, decode_chunk, effective_max_def, optional_flags
+from .pages import EncodedChunk, Page, effective_max_def, optional_flags
 from .thrift_compact import (
     CT_BINARY,
     CT_I32,
@@ -83,12 +85,10 @@ class LeafColumn:
     max_def: int
     max_rep: int
     outer_optional: bool  # repetition of the first-level field
-    elem_optional: bool  # leaf's own OPTIONAL flag (lists)
     converted: int | None
     precision: int | None
     scale: int | None
     logical_raw: dict | None = None  # parquet.thrift LogicalType union (field 10)
-    chunk_meta: dict = field(default_factory=dict)
 
 
 def _walk_schema(nodes: list[dict], def_lvl=0, rep_lvl=0, path=(), outer=None) -> list[LeafColumn]:
@@ -108,7 +108,7 @@ def _walk_schema(nodes: list[dict], def_lvl=0, rep_lvl=0, path=(), outer=None) -
             continue
         leaves.append(LeafColumn(
             path=p, ptype=PHYSICAL[el[1]], type_length=el.get(2, 0), max_def=d,
-            max_rep=r, outer_optional=top, elem_optional=rep == OPTIONAL,
+            max_rep=r, outer_optional=top,
             converted=el.get(6), precision=el.get(8), scale=el.get(7),
             logical_raw=el.get(10),
         ))
@@ -160,7 +160,7 @@ def leaf_node(name: str, chunk: EncodedChunk, repetition: int) -> dict:
 def _chunk_node(name: str, chunk: EncodedChunk) -> dict:
     """Flat column, or the standard 3-level LIST per list level
     (writer_schema.cc:30-134), OPTIONAL where ``optional_flags`` says."""
-    *groups, elem = optional_flags(chunk)
+    *groups, elem = [OPTIONAL if f else REQUIRED for f in optional_flags(chunk)]
     node = leaf_node("element" if groups else name, chunk, elem)
     for depth in reversed(range(len(groups))):
         inner = group_node("list", REPEATED, [node])
@@ -225,12 +225,32 @@ def _elements(node: dict):
         yield from _elements(k)
 
 
+# the one i8 a SchemaElement holds: LogicalType.INTEGER.bitWidth (parquet.thrift)
+_I8_FIELDS = {(10, 10, 1)}
+
+
 def _emit_element(w: CompactWriter, el: dict) -> None:
     """One SchemaElement struct, its fields in id order."""
     w.elem_struct_begin()
-    for fid in sorted(el):
-        (w.field_string if isinstance(el[fid], str) else w.field_i32)(fid, el[fid])
+    _emit_fields(w, el, ())
     w.end_struct()
+
+
+def _emit_fields(w: CompactWriter, fields: dict, at: tuple) -> None:
+    """Struct fields by Python type: dict -> nested struct (the LogicalType
+    union and its members), bool, str, int -> i32 (i8 at ``_I8_FIELDS``)."""
+    for fid in sorted(fields):
+        v, path = fields[fid], at + (fid,)
+        if isinstance(v, dict):
+            w.begin_field_struct(fid)
+            _emit_fields(w, v, path)
+            w.end_struct()
+        elif isinstance(v, bool):
+            w.field_bool(fid, v)
+        elif isinstance(v, str):
+            w.field_string(fid, v)
+        else:
+            (w.field_i8 if path in _I8_FIELDS else w.field_i32)(fid, v)
 
 
 def _leaf_chunks(node: dict) -> list[EncodedChunk]:
@@ -434,8 +454,6 @@ class ParquetFileReader:
                 raise ValueError(f"{len(cols)} column chunks != {len(self.leaves)} schema leaves")
             self._groups.append([c[3] for c in cols])
             self._group_rows.append(int(rg[3]))
-        for i, leaf in enumerate(self.leaves):
-            leaf.chunk_meta = self._groups[0][i]
 
     def column(self, name_or_path) -> LeafColumn:
         if isinstance(name_or_path, str):
@@ -450,7 +468,7 @@ class ParquetFileReader:
         """(ptype, base logical, type_length) of a leaf: the one
         SchemaElement -> logical mapping (INT96 reads as opaque 12-byte
         FLBA values)."""
-        if leaf.converted == 5 and leaf.precision is not None:
+        if (leaf.converted == 5 or 5 in (leaf.logical_raw or {})) and leaf.precision is not None:
             return leaf.ptype, f"decimal({leaf.precision},{leaf.scale or 0})", leaf.type_length
         if leaf.ptype == "INT96":
             return "FIXED_LEN_BYTE_ARRAY", "flba", 12
@@ -465,33 +483,10 @@ class ParquetFileReader:
         return leaf.ptype, {"BOOLEAN": "bool", "INT32": "int32", "INT64": "int64",
                             "FLOAT": "float", "DOUBLE": "double"}[leaf.ptype], 0
 
-    def read_column(self, name_or_path):
-        """Decode one leaf column to an arrow array (flat or list<...>),
-        concatenated across all row groups."""
-        leaf = self.column(name_or_path)
-        idx = self.leaves.index(leaf)
-        parts = [self._read_group_column(leaf, g[idx]) for g in self._groups]
-        return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
-
-    def _read_group_column(self, leaf: LeafColumn, cm: dict):
-        if leaf.max_rep > 1:
-            raise ValueError(
-                f"{leaf.path}: nested repetition depth {leaf.max_rep} is not a "
-                "single list<...> leaf; use read_column_tree for full nested "
-                "assembly"
-            )
-        chunk = self._scan_chunk_pages(leaf, cm)
-        # row count: flat -> level entries; list -> count of rep==0 entries,
-        # which decode validates internally; precompute via a cheap pass
-        if leaf.max_rep == 0:
-            chunk.num_rows = sum(p.num_values for p in chunk.pages if p.kind == "data")
-        else:
-            chunk.num_rows = self._count_rows(chunk)
-        return decode_chunk(chunk)
-
     def _scan_chunk_pages(self, leaf: LeafColumn, cm: dict) -> EncodedChunk:
         """Incremental Thrift page scan of one leaf chunk -> EncodedChunk
-        (pages decompressed; num_rows left at -1 for the caller)."""
+        (pages decompressed; only its pages, levels and physical type are
+        read)."""
         if not cm:
             raise ValueError(f"{leaf.path}: no column chunk in row group")
         codec = {0: "uncompressed", 1: "snappy", 2: "gzip"}.get(cm[4])
@@ -547,30 +542,12 @@ class ParquetFileReader:
             pages.append(Page("data", enc, dp[1], -1, len(raw), len(raw), raw))
             seen_values += dp[1]
 
-        chunk = EncodedChunk(
-            ptype=ptype,
-            logical=f"list<{base}>" if leaf.max_rep else base,
-            nullable=(leaf.outer_optional if leaf.max_rep else leaf.max_def > 0),
-            num_rows=-1,  # filled below
-            num_nulls=1,  # force validity reconstruction from def levels
-            cardinality=0,
-            encodings=sorted({p.encoding for p in pages if p.kind == "data"}),
-            compression="uncompressed",
-            type_length=type_length,
-            max_def=leaf.max_def,
-            max_rep=leaf.max_rep,
-            # derive element nullability from the LEVEL BUDGET, not the
-            # leaf's own flag: an optional struct wrapping a required field
-            # (list<struct>) contributes the extra def level the same way an
-            # optional element does
-            elem_nullable=(
-                leaf.max_def - (1 if leaf.outer_optional else 0) - 1 >= 1
-                if leaf.max_rep
-                else False
-            ),
-            pages=pages,
+        return EncodedChunk(
+            ptype=ptype, logical=base, nullable=leaf.max_def > 0, num_rows=-1, num_nulls=0,
+            cardinality=0, encodings=sorted({p.encoding for p in pages if p.kind == "data"}),
+            compression="uncompressed", type_length=type_length, pages=pages,
+            max_def=leaf.max_def, max_rep=leaf.max_rep,
         )
-        return chunk
 
     # ---- general nested read: schema tree -> Dremel assembly -------------
 
@@ -665,12 +642,12 @@ class ParquetFileReader:
         tree = conv_node(raw, "", (name,))
         return tree, opts, leaf_infos
 
-    def read_column_tree(self, name: str) -> pa.Array:
-        """Assemble a FULL top-level column of ANY nesting (struct / 3-level
-        LIST / MAP, any composition) via the general Dremel assembler with
-        the schema's real OPTIONAL flags (reference: record_reader.hh:469-505
-        recursive assembly).  Returns one arrow array across all row groups;
-        flat and single-list columns work too (same result as read_column)."""
+    def read_column(self, name: str) -> pa.Array:
+        """Assemble one top-level column of any nesting (flat, struct,
+        3-level or legacy LIST, MAP, any composition) via the general Dremel
+        assembler with the schema's real OPTIONAL flags (reference:
+        record_reader.hh:469-505 recursive assembly).  Returns one arrow
+        array across all row groups."""
         from .dremel import Leaf, assemble_tree
         from .pages import _decode_dremel_leaf
 
@@ -712,17 +689,3 @@ class ParquetFileReader:
             out += struct.pack("<I", def_len) + data[rep_len:levels_end]
         out += values
         return bytes(out)
-
-    @staticmethod
-    def _count_rows(chunk: EncodedChunk) -> int:
-        from .levels import decode_levels_v1
-        from .pages import _decompress
-
-        rows = 0
-        for page in chunk.pages:
-            if page.kind != "data":
-                continue
-            raw = _decompress(page.data, chunk.compression)
-            rep, _ = decode_levels_v1(raw, chunk.max_rep, page.num_values)
-            rows += int((rep == 0).sum())
-        return rows

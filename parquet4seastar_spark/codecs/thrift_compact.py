@@ -75,6 +75,10 @@ class CompactWriter:
     def field_bool(self, fid: int, v: bool) -> None:
         self._field_header(fid, CT_BOOL_TRUE if v else CT_BOOL_FALSE)
 
+    def field_i8(self, fid: int, v: int) -> None:
+        self._field_header(fid, CT_BYTE)
+        self.buf.append(v & 0xFF)
+
     def field_i32(self, fid: int, v: int) -> None:
         self._field_header(fid, CT_I32)
         write_varint(self.buf, _zigzag(v) & 0xFFFFFFFFFFFFFFFF)

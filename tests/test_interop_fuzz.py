@@ -237,5 +237,5 @@ def test_pyarrow_nested_files_our_tree_reader(data, tmp_path_factory):
         use_dictionary=data.draw(st.booleans()),
         row_group_size=data.draw(st.sampled_from([2, 5, 1000])),
     )
-    out = ParquetFileReader(path).read_column_tree("c")
+    out = ParquetFileReader(path).read_column("c")
     assert out.to_pylist() == arr.to_pylist()

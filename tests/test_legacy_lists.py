@@ -123,7 +123,7 @@ def test_legacy_one_level_repeated_leaf(tmp_path):
     assert pq.read_table(path).column("xs").to_pylist() == vals
 
 
-# ---- legacy shapes under the GENERAL tree reader (read_column_tree) -------
+# ---- legacy shapes nested under other groups -------------------------------
 
 import numpy as np
 
@@ -149,7 +149,7 @@ class _FakeChunk:
 
 def test_legacy_two_level_under_struct_tree(tmp_path):
     """The round-4 asymmetry: a pre-LogicalTypes 2-level list nested under
-    a modern struct now assembles via read_column_tree (reference handles
+    a modern struct now assembles via read_column (reference handles
     it uniformly: reader_schema.cc:120-144 -> record_reader.hh:469-505)."""
     rows = [None, {"xs": [1, 2, 3]}, {"xs": None}, {"xs": []}, {"xs": [4]}] * 20
     rep, def_, vals = [], [], []
@@ -171,7 +171,7 @@ def test_legacy_two_level_under_struct_tree(tmp_path):
 
     path = str(tmp_path / "legacy2_struct.parquet")
     _legacy_file(path, _FakeChunk([page], 1), len(rows), column, ("s", "xs", "element"))
-    got = ParquetFileReader(path).read_column_tree("s").to_pylist()
+    got = ParquetFileReader(path).read_column("s").to_pylist()
     assert got == rows
     assert pq.read_table(path).column("s").to_pylist() == rows
 
@@ -196,7 +196,7 @@ def test_legacy_bare_repeated_under_struct_tree(tmp_path):
 
     path = str(tmp_path / "legacy1_struct.parquet")
     _legacy_file(path, _FakeChunk([page], 1), len(rows), column, ("s", "xs"))
-    got = ParquetFileReader(path).read_column_tree("s").to_pylist()
+    got = ParquetFileReader(path).read_column("s").to_pylist()
     assert got == rows
     assert pq.read_table(path).column("s").to_pylist() == rows
 
@@ -222,7 +222,7 @@ def test_legacy_array_named_group_tree(tmp_path):
 
     path = str(tmp_path / "legacy_array.parquet")
     _legacy_file(path, _FakeChunk([page], 1), len(rows), column, ("xs", "array", "a"))
-    got = ParquetFileReader(path).read_column_tree("xs").to_pylist()
+    got = ParquetFileReader(path).read_column("xs").to_pylist()
     assert got == rows
     assert pq.read_table(path).column("xs").to_pylist() == rows
 
@@ -252,7 +252,7 @@ def test_tuple_name_rule_is_exact_match(tmp_path):
     path = str(tmp_path / "foo_tuple_3level.parquet")
     _legacy_file(path, _FakeChunk([page], 1), len(rows), column,
                  ("bar", "foo_tuple", "element"))
-    got = ParquetFileReader(path).read_column_tree("bar").to_pylist()
+    got = ParquetFileReader(path).read_column("bar").to_pylist()
     assert got == rows
     # known divergence, pinned: Arrow C++ (pyarrow) applies a looser
     # EndsWith("_tuple") heuristic here and misreads the element as a
@@ -285,14 +285,14 @@ def test_tuple_name_rule_exact_match_is_legacy(tmp_path):
     path = str(tmp_path / "bar_tuple_legacy.parquet")
     _legacy_file(path, _FakeChunk([page], 1), len(rows), column,
                  ("bar", "bar_tuple", "a"))
-    got = ParquetFileReader(path).read_column_tree("bar").to_pylist()
+    got = ParquetFileReader(path).read_column("bar").to_pylist()
     assert got == rows
     assert pq.read_table(path).column("bar").to_pylist() == rows
 
 
 def test_legacy_top_level_shapes_via_tree_reader(tmp_path):
-    """The original top-level legacy files also assemble via the tree
-    reader now (same values as the read_column level-budget path)."""
+    """The original top-level legacy files assemble through the same tree
+    reader as every nested shape."""
     vals = [[1, 2, 3], None, [], [4], [5, 6]] * 20
     arr = pa.array(vals, type=pa.list_(pa.int32()))
     chunk = encode_chunk(arr, policy="plain", nullable=True, elem_nullable=False)
@@ -302,7 +302,6 @@ def test_legacy_top_level_shapes_via_tree_reader(tmp_path):
     path = str(tmp_path / "legacy2_tree.parquet")
     _legacy_file(path, chunk, len(arr), column, ("xs", "element"))
     r = ParquetFileReader(path)
-    assert r.read_column_tree("xs").to_pylist() == vals
     assert r.read_column("xs").to_pylist() == vals
 
     vals1 = [[1, 2], [], [3], [4, 5, 6], []] * 20
@@ -314,5 +313,4 @@ def test_legacy_top_level_shapes_via_tree_reader(tmp_path):
     path1 = str(tmp_path / "legacy1_tree.parquet")
     _legacy_file(path1, chunk1, len(arr1), column1, ("xs",))
     r1 = ParquetFileReader(path1)
-    assert r1.read_column_tree("xs").to_pylist() == vals1
     assert r1.read_column("xs").to_pylist() == vals1

@@ -1,26 +1,21 @@
 """Real-Parquet container interop (codecs/parquet_file.py).
 
-Tier-3 parity with the reference: its golden alltypes fixtures
-(tests/test_data/alltypes/*.uncompressed.plain.parquet, consumed by
-cql_reader_alltypes_test.cc:32-94) are read by OUR reader and compared
-against pyarrow's reading of the same files; and files written by OUR
-writer are read back by pyarrow (independent implementation) and by our
-own reader.
+Tier-3 parity with the reference: its golden alltypes fixtures (consumed
+by cql_reader_alltypes_test.cc:32-94; built here from the golden text by
+test_cql_dump.write_alltypes_fixture, and read from a reference checkout
+where one is present) are read by OUR reader and compared against
+pyarrow's reading of the same files; and files written by OUR writer are
+read back by pyarrow (independent implementation) and by our own reader.
 """
 
-import glob
-
-import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
 from parquet4seastar_spark.codecs.pages import encode_chunk
 from parquet4seastar_spark.codecs.parquet_file import ParquetFileReader, write_parquet_file
 from parquet4seastar_spark.codecs.thrift_compact import CompactReader, CompactWriter
-
-FIXTURES = sorted(glob.glob("/root/reference/tests/test_data/alltypes/*.parquet"))
+from test_cql_dump import ALLTYPES, alltypes_path
 
 
 def test_thrift_compact_roundtrip():
@@ -40,51 +35,28 @@ def test_thrift_compact_roundtrip():
     assert out == {1: -42, 3: 1 << 40, 4: b"hello", 5: True, 7: {1: 7}, 8: [10, -20, 30]}
 
 
-def _normalize_and_compare(leaf, ours: pa.Array, exp: pa.Array) -> bool:
-    t = exp.type
-    if pa.types.is_map(t):
-        part = exp.keys if leaf.path[-1] == "key" else exp.items
-        return ours.flatten().to_pylist() == part.to_pylist()
-    if pa.types.is_null(t):
-        return ours.null_count == len(ours)
-    if leaf.ptype == "INT96":
-        return len(ours) == len(exp)  # opaque 12-byte values
-    if pa.types.is_list(t):
-        inner = t.value_type
-        oi, ei = ours.flatten(), exp.flatten()
-        if pa.types.is_integer(inner):
-            oi = pc.cast(oi, inner, safe=False)
-        lens_match = (
-            pc.list_value_length(ours).to_pylist() == pc.list_value_length(exp).to_pylist()
-        )
-        return lens_match and oi.to_pylist() == ei.to_pylist()
-    if pa.types.is_integer(t):
-        # files store narrow ints sign-extended on INT32; the unsafe cast
-        # reapplies the logical width (255 stored as -1 -> uint8 255)
-        return pc.cast(ours, t, safe=False).to_pylist() == exp.to_pylist()
-    if pa.types.is_time(t) or pa.types.is_timestamp(t) or pa.types.is_date(t):
-        phys = pa.int32() if t.bit_width <= 32 else pa.int64()
-        return (
-            pc.cast(ours, phys, safe=False).to_pylist()
-            == pc.cast(exp, phys, safe=False).to_pylist()
-        )
-    if ours.type != t:
-        ours = ours.cast(t)
-    return ours.to_pylist() == exp.to_pylist()
-
-
-@pytest.mark.parametrize("path", FIXTURES, ids=[f.split("/")[-1].split(".")[0] for f in FIXTURES])
-def test_read_reference_golden_fixtures(path):
+@pytest.mark.parametrize("source", ["built", "reference"])
+@pytest.mark.parametrize("name", ALLTYPES)
+def test_read_reference_golden_fixtures(name, source, tmp_path):
+    # every top-level column of each alltypes fixture, read by our reader
+    # and by pyarrow's
+    path = alltypes_path(source, name, tmp_path)
     ref = pq.read_table(path)
     r = ParquetFileReader(path)
     assert r.num_rows == ref.num_rows
-    checked = 0
-    for leaf in r.leaves:
-        ours = r.read_column(leaf.path)
-        exp = ref.column(leaf.path[0]).combine_chunks()
-        assert _normalize_and_compare(leaf, ours, exp), leaf.path
-        checked += 1
-    assert checked == len(r.leaves) and checked > 0
+    names = [n["el"][4] for n in r.schema]
+    assert names == ref.column_names
+    for c in names:
+        ours, exp = r.read_column(c), ref.column(c).combine_chunks()
+        if pa.types.is_null(exp.type):  # LogicalType UNKNOWN: always null
+            assert ours.null_count == len(ours), c
+        elif ours.type == pa.binary(12) and pa.types.is_timestamp(exp.type):
+            # INT96: pyarrow reads a timestamp, we keep the opaque 12 bytes
+            assert len(ours) == len(exp), c
+        else:
+            # the unsafe cast applies the logical type pyarrow reads (255
+            # stored as -1 -> uint8 255, int64 -> timestamp, int32 -> time)
+            assert ours.cast(exp.type, safe=False).to_pylist() == exp.to_pylist(), c
 
 
 def test_write_parquet_pyarrow_reads_it(tmp_path):
@@ -419,7 +391,7 @@ def test_write_parquet_nested_lists(tmp_path):
             # the leaf keeps its annotation under both list levels
             assert back.type.value_type.value_type == arr.type.value_type.value_type, name
             assert back.to_pylist() == arr.to_pylist(), name
-            out = ParquetFileReader(path).read_column_tree("ll")
+            out = ParquetFileReader(path).read_column("ll")
             assert out.cast(arr.type).to_pylist() == arr.to_pylist(), name
 
 
@@ -491,16 +463,11 @@ def test_write_struct_list_optional_field_pyarrow_reads(tmp_path):
     back = pq.read_table(path).column("spans").combine_chunks()
     assert back.to_pylist() == arr.to_pylist()
     # our own reader computes the 4-level geometry from the schema and
-    # decodes the leaf with merged nulls (struct-null OR field-null)
+    # assembles the whole column: null rows, null structs and null fields
     r = ParquetFileReader(path)
     leaf = r.column(("spans", "list", "element", "attr"))
     assert leaf.max_def == 4 and leaf.max_rep == 1
-    attr = r.read_column(("spans", "list", "element", "attr"))
-    expected = [
-        None if row is None else [None if e is None else e["attr"] for e in row]
-        for row in vals
-    ]
-    assert attr.to_pylist() == expected
+    assert r.read_column("spans").to_pylist() == vals
 
 
 def test_write_parquet_rejects_fsst(tmp_path):
@@ -523,7 +490,7 @@ def test_write_parquet_decimal_column(tmp_path):
     assert ParquetFileReader(path).read_column("d").to_pylist() == vals
 
 
-def test_read_column_tree_pyarrow_nested(tmp_path):
+def test_read_column_pyarrow_nested(tmp_path):
     # general nested READ: a pyarrow-written file with struct / map /
     # list<list> / list<struct>, REQUIRED and OPTIONAL fields mixed, two
     # row groups -- assembled through the general Dremel path with the
@@ -551,11 +518,11 @@ def test_read_column_tree_pyarrow_nested(tmp_path):
     pq.write_table(tbl, path, use_dictionary=False, row_group_size=2)
     r = ParquetFileReader(path)
     for name in ["s", "m", "ll", "spans"]:
-        out = r.read_column_tree(name)
+        out = r.read_column(name)
         assert out.to_pylist() == tbl.column(name).combine_chunks().to_pylist(), name
 
 
-def test_read_column_tree_roundtrips_our_nested_export(tmp_path):
+def test_read_column_roundtrips_our_nested_export(tmp_path):
     # the loop closes: our nested export read back by OUR OWN reader
     from parquet4seastar_spark.codecs.pages import encode_dremel_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn
@@ -567,11 +534,11 @@ def test_read_column_tree_roundtrips_our_nested_export(tmp_path):
     write_parquet_file(
         path, {"ll": DremelColumn(encode_dremel_column(arr, policy="plain"))}, len(arr)
     )
-    out = ParquetFileReader(path).read_column_tree("ll")
+    out = ParquetFileReader(path).read_column("ll")
     assert out.cast(arr.type).to_pylist() == arr.to_pylist()
-    # flat and single-list columns give the same result as read_column
+    # a flat column goes through the same assembly
     flat = pa.array(["a", None, "c"])
     p2 = str(tmp_path / "flat.parquet")
     write_parquet_file(p2, {"t": encode_chunk(flat, policy="plain")}, len(flat))
-    r2 = ParquetFileReader(p2)
-    assert r2.read_column_tree("t").to_pylist() == r2.read_column("t").to_pylist()
+    out = ParquetFileReader(p2).read_column("t")
+    assert out.type == flat.type and out.to_pylist() == flat.to_pylist()
