@@ -285,13 +285,13 @@ def assemble_tree(tree, leaves: dict[str, Leaf], n_rows: int, opts=None) -> pa.A
     def >= d0+opt at those entries; a list/map node's element domain is
     the entries with def >= d0+opt+1 (every deeper entry always satisfies
     this, so def alone delimits domains -- no rep test needed for
-    filtering).
+    filtering).  A value entry (def == max_def) passes every such filter,
+    so a leaf's k-th valid slot holds its k-th value: a leaf whose slots
+    are all valid is its values array unchanged, and a string/binary leaf
+    with nulls gathers only its offsets (the value bytes are shared).
     """
-    # value position per stream entry (cumulative count of value-carrying
-    # entries), computed once per leaf
-    vpos = {p: np.cumsum(l.def_ == l.max_def) - 1 for p, l in leaves.items()}
     sels = {p: np.arange(len(lf.def_), dtype=np.int64) for p, lf in leaves.items()}
-    arr = _build(tree, "", leaves, vpos, sels, 0, 0, opts or {})
+    arr = _build(tree, "", leaves, sels, 0, 0, opts or {})
     if len(arr) != n_rows:
         raise ValueError(f"assembled {len(arr)} rows, expected {n_rows}")
     return arr
@@ -307,23 +307,40 @@ def _rep_leaf(path: str, leaves: dict[str, Leaf]) -> str:
 
 
 def _validity_buf(valid: np.ndarray):
-    if valid.all():
+    nnull = len(valid) - int(np.count_nonzero(valid))
+    if not nnull:
         return None, 0
-    return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes()), int((~valid).sum())
+    return pa.py_buffer(np.packbits(valid, bitorder="little")), nnull
 
 
-def _build(node, path, leaves, vpos, sels, d0, r0, opts) -> pa.Array:
+def _spread(vals: pa.Array, valid: np.ndarray) -> pa.Array:
+    """One slot per entry of ``valid``: the k-th valid slot holds value k,
+    the other slots are null."""
+    vbuf, nnull = _validity_buf(valid)
+    if pa.types.is_string(vals.type) or pa.types.is_binary(vals.type):
+        _, obuf, data = vals.buffers()
+        offs = np.frombuffer(obuf, dtype=np.int32, count=len(vals) + 1, offset=vals.offset * 4)
+        pos = np.zeros(len(valid) + 1, dtype=np.int64)
+        np.cumsum(valid, out=pos[1:])
+        return pa.Array.from_buffers(
+            vals.type, len(valid), [vbuf, pa.py_buffer(offs[pos]), data], null_count=nnull
+        )
+    codes = np.zeros(len(valid), dtype=np.int64)
+    codes[valid] = np.arange(len(vals), dtype=np.int64)
+    return vals.take(pa.array(codes, mask=~valid))
+
+
+def _build(node, path, leaves, sels, d0, r0, opts) -> pa.Array:
     kind = node[0]
     opt = 1 if opts.get(path, True) else 0
     if kind == "leaf":
-        leaf = leaves[path]
-        sel = sels[path]
-        d = leaf.def_[sel]
-        valid = d == d0 + opt
-        codes = np.zeros(len(sel), dtype=np.int64)
-        codes[valid] = vpos[path][sel[valid]]
-        idx = pa.array(codes, type=pa.int64(), mask=~valid)
-        return leaf.values.take(idx)
+        vals, def_, sel = leaves[path].values, leaves[path].def_, sels[path]
+        # a selection as long as the stream is all of it, in order
+        valid = (def_ if len(sel) == len(def_) else def_[sel]) == d0 + opt
+        n_valid = int(np.count_nonzero(valid))
+        if n_valid != len(vals):
+            raise ValueError(f"leaf {path or '<root>'!r}: {n_valid} valid slots for {len(vals)} values")
+        return vals if n_valid == len(valid) else _spread(vals, valid)
     if kind == "struct":
         rp = _rep_leaf(path, leaves)
         sel = sels[rp]
@@ -333,7 +350,7 @@ def _build(node, path, leaves, vpos, sels, d0, r0, opts) -> pa.Array:
         names = []
         for fname, child in node[1]:
             children.append(
-                _build(child, _join(path, f"s{fname}"), leaves, vpos, sels, d0 + opt, r0, opts)
+                _build(child, _join(path, f"s{fname}"), leaves, sels, d0 + opt, r0, opts)
             )
             names.append(fname)
         mask = pa.array(~valid) if (opt and not valid.all()) else None
@@ -373,7 +390,7 @@ def _build(node, path, leaves, vpos, sels, d0, r0, opts) -> pa.Array:
     if kind == "list":
         new_sels = dict(sels)
         new_sels.update(child_sels("l"))
-        child = _build(node[1], _join(path, "l"), leaves, vpos, new_sels, d_elem, r0 + 1, opts)
+        child = _build(node[1], _join(path, "l"), leaves, new_sels, d_elem, r0 + 1, opts)
         return pa.Array.from_buffers(
             pa.list_(child.type), n_slots, [vbuf, offsets32], null_count=nnull,
             children=[child],
@@ -382,8 +399,8 @@ def _build(node, path, leaves, vpos, sels, d0, r0, opts) -> pa.Array:
         new_sels = dict(sels)
         new_sels.update(child_sels("k"))
         new_sels.update(child_sels("v"))
-        keys = _build(node[1], _join(path, "k"), leaves, vpos, new_sels, d_elem, r0 + 1, opts)
-        items = _build(node[2], _join(path, "v"), leaves, vpos, new_sels, d_elem, r0 + 1, opts)
+        keys = _build(node[1], _join(path, "k"), leaves, new_sels, d_elem, r0 + 1, opts)
+        items = _build(node[2], _join(path, "v"), leaves, new_sels, d_elem, r0 + 1, opts)
         if keys.null_count:
             raise ValueError("map keys decoded with nulls")
         mt = pa.map_(keys.type, items.type)

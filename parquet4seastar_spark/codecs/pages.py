@@ -20,7 +20,10 @@ columnar batches:
   a leaf of its own) and written by one leaf encoder (``_encode_leaf``)
   on record boundaries.  One sizing rule: an entry counts its value
   bytes, plus ~1 B for its levels when the leaf is repeated (max_rep > 0).
-  List decode is the same walker's assembly.
+- Every chunk decodes the same way too (``decode_chunk``): the page
+  reader yields the leaf's level streams and its non-null values, and the
+  walker's assembly (``dremel.assemble_tree``) places them -- a flat
+  column is a leaf with no list above it.
 - Dictionary fallback: pages are dictionary-encoded until, at a page flush,
   the accumulated dictionary exceeds 16 KiB; subsequent pages are PLAIN and
   the dictionary page (entries first seen up to the overflow page) is still
@@ -268,56 +271,49 @@ def _to_physical(arr: pa.Array, ptype: str) -> pa.Array:
     return arr
 
 
-def _int_to_decimal(full: np.ndarray, valid: np.ndarray, has_nulls: bool, p: int, s: int) -> pa.Array:
-    n = len(full)
+def _int_to_decimal(vals: np.ndarray, p: int, s: int) -> pa.Array:
+    n = len(vals)
     pairs = np.empty((n, 2), dtype=np.int64)
-    pairs[:, 0] = full.astype(np.int64)
+    pairs[:, 0] = vals.astype(np.int64)
     pairs[:, 1] = np.where(pairs[:, 0] < 0, np.int64(-1), np.int64(0))
-    validity = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes()) if has_nulls else None
-    return pa.Array.from_buffers(
-        pa.decimal128(p, s), n, [validity, pa.py_buffer(pairs.tobytes())]
-    )
+    return pa.Array.from_buffers(pa.decimal128(p, s), n, [None, pa.py_buffer(pairs.tobytes())])
 
 
-def _varbin_to_decimal(
-    full_lens: np.ndarray, payload: np.ndarray, valid: np.ndarray, has_nulls: bool, p: int, s: int
-) -> pa.Array:
+def _varbin_to_decimal(lens: np.ndarray, payload: np.ndarray, p: int, s: int) -> pa.Array:
     """DECIMAL on BYTE_ARRAY physical (4th mapping, logical_type.cc:94-115):
     variable-length big-endian two's complement -> decimal128."""
-    n = len(full_lens)
-    if (full_lens > 16).any():
+    n = len(lens)
+    if (lens > 16).any():
         raise ValueError("BYTE_ARRAY decimal wider than 16 bytes")
     be16 = np.zeros((n, 16), dtype=np.uint8)
-    total = int(full_lens.sum())
+    total = int(lens.sum())
     if total:
         starts = np.zeros(n, dtype=np.int64)
-        starts[1:] = np.cumsum(full_lens)[:-1]
-        rows = np.repeat(np.arange(n, dtype=np.int64), full_lens)
-        rel = np.arange(total, dtype=np.int64) - np.repeat(starts, full_lens)
-        cols = rel + np.repeat(16 - full_lens, full_lens)
+        starts[1:] = np.cumsum(lens)[:-1]
+        rows = np.repeat(np.arange(n, dtype=np.int64), lens)
+        rel = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
+        cols = rel + np.repeat(16 - lens, lens)
         be16[rows, cols] = payload
         neg = np.zeros(n, dtype=bool)
-        nz = full_lens > 0
+        nz = lens > 0
         neg[nz] = payload[starts[nz]] >= 128
-        pad = np.arange(16)[None, :] < (16 - full_lens)[:, None]
+        pad = np.arange(16)[None, :] < (16 - lens)[:, None]
         be16[pad & neg[:, None]] = 255
     le16 = be16[:, ::-1]
-    validity = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes()) if has_nulls else None
     return pa.Array.from_buffers(
-        pa.decimal128(p, s), n, [validity, pa.py_buffer(np.ascontiguousarray(le16).tobytes())]
+        pa.decimal128(p, s), n, [None, pa.py_buffer(np.ascontiguousarray(le16).tobytes())]
     )
 
 
-def _flba_to_decimal(full: np.ndarray, valid: np.ndarray, has_nulls: bool, p: int, s: int) -> pa.Array:
-    n, w = full.shape
+def _flba_to_decimal(vals: np.ndarray, p: int, s: int) -> pa.Array:
+    n, w = vals.shape
     be16 = np.empty((n, 16), dtype=np.uint8)
-    sign = full[:, 0] >= 128
+    sign = vals[:, 0] >= 128
     be16[:, : 16 - w] = np.where(sign, 255, 0).astype(np.uint8)[:, None]
-    be16[:, 16 - w :] = full
+    be16[:, 16 - w :] = vals
     le16 = be16[:, ::-1]
-    validity = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes()) if has_nulls else None
     return pa.Array.from_buffers(
-        pa.decimal128(p, s), n, [validity, pa.py_buffer(np.ascontiguousarray(le16).tobytes())]
+        pa.decimal128(p, s), n, [None, pa.py_buffer(np.ascontiguousarray(le16).tobytes())]
     )
 
 
@@ -1185,26 +1181,36 @@ def optional_flags(chunk: EncodedChunk) -> list[bool]:
     return [chunk.nullable, *[inner] * (chunk.max_rep - 1), chunk.elem_nullable]
 
 
-def decode_chunk(
-    chunk: EncodedChunk,
-) -> pa.Array:
+def decode_chunk(chunk: EncodedChunk) -> pa.Array:
     """Decode pages back into a (nullable) arrow array.
 
-    Mirrors column_chunk_reader::read_batch (column_chunk_reader.hh:101-157):
-    values exist only where def == max_def.  List chunks (max_rep > 0)
-    reassemble through the Dremel walker (_decode_list).
+    One body for every shape (flat, list<prim>, list<list<prim>>): the
+    leaf's level streams and non-null values (``_decode_dremel_leaf``,
+    column_chunk_reader.hh:101-157: values exist only where def ==
+    max_def), then Dremel assembly (record_reader.hh:469-505) over
+    ``max_rep`` list nodes with the chunk's OPTIONAL flags
+    (``optional_flags``, the rule the container writer's schema follows).
+    A flat chunk is a leaf with no list above it.
+
+    A list leaf read from a standard file can sit under extra OPTIONAL
+    levels (a field of a list<struct>); every def between the element slot
+    and max_def then collapses to a null element.
     """
-    if chunk.max_rep > 0:
-        return _decode_list(chunk)
+    n_lists = chunk.max_rep
+    paths = _list_paths(n_lists)
+    flags = optional_flags(chunk)
+    leaf_max_def = n_lists + sum(flags)
+    d_elem = leaf_max_def - flags[-1]  # def of an element slot
+    leaf_logical = chunk.logical[5 * n_lists : len(chunk.logical) - n_lists]
+    def_, rep, vals = _decode_dremel_leaf(chunk, leaf_logical)
     max_def = effective_max_def(chunk)
-    def_, _, parts = _read_pages(chunk, max_def)
-    n = len(def_)
-    if n != chunk.num_rows:
-        raise ValueError(f"decoded row count mismatch: {n} != {chunk.num_rows}")
-    return _build_leaf_array(
-        chunk.ptype, chunk.logical, chunk.type_length, bool(chunk.num_nulls),
-        def_ == max_def, n, *parts,
-    )
+    if max_def > leaf_max_def:
+        def_ = np.where(def_ >= max_def, leaf_max_def, np.minimum(def_, d_elem))
+    tree = ("leaf", vals.type)
+    for _ in range(n_lists):
+        tree = ("list", tree)
+    leaf = Leaf(paths[-1], vals, def_, rep, leaf_max_def, n_lists)
+    return assemble_tree(tree, {paths[-1]: leaf}, chunk.num_rows, dict(zip(paths, flags)))
 
 
 _ELEM_PA_TYPES = {
@@ -1233,102 +1239,50 @@ def _elem_pa_type(elem_logical: str, type_length: int) -> pa.DataType:
 
 
 def _build_leaf_array(
-    ptype: str,
-    elem_logical: str,
-    type_length: int,
-    elem_nullable: bool,
-    elem_valid: np.ndarray,
-    n_elems: int,
-    len_parts: list,
-    payload_parts: list,
-    fixed_parts: list,
+    ptype: str, logical: str, type_length: int, len_parts: list, payload_parts: list, fixed_parts: list
 ) -> pa.Array:
-    """Scatter decoded non-null values into element slots and build the
-    typed leaf arrow array (flat chunks and dremel leaves)."""
-    elem_validity = (
-        pa.py_buffer(np.packbits(elem_valid, bitorder="little").tobytes())
-        if elem_nullable
-        else None
-    )
+    """Decoded non-null values -> the typed leaf arrow array, with no
+    nulls: assembly places them (``dremel.assemble_tree``)."""
+    decimal = _parse_decimal(logical) if logical.startswith("decimal(") else None
     if ptype == "BYTE_ARRAY":
         lens = np.concatenate(len_parts) if len_parts else np.zeros(0, dtype=np.int64)
         payload = np.concatenate(payload_parts) if payload_parts else np.zeros(0, dtype=np.uint8)
-        full_lens = np.zeros(n_elems, dtype=np.int64)
-        full_lens[elem_valid] = lens
-        if elem_logical.startswith("decimal("):
-            p, s = _parse_decimal(elem_logical)
-            leaf = _varbin_to_decimal(full_lens, payload, elem_valid, elem_nullable, p, s)
+        if decimal:
+            leaf = _varbin_to_decimal(lens, payload, *decimal)
         else:
-            offsets = np.zeros(n_elems + 1, dtype=np.int64)
-            np.cumsum(full_lens, out=offsets[1:])
+            offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+            np.cumsum(lens, out=offsets[1:])
+            if offsets[-1] > np.iinfo(np.int32).max:
+                raise ValueError("BYTE_ARRAY chunk exceeds int32 offsets")
             leaf = pa.Array.from_buffers(
-                pa.large_binary(),
-                n_elems,
-                [elem_validity, pa.py_buffer(offsets.tobytes()), pa.py_buffer(payload.tobytes())],
+                pa.binary(), len(lens), [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(payload)]
             )
-            leaf = leaf.cast(pa.large_string()).cast(pa.string()) if elem_logical == "string" else leaf.cast(pa.binary())
     elif ptype == "FIXED_LEN_BYTE_ARRAY":
         k = type_length
         vals = (
-            np.concatenate(fixed_parts).reshape(-1, k)
+            np.concatenate(fixed_parts).reshape(-1, k).astype(np.uint8, copy=False)
             if fixed_parts
             else np.zeros((0, k), dtype=np.uint8)
         )
-        full = np.zeros((n_elems, k), dtype=np.uint8)
-        full[elem_valid] = vals
-        if elem_logical.startswith("decimal("):
-            p, s = _parse_decimal(elem_logical)
-            leaf = _flba_to_decimal(full, elem_valid, elem_nullable, p, s)
+        if decimal:
+            leaf = _flba_to_decimal(vals, *decimal)
         else:
-            leaf = pa.Array.from_buffers(
-                pa.binary(k), n_elems, [elem_validity, pa.py_buffer(full.tobytes())]
-            )
+            leaf = pa.Array.from_buffers(pa.binary(k), len(vals), [None, pa.py_buffer(vals.tobytes())])
     elif ptype == "BOOLEAN":
         vals = (
             np.concatenate([np.asarray(p, dtype=bool) for p in fixed_parts])
             if fixed_parts
             else np.zeros(0, dtype=bool)
         )
-        full = np.zeros(n_elems, dtype=bool)
-        full[elem_valid] = vals
-        leaf = pa.array(full, type=pa.bool_(), mask=~elem_valid if elem_nullable else None)
+        leaf = pa.array(vals, type=pa.bool_())
     else:
-        vals = np.concatenate(fixed_parts) if fixed_parts else np.zeros(0, dtype=_FIXED_DTYPES[ptype])
-        full = np.zeros(n_elems, dtype=_FIXED_DTYPES[ptype])
-        full[elem_valid] = vals
-        if elem_logical.startswith("decimal("):
-            p, s = _parse_decimal(elem_logical)
-            leaf = _int_to_decimal(full, elem_valid, elem_nullable, p, s)
-        else:
-            leaf = pa.array(full, mask=~elem_valid if elem_nullable else None)
-    target = _elem_pa_type(elem_logical, type_length)
+        dtype = _FIXED_DTYPES[ptype]
+        vals = np.concatenate(fixed_parts).astype(dtype, copy=False) if fixed_parts else np.zeros(0, dtype=dtype)
+        leaf = _int_to_decimal(vals, *decimal) if decimal else pa.array(vals)
+    target = _elem_pa_type(logical, type_length)
     if leaf.type != target:
         leaf = leaf.cast(target)
     return leaf
-
-
-def _decode_list(chunk: EncodedChunk) -> pa.Array:
-    """list<prim> / list<list<prim>> chunk -> arrow, by Dremel assembly
-    (record_reader.hh:469-505) with the chunk's OPTIONAL flags
-    (``optional_flags``, the rule the container writer's schema follows).
-
-    A list leaf read from a standard file can sit under extra OPTIONAL
-    levels (a field of a list<struct>); every def between the element slot
-    and max_def then collapses to a null element."""
-    n_lists = chunk.max_rep
-    paths = _list_paths(n_lists)
-    flags = optional_flags(chunk)
-    opts = dict(zip(paths, flags))
-    d_elem = n_lists + sum(flags[:-1])  # def of an element slot
-    leaf_max_def = d_elem + chunk.elem_nullable
-    def_, rep, vals = _decode_dremel_leaf(chunk, chunk.logical[5 * n_lists : -n_lists])
-    if chunk.max_def > leaf_max_def:
-        def_ = np.where(def_ >= chunk.max_def, leaf_max_def, np.minimum(def_, d_elem))
-    tree = ("leaf", vals.type)
-    for _ in range(n_lists):
-        tree = ("list", tree)
-    leaf = Leaf(paths[-1], vals, def_, rep, leaf_max_def, n_lists)
-    return assemble_tree(tree, {paths[-1]: leaf}, chunk.num_rows, opts)
 
 
 # ---------------------------------------------------------------------------
@@ -1435,15 +1389,13 @@ def _encode_leaf(
 
 
 def _decode_dremel_leaf(chunk: "EncodedChunk", leaf_logical: str):
-    """Leaf chunk pages -> (def levels, rep levels, non-null typed values)."""
-    def_, rep, parts = _read_pages(chunk, chunk.max_def)
+    """Leaf chunk pages -> (def levels, rep levels, non-null typed values);
+    the def levels are read against ``effective_max_def``."""
+    def_, rep, parts = _read_pages(chunk, effective_max_def(chunk))
     if rep is None:
         rep = np.zeros(len(def_), dtype=np.uint32)
-    nn = int((def_ == chunk.max_def).sum())
-    vals = _build_leaf_array(
-        chunk.ptype, leaf_logical, chunk.type_length, False, np.ones(nn, dtype=bool), nn, *parts
-    )
-    return def_.astype(np.uint32), rep.astype(np.uint32), vals
+    vals = _build_leaf_array(chunk.ptype, leaf_logical, chunk.type_length, *parts)
+    return def_.astype(np.uint32, copy=False), rep.astype(np.uint32, copy=False), vals
 
 
 def decode_dremel_column(chunks: dict[str, "EncodedChunk"]) -> pa.Array:

@@ -441,7 +441,6 @@ def decode_table(
     encoded: DataFrame,
     columns: list[str],
     *,
-    schema: dict[str, str] | None = None,
     include_part_key: bool = False,
 ) -> DataFrame:
     """Decode the given columns from a pages DataFrame.
@@ -449,8 +448,6 @@ def decode_table(
     Returns a DataFrame (row_id, *columns).  Output types follow the chunk
     metadata (logical types), taken from the first of:
 
-    - ``schema`` (leaf name -> logical type, or -> (logical, type_length)
-      for FLBA leaves);
     - the decoded schema encode_table records on the frame's ``logical``
       field (``DECODED_SCHEMA_KEY``), when it covers row_id and every
       requested column.  It survives filters, selects, prune_chunks,
@@ -470,46 +467,39 @@ def decode_table(
     and AGAIN for the decode pass.  So when the pages frame is COMPUTED
     (its plan contains a Python stage, i.e. it chains straight off
     encode_table) and the caller has not already persisted it, it is
-    persisted here (lazily) whenever ``schema`` is not given -- the
-    round-trip queries' repeat runs hit Spark's cache through it.  A
-    storage-backed frame (plain file scan — the 100 TB deployment shape)
-    is NOT persisted: discovery's kind='chunk' filter pushes down to the
-    scan and touches only the tiny chunk rows, and caching the full pages
-    table would block exactly that pushdown.
+    persisted here (lazily) -- the round-trip queries' repeat runs hit
+    Spark's cache through it.  A storage-backed frame (plain file scan —
+    the 100 TB deployment shape) is NOT persisted: discovery's
+    kind='chunk' filter pushes down to the scan and touches only the tiny
+    chunk rows, and caching the full pages table would block exactly that
+    pushdown.
     """
     # nested columns are stored as '<col>#g<i>' dremel leaf chunks
     name_filter = F.col("column").isin(["row_id", *columns])
     for c in columns:
         name_filter = name_filter | F.col("column").startswith(f"{c}#g")
 
+    lvl = encoded.storageLevel
+    try:
+        plan_str = encoded._jdf.queryExecution().analyzed().toString()
+        computed = (
+            "MapInArrow" in plan_str
+            or "MapInPandas" in plan_str
+            or "FlatMapGroupsIn" in plan_str
+            or "pythonUDF" in plan_str
+        )
+    except Exception:  # plan introspection is best-effort: persisting a
+        computed = True  # storage-backed frame is wasteful but correct
+    if computed and not (lvl.useMemory or lvl.useDisk):
+        encoded = encoded.persist()
+    schema = _planned_schema(encoded, columns)
     if schema is None:
-        lvl = encoded.storageLevel
-        try:
-            plan_str = encoded._jdf.queryExecution().analyzed().toString()
-            computed = (
-                "MapInArrow" in plan_str
-                or "MapInPandas" in plan_str
-                or "FlatMapGroupsIn" in plan_str
-                or "pythonUDF" in plan_str
-            )
-        except Exception:  # plan introspection is best-effort: persisting a
-            computed = True  # storage-backed frame is wasteful but correct
-        if computed and not (lvl.useMemory or lvl.useDisk):
-            encoded = encoded.persist()
-        schema = _planned_schema(encoded, columns)
-        if schema is None:
-            schema = {
-                r["column"]: (r["logical"], int(r["type_length"] or 0))
-                for r in encoded.filter((F.col("kind") == "chunk") & name_filter)
-                .select("column", "logical", "type_length")
-                .distinct()
-                .collect()
-            }
-    else:
-        # values may be 'logical' or ('logical', type_length) -- FLBA leaves
-        # need the width to build their target type
         schema = {
-            c: (v if isinstance(v, tuple) else (v, 0)) for c, v in schema.items()
+            r["column"]: (r["logical"], int(r["type_length"] or 0))
+            for r in encoded.filter((F.col("kind") == "chunk") & name_filter)
+            .select("column", "logical", "type_length")
+            .distinct()
+            .collect()
         }
     pages = encoded.filter((F.col("kind") == "page") & name_filter)
 

@@ -44,16 +44,53 @@ from ..codecs.pages import (
     pa_ptype,
 )
 
-ENCODED_SCHEMA = (
-    "kind string, part_key string, chunk_id string, column string, chunk_seq int, "
-    "page_idx int, page_kind string, encoding string, num_values long, num_non_null long, "
-    "uncompressed_size long, compressed_size long, data binary, "
-    "ptype string, logical string, nullable boolean, num_rows long, num_nulls long, "
-    "cardinality long, encodings string, compression string, type_length int, "
-    "input_bytes long, encoded_bytes long, sha256 string, n_pages int, "
-    "max_def int, max_rep int, elem_nullable boolean, "
-    "stat_min_num double, stat_max_num double, stat_min_bin binary, stat_max_bin binary, "
-    "salt_buckets int, bloom array<long>"
+# the pages frame: one row per page and one lineage row per chunk (kind).
+# Declared once, in arrow: encode tasks build their batches from it without
+# a JVM, and _encoded_schema derives the Spark schema from it.
+ENCODED_SCHEMA = pa.schema(
+    [
+        ("kind", pa.string()),
+        ("part_key", pa.string()),
+        ("chunk_id", pa.string()),
+        ("column", pa.string()),
+        ("chunk_seq", pa.int32()),
+        ("page_idx", pa.int32()),
+        ("page_kind", pa.string()),
+        ("encoding", pa.string()),
+        ("num_values", pa.int64()),
+        ("num_non_null", pa.int64()),
+        ("uncompressed_size", pa.int64()),
+        ("compressed_size", pa.int64()),
+        ("data", pa.binary()),
+        ("ptype", pa.string()),
+        ("logical", pa.string()),
+        ("nullable", pa.bool_()),
+        ("num_rows", pa.int64()),
+        ("num_nulls", pa.int64()),
+        ("cardinality", pa.int64()),
+        ("encodings", pa.string()),
+        ("compression", pa.string()),
+        ("type_length", pa.int32()),
+        ("input_bytes", pa.int64()),
+        ("encoded_bytes", pa.int64()),
+        ("sha256", pa.string()),
+        ("n_pages", pa.int32()),
+        ("max_def", pa.int32()),
+        ("max_rep", pa.int32()),
+        ("elem_nullable", pa.bool_()),
+        ("stat_min_num", pa.float64()),
+        ("stat_max_num", pa.float64()),
+        ("stat_min_bin", pa.binary()),
+        ("stat_max_bin", pa.binary()),
+        # the salt-bucket count of this part_key's key, recorded so
+        # verify can rebuild part keys without inferring the modulus
+        # from observed salts (a zero-row top bucket would undercount
+        # and trip a spurious whole-table mismatch)
+        ("salt_buckets", pa.int32()),
+        # equality-pruning bloom (prune_chunks eq=...); None when the
+        # column/chunk is outside the bloom caps (codecs/bloom.py)
+        ("bloom", pa.list_(pa.int64())),
+    ]
 )
 
 DATA_COLUMNS = ["repo", "path", "commit", "lang", "content"]
@@ -114,9 +151,6 @@ def salted_repartition(
     return salted.repartition(num_partitions, "part_key")
 
 
-_OUT_SCHEMA_PA = None
-
-
 def _payload_column(payloads) -> pa.Array:
     """Binary column from page payloads (bytes | None), built directly on
     arrow buffers: one vectorized memcpy per payload into the final buffer,
@@ -150,57 +184,6 @@ def _payload_column(payloads) -> pa.Array:
         [validity, pa.py_buffer(offsets64.astype(np.int32)), pa.py_buffer(buf)],
         null_count=null_count if null_count else 0,
     )
-
-
-def _out_schema_pa() -> pa.Schema:
-    global _OUT_SCHEMA_PA
-    if _OUT_SCHEMA_PA is None:
-        _OUT_SCHEMA_PA = pa.schema(
-            [
-                ("kind", pa.string()),
-                ("part_key", pa.string()),
-                ("chunk_id", pa.string()),
-                ("column", pa.string()),
-                ("chunk_seq", pa.int32()),
-                ("page_idx", pa.int32()),
-                ("page_kind", pa.string()),
-                ("encoding", pa.string()),
-                ("num_values", pa.int64()),
-                ("num_non_null", pa.int64()),
-                ("uncompressed_size", pa.int64()),
-                ("compressed_size", pa.int64()),
-                ("data", pa.binary()),
-                ("ptype", pa.string()),
-                ("logical", pa.string()),
-                ("nullable", pa.bool_()),
-                ("num_rows", pa.int64()),
-                ("num_nulls", pa.int64()),
-                ("cardinality", pa.int64()),
-                ("encodings", pa.string()),
-                ("compression", pa.string()),
-                ("type_length", pa.int32()),
-                ("input_bytes", pa.int64()),
-                ("encoded_bytes", pa.int64()),
-                ("sha256", pa.string()),
-                ("n_pages", pa.int32()),
-                ("max_def", pa.int32()),
-                ("max_rep", pa.int32()),
-                ("elem_nullable", pa.bool_()),
-                ("stat_min_num", pa.float64()),
-                ("stat_max_num", pa.float64()),
-                ("stat_min_bin", pa.binary()),
-                ("stat_max_bin", pa.binary()),
-                # the salt-bucket count of this part_key's key, recorded so
-                # verify can rebuild part keys without inferring the modulus
-                # from observed salts (a zero-row top bucket would undercount
-                # and trip a spurious whole-table mismatch)
-                ("salt_buckets", pa.int32()),
-                # equality-pruning bloom (prune_chunks eq=...); None when the
-                # column/chunk is outside the bloom caps (codecs/bloom.py)
-                ("bloom", pa.list_(pa.int64())),
-            ]
-        )
-    return _OUT_SCHEMA_PA
 
 
 def _leaf_dispatch(col: str, t: pa.DataType, fixed_len) -> tuple[pa.DataType, bool]:
@@ -334,7 +317,7 @@ def _encode_partition_factory(
                 chunk_id = hashlib.sha1(f"{part_key}|{col}|{seq}".encode()).hexdigest()[:20]
                 encs = ",".join(chunk.encodings)
                 for pi, page in enumerate(chunk.pages):
-                    # field order = _out_schema_pa()
+                    # field order = ENCODED_SCHEMA
                     rows.append((
                         "page", part_key, chunk_id, col, seq, pi,
                         page.kind, page.encoding, page.num_values,
@@ -362,16 +345,15 @@ def _encode_partition_factory(
                     salt_buckets,
                     chunk.bloom.tolist() if chunk.bloom is not None else None,
                 ))
-            schema = _out_schema_pa()
             by_field = list(zip(*rows))
-            data_idx = schema.get_field_index("data")
+            data_idx = ENCODED_SCHEMA.get_field_index("data")
             arrays = []
-            for i, f in enumerate(schema):
+            for i, f in enumerate(ENCODED_SCHEMA):
                 if i == data_idx:
                     arrays.append(_payload_column(by_field[i]))
                 else:
                     arrays.append(pa.array(list(by_field[i]), type=f.type))
-            return pa.RecordBatch.from_arrays(arrays, schema=schema)
+            return pa.RecordBatch.from_arrays(arrays, schema=ENCODED_SCHEMA)
 
         for rb in batches:
             t = pa.Table.from_batches([rb])
@@ -516,11 +498,11 @@ def encode_table(
 
 def _encoded_schema(df: DataFrame, columns: list[str], fixed_len) -> StructType:
     """ENCODED_SCHEMA with the decoded schema recorded on ``logical``."""
-    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
     types = {c: to_arrow_type(df.schema[c].dataType) for c in ["row_id", *columns]}
     plan = {DECODED_SCHEMA_KEY: json.dumps(decoded_schema(types, fixed_len))}
     return StructType([
         StructField(f.name, f.dataType, f.nullable, plan if f.name == "logical" else None)
-        for f in StructType.fromDDL(ENCODED_SCHEMA)
+        for f in from_arrow_schema(ENCODED_SCHEMA)
     ])

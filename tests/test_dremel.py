@@ -16,6 +16,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from parquet4seastar_spark.codecs.dremel import (
     Leaf,
     assemble,
+    assemble_tree,
     build_tree,
     leaf_paths,
     shred,
@@ -260,3 +261,31 @@ def test_shred_required_nodes():
         shred(sarr, {"sa": False})
     (ok,) = shred(sarr, {"": False})
     assert ok.max_def == 1 and ok.def_.tolist() == [1, 0]
+
+
+def test_flat_string_leaf_reuses_decoded_values():
+    """A leaf's k-th valid slot holds its k-th value: a flat leaf with no
+    nulls assembles to its decoded values array itself, and a string leaf
+    with nulls gathers only its offsets, sharing the values' data buffer."""
+    from parquet4seastar_spark.codecs.pages import _decode_dremel_leaf, encode_chunk
+
+    dense = encode_chunk(pa.array(["a", "bb", "", "ccc"]))
+    def_, rep, vals = _decode_dremel_leaf(dense, "string")
+    leaf = Leaf("", vals, def_, rep, dense.max_def, 0)
+    assert assemble_tree(("leaf", vals.type), {"": leaf}, 4, {"": False}) is vals
+
+    arr = pa.array(["a", None, "bb", "", None, "ccc"])
+    def_, rep, vals = _decode_dremel_leaf(encode_chunk(arr), "string")
+    out = assemble_tree(("leaf", vals.type), {"": Leaf("", vals, def_, rep, 1, 0)}, 6)
+    assert out.equals(arr)
+    assert out.buffers()[2].address == vals.buffers()[2].address
+
+    # a sliced values array reads its own offsets
+    tail = pa.array(["x", "a", "bb"]).slice(1)
+    levels = np.array([1, 0, 1], dtype=np.uint32)
+    leaf = Leaf("", tail, levels, np.zeros(3, dtype=np.uint32), 1, 0)
+    assert assemble_tree(("leaf", tail.type), {"": leaf}, 3).to_pylist() == ["a", None, "bb"]
+    # more valid slots than values is a corrupt leaf, not a silent shift
+    leaf = Leaf("", tail, np.ones(3, dtype=np.uint32), np.zeros(3, dtype=np.uint32), 1, 0)
+    with pytest.raises(ValueError, match="3 valid slots for 2 values"):
+        assemble_tree(("leaf", tail.type), {"": leaf}, 3)

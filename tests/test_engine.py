@@ -879,6 +879,8 @@ def test_decoded_schema_map_equals_discovery(spark):
     import datetime
     import decimal
 
+    from pyspark.sql.types import StructType
+
     from parquet4seastar_spark.engine.decode_job import decode_table
 
     t0 = datetime.datetime(2022, 1, 2, 3, 4, 5, 6)
@@ -906,6 +908,20 @@ def test_decoded_schema_map_equals_discovery(spark):
         salt_target_rows=50, fixed_len={"fl": 3},
     ).persist()
     planned = _planned_map(enc)
+    # the pages frame's fields, declared once in arrow (ENCODED_SCHEMA)
+    assert [(f.name, f.dataType, f.nullable) for f in enc.schema] == [
+        (f.name, f.dataType, f.nullable) for f in StructType.fromDDL(
+            "kind string, part_key string, chunk_id string, column string, chunk_seq int, "
+            "page_idx int, page_kind string, encoding string, num_values long, "
+            "num_non_null long, uncompressed_size long, compressed_size long, data binary, "
+            "ptype string, logical string, nullable boolean, num_rows long, num_nulls long, "
+            "cardinality long, encodings string, compression string, type_length int, "
+            "input_bytes long, encoded_bytes long, sha256 string, n_pages int, "
+            "max_def int, max_rep int, elem_nullable boolean, stat_min_num double, "
+            "stat_max_num double, stat_min_bin binary, stat_max_bin binary, "
+            "salt_buckets int, bloom array<long>"
+        )
+    ]
     assert planned == _discovered_map(enc)
     assert planned["fl"] == ("flba", 3) and planned["dec_flba"] == ("decimal(25,2)", 11)
     assert {n for n in planned if "#g" in n} >= {"ll#g0", "st#g1", "m#g1", "ls#g1"}

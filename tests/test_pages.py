@@ -3,6 +3,8 @@
 (tests/column_chunk_writer_test.cc:41-108), fallback semantics
 (src/encoding.cc:801-845), selector adversarial inputs (FIXTURES.md §4)."""
 
+import dataclasses
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -128,6 +130,10 @@ def test_roundtrip_types(arr, policy):
     chunk = encode_chunk(arr, policy=policy, page_target_bytes=16)
     out = decode_chunk(chunk)
     assert out.to_pylist() == arr.to_pylist()
+    # max_def = -1 (a flat chunk that records no level geometry) reads its
+    # def levels from ``nullable``
+    legacy = dataclasses.replace(chunk, max_def=-1)
+    assert decode_chunk(legacy).to_pylist() == arr.to_pylist()
 
 
 @pytest.mark.parametrize("codec", ["PLAIN", "DELTA_BINARY_PACKED"])
