@@ -681,15 +681,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Self-contained integrity audit: decode every chunk, recompute the
         content sha256, compare to lineage.  On an uncorrupted table the
         output is deterministic (n_bad = 0 everywhere; n_chunks = one chunk
-        per salt part_key = count(distinct source)), so it is SQL-oracled."""
+        per part key: the salt buckets of the sources above the salt target
+        plus the packed bins of salted_repartition's running-sum rule over
+        the rest), so it is SQL-oracled."""
         from parquet4seastar_spark.engine.encode_job import encode_table
         from parquet4seastar_spark.engine.verify import audit_lineage
 
         enc = encode_table(
             _docs_src(spark, sf_dir), columns=["text", "lang", "n_chars"],
             policy="auto", salt_col="source", num_partitions=4,
-            # one salt bucket per key at ANY sf (see encode_metrics_documents)
-            salt_target_rows=1 << 30,
+            # several chunks at any sf (see encode_metrics_documents)
+            salt_target_rows=300,
         )
         return (
             audit_lineage(enc)
@@ -746,7 +748,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["roundtrip_events"] = roundtrip_events
 
     # ---- metrics: the INPUT-side lineage numbers (rows, nulls, PLAIN-size
-    # input_bytes, chunk count = one chunk per (salt key, bucket)) are
+    # input_bytes, chunk count = one chunk per part key) are
     # deterministic and SQL-oracled; the compression-side numbers
     # (encoded_bytes/ratio/encodings) are Spark-only and projected out of
     # the checked projection (they stay visible via entry()/bench)
@@ -757,9 +759,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         enc = encode_table(
             _docs_src(spark, sf_dir), columns=["text", "lang", "source", "n_chars"],
             policy="auto", salt_col="source", num_partitions=4,
-            # one salt bucket per key at ANY sf: the oracle's chunk count
-            # (= distinct sources) must not depend on the gate's data scale
-            salt_target_rows=1 << 30,
+            # a few hundred rows: small sources pack into several bins, and
+            # big ones (sf1: 2,500 rows a source) split into buckets of
+            # ~280 rows, none of them empty, so the oracle's chunk count
+            # does not depend on xxhash64 routing
+            salt_target_rows=300,
         )
         return metrics_summary(enc).select("column", "rows", "nulls", "input_bytes", "chunks")
 
@@ -1577,10 +1581,31 @@ def oracle_sql() -> dict[str, str]:
         FROM all_docs a JOIN all_docs b
           ON a.text = b.text AND a.doc_id < b.doc_id AND b.doc_id >= 1000000
     """
-    # lineage audit on an uncorrupted table: one chunk per salt part_key
-    # (= distinct source values; the sf tables are far below one chunk
-    # target per key), zero sha mismatches
-    _audit_k = "(SELECT CAST(count(DISTINCT source) AS BIGINT) FROM documents)"
+    # lineage audit on an uncorrupted table: one chunk per part key (the sf
+    # tables are far below one chunk target per key), zero sha mismatches.
+    # The part keys are salted_repartition's: a source above the target is
+    # split into ceil(rows / target) buckets; the rest are packed, over the
+    # sources ordered by rows desc, into bin = floor((running rows - 1) /
+    # pack), pack = min(target, ceil(small rows / MIN_PACKED_BINS = 8)).  Ties
+    # in rows leave the running sums, and so the bin count, unchanged.
+    _pack_target = 300
+    _packed_bins = f"""(
+        WITH sizes AS (SELECT count(*) AS n FROM documents GROUP BY source),
+        small AS (
+            SELECT sum(n) OVER (ORDER BY n DESC ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND CURRENT ROW) AS cum
+            FROM sizes WHERE n <= {_pack_target}
+        ),
+        pack AS (
+            SELECT least({_pack_target}, greatest(1, ceil(coalesce(sum(n), 0) / 8.0))) AS p
+            FROM sizes WHERE n <= {_pack_target}
+        )
+        SELECT CAST(
+            (SELECT count(DISTINCT floor(greatest(cum - 1, 0) / p)) FROM small, pack)
+            + (SELECT coalesce(sum(ceil(n / {_pack_target})), 0) FROM sizes WHERE n > {_pack_target})
+        AS BIGINT)
+    )"""
+    _audit_k = _packed_bins
     o["lineage_audit"] = " UNION ALL ".join(
         f"SELECT '{c}' AS \"column\", {_audit_k} AS n_chunks, CAST(0 AS BIGINT) AS n_bad"
         for c in ["lang", "n_chars", "row_id", "text"]
@@ -1588,7 +1613,7 @@ def oracle_sql() -> dict[str, str]:
     # encode metrics, input side: rows/nulls/PLAIN input_bytes/chunk count
     # are all derivable from the source table (compression metrics are
     # Spark-only and projected out of the checked projection)
-    _m_k = "(SELECT CAST(count(DISTINCT source) AS BIGINT) FROM documents)"
+    _m_k = _packed_bins
     _m_rows = "(SELECT CAST(count(*) AS BIGINT) FROM documents)"
     o["encode_metrics_documents"] = " UNION ALL ".join(
         f"SELECT '{c}' AS \"column\", {_m_rows} AS \"rows\", CAST(0 AS BIGINT) AS nulls, "

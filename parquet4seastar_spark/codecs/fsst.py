@@ -58,17 +58,24 @@ class SymbolTable:
         self.lens_by_code[_SENTINEL] = 1
         self.lut1 = np.full(256, _ESCAPE, dtype=np.uint8)
         self.lut2 = np.full(65536, _SENTINEL, dtype=np.uint8)
-        for code in range(self.n):
-            ln = int(self.lengths[code])
-            v = int(self.values[code])
-            if ln == 1:
-                self.lut1[v & 0xFF] = code
-            else:
-                prefix = v & 0xFFFF
-                # keep the longest symbol per prefix (ties: first=highest gain)
-                cur = int(self.lut2[prefix])
-                if cur == _SENTINEL or int(self.lens_by_code[cur]) < ln:
-                    self.lut2[prefix] = code
+        codes = np.arange(self.n, dtype=np.int64)
+        one = self.lengths == 1
+        if one.any():
+            # a repeated 1-byte value keeps its LAST code (plain assignment
+            # order): the first occurrence in the reversed arrays
+            b, c = (self.values[one] & np.uint64(0xFF)).astype(np.int64)[::-1], codes[one][::-1]
+            ub, first = np.unique(b, return_index=True)
+            self.lut1[ub] = c[first]
+        multi = ~one
+        if multi.any():
+            # the longest symbol per 2-byte prefix, ties to the first
+            # (highest-gain) code: sort by (prefix, length desc, code) and
+            # keep each prefix's first entry
+            pre = (self.values[multi] & np.uint64(0xFFFF)).astype(np.int64)
+            ln, c = self.lengths[multi], codes[multi]
+            order = np.lexsort((c, -ln, pre))
+            up, first = np.unique(pre[order], return_index=True)
+            self.lut2[up] = c[order][first]
         # decode support: matrix of symbol bytes in code order (little-endian
         # byte k of each value; rows >= n stay zero -- the escape row's
         # zeros are load-bearing for decode)
@@ -94,13 +101,15 @@ class SymbolTable:
     def deserialize(buf) -> tuple["SymbolTable", int]:
         n = buf[0]
         lens = np.frombuffer(buf, dtype=np.uint8, count=n, offset=1).astype(np.int64)
+        if n and int(lens.max()) > _MAX_LEN:
+            raise ValueError(f"FSST symbol table corrupt: a {int(lens.max())}-byte symbol")
+        total = int(lens.sum())
         pos = 1 + n
-        values = np.zeros(n, dtype=np.uint64)
-        for i in range(n):
-            ln = int(lens[i])
-            values[i] = int.from_bytes(bytes(buf[pos : pos + ln]), "little")
-            pos += ln
-        return SymbolTable(values, lens), pos
+        # symbol bytes scattered into little-endian 8-byte rows, one view
+        sym = np.frombuffer(buf, dtype=np.uint8, count=total, offset=pos)
+        rows = np.zeros((n, _MAX_LEN), dtype=np.uint8)
+        rows[np.repeat(np.arange(n), lens), np.arange(total) - np.repeat(np.cumsum(lens) - lens, lens)] = sym
+        return SymbolTable(rows.view("<u8").reshape(n), lens), pos + total
 
 
 def _windows(data: np.ndarray) -> np.ndarray:

@@ -3,22 +3,31 @@
 Spark-first architecture (SURVEY.md §3.1 re-architecture):
 
     input DF (row_id, repo, path, commit, lang, content)
-      -> salted repartition on repo (skew-aware, computed distributively)
+      -> salted repartition on repo (size-aware, computed distributively)
       -> mapInArrow(encode_partition): each partition plays the role of a
-         parquet row group; per column, per ~chunk_target_bytes slice, the
-         codec layer (codecs/pages.py) builds stats, auto-selects the codec,
-         and emits page rows + one chunk summary row
+         parquet row group; per part key, per ~chunk_target_bytes slice,
+         rows ordered by salt key, the codec layer (codecs/pages.py)
+         builds stats, auto-selects the codec per column, and emits page
+         rows + one chunk summary row
       -> one output DataFrame with kind in ('page', 'chunk')
 
 The chunk rows ARE the lineage/metrics table (chunk id, codec, bytes,
-sha256): written to parquet they give resumable re-runs via an anti-join on
-completed partition keys (north rule: per-partition checkpointed lineage).
+sha256, the salt keys a chunk holds): written to parquet they give
+resumable re-runs via anti-joins on the salt keys and part keys already
+stored (north rule: per-partition checkpointed lineage).
 
 Scale notes:
-- the salt factor is computed with a groupBy(repo) aggregate joined back
-  (broadcast when small) -- no driver-side collect, works at 10^12 rows;
-- a jumbo repo is split into ceil(bytes / salt_target_bytes) salt buckets,
-  so no single task serializes the job (Zipf skew, FIXTURES.md §1);
+- the layout is computed with a groupBy(repo) size aggregate, binned by
+  a running sum and joined back (broadcast when small) -- no driver-side
+  collect, works at 10^12 rows (the running sum is one task over the
+  one-row-per-repo table: PLANS.md §1);
+- a part key holds about one salt target: a jumbo repo is split into
+  ceil(size / target) salt buckets, so no single task serializes the job
+  (Zipf skew, FIXTURES.md §1), and repos at or below the target are
+  packed whole into shared part keys, so the fixed per-chunk codec cost
+  (FSST training, trial encodes, sample gathers) is paid per target, not
+  per repo (a table under MIN_PACKED_BINS targets still gets about that
+  many part keys, so it does not encode in one task);
 - arrow end-to-end: mapInArrow in, RecordBatch out -- column values never
   materialize as Python objects (no per-row Python anywhere).
 """
@@ -32,6 +41,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -90,6 +100,10 @@ ENCODED_SCHEMA = pa.schema(
         # equality-pruning bloom (prune_chunks eq=...); None when the
         # column/chunk is outside the bloom caps (codecs/bloom.py)
         ("bloom", pa.list_(pa.int64())),
+        # the salt keys whose rows this chunk holds, sorted (chunk rows of
+        # the salted layout; None on pages and positional layouts): the
+        # key -> part_key map verify and resume rebuild part keys from
+        ("salt_keys", pa.list_(pa.string())),
     ]
 )
 
@@ -107,6 +121,17 @@ DECODED_SCHEMA_KEY = "p4s.decoded_schema"
 NULL_SALT_KEY = "\x00null"
 
 
+# packed part keys: '<PACKED_BASE><bin>#0'.  The '\x00' prefix keeps the
+# label out of any realistic salt value space, as NULL_SALT_KEY does, and
+# 'p' keeps it apart from that sentinel.
+PACKED_BASE = "\x00p"
+
+# a table whose small keys total under this many salt targets is packed
+# into about this many bins, not one: packing a small table whole would
+# run its encode in one task
+MIN_PACKED_BINS = 8
+
+
 def salted_repartition(
     df: DataFrame,
     num_partitions: int,
@@ -114,40 +139,99 @@ def salted_repartition(
     size_col: str = "content",
     salt_col: str = "repo",
     salt_target_rows: int | None = None,
+    resume_lineage: DataFrame | None = None,
 ) -> DataFrame:
-    """Repartition by (repo, salt) where jumbo repos get split into
-    ceil(repo_bytes / salt_target_bytes) buckets.
+    """Repartition so that each part key holds about one salt target of
+    rows (``salt_target_rows``) or bytes of ``size_col``
+    (``salt_target_bytes``), in both directions:
 
-    The per-repo sizes are a distributed aggregate joined back (broadcast:
-    the repo-size table has one row per repo, tiny relative to the data);
-    rows are routed with a deterministic hash of (path, commit) so a re-run
-    produces identical partitions.
+    - a salt key above the target is split into ceil(size / target) salt
+      buckets, '<key>#<salt>', rows routed by pmod(xxhash64(row_id));
+    - keys at or below the target are packed whole into shared part keys
+      '\\x00p<bin>#0' (salt_buckets = 1): over the small keys ordered by
+      (size desc, key), ``bin = floor((cum - 1) / pack)`` where ``cum`` is
+      the running size sum and ``pack = min(target, ceil(small total /
+      MIN_PACKED_BINS))``, so a small table still spreads over about
+      MIN_PACKED_BINS part keys.  A bin holds under two targets; a bin
+      number may go unused when a key is bigger than ``pack``.
+
+    The per-key sizes are one distributed aggregate, binned by a running
+    sum over that one-row-per-key table and joined back by broadcast: no
+    driver collect, no extra job.  Part keys depend only on the size table
+    and the target, never on ``num_partitions``, so a re-run over the same
+    rows produces the same keys.  The running sum is a window with no
+    partitioning, so the size table is binned in one task (PLANS.md §1).
+
+    ``resume_lineage`` (chunk rows with ``salt_keys``): a salt key recorded
+    in a packed chunk is done whole and its rows are dropped before the
+    sizes are taken; the remaining small keys are binned after the
+    lineage's highest bin, so no new part key equals a stored one; a split
+    key's buckets that the lineage holds are dropped by part key.  The
+    rows of keys the lineage holds are assumed unchanged.  The highest
+    bin is one aggregate row collected to the driver.
+
+    The output keeps ``_skey``, the row's salt key (NULL_SALT_KEY for a
+    null), so the encode can order each chunk's rows by key and record
+    which keys a chunk holds.
     """
+    from pyspark.sql import Window
+
     # null-keyed rows group under a sentinel: a raw equi-join on salt_col
     # would silently drop them (null never joins null)
     skey = F.coalesce(F.col(salt_col).cast("string"), F.lit(NULL_SALT_KEY))
     keyed = df.withColumn("_skey", skey)
+    first_bin = 0
+    if resume_lineage is not None:
+        done = resume_lineage.filter(F.col("kind") == "chunk")
+        packed_done = done.filter(F.col("part_key").startswith(PACKED_BASE))
+        keys_done = packed_done.select(F.explode("salt_keys").alias("_skey")).distinct()
+        keyed = keyed.join(F.broadcast(keys_done), "_skey", "left_anti")
+        bin_no = F.substring_index(
+            F.expr(f"substring(part_key, {len(PACKED_BASE) + 1})"), "#", 1
+        ).cast("long")
+        # one aggregate row, collected: the offset is a literal in the plan
+        last_bin = packed_done.agg(F.max(bin_no)).first()[0]
+        first_bin = 0 if last_bin is None else last_bin + 1
     if salt_target_rows is not None:
         # row-count salting: scans only the key column (cheap); row count is
         # a good skew proxy when row sizes are iid within a key
         sizes = keyed.groupBy("_skey").agg(F.count(F.lit(1)).alias("_repo_size"))
-        target = F.lit(salt_target_rows)
+        target = salt_target_rows
     else:
         sizes = keyed.groupBy("_skey").agg(
             F.sum(F.coalesce(F.octet_length(size_col), F.lit(0))).alias("_repo_size")
         )
-        target = F.lit(salt_target_bytes)
-    sizes = sizes.withColumn(
-        "_salt_buckets",
-        F.greatest(F.lit(1), F.ceil(F.col("_repo_size") / target)).cast("int"),
-    ).drop("_repo_size")
-    salted = (
-        keyed.join(F.broadcast(sizes), "_skey")
-        .withColumn("_salt", F.pmod(F.xxhash64("row_id"), F.col("_salt_buckets")).cast("int"))
-        .withColumn("part_key", F.concat_ws("#", F.col("_skey"), F.col("_salt")))
-        .withColumnRenamed("_salt_buckets", "salt_buckets")
-        .drop("_salt", "_skey")
+        target = salt_target_bytes
+    size = F.col("_repo_size")
+    small = size <= F.lit(target)
+    small_size = F.when(small, size).otherwise(F.lit(0))
+    # one window over the whole size table (one row per key).  coalesce(1)
+    # runs the final aggregate, the sort and the running sum in one task
+    # of the aggregate's stage: a window's own exchange to one partition
+    # would cost the broadcast one more job.  Spark warns that the window
+    # has no partition: on one row per key, that is the intent.
+    sizes = sizes.coalesce(1)
+    ordered = Window.orderBy(F.desc("_repo_size"), "_skey")
+    cum = F.sum(small_size).over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    total = F.sum(small_size).over(
+        ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
+    pack = F.least(F.lit(target), F.greatest(F.lit(1), F.ceil(total / F.lit(MIN_PACKED_BINS))))
+    packed_bin = F.floor(F.greatest(cum - 1, F.lit(0)) / pack) + F.lit(first_bin)
+    sizes = sizes.select(
+        "_skey",
+        F.when(small, F.concat(F.lit(PACKED_BASE), packed_bin.cast("string")))
+        .otherwise(F.col("_skey"))
+        .alias("_base"),
+        F.when(small, F.lit(1)).otherwise(F.ceil(size / F.lit(target))).cast("int").alias("salt_buckets"),
+    )
+    salted = keyed.join(F.broadcast(sizes), "_skey").withColumn(
+        "part_key",
+        F.concat_ws("#", "_base", F.pmod(F.xxhash64("row_id"), F.col("salt_buckets")).cast("int")),
+    ).drop("_base")
+    if resume_lineage is not None:
+        split_done = done.filter(~F.col("part_key").startswith(PACKED_BASE)).select("part_key").distinct()
+        salted = salted.join(F.broadcast(split_done), "part_key", "left_anti")
     return salted.repartition(num_partitions, "part_key")
 
 
@@ -244,25 +328,29 @@ def _encode_partition_factory(
             tbl = pa.concat_tables(tables).combine_chunks()
             # one chunk per (part_key) slice; the partition may hold several
             # part_keys after hash routing -- encode each separately so
-            # lineage stays per-(repo,salt).  Arrow-native group split:
-            # sort indices by key, slice runs.  A single-key slice (always
-            # true under map_only/cluster_by, common under salting) skips
-            # the sort + take entirely -- both are full-table memcpys of
-            # the value bytes.
+            # lineage stays per part key.  Inside a slice the rows are
+            # ordered by salt key (a stable sort), so each repo's rows are
+            # contiguous in a packed key's chunk.  Arrow-native group
+            # split: one sort by (part_key, _skey), one take, zero-copy
+            # slices of the runs.  A slice of one key and one salt key
+            # (always true under map_only/cluster_by, and for a split
+            # jumbo key) skips the sort + take: both are full-table
+            # memcpys of the value bytes.
             keys = tbl.column("part_key").combine_chunks().dictionary_encode()
-            if len(keys.dictionary) == 1:
+            if len(keys.dictionary) == 1 and pc.count_distinct(tbl.column("_skey")).as_py() <= 1:
                 key = keys.dictionary[0].as_py()
                 seq = chunk_seq_by_key.get(key, 0)
                 chunk_seq_by_key[key] = seq + 1
                 yield _encode_chunk_rows(tbl, key, seq)
                 return
-            order = pa.compute.sort_indices(tbl.column("part_key"))
+            order = pc.sort_indices(tbl, sort_keys=[("part_key", "ascending"), ("_skey", "ascending")])
+            tbl = tbl.take(order)
             np_keys = np.asarray(keys.indices.take(order))
             boundaries = np.flatnonzero(np.diff(np_keys)) + 1
             starts = np.concatenate([[0], boundaries])
             ends = np.concatenate([boundaries, [len(np_keys)]])
             for st, en in zip(starts.tolist(), ends.tolist()):
-                sub = tbl.take(order.slice(st, en - st))
+                sub = tbl.slice(st, en - st)
                 key = sub.column("part_key")[0].as_py()
                 seq = chunk_seq_by_key.get(key, 0)
                 chunk_seq_by_key[key] = seq + 1
@@ -270,6 +358,9 @@ def _encode_partition_factory(
 
         def _encode_chunk_rows(tbl: pa.Table, part_key: str, seq: int) -> pa.RecordBatch:
             salt_buckets = int(tbl.column("salt_buckets")[0].as_py())
+            skeys = tbl.column("_skey")
+            # rows arrive sorted by salt key, so unique() is sorted too
+            salt_keys = None if skeys.null_count == len(skeys) else pc.unique(skeys).to_pylist()
             # rows are field-order TUPLES (zip-transposed once at the end),
             # not per-row dicts; the page payload column is assembled
             # arrow-native from the payload buffers (one memcpy into the
@@ -328,7 +419,7 @@ def _encode_partition_factory(
                         encs, chunk.compression, chunk.type_length,
                         None, None, None, len(chunk.pages),
                         chunk.max_def, chunk.max_rep, chunk.elem_nullable,
-                        None, None, None, None, None, None,
+                        None, None, None, None, None, None, None,
                     ))
                 rows.append((
                     "chunk", part_key, chunk_id, col, seq, -1,
@@ -344,6 +435,7 @@ def _encode_partition_factory(
                     chunk.stat_max_num, chunk.stat_min_bin, chunk.stat_max_bin,
                     salt_buckets,
                     chunk.bloom.tolist() if chunk.bloom is not None else None,
+                    salt_keys,
                 ))
             by_field = list(zip(*rows))
             data_idx = ENCODED_SCHEMA.get_field_index("data")
@@ -391,8 +483,10 @@ def encode_table(
     lineage DataFrame (see ENCODED_SCHEMA).
 
     ``resume_lineage``: a previously written lineage table (kind='chunk'
-    rows); partitions whose part_key is already fully present are skipped
-    via a broadcast anti-join (north rule: resumable re-runs).
+    rows, with ``salt_keys``); the rows it already stores are skipped by
+    broadcast anti-joins, and the rest is encoded into part keys the
+    lineage does not hold (``salted_repartition``; north rule: resumable
+    re-runs).
 
     ``cluster_by``: range-clustered layout instead of salted hash
     partitioning — rows are range-partitioned AND sorted within partitions
@@ -426,6 +520,11 @@ def encode_table(
     """
     if map_only and (cluster_by is not None):
         raise ValueError("map_only and cluster_by are mutually exclusive")
+    if resume_lineage is not None and "salt_keys" not in resume_lineage.columns:
+        raise ValueError(
+            "resume_lineage has no salt_keys column: a lineage written "
+            "before packed part keys cannot say which keys are done"
+        )
     if map_only and resume_lineage is not None:
         raise ValueError(
             "resume_lineage cannot be combined with map_only: scan-split "
@@ -456,7 +555,7 @@ def encode_table(
     # engine-generated columns: an input column with one of these names
     # would otherwise surface as a deep AMBIGUOUS_REFERENCE inside the
     # salting plan instead of a clear error here
-    for c in ("part_key", "salt_buckets", "_salt", "_repo_size", "_skey"):
+    for c in ("part_key", "salt_buckets", "_repo_size", "_skey", "_base"):
         if c in df.columns:
             raise ValueError(
                 f"input column name {c!r} is reserved by the encode engine "
@@ -468,7 +567,7 @@ def encode_table(
         salted = df.withColumn(
             "part_key",
             F.concat(F.lit("m"), F.spark_partition_id().cast("string")),
-        ).withColumn("salt_buckets", F.lit(1))
+        ).withColumn("salt_buckets", F.lit(1)).withColumn("_skey", F.lit(None).cast("string"))
     elif cluster_by is not None:
         salted = (
             df.repartitionByRange(num_partitions, cluster_by)
@@ -478,20 +577,19 @@ def encode_table(
                 F.concat(F.lit("r"), F.spark_partition_id().cast("string")),
             )
             .withColumn("salt_buckets", F.lit(1))
+            .withColumn("_skey", F.lit(None).cast("string"))
         )
     else:
         if size_col is None:
             size_col = "content" if "content" in df.columns else columns[-1]
         salted = salted_repartition(
-            df, num_partitions, salt_target_bytes, size_col, salt_col, salt_target_rows
+            df, num_partitions, salt_target_bytes, size_col, salt_col, salt_target_rows,
+            resume_lineage,
         )
-    if resume_lineage is not None:
-        done = resume_lineage.filter(F.col("kind") == "chunk").select("part_key").distinct()
-        salted = salted.join(F.broadcast(done), "part_key", "left_anti")
     fn = _encode_partition_factory(
         columns, policy, page_target_bytes, chunk_target_bytes, compression, fixed_len
     )
-    return salted.select("part_key", "salt_buckets", "row_id", *columns).mapInArrow(
+    return salted.select("part_key", "salt_buckets", "_skey", "row_id", *columns).mapInArrow(
         fn, schema=_encoded_schema(df, columns, fixed_len)
     )
 

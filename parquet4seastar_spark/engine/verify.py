@@ -50,14 +50,19 @@ def roundtrip_verify_fast(
     multiset hash, so row order inside a partition is irrelevant.
 
     - source side: part_key is recomputed from the LINEAGE's own key space
-      (bucket counts = max salt per key + 1, a tiny broadcast), then the
-      aggregate partial-combines map-side: only one (part_key, hash, count)
-      row per task reaches the shuffle.
+      (a tiny broadcast), then the aggregate partial-combines map-side:
+      only one (part_key, hash, count) row per task reaches the shuffle.
+      A lineage with ``salt_keys`` maps each salt key to its part key
+      base and bucket count, so packed keys ('\\x00p<bin>#0') rebuild
+      exactly; an older lineage rebuilds '<key>#<salt>' from the bucket
+      counts (``salt_buckets``, else max salt + 1).  A source key the
+      lineage never saw keeps its own key, one bucket, and so reports a
+      source-only part key instead of dropping out of the join.
     - decoded side: decode emits part_key with each row and the frame is
       already partitioned by it, so the aggregate is map-side too.
     The final equality join runs over one row per part_key (tiny).
-    Overflow-safe by construction: per-key row counts are bounded by the
-    salt target (~2^14) and each term < 2^31, so sums stay < 2^45.
+    Overflow-safe by construction: per-key row counts are bounded by two
+    salt targets (~2^15) and each term < 2^31, so sums stay < 2^46.
 
     Returns (part_key, rows_src, rows_dec, match) — every row must have
     match = true.
@@ -83,7 +88,17 @@ def roundtrip_verify_fast(
     strip_salt = F.expr(
         "substring(part_key, 1, length(part_key) - length(substring_index(part_key, '#', -1)) - 1)"
     )
-    if "salt_buckets" in encoded.columns:
+    if "salt_keys" in encoded.columns:
+        # the recorded key -> part key map: a key packed with others
+        # rebuilds its shared part key, a split key its own buckets
+        buckets = (
+            chunks.select(
+                F.explode("salt_keys").alias("_key"), strip_salt.alias("_base"), "salt_buckets"
+            )
+            .groupBy("_key", "_base")
+            .agg(F.max("salt_buckets").alias("_salt_buckets"))
+        )
+    elif "salt_buckets" in encoded.columns:
         # bucket counts recorded in the lineage at encode time: exact even
         # when the highest salt bucket received zero rows (inferring the
         # modulus from observed salts would undercount then, rehash every
@@ -93,6 +108,7 @@ def roundtrip_verify_fast(
             chunks.withColumn("_key", strip_salt)
             .groupBy("_key")
             .agg(F.max("salt_buckets").alias("_salt_buckets"))
+            .withColumn("_base", F.col("_key"))
         )
     else:  # pre-salt_buckets lineage tables: fall back to the inference
         sep = F.expr("substring_index(part_key, '#', -1)")
@@ -103,6 +119,7 @@ def roundtrip_verify_fast(
             .withColumn("_key", strip_salt)
             .groupBy("_key")
             .agg((F.max("_salt") + 1).alias("_salt_buckets"))
+            .withColumn("_base", F.col("_key"))
         )
     # the same null-key sentinel the encode side uses: rows with a NULL
     # salt value must land in the same part_key space, not silently drop
@@ -110,11 +127,13 @@ def roundtrip_verify_fast(
     from .encode_job import NULL_SALT_KEY
 
     skey = F.coalesce(F.col(salt_col).cast("string"), F.lit(NULL_SALT_KEY))
-    src = source.join(
-        F.broadcast(buckets), skey == F.col("_key")
-    ).withColumn(
+    src = source.join(F.broadcast(buckets), skey == F.col("_key"), "left").withColumn(
         "_part_key",
-        F.concat_ws("#", skey, F.pmod(F.xxhash64("row_id"), F.col("_salt_buckets")).cast("int")),
+        F.concat_ws(
+            "#",
+            F.coalesce(F.col("_base"), skey),
+            F.pmod(F.xxhash64("row_id"), F.coalesce(F.col("_salt_buckets"), F.lit(1))).cast("int"),
+        ),
     )
 
     def side_hash(df):

@@ -473,7 +473,8 @@ def ivf_assignments(
             mat = _list_to_mat(tbl.column(vec_col), vec_col)
             d = (mat * mat).sum(axis=1)[:, None] - 2.0 * (mat @ cb.T) + cn[None, :]
             order = np.argsort(d, axis=1)[:, :n_probe]
-            ids = np.repeat(np.asarray(tbl.column(id_col).combine_chunks().cast(pa.int64())), n_probe)
+            # fewer centroids than n_probe (a tiny corpus) probes them all
+            ids = np.repeat(np.asarray(tbl.column(id_col).combine_chunks().cast(pa.int64())), order.shape[1])
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(ids, type=pa.int64()),

@@ -44,7 +44,7 @@ def mixed(spark):
     )
     enc = encode_table(
         src, columns=COLS, policy="auto_fast", salt_col="source", num_partitions=2,
-        salt_target_rows=200, chunk_target_bytes=8 << 10, page_target_bytes=1 << 10,
+        salt_target_rows=50, chunk_target_bytes=8 << 10, page_target_bytes=1 << 10,
     ).persist()
     chunks = enc.filter(F.col("kind") == "chunk")
     # several chunks, and chunks of three or more pages: with two records

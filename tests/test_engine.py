@@ -369,7 +369,9 @@ def test_chunk_stats_pruning(spark):
     from parquet4seastar_spark.engine.encode_job import encode_table
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # cluster chunks by value range so stats have pruning power
+    # cluster chunks by value range so stats have pruning power: a salt
+    # target below the big buckets' sizes gives each of them part keys of
+    # its own (keys at or below the target are packed together)
     src = docs.select(
         F.col("doc_id").alias("row_id"),
         "n_chars",
@@ -377,7 +379,7 @@ def test_chunk_stats_pruning(spark):
     )
     enc = encode_table(
         src, columns=["n_chars"], salt_col="bucket", num_partitions=4,
-        salt_target_rows=1000, size_col="bucket",
+        salt_target_rows=50, size_col="bucket",
     ).cache()
     thr = 400
     pruned = prune_chunks(enc, "n_chars", gt=thr)
@@ -391,7 +393,7 @@ def test_chunk_stats_pruning(spark):
     src2 = docs.select(F.col("doc_id").alias("row_id"), "lang")
     enc2 = encode_table(
         src2, columns=["lang"], salt_col="lang", num_partitions=4,
-        salt_target_rows=1000, size_col="lang",
+        salt_target_rows=50, size_col="lang",
     ).cache()
     pruned2 = prune_chunks(enc2, "lang", eq="en")
     assert pruned2.count() < enc2.count()
@@ -493,17 +495,212 @@ def test_metrics_and_compression(source, encoded):
     assert chunks.filter(F.col("sha256").isNull()).count() == 0
 
 
-def test_resume_skips_completed(spark, source):
-    enc1 = encode_table(source, num_partitions=4, chunk_target_bytes=1 << 20)
-    lineage = enc1.filter(F.col("kind") == "chunk").cache()
+PACK_TARGET = 60  # rows: splits the biggest fixture repos, packs the rest
+
+
+def _pairs(enc) -> set:
+    """(part_key, salt key) pairs an encode's chunk rows record."""
+    rows = enc.filter(F.col("kind") == "chunk").select("part_key", "salt_keys").collect()
+    return {(r["part_key"], k) for r in rows for k in r["salt_keys"]}
+
+
+def _packed_encode(df, **kw):
+    return encode_table(
+        df, columns=["path", "content"], policy="plain", num_partitions=4,
+        salt_target_rows=PACK_TARGET, **kw,
+    )
+
+
+def _store_row_ids(spark, path, *encs) -> list:
+    """Row ids decoded from ONE store holding every encode in ``encs``
+    (the first written, the rest appended): a part key two encodes share
+    fails the decode as a duplicated page set, a row stored twice shows
+    up twice."""
+    from parquet4seastar_spark.engine.decode_job import decode_table
+    from parquet4seastar_spark.engine.store import read_store, write_store
+
+    for i, enc in enumerate(encs):
+        write_store(enc, str(path), mode="append" if i else "overwrite")
+    stored = read_store(spark, str(path), ["path"])
+    return sorted(r["row_id"] for r in decode_table(stored, ["path"]).select("row_id").collect())
+
+
+def test_packed_layout_verifies_and_flags_an_altered_row(spark, source):
+    """Keys at or below the salt target share packed part keys, keys above
+    it are split; each chunk records its salt keys, each key's rows are
+    contiguous in its chunk, the fast verify matches, and one altered row
+    inside a packed key fails exactly that part key."""
+    from parquet4seastar_spark.engine.decode_job import decode_table
+    from parquet4seastar_spark.engine.encode_job import PACKED_BASE
+    from parquet4seastar_spark.engine.verify import roundtrip_verify_fast
+
+    enc = _packed_encode(source).persist()
+    chunks = enc.filter((F.col("kind") == "chunk") & (F.col("column") == "row_id")).collect()
+    packed = [r for r in chunks if r["part_key"].startswith(PACKED_BASE)]
+    split = [r for r in chunks if not r["part_key"].startswith(PACKED_BASE)]
+    assert split and all(r["salt_buckets"] > 1 for r in split)
+    assert all(r["salt_keys"] == [r["part_key"].rsplit("#", 1)[0]] for r in split)
+    assert packed and all(r["salt_buckets"] == 1 and r["part_key"].endswith("#0") for r in packed)
+    assert max(len(r["salt_keys"]) for r in packed) > 1
+    assert all(r["salt_keys"] == sorted(r["salt_keys"]) for r in chunks)
+    # every small key sits whole in one packed key
+    owners = {}
+    for r in packed:
+        for k in r["salt_keys"]:
+            owners.setdefault(k, set()).add(r["part_key"])
+    assert all(len(v) == 1 for v in owners.values())
+    # a packed chunk holds each repo's rows as one run
+    seq = decode_table(enc, ["path"], include_part_key=True).select("_part_key", "row_id").collect()
+    repo_of = {r["row_id"]: r["repo"] for r in source.select("row_id", "repo").collect()}
+    runs: dict = {}
+    prev = None
+    for r in seq:
+        cur = (r["_part_key"], repo_of[r["row_id"]])
+        if cur != prev:
+            runs[cur] = runs.get(cur, 0) + 1
+        prev = cur
+    assert all(n == 1 for (pk, _), n in runs.items() if pk.startswith(PACKED_BASE))
+    out = roundtrip_verify_fast(source, enc, ["path", "content"]).collect()
+    assert out and all(r["match"] for r in out)
+    assert sum(r["rows_src"] for r in out) == N_ROWS
+    assert {r["part_key"] for r in out} == {r["part_key"] for r in chunks}
+    # alter one source row of a repo packed with others
+    shared = next(r for r in packed if len(r["salt_keys"]) > 1)
+    victim = source.filter(F.col("repo") == shared["salt_keys"][-1]).first()["row_id"]
+    altered = source.withColumn(
+        "content",
+        F.when(F.col("row_id") == victim, F.concat(F.coalesce("content", F.lit("")), F.lit("x")))
+        .otherwise(F.col("content")),
+    )
+    bad = [r for r in roundtrip_verify_fast(altered, enc, ["path", "content"]).collect() if not r["match"]]
+    assert [(r["part_key"], r["rows_src"], r["rows_dec"]) for r in bad] == [
+        (shared["part_key"], shared["num_rows"], shared["num_rows"])
+    ]
+    enc.unpersist()
+
+
+def test_verify_without_salt_keys_uses_the_bucket_rule(spark, source):
+    """A lineage without ``salt_keys`` (written before the field existed)
+    still verifies: part keys are rebuilt as '<key>#<salt>' from the
+    recorded bucket counts, and an altered row still fails its key.  Every
+    repo kept here is above the target, so the layout is the split one
+    such a lineage describes."""
+    from parquet4seastar_spark.engine.verify import roundtrip_verify_fast
+
+    big = source.groupBy("repo").count().filter(F.col("count") > 8).select("repo")
+    src = source.join(big, "repo").select(*source.columns).cache()
+    enc = encode_table(
+        src, columns=["path"], policy="plain", num_partitions=4, salt_target_rows=8
+    ).persist()
+    assert enc.filter(F.col("kind") == "chunk").agg(F.min("salt_buckets")).first()[0] > 1
+    old = enc.drop("salt_keys")
+    out = roundtrip_verify_fast(src, old, ["path"]).collect()
+    assert out and all(r["match"] for r in out)
+    assert sum(r["rows_src"] for r in out) == src.count()
+    victim = src.first()["row_id"]
+    altered = src.withColumn(
+        "path", F.when(F.col("row_id") == victim, F.lit("altered")).otherwise(F.col("path"))
+    )
+    bad = [r for r in roundtrip_verify_fast(altered, old, ["path"]).collect() if not r["match"]]
+    assert len(bad) == 1
+    enc.unpersist()
+    src.unpersist()
+
+
+def test_part_keys_do_not_depend_on_num_partitions(spark, source):
+    """The packing is a function of the size table and the target alone:
+    the same row -> part key map under 2 and 4 partitions, and the packed
+    bins follow the documented running-sum rule."""
+    from parquet4seastar_spark.engine.encode_job import MIN_PACKED_BINS, PACKED_BASE
+
+    def key_map(n):
+        salted = salted_repartition(source, n, salt_target_rows=PACK_TARGET)
+        return sorted(tuple(r) for r in salted.select("row_id", "repo", "part_key").collect())
+
+    two, four = key_map(2), key_map(4)
+    assert two == four
+    sizes: dict = {}
+    for _, repo, _ in two:
+        sizes[repo] = sizes.get(repo, 0) + 1
+    small = sorted((k for k in sizes if sizes[k] <= PACK_TARGET), key=lambda k: (-sizes[k], k))
+    total = sum(sizes[k] for k in small)
+    pack = min(PACK_TARGET, -(-total // MIN_PACKED_BINS))
+    expect, cum = {}, 0
+    for repo in small:
+        cum += sizes[repo]
+        expect[repo] = f"{PACKED_BASE}{(cum - 1) // pack}#0"
+    got = {repo: pk for _, repo, pk in two if repo in expect}
+    assert got == expect
+    bins = sorted(set(got.values()))
+    # the fixture is small, so the MIN_PACKED_BINS floor sets the pack size
+    assert pack < PACK_TARGET and 1 < len(bins) <= MIN_PACKED_BINS
+    for b in bins:  # each bin holds under two targets
+        assert sum(sizes[k] for k, pk in got.items() if pk == b) < 2 * PACK_TARGET
+
+
+def test_resume_skips_completed(spark, source, tmp_path):
+    """A partial lineage (the chunks of some part keys) skips the rows it
+    stores: its split buckets by part key, its packed keys' repos whole.
+    The rest is encoded into part keys the lineage does not hold, and one
+    store holding both encodes decodes every source row exactly once."""
+    from parquet4seastar_spark.engine.encode_job import PACKED_BASE
+
+    enc1 = _packed_encode(source).persist()
+    lineage = enc1.filter(F.col("kind") == "chunk")
     all_keys = {r["part_key"] for r in lineage.select("part_key").distinct().collect()}
-    # simulate a partial run: lineage only for half the part_keys
-    done_keys = sorted(all_keys)[: len(all_keys) // 2]
-    partial = lineage.filter(F.col("part_key").isin(done_keys))
-    enc2 = encode_table(source, num_partitions=4, chunk_target_bytes=1 << 20, resume_lineage=partial)
-    remaining = {r["part_key"] for r in enc2.select("part_key").distinct().collect()}
-    assert remaining == all_keys - set(done_keys)
-    lineage.unpersist()
+    done_keys = set(sorted(all_keys)[::2])
+    assert len(all_keys) > 1
+    assert any(k.startswith(PACKED_BASE) for k in done_keys)
+    assert any(not k.startswith(PACKED_BASE) for k in done_keys)
+    stored = enc1.filter(F.col("part_key").isin(sorted(done_keys)))
+    enc2 = _packed_encode(source, resume_lineage=stored.filter(F.col("kind") == "chunk")).persist()
+    pairs1, pairs2 = _pairs(enc1), _pairs(enc2)
+    assert not {pk for pk, _ in pairs2} & done_keys
+    split = lambda pairs: {pk for pk, _ in pairs if not pk.startswith(PACKED_BASE)}  # noqa: E731
+    assert split(pairs2) == split(pairs1) - done_keys
+    packed_repos = lambda pairs: {k for pk, k in pairs if pk.startswith(PACKED_BASE)}  # noqa: E731
+    done_repos = {k for pk, k in pairs1 if pk in done_keys and pk.startswith(PACKED_BASE)}
+    assert packed_repos(pairs2) == packed_repos(pairs1) - done_repos
+    got = _store_row_ids(spark, tmp_path / "store", stored, enc2)
+    assert got == list(range(N_ROWS))
+    enc2.unpersist()
+    enc1.unpersist()
+
+
+def test_resume_after_a_new_small_repo_loses_no_row(spark, source, tmp_path):
+    """A new small repo shifts the packing of the keys after it in the
+    (size desc, key) order.  Resuming from the old lineage encodes only
+    the new repo's rows, under a bin after the lineage's highest one, so
+    one store holding both encodes decodes each source row exactly once,
+    and the fast verify of both encodes against the grown source matches."""
+    from parquet4seastar_spark.engine.encode_job import PACKED_BASE
+    from parquet4seastar_spark.engine.verify import roundtrip_verify_fast
+
+    enc1 = _packed_encode(source).persist()
+    new = spark.createDataFrame(
+        [(10_000 + i, "zz/new-repo", f"src/f{i}.py", "c0ffee", "Python", f"x = {i}") for i in range(3)],
+        source.schema,
+    )
+    grown = source.unionByName(new)
+    enc2 = _packed_encode(grown, resume_lineage=enc1.filter(F.col("kind") == "chunk")).persist()
+    pairs1, pairs2 = _pairs(enc1), _pairs(enc2)
+    assert {k for _, k in pairs2} == {"zz/new-repo"}
+    bin_of = lambda pk: int(pk[len(PACKED_BASE):].split("#")[0])  # noqa: E731
+    last_bin = max(bin_of(pk) for pk, _ in pairs1 if pk.startswith(PACKED_BASE))
+    (new_key,) = {pk for pk, _ in pairs2}
+    assert new_key.startswith(PACKED_BASE) and bin_of(new_key) > last_bin
+    got = _store_row_ids(spark, tmp_path / "store", enc1, enc2)
+    assert got == sorted(r["row_id"] for r in grown.select("row_id").collect())
+    out = roundtrip_verify_fast(grown, enc1.unionByName(enc2), ["path", "content"]).collect()
+    assert all(r["match"] for r in out) and sum(r["rows_src"] for r in out) == len(got)
+    enc2.unpersist()
+    enc1.unpersist()
+
+
+def test_resume_refuses_a_lineage_without_salt_keys(spark, source):
+    enc = _packed_encode(source)
+    with pytest.raises(ValueError, match="no salt_keys column"):
+        _packed_encode(source, resume_lineage=enc.filter(F.col("kind") == "chunk").drop("salt_keys"))
 
 
 def test_reference_policy_not_smaller_than_auto(spark, source):
@@ -919,7 +1116,7 @@ def test_decoded_schema_map_equals_discovery(spark):
             "input_bytes long, encoded_bytes long, sha256 string, n_pages int, "
             "max_def int, max_rep int, elem_nullable boolean, stat_min_num double, "
             "stat_max_num double, stat_min_bin binary, stat_max_bin binary, "
-            "salt_buckets int, bloom array<long>"
+            "salt_buckets int, bloom array<long>, salt_keys array<string>"
         )
     ]
     assert planned == _discovered_map(enc)

@@ -180,3 +180,79 @@ def test_train_symbol_table_native_numpy_parity():
     assert native["train/one_byte"] == [[ord("q")], [1]]
     assert len(native["train/random_64k"][0]) == 254  # the symbol cap
     assert native["pages/content/FSST"][1] == ["FSST"]
+
+
+def _loop_luts(values, lengths):
+    """The per-symbol loop the vectorized SymbolTable build replaced."""
+    n = len(values)
+    lut1 = np.full(256, 255, dtype=np.uint8)
+    lut2 = np.full(65536, 254, dtype=np.uint8)
+    for code in range(n):
+        ln, v = int(lengths[code]), int(values[code])
+        if ln == 1:
+            lut1[v & 0xFF] = code
+        else:
+            cur = int(lut2[v & 0xFFFF])
+            if cur == 254 or int(lengths[cur]) < ln:
+                lut2[v & 0xFFFF] = code
+    return lut1, lut2
+
+
+def _loop_deserialize(buf):
+    n = buf[0]
+    lens = np.frombuffer(buf, dtype=np.uint8, count=n, offset=1).astype(np.int64)
+    pos = 1 + n
+    values = np.zeros(n, dtype=np.uint64)
+    for i in range(n):
+        values[i] = int.from_bytes(bytes(buf[pos : pos + int(lens[i])]), "little")
+        pos += int(lens[i])
+    return values, lens, pos
+
+
+@pytest.mark.parametrize("native", [True, False])
+@pytest.mark.parametrize("seed", range(6))
+def test_symbol_table_build_matches_the_loop(seed, native):
+    """The vectorized lut1/lut2 build and deserialize give the per-symbol
+    loop's tables bit for bit on random tables -- repeated 1-byte values
+    (the last code wins), shared 2-byte prefixes of equal and different
+    lengths (the longest wins, ties to the first code) -- and the decoded
+    bytes are the input, on the C kernel and the numpy path alike."""
+    import os
+
+    from parquet4seastar_spark.codecs import _native
+
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(1, 255))
+    lengths = rng.integers(1, 9, n).astype(np.int64)
+    # few distinct low bytes, so prefixes and 1-byte values collide
+    raw = rng.integers(0, 1 << 63, n, dtype=np.uint64)
+    raw = (raw & ~np.uint64(0xFFFF)) | rng.integers(0, 6, n).astype(np.uint64) * np.uint64(0x0101)
+    masks = np.array([(1 << (8 * L)) - 1 for L in range(9)], dtype=np.uint64)
+    values = raw & masks[lengths]
+    table = SymbolTable(values, lengths)
+    lut1, lut2 = _loop_luts(values, lengths)
+    assert np.array_equal(table.lut1, lut1) and np.array_equal(table.lut2, lut2)
+    blob = table.serialize() + b"\x07tail"
+    loop_vals, loop_lens, loop_pos = _loop_deserialize(blob)
+    back, pos = SymbolTable.deserialize(blob)
+    assert pos == loop_pos
+    assert np.array_equal(back.values, loop_vals) and np.array_equal(back.lengths, loop_lens)
+    for name in ("lut1", "lut2", "matrix", "vals_by_code", "lens_by_code", "mask_by_code"):
+        assert np.array_equal(getattr(back, name), getattr(table, name)), name
+    data = b"".join(int(v).to_bytes(8, "little")[: int(ln)] for v, ln in zip(values, lengths))
+    data = data * 3 + rng.integers(0, 256, 500, dtype=np.uint8).tobytes()
+    os.environ.pop("P4S_NO_NATIVE", None)
+    if not native:
+        os.environ["P4S_NO_NATIVE"] = "1"
+    _native._tried, _native._lib = False, None
+    try:
+        enc = fsst_encode(data, table)
+        assert fsst_decode(enc) == data
+    finally:
+        os.environ.pop("P4S_NO_NATIVE", None)
+        _native._tried, _native._lib = False, None
+
+
+def test_deserialize_refuses_an_oversized_symbol():
+    with pytest.raises(ValueError, match="9-byte symbol"):
+        SymbolTable.deserialize(bytes([1, 9]) + b"x" * 9)

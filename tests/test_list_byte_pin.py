@@ -220,9 +220,9 @@ def _chunk_bytes(chunk) -> bytes:
 # sha256 over every case of the shape, in corpus order
 PINNED = {
     ("flat", "auto", "uncompressed"):
-        "90dfa3c6ff09d5d49694c6cd57f16129dba235b5c109e5e74573bf28ea1802d2",
+        "2ab78dab80000e33f0e704995d6fc3dfbb8ecb115bd816938054017ae4a34552",
     ("flat", "auto", "gzip"):
-        "2d37c8281e2403429bd2d8fd11421cbd920cf3cdf95babcd4d189109d9d5fa4a",
+        "ad3e7b7a4e4645dbdb56115492184264a21b9f22bb7ffa9963b45b719c99c958",
     ("flat", "plain", "uncompressed"):
         "ef00b71e575612924a68a4bd3760a8f3487354118ed49df37fbb8b829b0b7cbf",
     ("flat", "plain", "gzip"):
@@ -236,9 +236,9 @@ PINNED = {
     ("flat", "reference", "gzip"):
         "24ecec7e9717afc81d70338fce3898c12c9208e9249da5bf18497fff61fcea0e",
     ("list", "auto", "uncompressed"):
-        "7170a2deddbff8f3b8c75793af5cc40fbcddeb1ae5e4c8a80a58fb35be2e9073",
+        "13841b17f4f8df2d804e2d7a237618304a3d2e8b666cbcdec352c33827c6ed5d",
     ("list", "auto", "gzip"):
-        "f8dddf14f1452519e1ed271dc5344ea96d244dd79eb14107d82ff8bfd428c040",
+        "580c2bd8572b523b4c75664419310c5b5bd2075843a2f60945ceeca273fb0e61",
     ("list", "plain", "uncompressed"):
         "532600bde4733538d095fc962e55b4c89a18c619395f43999f3f2c12fadaa21a",
     ("list", "plain", "gzip"):
@@ -252,9 +252,9 @@ PINNED = {
     ("list", "reference", "gzip"):
         "05b33ccfc4ef5534cb37f4314420781294c4ab1b0ee2027c0d4c12f261d360b1",
     ("list2", "auto", "uncompressed"):
-        "86712110849b2ea5754651ea4fd281d1113ee6e37d351c89d8f4e9de65fc297d",
+        "7acc9df2c2c09bcfad6241e766e047c54053ae4326f6410242ddb4d32c664ff8",
     ("list2", "auto", "gzip"):
-        "a999d77b9dfcf4536c2556c6d0393912a598311c22267c9ce202682ae4a70f21",
+        "cd592751db767a01b64e826857f91f0ff52bb9a561b08e5c4365b67a3e7c54c5",
     ("list2", "plain", "uncompressed"):
         "9be0f4e219ff287cfa7c10c33580c2ffd328cae0fdfc73403a342c1aed70de37",
     ("list2", "plain", "gzip"):

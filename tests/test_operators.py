@@ -929,6 +929,22 @@ def test_ivf_training_sample_unbiased_by_partition_order(spark):
     assert ex == ap
 
 
+@pytest.mark.parametrize("n_vectors", [1, 2])
+def test_ivf_topk_corpus_smaller_than_n_probe(spark, n_vectors):
+    """A corpus with fewer vectors (so fewer centroids) than n_probe probes
+    every centroid: each query gets the exact brute-force neighbours."""
+    from parquet4seastar_spark.operators.similarity import brute_force_topk, ivf_topk
+
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i), 0.5]) for i in range(n_vectors)], "vec_id long, embedding array<float>"
+    )
+    q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    exact = sorted(tuple(r) for r in brute_force_topk(emb, q, k=5).collect())
+    approx = sorted(tuple(r) for r in ivf_topk(emb, q, k=5, n_clusters=16, n_probe=4).collect())
+    assert len(exact) == n_vectors * n_vectors
+    assert approx == exact
+
+
 def test_windowed_event_counts_streaming_mode(spark, tmp_path):
     """The same windowed aggregation runs as a real stream with a watermark
     (file source, availableNow) and matches the batch result."""

@@ -179,7 +179,9 @@ def _bloom_store(spark, tmp_path) -> str:
     )
     store = str(tmp_path / "store")
     write_store(
-        encode_table(docs, columns=["k"], policy="plain", salt_col="source", num_partitions=2), store
+        # 20 sources of 25 rows packed two to a part key: 10 chunks
+        encode_table(docs, columns=["k"], policy="plain", salt_col="source", num_partitions=2,
+                     salt_target_rows=50), store
     )
     return store
 

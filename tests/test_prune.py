@@ -147,8 +147,9 @@ def frames(spark, tmp_path_factory):
         F.expr("concat(repeat('The text ', cast(id % 53 as int)), cast(id as string))").alias("text"),
         (F.col("id") % 7).cast("string").alias("source"),
     )
+    # 7 sources of ~71 rows, each split in two salt buckets: 14 part keys
     enc = encode_table(docs, columns=["k", "b", "n", "text"], policy="plain", salt_col="source",
-                       num_partitions=2)
+                       num_partitions=2, salt_target_rows=50)
     # chunk rows with null stats (both, or only the upper bound) and with
     # null blooms, chosen by key
     sel = F.xxhash64("part_key", "chunk_seq") % 4
@@ -161,7 +162,7 @@ def frames(spark, tmp_path_factory):
 
     other = encode_table(
         docs.filter(F.col("row_id") % 3 == 0), columns=["n"], policy="auto", salt_col="source",
-        num_partitions=2,
+        num_partitions=2, salt_target_rows=50,
     )
     union = spark.read.parquet(store).unionByName(other, allowMissingColumns=True)
     flat = str(tmp / "flat")
