@@ -619,7 +619,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from parquet4seastar_spark.codecs.pages import encode_chunk, encode_dremel_column
+        from parquet4seastar_spark.codecs.pages import encode_chunk, encode_column
         from parquet4seastar_spark.codecs.parquet_file import (
             DremelColumn,
             ParquetFileReader,
@@ -636,7 +636,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             [tbl.column("lang").combine_chunks(), tbl.column("n_chars").combine_chunks()],
             ["lang", "n_chars"],
         )
-        chunks["meta"] = DremelColumn(encode_dremel_column(meta, policy="auto_fast"))
+        chunks["meta"] = DremelColumn(encode_column(meta, policy="auto_fast"))
         with tempfile.TemporaryDirectory() as tmp:
             path = f"{tmp}/docs.parquet"
             write_parquet_file(path, chunks, tbl.num_rows)

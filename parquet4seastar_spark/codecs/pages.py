@@ -20,6 +20,9 @@ columnar batches:
   a leaf of its own) and written by one leaf encoder (``_encode_leaf``)
   on record boundaries.  One sizing rule: an entry counts its value
   bytes, plus ~1 B for its levels when the leaf is repeated (max_rep > 0).
+- One rule, here alone, maps a top-level column to its chunks
+  (``encode_column`` and the ``column_*`` helpers): see "top-level
+  columns -> chunks" below.
 - Every chunk decodes the same way too (``decode_chunk``): the page
   reader yields the leaf's level streams and its non-null values, and the
   walker's assembly (``dremel.assemble_tree``) places them -- a flat
@@ -53,11 +56,13 @@ import pyarrow as pa
 
 from . import delta, dictionary, fsst, plain
 from .bitpack import uleb128_decode
-from .dremel import Leaf, assemble, assemble_tree, shred
+from .dremel import Leaf, assemble, assemble_tree, build_tree, shred, tree_arrow_type
 from .levels import decode_levels_v1, encode_levels_v1
 from .rle import rle_decode, rle_encode
 
-__all__ = ["encode_chunk", "decode_chunk", "ba_components", "EncodedChunk", "Page"]
+__all__ = ["encode_column", "decode_column", "column_chunks", "column_leaves", "column_type",
+           "content_sha", "leaf_prefix", "leaf_spec", "encode_chunk", "decode_chunk",
+           "chunk_content_sha", "ba_components", "EncodedChunk", "Page"]
 
 DICT_FALLBACK_THRESHOLD = 16 * 1024  # dict_or_plain_encoder::fallback_threshold
 
@@ -145,14 +150,14 @@ def pa_ptype(t: pa.DataType) -> tuple[str, str]:
             if pa.types.is_nested(inner):
                 raise TypeError(
                     f"encode_chunk caps at list<list<primitive>> (standard "
-                    f"single-spec geometry); use encode_dremel_column for {t}"
+                    f"single-spec geometry); use encode_column for {t}"
                 )
             elem_ptype, elem_logical = pa_ptype_scalar(inner)
             return elem_ptype, f"list<list<{elem_logical}>>"
         if pa.types.is_nested(elem):
             raise TypeError(
                 f"encode_chunk handles primitive list elements; use "
-                f"encode_dremel_column for {t}"
+                f"encode_column for {t}"
             )
         elem_ptype, elem_logical = pa_ptype_scalar(elem)
         return elem_ptype, f"list<{elem_logical}>"
@@ -1307,15 +1312,38 @@ def _build_leaf_array(
 
 
 # ---------------------------------------------------------------------------
-# generic nested columns: ONE recursive Dremel walker (codecs/dremel.py)
-# subsumes the shape-enumerated struct/map/list<struct>/list<list>/list3
-# paths (reference: the single recursive record_reader,
-# record_reader.hh:469-505; level rule reader_schema.cc:79-93).  The engine
-# names these leaf chunks '<col>#g<i>'; chunk.logical carries
-# 'g:<node path>|<leaf logical>' so decode rebuilds the tree with no
-# shape-specific naming conventions.  Every node is OPTIONAL in this
-# geometry (type-determined, stable across chunks; constant def runs are
-# ~free under RLE).
+# top-level columns -> chunks, the ONE rule: a flat or list<primitive>
+# column is one chunk named after it (``encode_chunk``); any other nested
+# type is one chunk per leaf of the ONE recursive Dremel walker
+# (codecs/dremel.py; record_reader.hh:469-505, level rule
+# reader_schema.cc:79-93), named '<col>#g<i>' in leaf order, its logical
+# 'g:<node path>|<leaf logical>'.  Every node of that geometry is OPTIONAL
+# (type-determined, stable across chunks; constant def runs are ~free).
+
+
+def _is_dremel(t: pa.DataType) -> bool:
+    """Whether a column of arrow type ``t`` is stored as Dremel leaf chunks."""
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return pa.types.is_nested(t.value_type)
+    return pa.types.is_nested(t)
+
+
+def leaf_prefix(column: str) -> str:
+    """The prefix every Dremel leaf chunk name of ``column`` starts with."""
+    return f"{column}#g"
+
+
+def leaf_spec(logical: str) -> tuple[str | None, str]:
+    """(Dremel node path, leaf logical) of a chunk's logical; the path is
+    None for a standard chunk, whose logical is its leaf logical."""
+    if not logical.startswith("g:"):
+        return None, logical
+    path, leaf_logical = logical[2:].rsplit("|", 1)
+    return path, leaf_logical
+
+
+def _leaf_logical(leaf: Leaf) -> str:
+    return f"g:{leaf.path}|{pa_ptype_scalar(leaf.values.type)[1]}"
 
 
 def _levels_sha(def_, rep):
@@ -1327,30 +1355,96 @@ def _levels_sha(def_, rep):
     return h
 
 
-def dremel_leaf_logical(leaf: Leaf) -> str:
-    """chunk.logical of a '#g' leaf: 'g:<node path>|<leaf logical>'."""
-    return f"g:{leaf.path}|{pa_ptype_scalar(leaf.values.type)[1]}"
-
-
-def encode_dremel_column(
+def encode_column(
     arr: pa.Array,
     *,
     policy: str = "auto",
     page_target_bytes: int = 1 << 20,
     compression: str = "uncompressed",
-) -> dict[str, "EncodedChunk"]:
-    """Encode ANY nested arrow column -> {'#g<i>': leaf chunk}."""
+    fsst_cache: dict | None = None,
+    fsst_cache_key: str | None = None,
+) -> dict[str, EncodedChunk]:
+    """Encode one top-level column -> {chunk name suffix: chunk}: ``''`` for
+    a flat or list<primitive> column (``encode_chunk``, nullability from
+    the data; only these chunks use the FSST table cache), else one
+    ``'#g<i>'`` leaf chunk per Dremel leaf, in leaf order."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    out: dict[str, EncodedChunk] = {}
-    for i, leaf in enumerate(shred(arr)):
-        out[f"#g{i}"] = _encode_leaf(
+    if not _is_dremel(arr.type):
+        return {"": encode_chunk(
+            arr, policy=policy, page_target_bytes=page_target_bytes, compression=compression,
+            fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
+        )}
+    return {
+        f"#g{i}": _encode_leaf(
             leaf, _levels_sha(leaf.def_, leaf.rep), policy=policy,
             page_target_bytes=page_target_bytes, compression=compression,
-            logical=dremel_leaf_logical(leaf), nullable=True,
+            logical=_leaf_logical(leaf), nullable=True,
             num_nulls=len(leaf.def_) - len(leaf.values), elem_nullable=True,
         )
-    return out
+        for i, leaf in enumerate(shred(arr))
+    }
+
+
+def column_leaves(t: pa.DataType) -> dict[str, tuple[str, int]]:
+    """{chunk name suffix: (logical, type_length)} of the chunks
+    ``encode_column`` writes for arrow type ``t``: a shred of an EMPTY
+    array, with no codec or kernel run."""
+    leaves = shred(pa.array([], type=t))
+    if not _is_dremel(t):
+        return {"": (pa_ptype(t)[1], flba_width(leaves[0].values.type))}
+    return {f"#g{i}": (_leaf_logical(leaf), flba_width(leaf.values.type)) for i, leaf in enumerate(leaves)}
+
+
+def column_chunks(column: str, names) -> list[str]:
+    """The chunk names of top-level ``column`` among ``names``, in leaf
+    order: ``[column]`` for a column stored as one chunk, else its Dremel
+    leaves ([] when the column is absent)."""
+    if column in names:
+        return [column]
+    prefix = leaf_prefix(column)
+    leaves = [n for n in names if n.startswith(prefix) and n[len(prefix):].isdigit()]
+    return sorted(leaves, key=lambda n: int(n[len(prefix):]))
+
+
+def column_type(leaves) -> pa.DataType:
+    """Arrow type of a column from its chunks' (logical, type_length)
+    pairs, in leaf order (``column_leaves`` values or the lineage's)."""
+    leaves = [(*leaf_spec(logical), type_length) for logical, type_length in leaves]
+    if leaves[0][0] is None:
+        ((_, logical, type_length),) = leaves
+        return _elem_pa_type(logical, type_length)
+    return tree_arrow_type(build_tree([(path, _elem_pa_type(lg, tl)) for path, lg, tl in leaves]))
+
+
+def decode_column(chunks: dict[str, EncodedChunk]) -> pa.Array:
+    """{chunk name: chunk} of one column, in leaf order (as
+    ``encode_column`` and ``column_chunks`` give them) -> the column."""
+    first = next(iter(chunks.values()))
+    if leaf_spec(first.logical)[0] is None:
+        (chunk,) = chunks.values()
+        return decode_chunk(chunk)
+    leaves: dict[str, Leaf] = {}
+    for c in chunks.values():
+        path, leaf_logical = leaf_spec(c.logical)
+        def_, rep, vals = _decode_dremel_leaf(c, leaf_logical)
+        leaves[path] = Leaf(path, vals, def_, rep, c.max_def, c.max_rep)
+    return assemble(leaves, c.num_rows)
+
+
+def content_sha(chunk: EncodedChunk) -> str:
+    """Decode one chunk and recompute the content sha256 its lineage row
+    records (the lineage audit: detects page corruption without the
+    source table)."""
+    path, leaf_logical = leaf_spec(chunk.logical)
+    if path is None:
+        return chunk_content_sha(decode_chunk(chunk))
+    # a Dremel leaf: its level streams, then its non-null values
+    def_, rep, vals = _decode_dremel_leaf(chunk, leaf_logical)
+    values, lengths, payload, _, _ = _leaf_components(_to_physical(vals, chunk.ptype), chunk.ptype)
+    h = _levels_sha(def_, rep)
+    _sha_update_values(h, chunk.ptype, values, lengths, payload)
+    return h.hexdigest()
 
 
 def _encode_leaf(
@@ -1417,29 +1511,3 @@ def _decode_dremel_leaf(chunk: "EncodedChunk", leaf_logical: str):
         rep = np.zeros(len(def_), dtype=np.uint32)
     vals = _build_leaf_array(chunk.ptype, leaf_logical, chunk.type_length, *parts)
     return def_.astype(np.uint32, copy=False), rep.astype(np.uint32, copy=False), vals
-
-
-def decode_dremel_column(chunks: dict[str, "EncodedChunk"]) -> pa.Array:
-    """{leaf name ending '#g<i>': chunk} -> reassembled arrow column."""
-    leaves: dict[str, Leaf] = {}
-    n_rows = 0
-    for name in sorted(chunks, key=lambda s: int(s.rsplit("#g", 1)[1])):
-        c = chunks[name]
-        if not c.logical.startswith("g:"):
-            raise ValueError(f"not a dremel leaf chunk: {name} ({c.logical})")
-        path, leaf_logical = c.logical[2:].rsplit("|", 1)
-        def_, rep, vals = _decode_dremel_leaf(c, leaf_logical)
-        leaves[path] = Leaf(path, vals, def_, rep, c.max_def, c.max_rep)
-        n_rows = c.num_rows
-    return assemble(leaves, n_rows)
-
-
-def dremel_recompute_sha(chunk: "EncodedChunk") -> str:
-    """Decode a dremel leaf chunk and recompute its content sha (lineage
-    audit: detects page corruption without the source table)."""
-    leaf_logical = chunk.logical[2:].rsplit("|", 1)[1]
-    def_, rep, vals = _decode_dremel_leaf(chunk, leaf_logical)
-    values, lengths, payload, _, _ = _leaf_components(_to_physical(vals, chunk.ptype), chunk.ptype)
-    h = _levels_sha(def_, rep)
-    _sha_update_values(h, chunk.ptype, values, lengths, payload)
-    return h.hexdigest()

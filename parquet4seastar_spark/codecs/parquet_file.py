@@ -31,7 +31,7 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 
-from .pages import EncodedChunk, Page, effective_max_def, optional_flags
+from .pages import EncodedChunk, Page, effective_max_def, leaf_spec, optional_flags
 from .thrift_compact import (
     CT_BINARY,
     CT_I32,
@@ -145,7 +145,7 @@ def group_node(name: str, repetition: int, children: list, converted=None) -> di
 def leaf_node(name: str, chunk: EncodedChunk, repetition: int) -> dict:
     """A leaf SchemaElement node carrying the chunk written under it; the
     physical type and annotations come from the chunk."""
-    logical = chunk.logical.rsplit("|", 1)[-1]  # dremel leaf: 'g:<path>|<leaf logical>'
+    logical = leaf_spec(chunk.logical)[1]
     while logical.startswith("list<"):
         logical = logical[5:-1]
     el = {1: PHYS_ID[chunk.ptype], 2: chunk.type_length or None, 3: repetition, 4: name}
@@ -170,27 +170,29 @@ def _chunk_node(name: str, chunk: EncodedChunk) -> dict:
 
 @dataclass
 class DremelColumn:
-    """Container spec: ANY nested column from the recursive walker's leaf
-    chunks ({'#g<i>' or '<col>#g<i>': EncodedChunk with logical
-    'g:<path>|<leaf logical>'} — codecs/pages.encode_dremel_column output).
+    """Container spec: ANY column from its chunks ({chunk name:
+    EncodedChunk} in leaf order, as codecs/pages.encode_column and
+    pages.column_chunks give them).  A single standard chunk (flat,
+    list<prim>) is written as an ``EncodedChunk`` spec is.
 
-    The emitted schema mirrors the walker's level geometry exactly (every
-    group and leaf OPTIONAL; reference: writer_schema.cc:30-134 recursion),
-    so the leaf pages' (rep, def) streams are valid under the declared
-    schema for any independent reader.  Maps are written as LIST of a
-    REQUIRED struct<key, value> (the standard MAP group demands a REQUIRED
-    key, but walker keys carry their own optional level; the entry-struct
-    itself carries none, matching the REQUIRED group)."""
+    The Dremel leaves' schema mirrors the walker's level geometry exactly
+    (every group and leaf OPTIONAL; reference: writer_schema.cc:30-134
+    recursion), so the leaf pages' (rep, def) streams are valid under the
+    declared schema for any independent reader.  Maps are written as LIST
+    of a REQUIRED struct<key, value> (the standard MAP group demands a
+    REQUIRED key, but walker keys carry their own optional level; the
+    entry-struct itself carries none, matching the REQUIRED group)."""
 
     leaves: dict[str, EncodedChunk]
 
     def node(self, name: str) -> dict:
         from .dremel import build_tree
 
-        ordered = sorted(
-            self.leaves.items(), key=lambda kv: int(kv[0].rsplit("#g", 1)[1])
-        )
-        tree = build_tree([(c.logical[2:].rsplit("|", 1)[0], c) for _, c in ordered])
+        chunks = list(self.leaves.values())
+        paths = [leaf_spec(c.logical)[0] for c in chunks]
+        if paths == [None]:
+            return _chunk_node(name, chunks[0])
+        tree = build_tree(list(zip(paths, chunks)))
 
         def convert(ename, t):
             kind = t[0]

@@ -11,10 +11,12 @@ one Python call per batch, not one Arrow round trip per chunk.  Output is
 column chunks, joinable back to the source for the round-trip sha256
 verification (BASELINE.json per-row invariant).
 
-Nested columns arrive as '<col>#g<i>' leaf chunks from the ONE recursive
-Dremel walker (codecs/dremel.py); each leaf's chunk.logical carries the
-node-path spec, so reassembly needs no shape-specific naming conventions
-(reference: the single recursive record_reader, record_reader.hh:469-505).
+Which chunks make up a column, their order and the column's type come
+from codecs/pages.py alone (``column_chunks``, ``column_type``,
+``decode_column``): one chunk for a flat or list<primitive> column, one
+per Dremel leaf for any other nested type, reassembled by the ONE
+recursive walker (reference: the single recursive record_reader,
+record_reader.hh:469-505).
 
 Arrow end-to-end: page payloads arrive as arrow binary, decoded values
 leave as arrow arrays -- the decoded strings never materialize as Python
@@ -38,13 +40,13 @@ from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from ..codecs.bloom import probe_positions
-from ..codecs.dremel import build_tree, tree_arrow_type
 from ..codecs.pages import (
     EncodedChunk,
     Page,
-    _elem_pa_type,
-    decode_chunk,
-    decode_dremel_column,
+    column_chunks,
+    column_type,
+    decode_column,
+    leaf_prefix,
 )
 from .encode_job import DECODED_SCHEMA_KEY
 
@@ -128,6 +130,22 @@ class _ChunkGroup:
 
     def chunk(self, name: str) -> EncodedChunk:
         return _rebuild_chunk(self.tbl, self.page_rows[name])
+
+    def column(self, name: str) -> dict[str, EncodedChunk]:
+        """{chunk name: chunk} of top-level column ``name``, in leaf order."""
+        names = column_chunks(name, self.page_rows)
+        if not names:
+            raise ValueError(f"column not present in encoded table: {name}")
+        return {n: self.chunk(n) for n in names}
+
+
+def _chunk_filter(columns: list[str]) -> Column:
+    """The rows of row_id's and ``columns``' chunks: a column's own name or
+    its Dremel leaf prefix (a partition predicate on a column store)."""
+    pred = F.col("column").isin(["row_id", *columns])
+    for c in columns:
+        pred = pred | F.col("column").startswith(leaf_prefix(c))
+    return pred
 
 
 def _key_runs(batch: pa.RecordBatch) -> list[tuple[int, int]]:
@@ -430,10 +448,10 @@ def _planned_schema(encoded: DataFrame, columns: list[str]) -> dict | None:
     planned = {name: tuple(v) for name, v in json.loads(raw).items()}
     out = {}
     for c in ["row_id", *columns]:
-        got = {n: v for n, v in planned.items() if n == c or n.startswith(f"{c}#g")}
-        if not got:
+        names = column_chunks(c, planned)
+        if not names:
             return None
-        out.update(got)
+        out.update((n, planned[n]) for n in names)
     return out
 
 
@@ -462,64 +480,25 @@ def decode_table(
 
     Every rebuilt chunk is checked against its planned (logical,
     type_length) entry; a mismatch raises a ValueError naming the chunk.
-
-    Discovery would run a freshly-built encode plan once for the collect
-    and AGAIN for the decode pass.  So when the pages frame is COMPUTED
-    (its plan contains a Python stage, i.e. it chains straight off
-    encode_table) and the caller has not already persisted it, it is
-    persisted here (lazily) -- the round-trip queries' repeat runs hit
-    Spark's cache through it.  A storage-backed frame (plain file scan —
-    the 100 TB deployment shape) is NOT persisted: discovery's
-    kind='chunk' filter pushes down to the scan and touches only the tiny
-    chunk rows, and caching the full pages table would block exactly that
-    pushdown.
+    Nothing is persisted: a computed frame that needs discovery is
+    evaluated once for the collect and again for the decode, unless the
+    caller persisted it.
     """
-    # nested columns are stored as '<col>#g<i>' dremel leaf chunks
-    name_filter = F.col("column").isin(["row_id", *columns])
-    for c in columns:
-        name_filter = name_filter | F.col("column").startswith(f"{c}#g")
-
-    lvl = encoded.storageLevel
-    try:
-        plan_str = encoded._jdf.queryExecution().analyzed().toString()
-        computed = (
-            "MapInArrow" in plan_str
-            or "MapInPandas" in plan_str
-            or "FlatMapGroupsIn" in plan_str
-            or "pythonUDF" in plan_str
-        )
-    except Exception:  # plan introspection is best-effort: persisting a
-        computed = True  # storage-backed frame is wasteful but correct
-    if computed and not (lvl.useMemory or lvl.useDisk):
-        encoded = encoded.persist()
+    wanted = _chunk_filter(columns)
     schema = _planned_schema(encoded, columns)
     if schema is None:
         schema = {
             r["column"]: (r["logical"], int(r["type_length"] or 0))
-            for r in encoded.filter((F.col("kind") == "chunk") & name_filter)
+            for r in encoded.filter((F.col("kind") == "chunk") & wanted)
             .select("column", "logical", "type_length")
             .distinct()
             .collect()
         }
-    pages = encoded.filter((F.col("kind") == "page") & name_filter)
-
-    # requested column -> None (scalar / plain-list leaf) or the ordered
-    # dremel leaf list [(leaf_name, path, leaf_logical, type_length)]
-    members: dict = {}
-    for c in columns:
-        if c in schema:
-            members[c] = None
-            continue
-        leaves = []
-        for name, (lg, tl) in schema.items():
-            if name.startswith(f"{c}#g") and lg.startswith("g:"):
-                path, leaf_logical = lg[2:].rsplit("|", 1)
-                leaves.append((int(name.rsplit("#g", 1)[1]), name, path, leaf_logical, tl))
-        if not leaves:
+    pages = encoded.filter((F.col("kind") == "page") & wanted)
+    members = {c: column_chunks(c, schema) for c in ["row_id", *columns]}
+    for c, names in members.items():
+        if not names:
             raise ValueError(f"column not present in encoded table: {c}")
-        members[c] = [(name, path, lgl, tl) for _, name, path, lgl, tl in sorted(leaves)]
-    if "row_id" not in schema:
-        raise ValueError("row_id column not present in encoded table")
 
     # every output type, flat, list or nested, comes from the pages'
     # logical -> arrow map, read by Spark with timestamp_us as timestamp_ntz.
@@ -529,23 +508,16 @@ def decode_table(
     from pyspark.sql.pandas.types import from_arrow_type
     from pyspark.sql.types import LongType, StringType, StructField
 
-    def _spark_col_type(c: str):
-        if members[c] is None:
-            t = _elem_pa_type(*schema[c])
-        else:
-            t = tree_arrow_type(
-                build_tree([(path, _elem_pa_type(lgl, tl)) for _, path, lgl, tl in members[c]])
-            )
-        return from_arrow_type(t, prefer_timestamp_ntz=True)
-
-    col_types = {c: _spark_col_type(c) for c in columns}
+    col_types = {
+        c: from_arrow_type(column_type(schema[n] for n in members[c]), prefer_timestamp_ntz=True)
+        for c in columns
+    }
     out_schema = StructType(
         ([StructField("_part_key", StringType())] if include_part_key else [])
         + [StructField("row_id", LongType())]
         + [StructField(c, col_types[c]) for c in columns]
     )
-    cols = columns
-    targets = {c: to_arrow_type(t) for c, t in col_types.items()}
+    targets = {"row_id": pa.int64(), **{c: to_arrow_type(t) for c, t in col_types.items()}}
 
     def decode_group(group: _ChunkGroup) -> pa.Table:
         pk = group.part_key
@@ -563,22 +535,12 @@ def decode_table(
                 )
             return chunk
 
-        out_arrays = [decode_chunk(planned_chunk("row_id")).cast(pa.int64())]
-        names = ["row_id"]
+        out = {}
+        for c, names in members.items():
+            arr = decode_column({n: planned_chunk(n) for n in names})
+            out[c] = arr if arr.type == targets[c] else arr.cast(targets[c])
         if include_part_key:
-            out_arrays.insert(0, pa.array([pk] * len(out_arrays[0]), type=pa.string()))
-            names.insert(0, "_part_key")
-        for c in cols:
-            if members[c] is None:
-                arr = decode_chunk(planned_chunk(c))
-            else:
-                arr = decode_dremel_column(
-                    {name: planned_chunk(name) for name, _, _, _ in members[c]}
-                )
-            if arr.type != targets[c]:
-                arr = arr.cast(targets[c])
-            out_arrays.append(arr)
-            names.append(c)
-        return pa.table(dict(zip(names, out_arrays)))
+            out = {"_part_key": pa.array([pk] * len(out["row_id"]), type=pa.string()), **out}
+        return pa.table(out)
 
     return _by_chunk(pages, decode_group, out_schema)

@@ -45,14 +45,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..codecs.dremel import shred
-from ..codecs.pages import (
-    dremel_leaf_logical,
-    encode_chunk,
-    encode_dremel_column,
-    flba_width,
-    pa_ptype,
-)
+from ..codecs.pages import column_leaves, encode_column
 
 # the pages frame: one row per page and one lineage row per chunk (kind).
 # Declared once, in arrow: encode tasks build their batches from it without
@@ -270,38 +263,22 @@ def _payload_column(payloads) -> pa.Array:
     )
 
 
-def _leaf_dispatch(col: str, t: pa.DataType, fixed_len) -> tuple[pa.DataType, bool]:
-    """(arrow type column ``col`` is encoded as, whether it takes the
-    Dremel walker): the one dispatch the encode task and
-    :func:`decoded_schema` share."""
-    if fixed_len and col in fixed_len:
-        # FIXED_LEN_BYTE_ARRAY route: spark has no fixed-size binary type,
-        # so equal-length binary columns opt in here
-        t = pa.binary(fixed_len[col])
-    plain_list = (
-        pa.types.is_list(t) or pa.types.is_large_list(t)
-    ) and not pa.types.is_nested(t.value_type)
-    # ANY nested shape beyond list<primitive> (struct, map, list<struct>,
-    # list<list<...>>, any composition/depth) goes through the ONE recursive
-    # Dremel walker: leaf chunks '<col>#g<i>', tree spec in chunk.logical
-    return t, pa.types.is_nested(t) and not plain_list
+def _encoded_type(col: str, t: pa.DataType, fixed_len) -> pa.DataType:
+    """The arrow type column ``col`` is encoded as: FIXED_LEN_BYTE_ARRAY
+    for the ``fixed_len`` columns (spark has no fixed-size binary type, so
+    equal-length binary columns opt in here), else its own type."""
+    return pa.binary(fixed_len[col]) if fixed_len and col in fixed_len else t
 
 
 def decoded_schema(types: dict[str, pa.DataType], fixed_len) -> dict[str, tuple[str, int]]:
-    """{leaf chunk name: (logical, type_length)} of every chunk an encode
-    of columns with these arrow types writes, from the types alone.  The
-    leaf paths and order come from shredding an EMPTY array: the walk the
-    encoder takes, with no codec or kernel run."""
-    out = {}
-    for col, t in types.items():
-        t, dremel = _leaf_dispatch(col, t, fixed_len)
-        for i, leaf in enumerate(shred(pa.array([], type=t))):
-            if dremel:
-                name, logical = f"{col}#g{i}", dremel_leaf_logical(leaf)
-            else:
-                name, logical = col, pa_ptype(t)[1]
-            out[name] = (logical, flba_width(leaf.values.type))
-    return out
+    """{chunk name: (logical, type_length)} of every chunk an encode of
+    columns with these arrow types writes, from the types alone
+    (``pages.column_leaves``: no codec or kernel run)."""
+    return {
+        col + suffix: leaf
+        for col, t in types.items()
+        for suffix, leaf in column_leaves(_encoded_type(col, t, fixed_len)).items()
+    }
 
 
 def _encode_partition_factory(
@@ -369,7 +346,7 @@ def _encode_partition_factory(
             leaf_chunks: list[tuple[str, object]] = []
             for col in ["row_id", *columns]:
                 arr = tbl.column(col).combine_chunks()
-                t, dremel = _leaf_dispatch(col, arr.type, fixed_len)
+                t = _encoded_type(col, arr.type, fixed_len)
                 if t != arr.type:
                     arr = arr.cast(t)
                 # row_id gets int auto-selection regardless of the value
@@ -381,29 +358,12 @@ def _encode_partition_factory(
                     cpolicy = policy.get(col, "auto")
                 else:
                     cpolicy = policy
-                if dremel:
-                    for suffix, gchunk in encode_dremel_column(
-                        arr,
-                        policy=cpolicy,
-                        page_target_bytes=page_target_bytes,
-                        compression=compression,
-                    ).items():
-                        leaf_chunks.append((f"{col}{suffix}", gchunk))
-                else:
-                    leaf_chunks.append(
-                        (
-                            col,
-                            encode_chunk(
-                                arr,
-                                policy=cpolicy,
-                                page_target_bytes=page_target_bytes,
-                                compression=compression,
-                                nullable=arr.null_count > 0,
-                                fsst_cache=fsst_tables,
-                                fsst_cache_key=f"{col}|{part_key}",
-                            ),
-                        )
-                    )
+                for suffix, chunk in encode_column(
+                    arr, policy=cpolicy, page_target_bytes=page_target_bytes,
+                    compression=compression, fsst_cache=fsst_tables,
+                    fsst_cache_key=f"{col}|{part_key}",
+                ).items():
+                    leaf_chunks.append((col + suffix, chunk))
             for col, chunk in leaf_chunks:
                 chunk_id = hashlib.sha1(f"{part_key}|{col}|{seq}".encode()).hexdigest()[:20]
                 encs = ",".join(chunk.encodings)

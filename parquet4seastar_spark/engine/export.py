@@ -9,6 +9,11 @@ reader (and pyarrow, DuckDB, ...) reads the output directly.  FSST chunks
 are rejected with guidance -- FSST is not a standard parquet encoding, so
 export from the 'auto' profile requires re-encoding.
 
+Each column's chunks come from the codec layer's one column rule
+(``decode_job._ChunkGroup.column``, ``pages.column_chunks``) and reach the
+container writer as one ``DremelColumn``: a flat or list<primitive>
+column's single chunk and a nested column's Dremel leaves alike.
+
 Scale shape: the decoder's one per-chunk pass (decode_job._by_chunk: a
 repartition on (part_key, chunk_seq) and one mapInArrow over key runs);
 each task writes its own files to the (shared) output directory -- no
@@ -23,7 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.parquet_file import DremelColumn, write_parquet_file
-from .decode_job import _by_chunk, _ChunkGroup
+from .decode_job import _by_chunk, _chunk_filter, _ChunkGroup
 
 
 def export_parquet_files(
@@ -32,30 +37,15 @@ def export_parquet_files(
     """Write each (part_key, chunk_seq) chunk group as a standard .parquet
     file under ``out_dir``; returns (part_key, chunk_seq, file, num_rows)."""
     os.makedirs(out_dir, exist_ok=True)
-    name_filter = F.col("column").isin(["row_id", *columns])
-    for c in columns:
-        # nested columns are '<col>#g<i>' dremel leaf chunks
-        name_filter = name_filter | F.col("column").startswith(f"{c}#g")
-    pages = encoded.filter((F.col("kind") == "page") & name_filter)
-    cols = ["row_id", *columns]
+    pages = encoded.filter((F.col("kind") == "page") & _chunk_filter(columns))
 
     def write_group(group: _ChunkGroup) -> pa.Table:
-        chunks = {}
-        for c in cols:
-            if c in group.page_rows:
-                chunks[c] = group.chunk(c)
-            else:
-                leaves = {
-                    name: group.chunk(name) for name in group.page_rows if name.startswith(f"{c}#g")
-                }
-                if not leaves:
-                    raise ValueError(f"column not present in encoded table: {c}")
-                chunks[c] = DremelColumn(leaves)
-        num_rows = chunks["row_id"].num_rows
+        chunks = {c: group.column(c) for c in ["row_id", *columns]}
+        num_rows = chunks["row_id"]["row_id"].num_rows
         part_key, chunk_seq = group.part_key, group.chunk_seq
         safe_key = "".join(ch if ch.isalnum() else "_" for ch in part_key)
         path = os.path.join(out_dir, f"part-{safe_key}-{chunk_seq:05d}.parquet")
-        write_parquet_file(path, chunks, num_rows)
+        write_parquet_file(path, {c: DremelColumn(leaves) for c, leaves in chunks.items()}, num_rows)
         return pa.table(
             {
                 "part_key": pa.array([part_key], type=pa.string()),

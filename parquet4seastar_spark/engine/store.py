@@ -2,9 +2,10 @@
 
 A pages/lineage table written flat forces every reader to row-group-skip
 its way past the other columns' page payloads.  Writing it partitioned by
-``column`` (one Hive-style ``column=<name>`` directory per stored column,
-nested dremel leaves included as ``column=text%23g0`` etc.) turns a
-single-column decode or a bloom point-lookup into a scan of ONLY that
+``column`` (one Hive-style ``column=<name>`` directory per stored chunk
+name: a nested column's Dremel leaves get one each, ``column=meta%23g0``
+etc., and ``pages.column_chunks`` maps a column to its directories) turns
+a single-column decode or a bloom point-lookup into a scan of ONLY that
 column's files — directory-level pruning, before any parquet footer is
 even opened.  At 100 TB the text payload dominates the store; a decode of
 a metadata column must not touch it.
@@ -56,6 +57,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..codecs.pages import column_chunks
+
 # the footer key under which Spark's parquet writer records the row schema
 SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -75,18 +78,15 @@ def is_column_store(path: str) -> bool:
 
 def store_column_dirs(path: str, columns: list[str] | None = None) -> list[str]:
     """Partition directories for the requested logical columns (always
-    including row_id; a nested column brings all its ``<col>#g<i>`` dremel
-    leaf directories).  ``columns=None`` returns every partition."""
-    out = []
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("column="):
-            continue
-        value = unquote(d.split("=", 1)[1])
-        if columns is None or value == "row_id" or value in columns or any(
-            value.startswith(f"{c}#g") for c in columns
-        ):
-            out.append(os.path.join(path, d))
-    return out
+    including row_id; a column brings every chunk ``pages.column_chunks``
+    gives it).  ``columns=None`` returns every partition."""
+    dirs = {
+        unquote(d.split("=", 1)[1]): os.path.join(path, d)
+        for d in sorted(os.listdir(path))
+        if d.startswith("column=")
+    }
+    keep = dirs if columns is None else {n for c in ["row_id", *columns] for n in column_chunks(c, dirs)}
+    return [d for name, d in dirs.items() if name in keep]
 
 
 def read_store(

@@ -170,7 +170,7 @@ def audit_lineage(encoded: DataFrame) -> DataFrame:
     """
     import pyarrow as pa
 
-    from ..codecs.pages import chunk_content_sha, decode_chunk, dremel_recompute_sha
+    from ..codecs.pages import content_sha
     from .decode_job import _by_chunk, _ChunkGroup
 
     def audit_group(group: _ChunkGroup) -> pa.Table:
@@ -187,13 +187,7 @@ def audit_lineage(encoded: DataFrame) -> DataFrame:
         cols, oks, st, rec = [], [], [], []
         for c, sha in stored.items():
             try:
-                chunk = group.chunk(c)
-                if chunk.logical.startswith("g:"):
-                    # dremel leaf ('<col>#g<i>'): sha covers level streams
-                    # + non-null values (pages._levels_sha)
-                    recomputed = dremel_recompute_sha(chunk)
-                else:
-                    recomputed = chunk_content_sha(decode_chunk(chunk))
+                recomputed = content_sha(group.chunk(c))
             except Exception as e:  # corrupt pages may fail to decode at all
                 recomputed = f"decode-error:{type(e).__name__}"
             cols.append(c)

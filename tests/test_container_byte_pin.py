@@ -23,7 +23,7 @@ from decimal import Decimal
 import pyarrow as pa
 import pytest
 
-from parquet4seastar_spark.codecs.pages import encode_chunk, encode_dremel_column
+from parquet4seastar_spark.codecs.pages import encode_chunk, encode_column
 from parquet4seastar_spark.codecs.parquet_file import DremelColumn, write_parquet_file
 
 
@@ -75,7 +75,7 @@ def _lists(path):
 def _dremel(typ, rows, policy="plain"):
     def write(path):
         arr = pa.array(rows, type=typ)
-        leaves = encode_dremel_column(arr, policy=policy)
+        leaves = encode_column(arr, policy=policy)
         write_parquet_file(path, {"c": DremelColumn(leaves)}, len(arr))
 
     return write

@@ -390,12 +390,12 @@ def test_file_writer_full_roundtrip_golden(tmp_path):
     ids=["struct", "map_of_struct", "struct_of_list"],
 )
 def test_parquet_to_cql_rejects_columns_it_cannot_render(tmp_path, typ, rows):
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn, write_parquet_file
 
     arr = pa.array(rows, type=typ)
     path = str(tmp_path / "c.parquet")
-    write_parquet_file(path, {"c": DremelColumn(encode_dremel_column(arr, policy="plain"))}, 2)
+    write_parquet_file(path, {"c": DremelColumn(encode_column(arr, policy="plain"))}, 2)
     with pytest.raises(ValueError, match="column 'c'"):
         parquet_to_cql(path)
 
@@ -403,12 +403,12 @@ def test_parquet_to_cql_rejects_columns_it_cannot_render(tmp_path, typ, rows):
 def test_dremel_map_dumps_as_a_cql_map(tmp_path):
     # DremelColumn writes a map as a LIST of a REQUIRED struct<key, value>;
     # the dump renders it as the map it is, not as a list of a UDT
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn
 
     arr = pa.array([[("a", 1), ("b", None)], None, []], type=pa.map_(pa.string(), pa.int32()))
     path = str(tmp_path / "m.parquet")
-    write_parquet_file(path, {"m": DremelColumn(encode_dremel_column(arr, policy="plain"))}, 3)
+    write_parquet_file(path, {"m": DremelColumn(encode_column(arr, policy="plain"))}, 3)
     insert = 'INSERT INTO "parquet"("row_number", "m") VALUES'
     assert parquet_to_cql(path) == (
         '\nCREATE TABLE "parquet"("row_number" bigint PRIMARY KEY, "m" frozen<map<text, int>>);\n'

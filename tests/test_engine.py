@@ -362,6 +362,57 @@ def test_column_partitioned_store(spark, tmp_path):
     ), plan
 
 
+def test_twelve_leaf_struct_keeps_leaf_order_in_every_consumer(spark, tmp_path):
+    """A struct stored as 12 Dremel leaf chunks: '#g10' orders after '#g9'
+    in the store's directory pick, decode_table, audit_lineage and
+    export_parquet_files (read back by Spark)."""
+    import re
+    from urllib.parse import unquote
+
+    from parquet4seastar_spark.engine.decode_job import decode_table
+    from parquet4seastar_spark.engine.export import export_parquet_files
+    from parquet4seastar_spark.engine.store import read_store, write_store
+    from parquet4seastar_spark.engine.verify import audit_lineage
+
+    kinds = ["string", "int", "array<int>"]
+
+    def field(k, i):
+        if (i + k) % (5 + k % 3) == 0:
+            return None
+        return [f"v{i}-{k}", i * k - 50, [i, k, None][: (i + k) % 4]][k % 3]
+
+    rows = [
+        (i, i % 3, None if i % 7 == 0 else {f"f{k}": field(k, i) for k in range(12)}, f"l{i % 4}")
+        for i in range(60)
+    ]
+    struct = ",".join(f"f{k}:{kinds[k % 3]}" for k in range(12))
+    src = spark.createDataFrame(rows, f"row_id long, salt int, big struct<{struct}>, lang string")
+    store = str(tmp_path / "store")
+    write_store(encode_table(
+        src, columns=["big", "lang"], policy="plain", salt_col="salt", num_partitions=2,
+        salt_target_rows=20,
+    ), store)
+    enc = read_store(spark, store, ["big"])
+    # input files are URIs: one unquote gives the directory name on disk
+    dirs = {re.search(r"/column=([^/]+)/", unquote(f)).group(1) for f in enc.inputFiles()}
+    assert dirs == {"row_id", *(f"big%23g{k}" for k in range(12))}
+
+    want = {i: big for i, _, big, _ in rows}
+
+    def got(frame):
+        return {
+            r["row_id"]: None if r["big"] is None else r["big"].asDict(recursive=True)
+            for r in frame.select("row_id", "big").collect()
+        }
+
+    assert got(decode_table(enc, ["big"])) == want
+    audit = audit_lineage(enc).collect()
+    assert len(audit) > 13 and all(r["ok"] for r in audit)
+    out = str(tmp_path / "export")
+    export_parquet_files(enc, ["big"], out).collect()
+    assert got(spark.read.parquet(out)) == want
+
+
 def test_chunk_stats_pruning(spark):
     import pyspark.sql.functions as F
 
@@ -933,29 +984,19 @@ def test_bloom_ignored_on_type_domain_mismatch(spark):
     enc.unpersist()
 
 
-def test_decode_discovery_persists_only_computed_frames(spark, tmp_path):
-    """Schema discovery persists the pages frame when it chains off a live
-    encode plan (else the encode job runs twice: once for discovery, once
-    for decode) but NOT when it reads from storage (the 100-TB shape,
-    where the kind='chunk' filter pushes down to the scan)."""
-    import pyspark.sql.functions as F
-
+def test_decode_table_persists_nothing(spark):
+    """decode_table leaves Spark's cache as it found it: encode -> decode
+    -> count of a computed pages frame (one chained straight off
+    encode_table) holds no more persisted RDDs than before."""
     from parquet4seastar_spark.engine.decode_job import decode_table
     from parquet4seastar_spark.engine.encode_job import encode_table
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        F.col("doc_id").alias("row_id"), "text", "source"
-    )
-    enc = encode_table(docs, columns=["text"], policy="plain", salt_col="source", num_partitions=2)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    enc = encode_table(_docs(spark), columns=["text"], policy="plain", salt_col="source", num_partitions=2)
     assert decode_table(enc, ["text"]).count() == 500
-    assert enc.storageLevel.useMemory or enc.storageLevel.useDisk
-    enc.unpersist()
-
-    stored_path = str(tmp_path / "enc_pages")
-    enc.write.parquet(stored_path)
-    stored = spark.read.parquet(stored_path)
-    assert decode_table(stored, ["text"]).count() == 500
-    assert not (stored.storageLevel.useMemory or stored.storageLevel.useDisk)
+    assert persisted().size() == before
+    assert not (enc.storageLevel.useMemory or enc.storageLevel.useDisk)
 
 
 def test_verify_fast_empty_top_salt_bucket(spark):

@@ -165,7 +165,7 @@ def test_our_files_pyarrow_reads_bitexact(data, tmp_path_factory):
 
 # ---- nested direction: the recursive walker's container export ------------
 # random nested schemas (reusing test_dremel's strategies) encode through
-# encode_dremel_column, export via DremelColumn's recursive schema emitter,
+# encode_column, export via DremelColumn's recursive schema emitter,
 # and pyarrow (independent implementation) must read every row back equal.
 
 
@@ -174,7 +174,7 @@ def test_our_files_pyarrow_reads_bitexact(data, tmp_path_factory):
 def test_our_nested_files_pyarrow_reads(data, tmp_path_factory):
     from test_dremel import _types, _values_for
 
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn
 
     t = data.draw(_types(3).filter(pa.types.is_nested))
@@ -192,7 +192,7 @@ def test_our_nested_files_pyarrow_reads(data, tmp_path_factory):
             ["plain", "auto_fast"] if has_bool else ["plain", "auto_fast", "reference"]
         )
     )
-    ch = encode_dremel_column(arr, policy=policy, page_target_bytes=128)
+    ch = encode_column(arr, policy=policy, page_target_bytes=128)
     path = str(tmp_path_factory.mktemp("nested") / "f.parquet")
     write_parquet_file(path, {"c": DremelColumn(ch)}, len(arr))
     back = pq.read_table(path).column("c").combine_chunks()

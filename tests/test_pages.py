@@ -397,12 +397,12 @@ def _dremel_roundtrip(arr, policy="auto", page_target_bytes=256):
     """Encode ANY nested shape through the ONE recursive walker's page
     path and decode it back (engine-equivalent nested codec route)."""
     from parquet4seastar_spark.codecs.pages import (
-        decode_dremel_column,
-        encode_dremel_column,
+        decode_column,
+        encode_column,
     )
 
-    ch = encode_dremel_column(arr, policy=policy, page_target_bytes=page_target_bytes)
-    out = decode_dremel_column(ch)
+    ch = encode_column(arr, policy=policy, page_target_bytes=page_target_bytes)
+    out = decode_column(ch)
     if out.type != arr.type:
         out = out.cast(arr.type)
     out.validate(full=True)

@@ -297,13 +297,13 @@ def test_write_parquet_rejects_engine_internal_def_levels(tmp_path):
     # a raw dremel leaf passed as a flat column spec would write a
     # level-mismatched (corrupt) file: its max_def counts the struct level
     # the flat schema lacks, so the writer's level check refuses it
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
 
     sarr = pa.array(
         [{"x": 1}, None, {"x": None}, {"x": 4}],
         type=pa.struct([("x", pa.int64())]),
     )
-    leaves = encode_dremel_column(sarr, policy="plain")
+    leaves = encode_column(sarr, policy="plain")
     (leaf,) = leaves.values()
     assert leaf.max_def == 2 and leaf.max_rep == 0
     with pytest.raises(ValueError, match="does not match its schema leaf"):
@@ -343,21 +343,21 @@ def test_struct_rejects_reserved_field_names():
     # a field named 'a.b' would silently restructure the dot-joined leaf
     # paths on decode; '#'-containing names collide with the '#g' markers --
     # the walker fails fast on both
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
 
     dotted = pa.array(
         [{"a.b": 1, "c": 2}], type=pa.struct([("a.b", pa.int64()), ("c", pa.int64())])
     )
     with pytest.raises(ValueError, match="reserved"):
-        encode_dremel_column(dotted)
+        encode_column(dotted)
     marker = pa.array(
         [[{"#list": "x"}]], type=pa.list_(pa.struct([("#list", pa.string())]))
     )
     with pytest.raises(ValueError, match="reserved"):
-        encode_dremel_column(marker)
+        encode_column(marker)
     suffix = pa.array([{"x#g0": 1}], type=pa.struct([("x#g0", pa.int64())]))
     with pytest.raises(ValueError, match="reserved"):
-        encode_dremel_column(suffix)
+        encode_column(suffix)
 
 
 
@@ -366,7 +366,7 @@ def test_write_parquet_nested_lists(tmp_path):
     # the inner list OPTIONAL iff the def budget has its level); the SAME
     # column also exports as a DremelColumn.  pyarrow and our tree reader
     # read both back equal
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn
 
     ll = pa.list_(pa.list_(pa.int64()))
@@ -383,7 +383,7 @@ def test_write_parquet_nested_lists(tmp_path):
         assert chunk.max_rep == 2
         for name, spec in [
             (f"ll{i}", chunk),
-            (f"dremel{i}", DremelColumn(encode_dremel_column(arr, policy="plain"))),
+            (f"dremel{i}", DremelColumn(encode_column(arr, policy="plain"))),
         ]:
             path = str(tmp_path / f"{name}.parquet")
             write_parquet_file(path, {"ll": spec}, len(arr))
@@ -444,7 +444,7 @@ def test_write_struct_list_optional_field_pyarrow_reads(tmp_path):
     # list<struct> with an OPTIONAL field: the recursive schema emitter
     # writes every node OPTIONAL, so independent readers compute the same
     # max_def as the walker's leaf pages carry
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn
 
     t = pa.list_(pa.struct([("tok", pa.string()), ("attr", pa.int64())]))
@@ -455,7 +455,7 @@ def test_write_struct_list_optional_field_pyarrow_reads(tmp_path):
         [{"tok": "c", "attr": 3}, None, {"tok": "d", "attr": None}],
     ] * 25
     arr = pa.array(vals, type=t)
-    ch = encode_dremel_column(arr, policy="plain")
+    ch = encode_column(arr, policy="plain")
     by_path = {c.logical.split("|")[0][2:]: c for c in ch.values()}
     assert by_path["l.sattr"].max_def == 4  # list(2) + struct(3) + field(4)
     path = str(tmp_path / "spans.parquet")
@@ -524,7 +524,7 @@ def test_read_column_pyarrow_nested(tmp_path):
 
 def test_read_column_roundtrips_our_nested_export(tmp_path):
     # the loop closes: our nested export read back by OUR OWN reader
-    from parquet4seastar_spark.codecs.pages import encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import encode_column
     from parquet4seastar_spark.codecs.parquet_file import DremelColumn
 
     arr = pa.array(
@@ -532,7 +532,7 @@ def test_read_column_roundtrips_our_nested_export(tmp_path):
     )
     path = str(tmp_path / "ours.parquet")
     write_parquet_file(
-        path, {"ll": DremelColumn(encode_dremel_column(arr, policy="plain"))}, len(arr)
+        path, {"ll": DremelColumn(encode_column(arr, policy="plain"))}, len(arr)
     )
     out = ParquetFileReader(path).read_column("ll")
     assert out.cast(arr.type).to_pylist() == arr.to_pylist()

@@ -147,13 +147,13 @@ def test_struct_list_roundtrip_fuzz(vals, policy):
     # array<struct> with OPTIONAL fields: null lists, empty lists, null
     # struct elements, null fields under present structs
     from parquet4seastar_spark.codecs.pages import (
-        decode_dremel_column,
-        encode_dremel_column,
+        decode_column,
+        encode_column,
     )
 
     arr = pa.array(vals, type=pa.list_(_SPAN_T))
-    ch = encode_dremel_column(arr, policy=policy, page_target_bytes=128)
-    assert decode_dremel_column(ch).to_pylist() == arr.to_pylist()
+    ch = encode_column(arr, policy=policy, page_target_bytes=128)
+    assert decode_column(ch).to_pylist() == arr.to_pylist()
 
 
 _TREE_T = pa.struct([
@@ -187,13 +187,13 @@ def test_mixed_tree_roundtrip_fuzz(vals, policy):
     # the full supported tree in one column: nested struct, list under
     # struct, list<struct> under struct -- every null/empty combination
     from parquet4seastar_spark.codecs.pages import (
-        decode_dremel_column,
-        encode_dremel_column,
+        decode_column,
+        encode_column,
     )
 
     arr = pa.array(vals, type=_TREE_T)
-    ch = encode_dremel_column(arr, policy=policy, page_target_bytes=128)
-    out = decode_dremel_column(ch)
+    ch = encode_column(arr, policy=policy, page_target_bytes=128)
+    out = decode_column(ch)
     out.validate(full=True)
     assert out.to_pylist() == arr.to_pylist()
 
@@ -217,11 +217,11 @@ def test_mixed_tree_roundtrip_fuzz(vals, policy):
 )
 def test_list3_roundtrip_fuzz(vals, policy):
     # three repetition levels in ONE leaf stream (recursive walker)
-    from parquet4seastar_spark.codecs.pages import decode_dremel_column, encode_dremel_column
+    from parquet4seastar_spark.codecs.pages import decode_column, encode_column
 
     arr = pa.array(vals, type=pa.list_(pa.list_(pa.list_(pa.int32()))))
-    ch = encode_dremel_column(arr, policy=policy, page_target_bytes=128)
-    out = decode_dremel_column(ch)
+    ch = encode_column(arr, policy=policy, page_target_bytes=128)
+    out = decode_column(ch)
     out.validate(full=True)
     assert out.to_pylist() == arr.to_pylist()
 

@@ -21,8 +21,9 @@ Usage (also runnable via spark-submit --py-files for cluster deployment):
 
 dump-cql decodes the pages table and renders CREATE TABLE + INSERT
 statements like the reference's cql_reader (cql_reader.cc:239-400 schema,
-:150-222 row rendering) -- scoped to the flat column types our engine
-stores.
+:150-222 row rendering) -- scoped to the column types our engine stores
+as one chunk (flat and list<primitive>); a nested column stored as Dremel
+leaf chunks is refused by name.
 """
 
 from __future__ import annotations
@@ -212,13 +213,14 @@ def cmd_lookup(args):
 
 
 def cmd_dump_cql(args):
+    import pyspark.sql.functions as F
+
+    from parquet4seastar_spark.codecs.pages import column_chunks
     from parquet4seastar_spark.engine.decode_job import decode_table
 
     spark = _spark(args)
     enc = spark.read.parquet(args.encoded)
     columns = args.columns.split(",")
-    import pyspark.sql.functions as F
-
     # logical types live on the tiny kind='chunk' lineage rows -- no need to
     # scan the page rows for schema discovery
     logicals = {
@@ -226,6 +228,11 @@ def cmd_dump_cql(args):
         for r in enc.filter(F.col("kind") == "chunk").select("column", "logical").distinct().collect()
     }
     cols = ["row_id", *columns]
+    for c in cols:
+        chunks = column_chunks(c, logicals)
+        if chunks != [c]:
+            how = "is stored as Dremel leaf chunks" if chunks else "is not in the encoded table"
+            raise ValueError(f"dump-cql renders flat and list<primitive> columns only: column {c!r} {how}")
     ddl_cols = ", ".join(f"{c} {_cql_type(logicals[c])}" for c in cols)
     print(f"CREATE TABLE {args.table} ({ddl_cols}, PRIMARY KEY ({args.pk}));")
     rows = decode_table(enc, columns).orderBy("row_id").limit(args.limit).collect()
