@@ -5,16 +5,19 @@ The greedy longest-match tokenization is a sequential chain (pos ->
 pos + match_len); the pure-numpy path vectorizes it with per-position
 matching plus pointer-doubling chain enumeration (codecs/fsst.py,
 codecs/chain.py), which tops out ~21 MB/s single-proc because ~60% of the
-match work is at positions the chain never visits.  A ~40-line scalar C
-loop does exactly the same greedy rule at memory speed.  The kernel is
-compiled ON FIRST USE with the system C compiler (cc -O3) into a cached
-shared object; any failure (no compiler, read-only cache, sandbox) falls
-back to the numpy path.  The reason is kept in ``error`` (the exception
-text plus the tail of the compiler's stderr) and named in one
-RuntimeWarning per process.  The fallback changes speed only: both paths
-write the same bytes.  Set ``P4S_NO_NATIVE=1`` to force the fallback
-without a warning (tests exercise both paths and assert byte-identical
-output).
+match work is at positions the chain never visits.  In C the greedy rule
+is one static inline match step (``p4s_fsst_match``: the 8-byte window
+load, the lut2 probe, the mask/value compare and the end-of-segment
+guard), which the paired-segment encode kernel (``p4s_fsst_encode2``)
+and the training loop (``p4s_fsst_train``) both call, and it runs at
+memory speed.  The kernel is compiled ON FIRST USE with the system C
+compiler (cc -O3) into a cached shared object; any failure (no
+compiler, read-only cache, sandbox) falls back to the numpy path.  The
+reason is kept in ``error`` (the exception text plus the tail of the
+compiler's stderr) and named in one RuntimeWarning per process.  The
+fallback changes speed only: both paths write the same bytes.  Set
+``P4S_NO_NATIVE=1`` to force the fallback without a warning (tests
+exercise both paths and assert byte-identical output).
 
 Semantics are pinned to the numpy path: same LUT tables (lut2 sentinel
 entry makes the window compare unconditionally false), same
@@ -39,114 +42,75 @@ _SRC = r"""
 #include <stdlib.h>
 #include <string.h>
 
-/* Greedy FSST tokenization of one segment fused with payload emission:
-   writes the encoded byte stream (code, or 255 + literal byte on a
-   1-byte-table miss) directly; identical output to fsst._tokenize ->
-   numpy assembly.  Tables are the SymbolTable code-indexed arrays
-   (fsst.py):
+/* FSST symbol tables as the kernels read them: the SymbolTable
+   code-indexed arrays (fsst.py).
    lut1[256]  byte -> 1-byte symbol code, miss = 255 (escape);
    lut2[65536] 2-byte prefix -> multi-byte symbol code, miss = 254
               (sentinel: masks[254]=0, vals[254]=~0 -> compare false);
-   lens[256] / vals[256] / masks[256] code -> length / value / mask.
-   out needs 2n bytes worst case; returns the emitted length. */
-long p4s_fsst_encode(
-    const uint8_t *data, long n,
-    const uint8_t *lut1, const uint8_t *lut2,
-    const int8_t *lens, const uint64_t *vals, const uint64_t *masks,
-    uint8_t *out)
+   lens[256] / vals[256] / masks[256] code -> length / value / mask. */
+typedef struct {
+    const uint8_t *lut1, *lut2;
+    const int8_t *lens;
+    const uint64_t *vals, *masks;
+} p4s_fsst_tab;
+
+/* The FSST greedy step, the one copy of the match rule (fsst._match is
+   its numpy twin; encode and training both call it): the longest symbol
+   at data[i] that does not run past end.  Stores the 8-byte window,
+   zero-padded past end, in *win and the token's code in *code (255 =
+   escape: the literal byte follows it); returns the token length. */
+static inline long p4s_fsst_match(
+    const p4s_fsst_tab *t, const uint8_t *data, long i, long end,
+    uint64_t *win, uint8_t *code)
 {
-    long i = 0, o = 0;
-    while (i < n) {
-        uint64_t win = 0;
-        long rem = n - i;
-        if (rem >= 8) {
-            memcpy(&win, data + i, 8);
-        } else {
-            memcpy(&win, data + i, (size_t)rem);
-        }
-        uint8_t c2 = lut2[(uint16_t)win];
-        int L = lens[c2];
-        if (((win & masks[c2]) == vals[c2]) && (i + L <= n)) {
-            out[o++] = c2;
-            i += L;
-        } else {
-            uint8_t c1 = lut1[data[i]];
-            out[o++] = c1;
-            if (c1 == 255) out[o++] = data[i];  /* escape + literal */
-            i += 1;
-        }
-    }
-    return o;
+    uint64_t w = 0;
+    if (end - i >= 8) memcpy(&w, data + i, 8);
+    else memcpy(&w, data + i, (size_t)(end - i));
+    *win = w;
+    uint8_t c2 = t->lut2[(uint16_t)w];
+    long L = t->lens[c2];
+    if (((w & t->masks[c2]) == t->vals[c2]) && (i + L <= end)) { *code = c2; return L; }
+    *code = t->lut1[data[i]];
+    return 1;
 }
 
-/* Two independent segments tokenized in ONE interleaved loop: the
-   greedy chain is serially dependent (next position depends on the
+typedef struct { const uint8_t *data; long i, n; uint8_t *out; long o; } p4s_fsst_stream;
+
+/* One greedy token of a stream, emitted: its code, and after an escape
+   the literal byte. */
+static inline void p4s_fsst_emit(const p4s_fsst_tab *t, p4s_fsst_stream *s)
+{
+    uint64_t win;
+    uint8_t c;
+    long L = p4s_fsst_match(t, s->data, s->i, s->n, &win, &c);
+    s->out[s->o++] = c;
+    if (c == 255) s->out[s->o++] = s->data[s->i];
+    s->i += L;
+}
+
+/* FSST encode of two independent segments in ONE interleaved loop: the
+   greedy chain is serially dependent (the next position depends on the
    match length), so a single stream stalls on the 64 KiB lut2 lookup
-   latency; two streams hide it.  Per-segment output is byte-identical
-   to p4s_fsst_encode (same rule, same tables).  Writes stream B's
-   length to *ob_out; returns stream A's. */
+   latency; two streams hide it.  Each segment's bytes are those of a
+   greedy pass over it alone; nb = 0 encodes one segment.  Each output
+   needs 2x its segment's bytes worst case.  Writes stream B's length
+   to *ob_out; returns stream A's. */
 long p4s_fsst_encode2(
     const uint8_t *da, long na, const uint8_t *db, long nb,
     const uint8_t *lut1, const uint8_t *lut2,
     const int8_t *lens, const uint64_t *vals, const uint64_t *masks,
     uint8_t *outa, uint8_t *outb, long *ob_out)
 {
-    long ia = 0, oa = 0, ib = 0, ob = 0;
-    while (ia < na && ib < nb) {
-        uint64_t wa = 0, wb = 0;
-        long ra = na - ia, rb = nb - ib;
-        if (ra >= 8) memcpy(&wa, da + ia, 8); else memcpy(&wa, da + ia, (size_t)ra);
-        if (rb >= 8) memcpy(&wb, db + ib, 8); else memcpy(&wb, db + ib, (size_t)rb);
-        uint8_t ca = lut2[(uint16_t)wa];
-        uint8_t cb = lut2[(uint16_t)wb];
-        int la = lens[ca], lb = lens[cb];
-        if (((wa & masks[ca]) == vals[ca]) && (ia + la <= na)) {
-            outa[oa++] = ca; ia += la;
-        } else {
-            uint8_t c1 = lut1[da[ia]];
-            outa[oa++] = c1;
-            if (c1 == 255) outa[oa++] = da[ia];
-            ia += 1;
-        }
-        if (((wb & masks[cb]) == vals[cb]) && (ib + lb <= nb)) {
-            outb[ob++] = cb; ib += lb;
-        } else {
-            uint8_t c1 = lut1[db[ib]];
-            outb[ob++] = c1;
-            if (c1 == 255) outb[ob++] = db[ib];
-            ib += 1;
-        }
+    const p4s_fsst_tab t = {lut1, lut2, lens, vals, masks};
+    p4s_fsst_stream a = {da, 0, na, outa, 0}, b = {db, 0, nb, outb, 0};
+    while (a.i < a.n && b.i < b.n) {
+        p4s_fsst_emit(&t, &a);
+        p4s_fsst_emit(&t, &b);
     }
-    while (ia < na) {
-        uint64_t w = 0;
-        long r = na - ia;
-        if (r >= 8) memcpy(&w, da + ia, 8); else memcpy(&w, da + ia, (size_t)r);
-        uint8_t c2 = lut2[(uint16_t)w];
-        int L = lens[c2];
-        if (((w & masks[c2]) == vals[c2]) && (ia + L <= na)) { outa[oa++] = c2; ia += L; }
-        else {
-            uint8_t c1 = lut1[da[ia]];
-            outa[oa++] = c1;
-            if (c1 == 255) outa[oa++] = da[ia];
-            ia += 1;
-        }
-    }
-    while (ib < nb) {
-        uint64_t w = 0;
-        long r = nb - ib;
-        if (r >= 8) memcpy(&w, db + ib, 8); else memcpy(&w, db + ib, (size_t)r);
-        uint8_t c2 = lut2[(uint16_t)w];
-        int L = lens[c2];
-        if (((w & masks[c2]) == vals[c2]) && (ib + L <= nb)) { outb[ob++] = c2; ib += L; }
-        else {
-            uint8_t c1 = lut1[db[ib]];
-            outb[ob++] = c1;
-            if (c1 == 255) outb[ob++] = db[ib];
-            ib += 1;
-        }
-    }
-    *ob_out = ob;
-    return oa;
+    while (a.i < a.n) p4s_fsst_emit(&t, &a);
+    while (b.i < b.n) p4s_fsst_emit(&t, &b);
+    *ob_out = b.o;
+    return a.o;
 }
 
 /* FSST symbol-table training (fsst.train_symbol_table), bit-identical to
@@ -282,6 +246,7 @@ long p4s_fsst_train(
     uint8_t lut1[256], lut2[65536];
     int8_t lens[256];
     uint64_t vals[256], masks[256];
+    const p4s_fsst_tab t = {lut1, lut2, lens, vals, masks};
     p4s_cand heap[P4S_MAX_SYMBOLS];
     long ns = 0, rc = -1;
     uint32_t *best = malloc(65536 * sizeof(uint32_t));
@@ -299,12 +264,9 @@ long p4s_fsst_train(
             long end = n - s0 < P4S_SEG ? n : s0 + P4S_SEG;
             long i = s0;
             while (i < end) {
-                uint64_t win = 0;
-                long rem = end - i;
-                memcpy(&win, data + i, (size_t)(rem >= 8 ? 8 : rem));
-                uint8_t c2 = lut2[(uint16_t)win];
-                long L = lens[c2];
-                if (!(((win & masks[c2]) == vals[c2]) && (i + L <= end))) L = 1;
+                uint64_t win;
+                uint8_t code;
+                long L = p4s_fsst_match(&t, data, i, end, &win, &code);
                 uint64_t v = win & p4s_len_mask(L);
                 if (p4s_count(&c, v, L)) goto done;
                 if (pl && pl + L <= 8 && p4s_count(&c, pv | (v << (8 * pl)), pl + L)) goto done;
@@ -637,13 +599,6 @@ def get_kernel():
         return None
     try:
         lib = ctypes.CDLL(_build())
-        lib.p4s_fsst_encode.restype = ctypes.c_long
-        lib.p4s_fsst_encode.argtypes = [
-            ctypes.c_void_p, ctypes.c_long,
-            ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_void_p,
-        ]
         lib.p4s_fsst_encode2.restype = ctypes.c_long
         lib.p4s_fsst_encode2.argtypes = [
             ctypes.c_void_p, ctypes.c_long, ctypes.c_void_p, ctypes.c_long,

@@ -166,18 +166,6 @@ def _codes_at(data: np.ndarray, pos: np.ndarray, c2: np.ndarray, ok2: np.ndarray
 _SEGMENT = 1 << 18  # 256 KiB
 
 
-def _table_ptrs(table: SymbolTable):
-    """The five code-indexed table pointers every C-kernel call takes, in
-    argument order (lut1, lut2, lens, vals, masks)."""
-    import ctypes
-
-    p = lambda a: a.ctypes.data_as(ctypes.c_void_p)  # noqa: E731
-    return (
-        p(table.lut1), p(table.lut2), p(table.lens_by_code),
-        p(table.vals_by_code), p(table.mask_by_code),
-    )
-
-
 def _tokenize(data: np.ndarray, table: SymbolTable) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Greedy left-to-right tokenization; returns (positions, lengths, codes).
 
@@ -186,10 +174,12 @@ def _tokenize(data: np.ndarray, table: SymbolTable) -> tuple[np.ndarray, np.ndar
     segment boundary: the _match tail guard rejects matches that would run
     past the segment, costing at most 7 escape bytes per 256 KiB.
 
-    The numpy path of fsst_encode and train_symbol_table (the C kernel,
-    codecs/_native.py, fuses tokenization into both; P4S_NO_NATIVE=1 forces
-    this path) — ~60% of the vectorized match work lands on positions the
-    greedy chain never visits, which no full-array formulation can avoid.
+    The numpy path of fsst_encode and train_symbol_table.  The C kernels
+    (codecs/_native.py) run the same rule as one greedy match step,
+    ``p4s_fsst_match``, that the encode kernel and training both call;
+    P4S_NO_NATIVE=1 forces this path.  ~60% of the vectorized match work
+    lands on positions the greedy chain never visits, which no full-array
+    formulation can avoid.
     """
     n = len(data)
     if n == 0:
@@ -225,11 +215,10 @@ def fsst_encode(data: bytes | np.ndarray, table: SymbolTable) -> bytes:
     lib = _native.get_kernel()
     if lib is not None and len(arr):
         # fused tokenize+emit in C, per 256 KiB segment (same boundary rule
-        # as the numpy path -> byte-identical payload).  Segments are
-        # processed in PAIRS through one interleaved loop: the greedy
-        # chain serializes on the 64 KiB lut2 lookup, so two independent
-        # streams hide the latency; each segment's bytes are identical to
-        # the one-stream emission and land in segment order.
+        # as the numpy path -> byte-identical payload).  Segments go in
+        # PAIRS through one interleaved kernel loop, which hides the lut2
+        # lookup latency the serial greedy chain stalls on; an odd last
+        # segment runs alone (nb = 0).  Segment bytes land in order.
         import ctypes
 
         if not arr.flags.c_contiguous:
@@ -238,32 +227,25 @@ def fsst_encode(data: bytes | np.ndarray, table: SymbolTable) -> bytes:
         out = np.empty(2 * n, dtype=np.uint8)
         scratch = np.empty(2 * _SEGMENT, dtype=np.uint8)
         ob_arr = np.zeros(1, dtype=np.int64)
-        tbl_ptrs = _table_ptrs(table)
+        p = lambda a: a.ctypes.data_as(ctypes.c_void_p)  # noqa: E731
+        tables = (
+            p(table.lut1), p(table.lut2), p(table.lens_by_code),
+            p(table.vals_by_code), p(table.mask_by_code),
+        )
         o = 0
-        s0 = 0
-        while s0 < n:
+        for s0 in range(0, n, 2 * _SEGMENT):
             a_len = min(_SEGMENT, n - s0)
-            b_start = s0 + a_len
-            b_len = min(_SEGMENT, n - b_start)
-            if b_len > 0:
-                oa = lib.p4s_fsst_encode2(
-                    ctypes.c_void_p(arr.ctypes.data + s0), a_len,
-                    ctypes.c_void_p(arr.ctypes.data + b_start), b_len,
-                    *tbl_ptrs,
-                    ctypes.c_void_p(out.ctypes.data + o),
-                    ctypes.c_void_p(scratch.ctypes.data),
-                    ctypes.c_void_p(ob_arr.ctypes.data),
-                )
-                o += oa
-                ob = int(ob_arr[0])
-                out[o : o + ob] = scratch[:ob]
-                o += ob
-            else:
-                o += lib.p4s_fsst_encode(
-                    ctypes.c_void_p(arr.ctypes.data + s0), a_len, *tbl_ptrs,
-                    ctypes.c_void_p(out.ctypes.data + o),
-                )
-            s0 = b_start + b_len
+            b_len = min(_SEGMENT, n - s0 - a_len)
+            o += lib.p4s_fsst_encode2(
+                ctypes.c_void_p(arr.ctypes.data + s0), a_len,
+                ctypes.c_void_p(arr.ctypes.data + s0 + a_len), b_len,
+                *tables,
+                ctypes.c_void_p(out.ctypes.data + o),
+                p(scratch), p(ob_arr),
+            )
+            ob = int(ob_arr[0])
+            out[o : o + ob] = scratch[:ob]
+            o += ob
         return table.serialize() + out[:o].tobytes()
     pos, lens, codes = _tokenize(arr, table)
     esc = codes == _ESCAPE

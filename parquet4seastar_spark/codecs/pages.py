@@ -135,10 +135,6 @@ class EncodedChunk:
     # codecs/bloom.py caps).
     bloom: np.ndarray | None = None
 
-    @property
-    def total_size(self) -> int:
-        return self.compressed_bytes
-
 
 def pa_ptype(t: pa.DataType) -> tuple[str, str]:
     if pa.types.is_list(t) or pa.types.is_large_list(t):
@@ -746,7 +742,8 @@ def _dict_plan(ptype, values, lengths, payload, page_ends, nn_page_ends, *, fall
     """Build dictionary state and (optionally) the 16 KiB fallback split.
 
     Returns (per_page_encodings, dict_page_bytes, codes, cardinality,
-    total_size_estimate_exact).
+    entries_by_page): the last is the dictionary's entry count at each
+    page flush.
     """
     if ptype == "BYTE_ARRAY":
         offsets = np.zeros(len(lengths) + 1, dtype=np.int64)

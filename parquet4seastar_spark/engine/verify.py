@@ -16,7 +16,8 @@ from .decode_job import decode_table
 def roundtrip_verify(source: DataFrame, encoded: DataFrame, columns: list[str]) -> DataFrame:
     """Decode ``columns`` and join back to ``source`` on row_id.
 
-    Returns one row per column: (column, rows, matches, mismatches).
+    Returns one row: ``rows`` (the joined row count) and one
+    ``<column>_mismatches`` count per column.
     String columns compare on sha2(); other types compare value equality --
     both null-safe (<=> semantics).
     """
@@ -67,8 +68,6 @@ def roundtrip_verify_fast(
     Returns (part_key, rows_src, rows_dec, match) — every row must have
     match = true.
     """
-    from .decode_job import decode_table
-
     chunks = encoded.filter(F.col("kind") == "chunk")
     # fail fast on a cluster_by layout: its part keys ('r<i>') carry no
     # '<salt_col>#<salt>' structure, so the source side cannot rebuild

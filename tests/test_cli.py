@@ -55,3 +55,32 @@ def test_dump_cql_renders_one_chunk_columns_and_refuses_dremel_ones(spark, cli, 
     ]
     with pytest.raises(ValueError, match="column 'st' is stored as Dremel leaf chunks"):
         dump("s,st")
+
+
+def test_lookup_prints_counts_and_rows_and_caches_nothing(spark, cli, capsys, tmp_path):
+    """lookup over a column store: the printed chunk counts and rows for a
+    present key and an absent one, and no RDD left persisted."""
+    from parquet4seastar_spark.engine.encode_job import encode_table
+    from parquet4seastar_spark.engine.store import write_store
+
+    src = spark.createDataFrame(
+        [(i, i % 4, f"key{i:03d}", i * 10) for i in range(200)],
+        "row_id long, salt int, k string, v int",
+    )
+    store = str(tmp_path / "store")
+    write_store(encode_table(src, ["k", "v"], salt_col="salt", num_partitions=4), store)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+
+    def lookup(values):
+        cli.cmd_lookup(argparse.Namespace(
+            master=None, encoded=store, column="k", values=values, type="str", limit=20,
+        ))
+        return capsys.readouterr().out.splitlines()
+
+    assert lookup("key042") == [
+        "{'chunks_total': 4, 'chunks_decoded': 1, 'rows': 1}",
+        "{'row_id': 42, 'k': 'key042'}",
+    ]
+    assert lookup("nokey") == ["{'chunks_total': 4, 'chunks_decoded': 0, 'rows': 0}"]
+    assert persisted().size() == before

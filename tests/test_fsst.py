@@ -78,16 +78,23 @@ def test_native_numpy_parity_cross_segment():
     """The C kernel (codecs/_native.py) and the numpy path must produce
     BYTE-IDENTICAL encodings and symbol tables — same greedy rule, same
     256 KiB segment boundary behavior — and decode each other's output.
-    Skips silently to a numpy-vs-numpy self-check when no compiler is
-    available."""
+    The kernel encodes segments in pairs: the payloads are one segment, a
+    pair, a pair followed by an odd segment, and a pair followed by an odd
+    segment shorter than one 8-byte window.  That last segment ends inside
+    a NUL-padded word, whose symbol matches the zero-padded window past
+    the end unless the tail guard rejects it.  Skips silently to a
+    numpy-vs-numpy self-check when no compiler is available."""
     import os
 
     from parquet4seastar_spark.codecs import _native
 
+    seg = 1 << 18
     rng = np.random.default_rng(11)
-    words = [b"request", b"response", b"the", b"href=", b"<div>", b"\x00\x01", b"error"]
-    data = b" ".join(words[rng.integers(0, len(words))] for _ in range(90_000))
-    assert len(data) > (1 << 18) + 1000  # crosses a segment boundary
+    words = [
+        b"request", b"response", b"the", b"href=", b"<div>", b"\x00\x01", b"error", b"pad\x00\x00\x00",
+    ]
+    data = b" ".join(words[rng.integers(0, len(words))] for _ in range(200_000))
+    assert len(data) > 2 * seg + 50_000
     table = train_symbol_table(data[: 1 << 16])
 
     def with_numpy(f):
@@ -99,14 +106,17 @@ def test_native_numpy_parity_cross_segment():
             del os.environ["P4S_NO_NATIVE"]
             _native._tried, _native._lib = False, None
 
-    enc_native = fsst_encode(data, table)
-    enc_numpy = with_numpy(lambda: fsst_encode(data, table))
-    assert enc_native == enc_numpy
-    assert fsst_decode(enc_native) == data
-    assert with_numpy(lambda: fsst_decode(enc_native)) == data
+    for payload in (
+        data[:50_000], data[: seg + 1000], data[: 2 * seg + 50_000], data[: 2 * seg] + b"pad\x00\x00",
+    ):
+        enc_native = fsst_encode(payload, table)
+        enc_numpy = with_numpy(lambda: fsst_encode(payload, table))
+        assert enc_native == enc_numpy, len(payload)
+        assert fsst_decode(enc_numpy) == payload
+        assert with_numpy(lambda: fsst_decode(enc_native)) == payload
     # training on a sample that spans two segments: same table either path
-    table_p = with_numpy(lambda: train_symbol_table(data[: (1 << 18) + 1000]))
-    table_n = train_symbol_table(data[: (1 << 18) + 1000])
+    table_p = with_numpy(lambda: train_symbol_table(data[: seg + 1000]))
+    table_n = train_symbol_table(data[: seg + 1000])
     assert np.array_equal(table_n.values, table_p.values)
     assert np.array_equal(table_n.lengths, table_p.lengths)
 

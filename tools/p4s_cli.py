@@ -178,8 +178,9 @@ def cmd_lookup(args):
     from parquet4seastar_spark.engine.store import is_column_store, read_store
 
     spark = _spark(args)
-    # not persisted: prune_chunks reads the stored chunk index with
-    # pyarrow on the driver, so Spark scans the pages once, to decode
+    # nothing persisted: prune_chunks reads the stored chunk index with
+    # pyarrow on the driver, the kept-chunk count reads no page bytes,
+    # and Spark scans the pages once, to decode
     if is_column_store(args.encoded):
         # column-partitioned store: the lookup lists only the probed
         # column's directory (plus row_id) — the text payload of every
@@ -196,7 +197,7 @@ def cmd_lookup(args):
         prune_chunks(enc, col, isin=values)
         if len(values) > 1
         else prune_chunks(enc, col, eq=values[0])
-    ).persist()
+    )
     kept = pruned.filter((F.col("kind") == "chunk") & (F.col("column") == col)).count()
     if kept == 0:
         print({"chunks_total": total, "chunks_decoded": 0, "rows": 0})
