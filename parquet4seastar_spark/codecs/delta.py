@@ -18,7 +18,8 @@ Wire parity with the reference:
   followed by concatenated value bytes.  Decode-only in the reference; we
   implement the encoder too (trivially, from Arrow offsets).
 - DELTA_BYTE_ARRAY (encoding.cc:296-362): DBP prefix lengths + DLBA
-  suffixes, incremental front-coding.  Decode-only, matching the reference.
+  suffixes, incremental front-coding.  Decode-only in the reference; we
+  implement the encoder too (prefixes capped at 64 bytes).
 - BYTE_STREAM_SPLIT (encoding.cc:364-394): K de-interleaved byte streams.
   Decode-only in the reference; encoder provided for round-trip tests.
 """
@@ -41,7 +42,8 @@ __all__ = [
     "dbp_decode",
     "dlba_encode",
     "dlba_decode",
-    "delta_byte_array_decode",
+    "delta_byte_array_encode",
+    "delta_byte_array_decode_components",
     "byte_stream_split_encode",
     "byte_stream_split_decode",
 ]
@@ -241,28 +243,6 @@ def dlba_decode(buf, n: int | None = None) -> tuple[np.ndarray, bytes]:
     if pos + total > len(buf):
         raise ValueError("DELTA_LENGTH_BYTE_ARRAY: payload truncated")
     return lengths, bytes(buf[pos : pos + total])
-
-
-def delta_byte_array_decode(buf, n: int | None = None) -> list[bytes]:
-    """DELTA_BYTE_ARRAY: DBP prefix lengths, then DLBA suffixes; incremental
-    front-coding reconstruction (decode-only, as in the reference)."""
-    prefix_lens, pos = dbp_decode(buf, 4)
-    suffix_lens, payload = dlba_decode(memoryview(buf)[pos:])
-    if len(prefix_lens) != len(suffix_lens):
-        raise ValueError("DELTA_BYTE_ARRAY: prefix/suffix count mismatch")
-    out: list[bytes] = []
-    offset = 0
-    prev = b""
-    for plen, slen in zip(prefix_lens.tolist(), suffix_lens.tolist()):
-        if plen > len(prev):
-            raise ValueError("DELTA_BYTE_ARRAY: prefix longer than previous value")
-        value = prev[:plen] + payload[offset : offset + slen]
-        offset += slen
-        out.append(value)
-        prev = value
-    if n is not None and len(out) != n:
-        raise ValueError("DELTA_BYTE_ARRAY: wrong value count")
-    return out
 
 
 def delta_byte_array_encode(lengths: np.ndarray, payload, max_prefix: int = 64) -> bytes:

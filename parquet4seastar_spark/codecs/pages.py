@@ -373,7 +373,7 @@ def _encode_values(encoding: str, ptype: str, values, lengths=None, payload=None
         return delta.delta_byte_array_encode(lengths, payload)
     if encoding == "FSST":
         # symbol table trained once per chunk and shared across pages
-        # (training costs ~60-90ms; per-page training caps throughput)
+        # (training costs ~6-10 ms; per-page training caps throughput)
         blob = fsst.fsst_encode(payload, fsst_table)
         return delta.dbp_encode(lengths.astype(np.int32), 4) + blob
     if encoding == "RLE":  # boolean RLE
@@ -443,10 +443,8 @@ def _decode_values(encoding: str, ptype: str, buf, n: int, dict_ctx=None, type_l
 
 
 def _page_boundaries(row_bytes: np.ndarray, target: int) -> np.ndarray:
-    """Row indices where pages end (always ends with n)."""
+    """Row indices where pages end (ends with n; none when n is 0)."""
     n = len(row_bytes)
-    if n == 0:
-        return np.array([0], dtype=np.int64)
     cum = np.cumsum(row_bytes, dtype=np.int64)
     ends = []
     start = 0
@@ -558,8 +556,6 @@ def encode_chunk(
     compression: str = "uncompressed",
     nullable: bool | None = None,
     elem_nullable: bool | None = None,
-    fsst_cache: dict | None = None,
-    fsst_cache_key: str | None = None,
 ) -> EncodedChunk:
     """Encode one column chunk into pages.
 
@@ -574,8 +570,7 @@ def encode_chunk(
     list<prim> and list<list<prim>> columns take the standard parquet list
     geometry.  ``nullable`` / ``elem_nullable`` (list<prim> only) default
     to whether the data holds nulls; a flag of False over data holding
-    nulls raises.  ``fsst_cache`` maps ``fsst_cache_key`` to a trained
-    FSST symbol table reused by later chunks of the same column.
+    nulls raises.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
@@ -590,48 +585,28 @@ def encode_chunk(
     (leaf,) = shred(arr, opts)
     return _encode_leaf(
         leaf, _structure_sha(spine), policy=policy, page_target_bytes=page_target_bytes,
-        compression=compression, fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
-        logical=logical, nullable=opts[""], num_nulls=arr.null_count,
+        compression=compression, logical=logical, nullable=opts[""], num_nulls=arr.null_count,
         elem_nullable=len(spine) > 1 and opts[paths[-1]],
     )
 
 
 def _write_pages(
-    chunk: EncodedChunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends,
-    fsst_cache=None, fsst_cache_key=None,
+    chunk: EncodedChunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends
 ) -> None:
     """Plan the codecs, then write the chunk's dictionary page and V1 data
     pages: [u32+rep levels (iff max_rep > 0)][u32+def levels][values]
     (column_chunk_writer.hh:98-139).  Data page i holds the level entries
-    up to ``level_ends[i]`` and the encoded values up to
-    ``nn_page_ends[i]``."""
-    ptype = chunk.ptype
+    up to ``level_ends[i]`` and the plan's i-th value body, the encoded
+    values up to ``nn_page_ends[i]``."""
     compression = chunk.compression
-    n_pages = len(level_ends) if len(def_) else 0
-    plan = _plan_codecs(
-        policy, ptype, len(def_), values, lengths, payload, level_ends, nn_page_ends,
-        compression=compression, fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
+    per_page_enc, dict_page, cardinality, bodies = _plan_codecs(
+        policy, chunk.ptype, values, lengths, payload, nn_page_ends, compression
     )
-    # plan: (per_page_encodings, dict_page_bytes|None, dict_codes|None,
-    #        dict_cardinality, per-page cardinality-at-flush, cached bodies)
-    per_page_enc, dict_page_bytes, codes, cardinality, card_by_page, cached_bodies = plan
     chunk.cardinality = cardinality
+    if dict_page is not None:
+        comp = _compress(dict_page, compression)
+        chunk.pages.append(Page("dict", "PLAIN", cardinality, cardinality, len(dict_page), len(comp), comp))
 
-    if dict_page_bytes is not None:
-        comp = _compress(dict_page_bytes, compression)
-        chunk.pages.append(
-            Page("dict", "PLAIN", cardinality, cardinality, len(dict_page_bytes), len(comp), comp)
-        )
-
-    per_page_enc = per_page_enc[:n_pages]
-    bodies = cached_bodies
-    if bodies is None:
-        fsst_table = None
-        if "FSST" in per_page_enc:
-            fsst_table = fsst.train_symbol_table(_fsst_sample(payload))
-        bodies = _page_bodies(
-            per_page_enc, ptype, values, lengths, payload, nn_page_ends, codes, card_by_page, fsst_table
-        )
     nn_start = 0
     lvl_start = 0
     for pi, body in enumerate(bodies):
@@ -738,13 +713,12 @@ def chunk_content_sha(arr: pa.Array) -> str:
 # codec planning
 
 
-def _dict_plan(ptype, values, lengths, payload, page_ends, nn_page_ends, *, fallback: bool):
-    """Build dictionary state and (optionally) the 16 KiB fallback split.
-
-    Returns (per_page_encodings, dict_page_bytes, codes, cardinality,
-    entries_by_page): the last is the dictionary's entry count at each
-    page flush.
-    """
+def _dict_plan(ptype, values, lengths, payload, nn_page_ends, *, fallback: bool):
+    """The dictionary plan, its bodies lazy: every page RLE_DICTIONARY over
+    the whole dictionary, or with ``fallback`` the 16 KiB split -- PLAIN
+    after the page at whose flush the dictionary outgrows
+    DICT_FALLBACK_THRESHOLD, the dictionary page holding the entries first
+    seen by then.  A chunk with no values plans PLAIN pages."""
     if ptype == "BYTE_ARRAY":
         offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
         np.cumsum(lengths, out=offsets[1:])
@@ -768,20 +742,8 @@ def _dict_plan(ptype, values, lengths, payload, page_ends, nn_page_ends, *, fall
         nn_arr = pa.array(values)
     codes, dict_arr = dictionary.build_dict(nn_arr)
     card = len(dict_arr)
-    n_pages = len(page_ends)
     if card == 0:
-        return ["PLAIN"] * n_pages, None, codes, 0, np.zeros(n_pages, dtype=np.int64)
-
-    # per-entry plain size and first-occurrence position
-    if ptype == "BYTE_ARRAY":
-        d_lengths, _ = ba_components(dict_arr)
-        entry_sizes = d_lengths + 4
-    elif ptype == "BOOLEAN":
-        entry_sizes = np.full(card, 1, dtype=np.int64)
-    elif ptype == "FIXED_LEN_BYTE_ARRAY":
-        entry_sizes = np.full(card, values.shape[1], dtype=np.int64)
-    else:
-        entry_sizes = np.full(card, _FIXED_DTYPES[ptype].itemsize, dtype=np.int64)
+        return _plan("PLAIN", ptype, values, lengths, payload, nn_page_ends)
 
     # first-occurrence position of each entry; entries sorted by code ARE
     # sorted by first_pos (insertion order), so searchsorted gives the number
@@ -789,23 +751,29 @@ def _dict_plan(ptype, values, lengths, payload, page_ends, nn_page_ends, *, fall
     first_pos = np.full(card, len(codes), dtype=np.int64)
     np.minimum.at(first_pos, codes, np.arange(len(codes), dtype=np.int64))
     entries_by_page = np.searchsorted(first_pos, nn_page_ends, side="left")
+    n_pages = len(nn_page_ends)
+    per_page = ["RLE_DICTIONARY"] * n_pages
 
-    if not fallback:
-        dict_bytes = _encode_dict_page(ptype, dict_arr)
-        return ["RLE_DICTIONARY"] * n_pages, dict_bytes, codes, card, entries_by_page
-
-    cum_entry_sizes = np.cumsum(entry_sizes, dtype=np.int64)
-    # dict size after each page flush = bytes of entries first seen by then
-    dict_size_at_page = np.where(entries_by_page > 0, cum_entry_sizes[entries_by_page - 1], 0)
-    over = np.flatnonzero(dict_size_at_page > DICT_FALLBACK_THRESHOLD)
-    if len(over) == 0:
-        dict_bytes = _encode_dict_page(ptype, dict_arr)
-        return ["RLE_DICTIONARY"] * n_pages, dict_bytes, codes, card, entries_by_page
-    fb = int(over[0])  # page at whose flush the overflow is detected
-    per_page = ["RLE_DICTIONARY" if i <= fb else "PLAIN" for i in range(n_pages)]
-    kept_entries = int(entries_by_page[fb])
-    dict_bytes = _encode_dict_page(ptype, dict_arr.slice(0, kept_entries))
-    return per_page, dict_bytes, codes, kept_entries, entries_by_page
+    if fallback:
+        # per-entry plain size; dict size after each page flush = bytes of
+        # entries first seen by then
+        if ptype == "BYTE_ARRAY":
+            entry_sizes = ba_components(dict_arr)[0] + 4
+        elif ptype == "BOOLEAN":
+            entry_sizes = np.full(card, 1, dtype=np.int64)
+        elif ptype == "FIXED_LEN_BYTE_ARRAY":
+            entry_sizes = np.full(card, values.shape[1], dtype=np.int64)
+        else:
+            entry_sizes = np.full(card, _FIXED_DTYPES[ptype].itemsize, dtype=np.int64)
+        cum_entry_sizes = np.cumsum(entry_sizes, dtype=np.int64)
+        dict_size_at_page = np.where(entries_by_page > 0, cum_entry_sizes[entries_by_page - 1], 0)
+        over = np.flatnonzero(dict_size_at_page > DICT_FALLBACK_THRESHOLD)
+        if len(over):
+            fb = int(over[0])  # page at whose flush the overflow is detected
+            per_page = ["RLE_DICTIONARY" if i <= fb else "PLAIN" for i in range(n_pages)]
+            dict_arr = dict_arr.slice(0, int(entries_by_page[fb]))
+    bodies = _page_bodies(per_page, ptype, values, lengths, payload, nn_page_ends, codes, entries_by_page)
+    return per_page, _encode_dict_page(ptype, dict_arr), len(dict_arr), bodies
 
 
 def _encode_dict_page(ptype: str, dict_arr: pa.Array) -> bytes:
@@ -820,35 +788,47 @@ def _encode_dict_page(ptype: str, dict_arr: pa.Array) -> bytes:
     return plain.plain_encode_fixed(vals)
 
 
-def _plan_codecs(policy, ptype, n, values, lengths, payload, page_ends, nn_page_ends, compression="uncompressed", fsst_cache=None, fsst_cache_key=None):
-    """Resolve the policy into per-page encodings (+ dict state)."""
-    n_pages = len(page_ends) if n else 0
-    no_dict = (None, None, 0, np.zeros(n_pages, dtype=np.int64), None)
-
-    if policy == "plain":
-        return (["PLAIN"] * n_pages, *no_dict)
-
-    if policy in ("PLAIN", "DELTA_BINARY_PACKED", "DELTA_LENGTH_BYTE_ARRAY", "DELTA_BYTE_ARRAY", "FSST", "RLE", "BYTE_STREAM_SPLIT"):
-        return ([policy] * n_pages, *no_dict)
-
+def _plan_codecs(policy, ptype, values, lengths, payload, nn_page_ends, compression="uncompressed"):
+    """Resolve the policy into the chunk's plan, one shape for every
+    policy: (per-page encodings, dictionary page bytes or None,
+    cardinality, the value body of each page)."""
+    args = (ptype, values, lengths, payload, nn_page_ends)
+    if policy == "plain" or policy in (
+        "PLAIN", "DELTA_BINARY_PACKED", "DELTA_LENGTH_BYTE_ARRAY", "DELTA_BYTE_ARRAY", "FSST", "RLE",
+        "BYTE_STREAM_SPLIT",
+    ):
+        return _plan(policy.upper(), *args)
     if policy in ("dict", "RLE_DICTIONARY"):
-        return (*_dict_plan(ptype, values, lengths, payload, page_ends, nn_page_ends, fallback=False), None)
-
+        return _dict_plan(*args, fallback=False)
     if policy == "reference":
-        # static schema policy: RLE_DICTIONARY with fallback for strings &
-        # low-card columns; DELTA_BINARY_PACKED for ints; PLAIN baseline.
+        # static schema policy: DELTA_BINARY_PACKED for ints, else
+        # RLE_DICTIONARY with the 16 KiB fallback to PLAIN
         if ptype in ("INT32", "INT64"):
-            return (["DELTA_BINARY_PACKED"] * n_pages, *no_dict)
-        return (*_dict_plan(ptype, values, lengths, payload, page_ends, nn_page_ends, fallback=True), None)
-
+            return _plan("DELTA_BINARY_PACKED", *args)
+        return _dict_plan(*args, fallback=True)
     if policy not in ("auto", "auto_fast"):
         raise ValueError(f"unknown policy {policy}")
+    return _auto_plan(*args, allow_fsst=policy == "auto", compression=compression)
 
-    return _auto_plan(
-        ptype, n, values, lengths, payload, page_ends, nn_page_ends,
-        allow_fsst=policy == "auto", compression=compression,
-        fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
-    )
+
+def _plan(enc, ptype, values, lengths, payload, nn_page_ends, fsst_table=None):
+    """The plan that writes every page with ``enc`` and no dictionary, its
+    bodies lazy.  FSST pages share the chunk's symbol table, trained here
+    unless the caller holds it already (auto trains it to estimate)."""
+    encs = [enc] * len(nn_page_ends)
+    if enc == "FSST" and encs and fsst_table is None:
+        _, fsst_table = _fsst_train(payload)
+    bodies = _page_bodies(encs, ptype, values, lengths, payload, nn_page_ends, fsst_table=fsst_table)
+    return encs, None, 0, bodies
+
+
+def _fsst_train(payload: np.ndarray):
+    """(sample, symbol table): the chunk's ``_fsst_sample`` and the FSST
+    table trained on it, one table per input as the FSST paper fits it.
+    The one place a table is trained, for policy FSST and auto alike; no
+    table outlives its chunk."""
+    sample = _fsst_sample(payload)
+    return sample, fsst.train_symbol_table(sample)
 
 
 _FSST_PIECE = 512
@@ -913,32 +893,39 @@ def _page_bodies(encs, ptype, values, lengths, payload, nn_page_ends, codes=None
         start = end
 
 
-def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allow_fsst=True, compression="uncompressed", fsst_cache=None, fsst_cache_key=None):
-    """Pick the cheapest codec per chunk from actual/estimated sizes.
+def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, compression="uncompressed"):
+    """Pick the chunk's cheapest plan from a candidate table, codec name ->
+    (size, plan).  A size counts the value bodies and the dictionary page
+    (level bytes are the same for every candidate).  PLAIN and
+    DELTA_LENGTH_BYTE_ARRAY are sized exactly without encoding and keep
+    lazy bodies; DICT (the 16 KiB fallback), DELTA_BINARY_PACKED, RLE,
+    DELTA_BYTE_ARRAY and FSST are encoded to be sized and keep the bodies,
+    so the winner's go to ``_write_pages`` as they are and no candidate is
+    encoded twice.  DICT joins when a sample of the values repeats,
+    DELTA_BYTE_ARRAY when a sample of neighbours shares prefixes, FSST when
+    its estimate on the chunk's ``_fsst_sample`` beats every other
+    candidate.  Ties go to the candidate listed first.
 
     The reference static policy is always a candidate, so the auto-selected
     total never exceeds it (BASELINE.md compression target).
     ``allow_fsst=False`` is the 'auto_fast' profile: dict/DLBA/DBP/plain only
     (~10-20x higher encode throughput, weaker ratio on natural text).
     """
-    n_pages = len(page_ends) if n else 0
-    no_dict = (None, None, 0, np.zeros(n_pages, dtype=np.int64), None)
+    n_pages = len(nn_page_ends)
     if n_pages == 0:
-        return ([], *no_dict)
+        return [], None, 0, []
+    args = (ptype, values, lengths, payload, nn_page_ends)
+
+    def sized(plan):
+        encs, dict_page, card, bodies = plan
+        bodies = list(bodies)
+        return len(dict_page or b"") + sum(map(len, bodies)), (encs, dict_page, card, bodies)
 
     nn = int(nn_page_ends[-1])
-    # candidates compare on value bodies alone (level bytes are identical
-    # across them); the winner's bodies go to _write_pages as they are, so
-    # no candidate is encoded twice
-    candidates: dict[str, int] = {}
-    plans: dict[str, tuple] = {}
-
     type_length = (
         int(values.shape[1]) if ptype == "FIXED_LEN_BYTE_ARRAY" and values is not None and values.ndim == 2 else 0
     )
-    plain_size = _plain_size(ptype, nn, lengths, type_length)
-    candidates["PLAIN"] = plain_size
-    plans["PLAIN"] = (["PLAIN"] * n_pages, *no_dict[:-1], None)
+    candidates = {"PLAIN": (_plain_size(ptype, nn, lengths, type_length), _plan("PLAIN", *args))}
 
     # dictionary candidate (with fallback = reference policy for this column).
     # Sampled uniformly across the chunk (not the prefix) so a unique head
@@ -963,24 +950,11 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
     # don't implement dictionary-encoded booleans (pyarrow raises), which
     # would poison container export for ~zero ratio gain
     if nn and sample_card_ratio < 0.98 and ptype != "BOOLEAN":
-        per_page, dict_bytes, codes, card, card_by_page = _dict_plan(
-            ptype, values, lengths, payload, page_ends, nn_page_ends, fallback=True
-        )
-        bodies = list(
-            _page_bodies(per_page, ptype, values, lengths, payload, nn_page_ends, codes, card_by_page)
-        )
-        candidates["DICT"] = (len(dict_bytes) if dict_bytes else 0) + sum(map(len, bodies))
-        plans["DICT"] = (per_page, dict_bytes, codes, card, card_by_page, bodies)
-
+        candidates["DICT"] = sized(_dict_plan(*args, fallback=True))
     if ptype in ("INT32", "INT64"):
-        bodies = list(_page_bodies(["DELTA_BINARY_PACKED"] * n_pages, ptype, values, lengths, payload, nn_page_ends))
-        candidates["DELTA_BINARY_PACKED"] = sum(map(len, bodies))
-        plans["DELTA_BINARY_PACKED"] = (["DELTA_BINARY_PACKED"] * n_pages, *no_dict[:-1], bodies)
-
+        candidates["DELTA_BINARY_PACKED"] = sized(_plan("DELTA_BINARY_PACKED", *args))
     if ptype == "BOOLEAN":
-        bodies = list(_page_bodies(["RLE"] * n_pages, ptype, values, lengths, payload, nn_page_ends))
-        candidates["RLE"] = sum(map(len, bodies))
-        plans["RLE"] = (["RLE"] * n_pages, *no_dict[:-1], bodies)
+        candidates["RLE"] = sized(_plan("RLE", *args))
 
     if ptype == "BYTE_ARRAY" and nn:
         # DLBA size is exact without encoding: DBP(lengths) + payload
@@ -992,8 +966,7 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
                 lengths[start:end].sum()
             )
             start = end
-        candidates["DELTA_LENGTH_BYTE_ARRAY"] = size
-        plans["DELTA_LENGTH_BYTE_ARRAY"] = (["DELTA_LENGTH_BYTE_ARRAY"] * n_pages, *no_dict[:-1], None)
+        candidates["DELTA_LENGTH_BYTE_ARRAY"] = (size, _plan("DELTA_LENGTH_BYTE_ARRAY", *args))
         # DELTA_BYTE_ARRAY (front coding): wins on sorted/shared-prefix data
         # (paths, URLs, sorted keys).  Gate on a cheap consecutive-pair
         # prefix sample so random text skips the extra encode pass.
@@ -1032,47 +1005,25 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
                 # front coding must promise real savings: long values with a
                 # short shared header (e.g. source text) skip the extra pass
                 if mean_prefix >= 4.0 and mean_prefix >= 0.25 * mean_len:
-                    bodies = list(_page_bodies(
-                        ["DELTA_BYTE_ARRAY"] * n_pages, ptype, values, lengths, payload, nn_page_ends
-                    ))
-                    candidates["DELTA_BYTE_ARRAY"] = sum(map(len, bodies))
-                    plans["DELTA_BYTE_ARRAY"] = (
-                        ["DELTA_BYTE_ARRAY"] * n_pages, *no_dict[:-1], bodies
-                    )
+                    candidates["DELTA_BYTE_ARRAY"] = sized(_plan("DELTA_BYTE_ARRAY", *args))
         # FSST: estimate from a sample spread over the chunk; the full
         # encode pass runs when the estimate beats the best cheap
         # candidate.  The rule is the same whichever FSST kernel runs, so
         # pages depend only on the input, the policy and the compression.
-        sample = _fsst_sample(payload)
-        if allow_fsst and len(sample) >= 1024:
-            # per-task symbol-table cache (encode_job wires one dict per
-            # partition, keyed by (column, part_key)): training is a fixed
-            # ~9 ms per chunk, which dominated auto encode on
-            # many-small-chunk layouts (the bench corpus has ~2,200
-            # content chunks of ~1 MB).  The part_key in the cache key
-            # scopes every reuse to one key's vocabulary, so caching is
-            # safe at any sample size; the selection estimate below still
-            # runs against THIS chunk's sample, so a poorly-matching
-            # cached table simply loses the candidate race.
-            table = fsst_cache.get(fsst_cache_key) if fsst_cache else None
-            if table is None:
-                table = fsst.train_symbol_table(sample)
-                if fsst_cache is not None:
-                    if len(fsst_cache) >= 4096:  # bound per-task memory
-                        fsst_cache.clear()
-                    fsst_cache[fsst_cache_key] = table
+        if allow_fsst and len(payload) >= 1024:
+            sample, table = _fsst_train(payload)
             est_ratio = len(fsst.fsst_encode(sample, table)) / len(sample)
             payload_len = int(lengths.sum())
             # FSST body = DBP(lengths) + symbol table + token payload; the
             # DBP part equals DLBA's non-payload bytes (computed exactly
             # above), tables are ~300 B per page
             est_fsst = (
-                candidates["DELTA_LENGTH_BYTE_ARRAY"]
+                candidates["DELTA_LENGTH_BYTE_ARRAY"][0]
                 - payload_len
                 + 300 * n_pages
                 + est_ratio * payload_len
             )
-            run_fsst = est_fsst < min(candidates.values())
+            run_fsst = est_fsst < min(size for size, _ in candidates.values())
             if run_fsst and compression == "gzip":
                 # the pages gzip AFTER encoding, and deflate recovers much
                 # of what FSST would have squeezed (both are entropy
@@ -1090,14 +1041,9 @@ def _auto_plan(ptype, n, values, lengths, payload, page_ends, nn_page_ends, allo
                     zlib.compress(gz_sample.tobytes(), 6)
                 )
             if run_fsst:
-                bodies = list(_page_bodies(
-                    ["FSST"] * n_pages, ptype, values, lengths, payload, nn_page_ends, fsst_table=table
-                ))
-                candidates["FSST"] = sum(map(len, bodies))
-                plans["FSST"] = (["FSST"] * n_pages, *no_dict[:-1], bodies)
+                candidates["FSST"] = sized(_plan("FSST", *args, fsst_table=table))
 
-    best = min(candidates, key=lambda k: candidates[k])
-    return plans[best]
+    return min(candidates.values(), key=lambda c: c[0])[1]
 
 
 # ---------------------------------------------------------------------------
@@ -1358,19 +1304,16 @@ def encode_column(
     policy: str = "auto",
     page_target_bytes: int = 1 << 20,
     compression: str = "uncompressed",
-    fsst_cache: dict | None = None,
-    fsst_cache_key: str | None = None,
 ) -> dict[str, EncodedChunk]:
     """Encode one top-level column -> {chunk name suffix: chunk}: ``''`` for
     a flat or list<primitive> column (``encode_chunk``, nullability from
-    the data; only these chunks use the FSST table cache), else one
-    ``'#g<i>'`` leaf chunk per Dremel leaf, in leaf order."""
+    the data), else one ``'#g<i>'`` leaf chunk per Dremel leaf, in leaf
+    order."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if not _is_dremel(arr.type):
         return {"": encode_chunk(
-            arr, policy=policy, page_target_bytes=page_target_bytes, compression=compression,
-            fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
+            arr, policy=policy, page_target_bytes=page_target_bytes, compression=compression
         )}
     return {
         f"#g{i}": _encode_leaf(
@@ -1445,7 +1388,7 @@ def content_sha(chunk: EncodedChunk) -> str:
 
 
 def _encode_leaf(
-    leaf: Leaf, sha, *, policy, page_target_bytes, compression, fsst_cache=None, fsst_cache_key=None, **meta
+    leaf: Leaf, sha, *, policy, page_target_bytes, compression, **meta
 ) -> EncodedChunk:
     """One shredded leaf -> chunk, paged on record boundaries: the one
     leaf encoder behind every chunk shape (column_chunk_writer::put,
@@ -1472,9 +1415,8 @@ def _encode_leaf(
     rec_ends = np.append(rec_starts[1:], n_entries)
     rec_bytes = cs[rec_ends] - cs[rec_starts]
     page_ends = _page_boundaries(rec_bytes, page_target_bytes)
-    level_ends = rec_ends[page_ends - 1] if n_rows else np.array([0], dtype=np.int64)
-    enc_before = np.cumsum(enc_mask, dtype=np.int64)
-    nn_page_ends = enc_before[level_ends - 1] if n_rows else np.array([0], dtype=np.int64)
+    level_ends = rec_ends[page_ends - 1]
+    nn_page_ends = np.cumsum(enc_mask, dtype=np.int64)[level_ends - 1]
 
     chunk = EncodedChunk(
         ptype=ptype,
@@ -1493,10 +1435,7 @@ def _encode_leaf(
     _chunk_stats(chunk, ptype, values, lengths, payload)
     if leaf.path == "":  # the leaf is the column: prune_chunks(eq=) probes it
         _chunk_bloom(chunk, ptype, values, lengths, payload)
-    _write_pages(
-        chunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends,
-        fsst_cache=fsst_cache, fsst_cache_key=fsst_cache_key,
-    )
+    _write_pages(chunk, policy, values, lengths, payload, def_, rep, level_ends, nn_page_ends)
     return chunk
 
 

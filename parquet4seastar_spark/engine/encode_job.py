@@ -291,15 +291,6 @@ def _encode_partition_factory(
         pending: list[pa.Table] = []
         pending_bytes = 0
         chunk_seq_by_key: dict[str, int] = {}
-        # one FSST symbol table per (column, part_key): training is a fixed
-        # ~15 ms per chunk and dominated auto encode on many-small-chunk
-        # layouts.  Keying by part_key keeps the table within one repo's
-        # vocabulary (a per-task table measured +5.6% encoded bytes on the
-        # repo-heterogeneous bench corpus), so the ratio is unchanged; at
-        # production chunk counts (a 1 GB key = 64 chunks) this removes
-        # ~98% of trains.  Every page still serializes its own table, so
-        # decode and the wire format are unchanged (see _auto_plan).
-        fsst_tables: dict[str, object] = {}
 
         def flush(tables: list[pa.Table]) -> Iterator[pa.RecordBatch]:
             tbl = pa.concat_tables(tables).combine_chunks()
@@ -359,9 +350,7 @@ def _encode_partition_factory(
                 else:
                     cpolicy = policy
                 for suffix, chunk in encode_column(
-                    arr, policy=cpolicy, page_target_bytes=page_target_bytes,
-                    compression=compression, fsst_cache=fsst_tables,
-                    fsst_cache_key=f"{col}|{part_key}",
+                    arr, policy=cpolicy, page_target_bytes=page_target_bytes, compression=compression
                 ).items():
                     leaf_chunks.append((col + suffix, chunk))
             for col, chunk in leaf_chunks:

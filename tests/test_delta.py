@@ -4,13 +4,15 @@ BYTE_STREAM_SPLIT golden vectors + round-trips, ported from
 delta_byte_array,byte_stream_split}_test.cc."""
 
 import numpy as np
+import pytest
 
 from parquet4seastar_spark.codecs.delta import (
     byte_stream_split_decode,
     byte_stream_split_encode,
     dbp_decode,
     dbp_encode,
-    delta_byte_array_decode,
+    delta_byte_array_decode_components,
+    delta_byte_array_encode,
     dlba_decode,
     dlba_encode,
 )
@@ -121,28 +123,24 @@ def test_dlba_roundtrip():
     assert out_payload == payload
 
 
-def test_delta_byte_array_decode_golden():
-    # delta_byte_array_test.cc:33-126: prefix lens {0,2,4,6} + DLBA suffixes
-    prefix = dbp_encode(np.array([0, 2, 4, 6], dtype=np.int32), 4)
-    suffixes = [b"aaaaa", b"bbbbbb", b"ccccccc", b"dddddddd"]
-    suffix_blob = dlba_encode(
+def _dba(prefix_lens, suffixes):
+    """A DELTA_BYTE_ARRAY stream built from its parts, unchecked."""
+    return dbp_encode(np.array(prefix_lens, dtype=np.int32), 4) + dlba_encode(
         np.array([len(s) for s in suffixes], dtype=np.int32), b"".join(suffixes)
     )
-    out = delta_byte_array_decode(prefix + suffix_blob, 4)
-    assert out == [b"aaaaa", b"aabbbbbb", b"aabbccccccc", b"aabbccdddddddd"]
+
+
+def test_delta_byte_array_decode_golden():
+    # delta_byte_array_test.cc:33-126: prefix lens {0,2,4,6} + DLBA suffixes
+    buf = _dba([0, 2, 4, 6], [b"aaaaa", b"bbbbbb", b"ccccccc", b"dddddddd"])
+    lengths, payload = delta_byte_array_decode_components(buf, 4)
+    assert lengths.tolist() == [5, 8, 11, 14]
+    assert payload == b"aaaaa" + b"aabbbbbb" + b"aabbccccccc" + b"aabbccdddddddd"
 
 
 def test_delta_byte_array_encode_roundtrip():
     # write side is ours (the reference is decode-only); verify against the
-    # existing decoder and on adversarial shapes
-    import numpy as np
-
-    from parquet4seastar_spark.codecs.delta import (
-        delta_byte_array_decode,
-        delta_byte_array_decode_components,
-        delta_byte_array_encode,
-    )
-
+    # page reader's decoder and on adversarial shapes
     cases = [
         [b"apple", b"applesauce", b"applet", b"banana", b"band"],
         [b"", b"", b"x"],
@@ -154,9 +152,23 @@ def test_delta_byte_array_encode_roundtrip():
         lengths = np.array([len(v) for v in vals], dtype=np.int64)
         payload = b"".join(vals)
         enc = delta_byte_array_encode(lengths, payload)
-        assert delta_byte_array_decode(enc, len(vals)) == vals
         lens2, pl2 = delta_byte_array_decode_components(enc, len(vals))
         assert lens2.tolist() == lengths.tolist() and pl2 == payload
+
+
+@pytest.mark.parametrize(
+    "buf,n,message",
+    [
+        (_dba([0, 1], [b"a"]), None, "prefix/suffix count mismatch"),
+        (_dba([0, 1], [b"a", b"b"]), 3, "wrong value count"),
+        (_dba([1, 0], [b"a", b"b"]), None, "first value has a prefix"),
+        (_dba([0, 3], [b"ab", b"c"]), None, "prefix longer than previous value"),
+    ],
+    ids=["count_mismatch", "value_count", "first_prefix", "long_prefix"],
+)
+def test_delta_byte_array_decode_refusals(buf, n, message):
+    with pytest.raises(ValueError, match=f"DELTA_BYTE_ARRAY: {message}"):
+        delta_byte_array_decode_components(buf, n)
 
 
 def test_byte_stream_split_roundtrip():
