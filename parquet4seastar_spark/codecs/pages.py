@@ -61,8 +61,8 @@ from .levels import decode_levels_v1, encode_levels_v1
 from .rle import rle_decode, rle_encode
 
 __all__ = ["encode_column", "decode_column", "column_chunks", "column_leaves", "column_type",
-           "content_sha", "leaf_prefix", "leaf_spec", "encode_chunk", "decode_chunk",
-           "chunk_content_sha", "ba_components", "EncodedChunk", "Page"]
+           "content_sha", "leaf_prefix", "leaf_spec", "leaf_ptype", "encode_chunk", "decode_chunk",
+           "chunk_content_sha", "ba_components", "policy_codec", "CODEC_PTYPES", "EncodedChunk", "Page"]
 
 DICT_FALLBACK_THRESHOLD = 16 * 1024  # dict_or_plain_encoder::fallback_threshold
 
@@ -71,6 +71,25 @@ _FIXED_DTYPES = {
     "INT64": np.dtype("<i8"),
     "FLOAT": np.dtype("<f4"),
     "DOUBLE": np.dtype("<f8"),
+}
+
+# The one codec x physical type table: codec -> the physical types it
+# encodes and decodes.  The reference builds each encoder per type in one
+# typed factory (make_value_encoder<T>, encoding.cc:998-1048) with a
+# matching decoder dispatch (encoding.cc:527-586), so a wrong pair cannot
+# be built; here explicit policies (``policy_codec``), auto's candidates,
+# the page reader and the container export all read this table.  A new
+# pairing is one row.
+_ANY_PTYPE = frozenset(("BOOLEAN", "INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY"))
+CODEC_PTYPES = {
+    "PLAIN": _ANY_PTYPE,
+    "RLE_DICTIONARY": _ANY_PTYPE,
+    "DELTA_BINARY_PACKED": frozenset(("INT32", "INT64")),
+    "DELTA_LENGTH_BYTE_ARRAY": frozenset(("BYTE_ARRAY",)),
+    "DELTA_BYTE_ARRAY": frozenset(("BYTE_ARRAY",)),
+    "FSST": frozenset(("BYTE_ARRAY",)),
+    "RLE": frozenset(("BOOLEAN",)),
+    "BYTE_STREAM_SPLIT": frozenset(("INT32", "INT64", "FLOAT", "DOUBLE")),
 }
 
 _PA_TO_PTYPE = {
@@ -89,7 +108,7 @@ _PA_TO_PTYPE = {
 @dataclass
 class Page:
     kind: str  # 'dict' | 'data'
-    encoding: str  # PLAIN | RLE_DICTIONARY | DELTA_BINARY_PACKED | DELTA_LENGTH_BYTE_ARRAY | FSST | RLE
+    encoding: str  # a CODEC_PTYPES codec (dictionary pages: PLAIN)
     num_values: int  # level count (rows) for data pages; entries for dict page
     num_non_null: int
     uncompressed_size: int
@@ -560,9 +579,13 @@ def encode_chunk(
     """Encode one column chunk into pages.
 
     policy: 'auto' (codec auto-selection, never worse than 'reference'),
-            'reference' (the reference's static policy: RLE_DICTIONARY with
-            16 KiB fallback for all types except INT32/INT64 -> PLAIN is the
-            baseline; see BASELINE.md), 'plain', or an explicit codec name.
+            'auto_fast' (auto without FSST and DELTA_BYTE_ARRAY),
+            'reference' (the reference's static policy: DELTA_BINARY_PACKED
+            for INT32/INT64, else RLE_DICTIONARY with the 16 KiB fallback
+            to PLAIN; see BASELINE.md), 'plain' (PLAIN, the baseline),
+            'dict' (RLE_DICTIONARY, no fallback), or an explicit codec name
+            that ``CODEC_PTYPES`` pairs with the chunk's physical type; any
+            other pair raises ValueError (``policy_codec``).
 
     Every shape takes one path: ``shred(arr, opts)`` (opts = token path
     -> OPTIONAL, from the flags and the data), then the leaf encoder the
@@ -793,22 +816,36 @@ def _plan_codecs(policy, ptype, values, lengths, payload, nn_page_ends, compress
     policy: (per-page encodings, dictionary page bytes or None,
     cardinality, the value body of each page)."""
     args = (ptype, values, lengths, payload, nn_page_ends)
-    if policy == "plain" or policy in (
-        "PLAIN", "DELTA_BINARY_PACKED", "DELTA_LENGTH_BYTE_ARRAY", "DELTA_BYTE_ARRAY", "FSST", "RLE",
-        "BYTE_STREAM_SPLIT",
-    ):
-        return _plan(policy.upper(), *args)
-    if policy in ("dict", "RLE_DICTIONARY"):
-        return _dict_plan(*args, fallback=False)
+    enc = policy_codec(policy, ptype)
+    if enc is None:
+        return _auto_plan(*args, allow_fsst=policy == "auto", compression=compression)
+    if enc == "RLE_DICTIONARY":
+        return _dict_plan(*args, fallback=policy == "reference")
+    return _plan(enc, *args)
+
+
+def policy_codec(policy: str, ptype: str) -> str | None:
+    """The codec a policy writes on values of physical type ``ptype``, or
+    None for the auto profiles ('auto', 'auto_fast'): 'plain' is PLAIN,
+    'dict' RLE_DICTIONARY, a codec name is itself, and 'reference' (the
+    reference's static schema policy) is DELTA_BINARY_PACKED where
+    ``CODEC_PTYPES`` takes it, else RLE_DICTIONARY with the 16 KiB
+    fallback.  A codec the table does not pair with ``ptype`` raises
+    ValueError naming the policy and the type, before any value is
+    encoded."""
+    if policy in ("auto", "auto_fast"):
+        return None
     if policy == "reference":
-        # static schema policy: DELTA_BINARY_PACKED for ints, else
-        # RLE_DICTIONARY with the 16 KiB fallback to PLAIN
-        if ptype in ("INT32", "INT64"):
-            return _plan("DELTA_BINARY_PACKED", *args)
-        return _dict_plan(*args, fallback=True)
-    if policy not in ("auto", "auto_fast"):
+        return "DELTA_BINARY_PACKED" if ptype in CODEC_PTYPES["DELTA_BINARY_PACKED"] else "RLE_DICTIONARY"
+    enc = {"plain": "PLAIN", "dict": "RLE_DICTIONARY"}.get(policy, policy)
+    if enc not in CODEC_PTYPES:
         raise ValueError(f"unknown policy {policy}")
-    return _auto_plan(*args, allow_fsst=policy == "auto", compression=compression)
+    if ptype not in CODEC_PTYPES[enc]:
+        raise ValueError(
+            f"policy {policy!r} does not apply to physical type {ptype} "
+            f"({enc} takes {', '.join(sorted(CODEC_PTYPES[enc]))})"
+        )
+    return enc
 
 
 def _plan(enc, ptype, values, lengths, payload, nn_page_ends, fsst_table=None):
@@ -893,23 +930,33 @@ def _page_bodies(encs, ptype, values, lengths, payload, nn_page_ends, codes=None
         start = end
 
 
+# auto's candidates, ties going to the one listed first; ``CODEC_PTYPES``
+# picks those a chunk's type takes.  BYTE_STREAM_SPLIT is no candidate:
+# its pages are PLAIN's size, it only helps a compressor run after it.
+_AUTO_CANDIDATES = (
+    "PLAIN", "RLE_DICTIONARY", "DELTA_BINARY_PACKED", "RLE", "DELTA_LENGTH_BYTE_ARRAY",
+    "DELTA_BYTE_ARRAY", "FSST",
+)
+
+
 def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, compression="uncompressed"):
-    """Pick the chunk's cheapest plan from a candidate table, codec name ->
-    (size, plan).  A size counts the value bodies and the dictionary page
-    (level bytes are the same for every candidate).  PLAIN and
-    DELTA_LENGTH_BYTE_ARRAY are sized exactly without encoding and keep
-    lazy bodies; DICT (the 16 KiB fallback), DELTA_BINARY_PACKED, RLE,
-    DELTA_BYTE_ARRAY and FSST are encoded to be sized and keep the bodies,
-    so the winner's go to ``_write_pages`` as they are and no candidate is
-    encoded twice.  DICT joins when a sample of the values repeats,
+    """Pick the chunk's cheapest plan among the ``_AUTO_CANDIDATES`` its
+    physical type takes, codec name -> (size, plan).  A size counts the
+    value bodies and the dictionary page (level bytes are the same for
+    every candidate).  PLAIN and DELTA_LENGTH_BYTE_ARRAY are sized exactly
+    without encoding and keep lazy bodies; RLE_DICTIONARY (the 16 KiB
+    fallback), DELTA_BINARY_PACKED, RLE, DELTA_BYTE_ARRAY and FSST are
+    encoded to be sized and keep the bodies, so the winner's go to
+    ``_write_pages`` as they are and no candidate is encoded twice.
+    RLE_DICTIONARY joins when a sample of the values repeats,
     DELTA_BYTE_ARRAY when a sample of neighbours shares prefixes, FSST when
     its estimate on the chunk's ``_fsst_sample`` beats every other
-    candidate.  Ties go to the candidate listed first.
+    candidate.
 
     The reference static policy is always a candidate, so the auto-selected
     total never exceeds it (BASELINE.md compression target).
-    ``allow_fsst=False`` is the 'auto_fast' profile: dict/DLBA/DBP/plain only
-    (~10-20x higher encode throughput, weaker ratio on natural text).
+    ``allow_fsst=False`` is the 'auto_fast' profile: dict/DLBA/DBP/RLE/plain
+    only (~10-20x higher encode throughput, weaker ratio on natural text).
     """
     n_pages = len(nn_page_ends)
     if n_pages == 0:
@@ -922,16 +969,21 @@ def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, c
         return len(dict_page or b"") + sum(map(len, bodies)), (encs, dict_page, card, bodies)
 
     nn = int(nn_page_ends[-1])
+    takes = {enc for enc in _AUTO_CANDIDATES if ptype in CODEC_PTYPES[enc]}
     type_length = (
         int(values.shape[1]) if ptype == "FIXED_LEN_BYTE_ARRAY" and values is not None and values.ndim == 2 else 0
     )
+    # PLAIN takes every type: auto always has a candidate
     candidates = {"PLAIN": (_plain_size(ptype, nn, lengths, type_length), _plan("PLAIN", *args))}
 
     # dictionary candidate (with fallback = reference policy for this column).
     # Sampled uniformly across the chunk (not the prefix) so a unique head
     # followed by a repetitive tail still admits the dict candidate.
-    sample_card_ratio = 1.0
-    if nn:
+    # BOOLEAN never takes the dict candidate: RLE-bool matches it within
+    # bytes (2-entry dictionary, 1-bit indices) and major standard readers
+    # don't implement dictionary-encoded booleans (pyarrow raises), which
+    # would poison container export for ~zero ratio gain
+    if nn and "RLE_DICTIONARY" in takes and ptype != "BOOLEAN":
         if ptype == "BYTE_ARRAY":
             k = min(nn, 512)
             idx = np.linspace(0, nn - 1, num=k, dtype=np.int64)
@@ -945,18 +997,14 @@ def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, c
             k = min(nn, 4096)
             idx = np.linspace(0, nn - 1, num=k, dtype=np.int64)
             sample_card_ratio = len(np.unique(values[idx])) / k
-    # BOOLEAN never takes the dict candidate: RLE-bool matches it within
-    # bytes (2-entry dictionary, 1-bit indices) and major standard readers
-    # don't implement dictionary-encoded booleans (pyarrow raises), which
-    # would poison container export for ~zero ratio gain
-    if nn and sample_card_ratio < 0.98 and ptype != "BOOLEAN":
-        candidates["DICT"] = sized(_dict_plan(*args, fallback=True))
-    if ptype in ("INT32", "INT64"):
+        if sample_card_ratio < 0.98:
+            candidates["RLE_DICTIONARY"] = sized(_dict_plan(*args, fallback=True))
+    if "DELTA_BINARY_PACKED" in takes:
         candidates["DELTA_BINARY_PACKED"] = sized(_plan("DELTA_BINARY_PACKED", *args))
-    if ptype == "BOOLEAN":
+    if "RLE" in takes:
         candidates["RLE"] = sized(_plan("RLE", *args))
 
-    if ptype == "BYTE_ARRAY" and nn:
+    if "DELTA_LENGTH_BYTE_ARRAY" in takes and nn:
         # DLBA size is exact without encoding: DBP(lengths) + payload
         size = 0
         start = 0
@@ -967,83 +1015,83 @@ def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, c
             )
             start = end
         candidates["DELTA_LENGTH_BYTE_ARRAY"] = (size, _plan("DELTA_LENGTH_BYTE_ARRAY", *args))
-        # DELTA_BYTE_ARRAY (front coding): wins on sorted/shared-prefix data
-        # (paths, URLs, sorted keys).  Gate on a cheap consecutive-pair
-        # prefix sample so random text skips the extra encode pass.
-        if allow_fsst and nn >= 8:
-            k = min(nn - 1, 256)
-            idx = np.linspace(0, nn - 2, num=k, dtype=np.int64)
-            offs = np.zeros(nn + 1, dtype=np.int64)
-            np.cumsum(lengths, out=offs[1:])
-            cmp_len = np.minimum(np.minimum(lengths[idx], lengths[idx + 1]), 64)
-            tot = int(cmp_len.sum())
-            if tot:
-                rel = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(cmp_len) - cmp_len, cmp_len)
-                a = payload[np.repeat(offs[:-1][idx], cmp_len) + rel]
-                b = payload[np.repeat(offs[:-1][idx + 1], cmp_len) + rel]
-                eq = a == b
-                # mean leading-equality run per sampled pair, vectorized:
-                # the run ends at the segment's first mismatch, located
-                # with one searchsorted over the flat mismatch positions
-                # (the former per-segment np.split + cumprod was ~0.5 s
-                # per 256 MB of fixed overhead at bench chunk counts)
-                seg_starts = np.zeros(k, dtype=np.int64)
-                seg_starts[1:] = np.cumsum(cmp_len)[:-1]
-                seg_ends = seg_starts + cmp_len
-                falses = np.flatnonzero(~eq)
-                first_false = falses[
-                    np.searchsorted(falses, seg_starts).clip(0, max(len(falses) - 1, 0))
-                ] if len(falses) else np.full(k, tot, dtype=np.int64)
-                # a segment with no mismatch runs to its end
-                run_end = np.where(
-                    (len(falses) > 0) & (first_false >= seg_starts) & (first_false < seg_ends),
-                    first_false,
-                    seg_ends,
-                )
-                mean_prefix = float(np.mean(run_end - seg_starts))
-                mean_len = float(np.mean(lengths[idx])) or 1.0
-                # front coding must promise real savings: long values with a
-                # short shared header (e.g. source text) skip the extra pass
-                if mean_prefix >= 4.0 and mean_prefix >= 0.25 * mean_len:
-                    candidates["DELTA_BYTE_ARRAY"] = sized(_plan("DELTA_BYTE_ARRAY", *args))
-        # FSST: estimate from a sample spread over the chunk; the full
-        # encode pass runs when the estimate beats the best cheap
-        # candidate.  The rule is the same whichever FSST kernel runs, so
-        # pages depend only on the input, the policy and the compression.
-        if allow_fsst and len(payload) >= 1024:
-            sample, table = _fsst_train(payload)
-            est_ratio = len(fsst.fsst_encode(sample, table)) / len(sample)
-            payload_len = int(lengths.sum())
-            # FSST body = DBP(lengths) + symbol table + token payload; the
-            # DBP part equals DLBA's non-payload bytes (computed exactly
-            # above), tables are ~300 B per page
-            est_fsst = (
-                candidates["DELTA_LENGTH_BYTE_ARRAY"][0]
-                - payload_len
-                + 300 * n_pages
-                + est_ratio * payload_len
+    # DELTA_BYTE_ARRAY (front coding): wins on sorted/shared-prefix data
+    # (paths, URLs, sorted keys).  Gate on a cheap consecutive-pair
+    # prefix sample so random text skips the extra encode pass.
+    if "DELTA_BYTE_ARRAY" in takes and allow_fsst and nn >= 8:
+        k = min(nn - 1, 256)
+        idx = np.linspace(0, nn - 2, num=k, dtype=np.int64)
+        offs = np.zeros(nn + 1, dtype=np.int64)
+        np.cumsum(lengths, out=offs[1:])
+        cmp_len = np.minimum(np.minimum(lengths[idx], lengths[idx + 1]), 64)
+        tot = int(cmp_len.sum())
+        if tot:
+            rel = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(cmp_len) - cmp_len, cmp_len)
+            a = payload[np.repeat(offs[:-1][idx], cmp_len) + rel]
+            b = payload[np.repeat(offs[:-1][idx + 1], cmp_len) + rel]
+            eq = a == b
+            # mean leading-equality run per sampled pair, vectorized:
+            # the run ends at the segment's first mismatch, located
+            # with one searchsorted over the flat mismatch positions
+            # (the former per-segment np.split + cumprod was ~0.5 s
+            # per 256 MB of fixed overhead at bench chunk counts)
+            seg_starts = np.zeros(k, dtype=np.int64)
+            seg_starts[1:] = np.cumsum(cmp_len)[:-1]
+            seg_ends = seg_starts + cmp_len
+            falses = np.flatnonzero(~eq)
+            first_false = falses[
+                np.searchsorted(falses, seg_starts).clip(0, max(len(falses) - 1, 0))
+            ] if len(falses) else np.full(k, tot, dtype=np.int64)
+            # a segment with no mismatch runs to its end
+            run_end = np.where(
+                (len(falses) > 0) & (first_false >= seg_starts) & (first_false < seg_ends),
+                first_false,
+                seg_ends,
             )
-            run_fsst = est_fsst < min(size for size, _ in candidates.values())
-            if run_fsst and compression == "gzip":
-                # the pages gzip AFTER encoding, and deflate recovers much
-                # of what FSST would have squeezed (both are entropy
-                # reductions of the same redundancy; measured on bench
-                # content the post-gzip FSST gain is ~8% vs ~55% without
-                # gzip): FSST must also win AFTER gzip over the raw byte
-                # stream before the full encode pass runs.  The probe uses
-                # a 128 KiB slice — a 32 KiB one understates the converged
-                # gain (deflate's window covers the whole sample there;
-                # 2.4% vs the true 8.3% on bench content).  It stays one
-                # contiguous prefix: deflate matches need contiguous bytes.
-                gz_sample = payload[: 1 << 17]
-                enc_blob = fsst.fsst_encode(gz_sample, table)
-                run_fsst = len(zlib.compress(bytes(enc_blob), 6)) < len(
-                    zlib.compress(gz_sample.tobytes(), 6)
-                )
-            if run_fsst:
-                candidates["FSST"] = sized(_plan("FSST", *args, fsst_table=table))
+            mean_prefix = float(np.mean(run_end - seg_starts))
+            mean_len = float(np.mean(lengths[idx])) or 1.0
+            # front coding must promise real savings: long values with a
+            # short shared header (e.g. source text) skip the extra pass
+            if mean_prefix >= 4.0 and mean_prefix >= 0.25 * mean_len:
+                candidates["DELTA_BYTE_ARRAY"] = sized(_plan("DELTA_BYTE_ARRAY", *args))
+    # FSST: estimate from a sample spread over the chunk; the full
+    # encode pass runs when the estimate beats the best cheap
+    # candidate.  The rule is the same whichever FSST kernel runs, so
+    # pages depend only on the input, the policy and the compression.
+    if "FSST" in takes and allow_fsst and len(payload) >= 1024:
+        sample, table = _fsst_train(payload)
+        est_ratio = len(fsst.fsst_encode(sample, table)) / len(sample)
+        payload_len = int(lengths.sum())
+        # FSST body = DBP(lengths) + symbol table + token payload; the
+        # DBP part equals DLBA's non-payload bytes (computed exactly
+        # above), tables are ~300 B per page
+        est_fsst = (
+            candidates["DELTA_LENGTH_BYTE_ARRAY"][0]
+            - payload_len
+            + 300 * n_pages
+            + est_ratio * payload_len
+        )
+        run_fsst = est_fsst < min(size for size, _ in candidates.values())
+        if run_fsst and compression == "gzip":
+            # the pages gzip AFTER encoding, and deflate recovers much
+            # of what FSST would have squeezed (both are entropy
+            # reductions of the same redundancy; measured on bench
+            # content the post-gzip FSST gain is ~8% vs ~55% without
+            # gzip): FSST must also win AFTER gzip over the raw byte
+            # stream before the full encode pass runs.  The probe uses
+            # a 128 KiB slice — a 32 KiB one understates the converged
+            # gain (deflate's window covers the whole sample there;
+            # 2.4% vs the true 8.3% on bench content).  It stays one
+            # contiguous prefix: deflate matches need contiguous bytes.
+            gz_sample = payload[: 1 << 17]
+            enc_blob = fsst.fsst_encode(gz_sample, table)
+            run_fsst = len(zlib.compress(bytes(enc_blob), 6)) < len(
+                zlib.compress(gz_sample.tobytes(), 6)
+            )
+        if run_fsst:
+            candidates["FSST"] = sized(_plan("FSST", *args, fsst_table=table))
 
-    return min(candidates.values(), key=lambda c: c[0])[1]
+    return min((candidates[enc] for enc in _AUTO_CANDIDATES if enc in candidates), key=lambda c: c[0])[1]
 
 
 # ---------------------------------------------------------------------------
@@ -1096,6 +1144,11 @@ def _read_pages(chunk: EncodedChunk, max_def: int):
     len_parts: list[np.ndarray] = []
     payload_parts: list[np.ndarray] = []
     for page in chunk.pages:
+        # a stored chunk or a foreign file can declare any pair: one the
+        # table does not hold would decode to wrong values, or fail inside
+        # a codec with an unrelated error
+        if ptype not in CODEC_PTYPES.get(page.encoding, ()):
+            raise ValueError(f"{page.encoding} {page.kind} page in a {ptype} chunk: that codec does not take {ptype}")
         raw = _decompress(page.data, chunk.compression)
         if page.kind == "dict":
             dict_entries = _load_dict_page(raw, ptype, chunk.type_length, page.num_values)
@@ -1283,6 +1336,12 @@ def leaf_spec(logical: str) -> tuple[str | None, str]:
         return None, logical
     path, leaf_logical = logical[2:].rsplit("|", 1)
     return path, leaf_logical
+
+
+def leaf_ptype(logical: str, type_length: int) -> str:
+    """Physical type of a chunk from its (logical, type_length), the pair
+    ``column_leaves`` gives (no data needed)."""
+    return pa_ptype(_elem_pa_type(leaf_spec(logical)[1], type_length))[0]
 
 
 def _leaf_logical(leaf: Leaf) -> str:

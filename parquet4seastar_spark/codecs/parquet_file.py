@@ -31,7 +31,7 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 
-from .pages import EncodedChunk, Page, effective_max_def, leaf_spec, optional_flags
+from .pages import CODEC_PTYPES, EncodedChunk, Page, effective_max_def, leaf_spec, optional_flags
 from .thrift_compact import (
     CT_BINARY,
     CT_I32,
@@ -63,10 +63,8 @@ ENC_NAME = {v: k for k, v in ENCODINGS.items()}
 # ConvertedType enum (subset we annotate)
 CONVERTED = {"string": 0, "date": 6, "timestamp_us": 10, "decimal": 5}
 
-_STANDARD_ENCODINGS = {
-    "PLAIN", "RLE_DICTIONARY", "DELTA_BINARY_PACKED", "DELTA_LENGTH_BYTE_ARRAY",
-    "DELTA_BYTE_ARRAY", "RLE", "BYTE_STREAM_SPLIT",
-}
+# every codec of the pages table but FSST, which is not parquet
+_STANDARD_ENCODINGS = set(CODEC_PTYPES) - {"FSST"}
 
 
 # ---------------------------------------------------------------------------
@@ -427,6 +425,15 @@ def write_parquet_file(
 # reader
 
 
+def _encoding_name(leaf: LeafColumn, enc_id: int) -> str:
+    """The Encoding enum name a page header declares, or a ValueError that
+    names the leaf and the id."""
+    name = ENC_NAME.get(enc_id)
+    if name is None:
+        raise ValueError(f"{'.'.join(leaf.path)}: unknown page encoding id {enc_id}")
+    return name
+
+
 class ParquetFileReader:
     """Minimal standard-parquet reader: footer, schema walk, page scan,
     decode via the engine's codec kernels."""
@@ -512,14 +519,14 @@ class ParquetFileReader:
             pos = data_start + size
             if ph[1] == 2:  # DICTIONARY_PAGE
                 dph = ph[7]
-                if ENC_NAME[dph[2]] not in ("PLAIN", "PLAIN_DICTIONARY"):
+                if _encoding_name(leaf, dph[2]) not in ("PLAIN", "PLAIN_DICTIONARY"):
                     raise ValueError("non-PLAIN dictionary page")
                 raw = _decompress(data, codec)
                 pages.append(Page("dict", "PLAIN", dph[1], dph[1], len(raw), len(raw), raw))
                 continue
             if ph[1] == 3:  # DATA_PAGE_V2 (column_chunk_reader.cc:80-111)
                 dp2 = ph[8]
-                enc = ENC_NAME[dp2[4]]
+                enc = _encoding_name(leaf, dp2[4])
                 if enc == "PLAIN_DICTIONARY":
                     enc = "RLE_DICTIONARY"
                 raw = self._reframe_v2_page(data, dp2, leaf, codec)
@@ -537,7 +544,7 @@ class ParquetFileReader:
                         f"{'.'.join(leaf.path)}: {kind} levels declared "
                         f"{ENC_NAME.get(dp[field], dp[field])}, only RLE levels are read"
                     )
-            enc = ENC_NAME[dp[2]]
+            enc = _encoding_name(leaf, dp[2])
             if enc == "PLAIN_DICTIONARY":
                 enc = "RLE_DICTIONARY"
             raw = _decompress(data, codec)

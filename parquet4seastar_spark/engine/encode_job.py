@@ -45,7 +45,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..codecs.pages import column_leaves, encode_column
+from ..codecs.pages import column_chunks, column_leaves, encode_column, leaf_ptype, policy_codec
 
 # the pages frame: one row per page and one lineage row per chunk (kind).
 # Declared once, in arrow: encode tasks build their batches from it without
@@ -282,7 +282,7 @@ def decoded_schema(types: dict[str, pa.DataType], fixed_len) -> dict[str, tuple[
 
 
 def _encode_partition_factory(
-    columns, policy, page_target_bytes, chunk_target_bytes, compression, fixed_len=None
+    policies, page_target_bytes, chunk_target_bytes, compression, fixed_len=None
 ):
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from parquet4seastar_spark import _alloc
@@ -335,20 +335,11 @@ def _encode_partition_factory(
             # final arrow buffer, no per-element Python binary path)
             rows = []
             leaf_chunks: list[tuple[str, object]] = []
-            for col in ["row_id", *columns]:
+            for col, cpolicy in policies.items():
                 arr = tbl.column(col).combine_chunks()
                 t = _encoded_type(col, arr.type, fixed_len)
                 if t != arr.type:
                     arr = arr.cast(t)
-                # row_id gets int auto-selection regardless of the value
-                # policy (sequential ids -> DBP ~free; random ids -> PLAIN);
-                # a dict policy maps column -> policy (default auto)
-                if col == "row_id":
-                    cpolicy = "auto"
-                elif isinstance(policy, dict):
-                    cpolicy = policy.get(col, "auto")
-                else:
-                    cpolicy = policy
                 for suffix, chunk in encode_column(
                     arr, policy=cpolicy, page_target_bytes=page_target_bytes, compression=compression
                 ).items():
@@ -431,6 +422,12 @@ def encode_table(
     """Encode ``df`` (must carry row_id + the data columns) into a pages+
     lineage DataFrame (see ENCODED_SCHEMA).
 
+    ``policy``: one chunk policy for every listed column, or {column:
+    policy} (an unnamed column is 'auto'; a key that names no listed
+    column is refused); row_id is always 'auto'.  A policy that one of a
+    column's leaf physical types does not take (``pages.CODEC_PTYPES``)
+    raises ValueError naming the column, on the driver.
+
     ``resume_lineage``: a previously written lineage table (kind='chunk'
     rows, with ``salt_keys``); the rows it already stores are skipped by
     broadcast anti-joins, and the rest is encoded into part keys the
@@ -510,6 +507,11 @@ def encode_table(
                 f"input column name {c!r} is reserved by the encode engine "
                 "(salting/lineage); rename before encoding"
             )
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    types = {c: to_arrow_type(df.schema[c].dataType) for c in ["row_id", *columns]}
+    leaves = decoded_schema(types, fixed_len)
+    policies = _column_policies(policy, columns, leaves)
     spark = df.sparkSession
     num_partitions = num_partitions or max(spark.sparkContext.defaultParallelism, 8)
     if map_only:
@@ -536,19 +538,42 @@ def encode_table(
             resume_lineage,
         )
     fn = _encode_partition_factory(
-        columns, policy, page_target_bytes, chunk_target_bytes, compression, fixed_len
+        policies, page_target_bytes, chunk_target_bytes, compression, fixed_len
     )
     return salted.select("part_key", "salt_buckets", "_skey", "row_id", *columns).mapInArrow(
-        fn, schema=_encoded_schema(df, columns, fixed_len)
+        fn, schema=_encoded_schema(leaves)
     )
 
 
-def _encoded_schema(df: DataFrame, columns: list[str], fixed_len) -> StructType:
-    """ENCODED_SCHEMA with the decoded schema recorded on ``logical``."""
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
+def _column_policies(policy, columns: list[str], leaves: dict[str, tuple[str, int]]) -> dict[str, str]:
+    """{column: policy} for row_id and the data columns, in encode order,
+    checked on the driver so a bad policy fails here and not inside an
+    executor task.  row_id gets int auto-selection regardless of the value
+    policy (sequential ids -> DBP ~free; random ids -> PLAIN); a dict
+    policy maps column -> policy (default auto) and may name listed
+    columns only; every leaf of a column (``leaves``, the decoded schema)
+    must take its policy (``pages.policy_codec``)."""
+    if not isinstance(policy, dict):
+        policy = dict.fromkeys(columns, policy)
+    stray = sorted(set(policy) - set(columns))
+    if stray:
+        raise ValueError(f"policy names columns that are not encoded: {stray} (columns: {columns})")
+    policies = {"row_id": "auto", **{c: policy.get(c, "auto") for c in columns}}
+    for col, cpolicy in policies.items():
+        for name in column_chunks(col, leaves):
+            try:
+                policy_codec(cpolicy, leaf_ptype(*leaves[name]))
+            except ValueError as e:
+                raise ValueError(f"column {col!r}: {e}") from None
+    return policies
 
-    types = {c: to_arrow_type(df.schema[c].dataType) for c in ["row_id", *columns]}
-    plan = {DECODED_SCHEMA_KEY: json.dumps(decoded_schema(types, fixed_len))}
+
+def _encoded_schema(leaves: dict[str, tuple[str, int]]) -> StructType:
+    """ENCODED_SCHEMA with the decoded schema ``leaves`` recorded on
+    ``logical``."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    plan = {DECODED_SCHEMA_KEY: json.dumps(leaves)}
     return StructType([
         StructField(f.name, f.dataType, f.nullable, plan if f.name == "logical" else None)
         for f in from_arrow_schema(ENCODED_SCHEMA)

@@ -22,7 +22,7 @@ import random
 import pyarrow as pa
 import pytest
 
-from parquet4seastar_spark.codecs.pages import decode_chunk, encode_chunk, pa_ptype
+from parquet4seastar_spark.codecs.pages import CODEC_PTYPES, decode_chunk, encode_chunk, pa_ptype
 
 
 def _int32(r):
@@ -228,6 +228,16 @@ ACCEPTS = {
     "RLE": {"BOOLEAN"},
     "BYTE_STREAM_SPLIT": {"INT32", "INT64", "FLOAT", "DOUBLE"},
 }
+EVERY_PTYPE = {"BOOLEAN", "INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY"}
+
+
+def test_codec_table_is_the_expected_one():
+    # the package's codec x type table, against this independent copy:
+    # PLAIN and RLE_DICTIONARY take every type, the rest what ACCEPTS says
+    assert CODEC_PTYPES["PLAIN"] == CODEC_PTYPES["RLE_DICTIONARY"] == EVERY_PTYPE
+    rest = {c: set(t) for c, t in CODEC_PTYPES.items() if c not in ("PLAIN", "RLE_DICTIONARY")}
+    assert rest == ACCEPTS
+
 
 # sha256 over every accepted case of the shape, in corpus order
 PINNED = {

@@ -439,6 +439,32 @@ def test_reader_rejects_corrupt_containers(tmp_path):
         ParquetFileReader(truncated)
 
 
+@pytest.mark.parametrize("policy", ["plain", "dict"])
+def test_reader_names_an_unknown_page_encoding_id(tmp_path, monkeypatch, policy):
+    # a V1 page header carrying an id the Encoding enum does not hold,
+    # written with the writer's PLAIN id patched: the data page of a
+    # 'plain' chunk, the dictionary page of a 'dict' one
+    from parquet4seastar_spark.codecs import parquet_file
+
+    path = str(tmp_path / "x.parquet")
+    chunk = encode_chunk(pa.array(["a", "b", "a"]), policy=policy)
+    with monkeypatch.context() as m:
+        m.setitem(parquet_file.ENCODINGS, "PLAIN", 42)
+        write_parquet_file(path, {"s": chunk}, 3)
+    with pytest.raises(ValueError, match=r"^s: unknown page encoding id 42$"):
+        ParquetFileReader(path).read_column("s")
+
+
+def test_reader_names_an_unknown_v2_page_encoding_id(tmp_path, monkeypatch):
+    # a V2 data page whose id the reader's Encoding enum lacks
+    from parquet4seastar_spark.codecs import parquet_file
+
+    path = str(tmp_path / "v2.parquet")
+    pq.write_table(pa.table({"s": ["a", "b"]}), path, use_dictionary=False, data_page_version="2.0")
+    monkeypatch.delitem(parquet_file.ENC_NAME, parquet_file.ENCODINGS["PLAIN"])
+    with pytest.raises(ValueError, match=r"^s: unknown page encoding id 0$"):
+        ParquetFileReader(path).read_column("s")
+
 
 def test_write_struct_list_optional_field_pyarrow_reads(tmp_path):
     # list<struct> with an OPTIONAL field: the recursive schema emitter
