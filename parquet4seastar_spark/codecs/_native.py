@@ -4,7 +4,7 @@ fallback.
 The greedy longest-match tokenization is a sequential chain (pos ->
 pos + match_len); the pure-numpy path vectorizes it with per-position
 matching plus pointer-doubling chain enumeration (codecs/fsst.py,
-codecs/chain.py), which tops out ~21 MB/s single-proc because ~60% of the
+``chain.chain_visit_bounded``), which tops out ~21 MB/s single-proc because ~60% of the
 match work is at positions the chain never visits.  In C the greedy rule
 is one static inline match step (``p4s_fsst_match``: the 8-byte window
 load, the lut2 probe, the mask/value compare and the end-of-segment

@@ -1,21 +1,23 @@
-"""Pointer-doubling chain enumeration.
+"""Pointer-doubling chain enumeration for FSST's greedy tokenization.
 
-Several decode paths (PLAIN byte-array length-prefix walking, FSST greedy
-tokenization) are "follow a jump table from position 0" scans.  A naive scan
-is a per-element python loop; instead we enumerate the visited set with
-O(log n) vectorized pointer-doubling passes.  Because jumps are strictly
-forward, ``np.flatnonzero`` on the visited mask yields positions in chain
-order.
+The numpy FSST path is a "follow a jump table from position 0" scan over
+every byte of a segment.  A naive scan is a per-byte python loop; instead
+``chain_visit_bounded`` enumerates the visited set with a blocked walk and
+O(log n) vectorized pointer-doubling passes (``_chain_visit``).  Because
+jumps are strictly forward, ``np.flatnonzero`` on the visited mask yields
+positions in chain order.  (PLAIN byte-array decoding walks its length
+prefixes with one scalar loop instead, plain.py: it visits one position
+per value, not per byte.)
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["chain_visit", "chain_visit_bounded"]
+__all__ = ["chain_visit_bounded"]
 
 
-def chain_visit(nxt: np.ndarray, start: int = 0) -> np.ndarray:
+def _chain_visit(nxt: np.ndarray, start: int = 0) -> np.ndarray:
     """Enumerate positions visited following ``pos -> nxt[pos]`` from ``start``.
 
     ``nxt`` has length N+1; index N is the absorbing end state.  Jump targets
@@ -50,7 +52,7 @@ def chain_visit_bounded(
     lengths bounded by ``max_jump`` (< block = 1 << block_shift).
 
     Two-level scheme that keeps every pass cache-resident instead of the
-    O(log n) whole-array gather compositions of :func:`chain_visit`:
+    O(log n) whole-array gather compositions of :func:`_chain_visit`:
 
     1. per block, compute ``exit[i]`` (first position >= block end reached
        from i) with a backward sweep -- ``block`` vectorized passes over
@@ -105,7 +107,7 @@ def chain_visit_bounded(
     node_next[:-1] += tgt_off
     node_next[:-1][(tgt >= n) | (tgt_off >= max_jump)] = sinknode
     node_next[-1] = sinknode
-    nodes = chain_visit(node_next, 0)
+    nodes = _chain_visit(node_next, 0)
     entry_blocks = nodes // max_jump
     entry_abs = ((entry_blocks << block_shift) + nodes % max_jump).astype(np.int32)
 

@@ -13,7 +13,8 @@ published algorithm only:
   holds (at most) one multi-byte symbol per prefix, a 256-entry table holds
   1-byte symbols.  Per position: two cache-resident gathers + one compare,
   all numpy-vectorized.  The greedy left-to-right token chain is enumerated
-  with pointer doubling (codecs/chain.py) instead of a per-byte python loop.
+  with a blocked pointer-doubling walk (``chain.chain_visit_bounded``)
+  instead of a per-byte python loop.
 - decoding: fully vectorized gather from the padded symbol matrix.
 
 Serialized layout (ours):

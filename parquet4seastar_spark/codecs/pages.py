@@ -27,6 +27,19 @@ columnar batches:
   reader yields the leaf's level streams and its non-null values, and the
   walker's assembly (``dremel.assemble_tree``) places them -- a flat
   column is a leaf with no list above it.
+- Values cross between Arrow and the codec kernels in one *flat form*,
+  ``(values, lengths, payload)``: numpy values for the fixed-width types
+  (an (n, k) uint8 matrix for FIXED_LEN_BYTE_ARRAY), or int64 lengths and
+  a uint8 payload for BYTE_ARRAY.  One conversion pair crosses it:
+  ``_leaf_components`` (Arrow -> flat) and ``_physical_array`` (flat -> a
+  null-free physical Arrow array).  A dictionary page is just PLAIN values
+  (dict_builder/dict_decoder, encoding.cc:710-761, 117-131): written by
+  the PLAIN encoder, read by the PLAIN decoder into an Arrow array, and an
+  RLE_DICTIONARY page is that array's ``take`` of its codes.  A chunk's
+  decoded pages stay flat parts, concatenated in numpy, and Arrow is built
+  once per chunk: concatenating per-page Arrow arrays allocates the chunk
+  afresh from Arrow's pool, which page-faults where numpy reuses the
+  tuned heap (_alloc.py).
 - Dictionary fallback: pages are dictionary-encoded until, at a page flush,
   the accumulated dictionary exceeds 16 KiB; subsequent pages are PLAIN and
   the dictionary page (entries first seen up to the overflow page) is still
@@ -408,54 +421,53 @@ def _encode_values(encoding: str, ptype: str, values, lengths=None, payload=None
     raise ValueError(f"unknown value encoding {encoding}")
 
 
-def _decode_values(encoding: str, ptype: str, buf, n: int, dict_ctx=None, type_length: int = 0):
-    """Decode n non-null values; returns np array or (lengths, payload)."""
+def _decode_values(encoding: str, ptype: str, buf, n: int, type_length: int = 0):
+    """Decode the n non-null values of one page into the flat form:
+    (values, None, None), or (None, lengths, payload) for BYTE_ARRAY."""
+    values = lengths = payload = None
     if encoding == "PLAIN":
         if ptype == "BOOLEAN":
-            return plain.plain_decode_bool(buf, n)
-        if ptype == "BYTE_ARRAY":
+            values = plain.plain_decode_bool(buf, n)
+        elif ptype == "BYTE_ARRAY":
             lengths, payload = plain.plain_decode_byte_array(buf, n)
-            return lengths.astype(np.int64), np.frombuffer(payload, dtype=np.uint8)
-        if ptype == "FIXED_LEN_BYTE_ARRAY":
+        elif ptype == "FIXED_LEN_BYTE_ARRAY":
             raw = plain.plain_decode_flba(bytes(buf), type_length, n)
-            return np.frombuffer(raw, dtype=np.uint8).reshape(n, type_length)
-        return plain.plain_decode_fixed(bytes(buf), _FIXED_DTYPES[ptype], n)
-    if encoding == "DELTA_BINARY_PACKED":
+            values = np.frombuffer(raw, dtype=np.uint8).reshape(n, type_length)
+        else:
+            values = plain.plain_decode_fixed(bytes(buf), _FIXED_DTYPES[ptype], n)
+    elif encoding == "DELTA_BINARY_PACKED":
         nbytes = 4 if ptype == "INT32" else 8
-        vals, _ = delta.dbp_decode(buf, nbytes)
-        if len(vals) != n:
+        values, _ = delta.dbp_decode(buf, nbytes)
+        if len(values) != n:
             raise ValueError("DELTA_BINARY_PACKED count mismatch")
-        return vals
-    if encoding == "DELTA_LENGTH_BYTE_ARRAY":
+    elif encoding == "DELTA_LENGTH_BYTE_ARRAY":
         lengths, payload = delta.dlba_decode(buf, n)
-        return lengths.astype(np.int64), np.frombuffer(payload, dtype=np.uint8)
-    if encoding == "DELTA_BYTE_ARRAY":
+    elif encoding == "DELTA_BYTE_ARRAY":
         lengths, payload = delta.delta_byte_array_decode_components(buf, n)
-        return lengths.astype(np.int64), np.frombuffer(payload, dtype=np.uint8)
-    if encoding == "FSST":
+    elif encoding == "FSST":
         lengths, pos = delta.dbp_decode(buf, 4)
         if len(lengths) != n:
             raise ValueError("FSST count mismatch")
         payload = fsst.fsst_decode(memoryview(buf)[pos:])
         if len(payload) != int(lengths.astype(np.int64).sum()):
             raise ValueError("FSST payload length mismatch")
-        return lengths.astype(np.int64), np.frombuffer(payload, dtype=np.uint8)
-    if encoding == "RLE":
+    elif encoding == "RLE":
         if len(buf) < 4:
             raise ValueError("RLE boolean truncated")
         (ln,) = struct.unpack_from("<I", buf, 0)
         if 4 + ln > len(buf):
             raise ValueError("RLE boolean truncated")
-        vals = rle_decode(bytes(memoryview(buf)[4 : 4 + ln]), 1, n)
-        if len(vals) != n:
+        values = rle_decode(bytes(memoryview(buf)[4 : 4 + ln]), 1, n)
+        if len(values) != n:
             raise ValueError("RLE boolean truncated")
-        return vals.astype(bool)
-    if encoding == "BYTE_STREAM_SPLIT":
-        return delta.byte_stream_split_decode(bytes(buf), _FIXED_DTYPES[ptype], n)
-    if encoding == "RLE_DICTIONARY":
-        codes = dictionary.decode_dict_indices(bytes(buf), n, dict_ctx)
-        return codes
-    raise ValueError(f"unknown value encoding {encoding}")
+        values = values.astype(bool)
+    elif encoding == "BYTE_STREAM_SPLIT":
+        values = delta.byte_stream_split_decode(bytes(buf), _FIXED_DTYPES[ptype], n)
+    else:
+        raise ValueError(f"unknown value encoding {encoding}")
+    if lengths is not None:
+        return None, lengths.astype(np.int64), np.frombuffer(payload, dtype=np.uint8)
+    return values, None, None
 
 
 # ---------------------------------------------------------------------------
@@ -507,9 +519,11 @@ def _chunk_stats(chunk: EncodedChunk, ptype: str, values, lengths, payload) -> N
         lo = float(values.min())
         hi = float(values.max())
         # double can't represent every int64: widen one ulp each way so the
-        # stored bounds always contain the true range
-        chunk.stat_min_num = float(np.nextafter(lo, -np.inf))
-        chunk.stat_max_num = float(np.nextafter(hi, np.inf))
+        # stored bounds always contain the true range (past +-DBL_MAX the
+        # bound is +-inf, which is right: no overflow warning)
+        with np.errstate(over="ignore"):
+            chunk.stat_min_num = float(np.nextafter(lo, -np.inf))
+            chunk.stat_max_num = float(np.nextafter(hi, np.inf))
     elif ptype == "BYTE_ARRAY" and lengths is not None and len(lengths):
         k = min(16, int(lengths.max()))
         if k == 0:  # every value is the empty string: exact degenerate bounds
@@ -545,8 +559,10 @@ def _plain_size(ptype: str, n: int, lengths=None, type_length: int = 0) -> int:
 
 
 def _leaf_components(nn_arr: pa.Array, ptype: str):
-    """Null-free leaf array -> (values, lengths, payload, per-value bytes,
-    type_length) in the flat form the codec kernels consume."""
+    """Null-free physical leaf array -> (values, lengths, payload,
+    per-value bytes, type_length): the flat form the codec kernels consume.
+    With its inverse ``_physical_array``, the one conversion between Arrow
+    and the flat form."""
     lengths = payload = values = None
     type_length = 0
     if ptype == "BYTE_ARRAY":
@@ -567,6 +583,22 @@ def _leaf_components(nn_arr: pa.Array, ptype: str):
     return values, lengths, payload, nn_row_bytes, type_length
 
 
+def _physical_array(ptype: str, values, lengths, payload) -> pa.Array:
+    """Flat form -> null-free physical arrow array, the inverse of
+    ``_leaf_components``: large_binary for BYTE_ARRAY, binary(k) for
+    FIXED_LEN_BYTE_ARRAY (k = ``values.shape[1]``, the flat form's (n, k)
+    bytes), else the values' own type.  The flat buffers are not copied."""
+    if ptype == "BYTE_ARRAY":
+        offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+        np.cumsum(lengths, out=offsets[1:])
+        buffers = [None, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(payload))]
+        return pa.Array.from_buffers(pa.large_binary(), len(lengths), buffers)
+    if ptype == "FIXED_LEN_BYTE_ARRAY":
+        buffers = [None, pa.py_buffer(np.ascontiguousarray(values))]
+        return pa.Array.from_buffers(pa.binary(values.shape[1]), len(values), buffers)
+    return pa.array(values)
+
+
 def encode_chunk(
     arr: pa.Array,
     *,
@@ -585,7 +617,11 @@ def encode_chunk(
             to PLAIN; see BASELINE.md), 'plain' (PLAIN, the baseline),
             'dict' (RLE_DICTIONARY, no fallback), or an explicit codec name
             that ``CODEC_PTYPES`` pairs with the chunk's physical type; any
-            other pair raises ValueError (``policy_codec``).
+            other pair raises ValueError (``policy_codec``).  On BOOLEAN,
+            'dict' and 'reference' write a dictionary page: the pages
+            table reads it, but ``write_parquet_file`` refuses the chunk
+            (standard readers do not implement dictionary-encoded
+            BOOLEAN), so export such a column under 'plain' or 'auto'.
 
     Every shape takes one path: ``shred(arr, opts)`` (opts = token path
     -> OPTIONAL, from the flags and the data), then the leaf encoder the
@@ -742,28 +778,7 @@ def _dict_plan(ptype, values, lengths, payload, nn_page_ends, *, fallback: bool)
     after the page at whose flush the dictionary outgrows
     DICT_FALLBACK_THRESHOLD, the dictionary page holding the entries first
     seen by then.  A chunk with no values plans PLAIN pages."""
-    if ptype == "BYTE_ARRAY":
-        offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        nn_arr = pa.Array.from_buffers(
-            pa.large_binary(),
-            len(lengths),
-            [
-                None,
-                pa.py_buffer(offsets.tobytes()),
-                pa.py_buffer(np.ascontiguousarray(payload).tobytes()),
-            ],
-        )
-    elif ptype == "BOOLEAN":
-        nn_arr = pa.array(values, type=pa.bool_())
-    elif ptype == "FIXED_LEN_BYTE_ARRAY":
-        k = values.shape[1] if values.ndim == 2 else 1
-        nn_arr = pa.Array.from_buffers(
-            pa.binary(k), len(values), [None, pa.py_buffer(values.tobytes())]
-        )
-    else:
-        nn_arr = pa.array(values)
-    codes, dict_arr = dictionary.build_dict(nn_arr)
+    codes, dict_arr = dictionary.build_dict(_physical_array(ptype, values, lengths, payload))
     card = len(dict_arr)
     if card == 0:
         return _plan("PLAIN", ptype, values, lengths, payload, nn_page_ends)
@@ -780,15 +795,7 @@ def _dict_plan(ptype, values, lengths, payload, nn_page_ends, *, fallback: bool)
     if fallback:
         # per-entry plain size; dict size after each page flush = bytes of
         # entries first seen by then
-        if ptype == "BYTE_ARRAY":
-            entry_sizes = ba_components(dict_arr)[0] + 4
-        elif ptype == "BOOLEAN":
-            entry_sizes = np.full(card, 1, dtype=np.int64)
-        elif ptype == "FIXED_LEN_BYTE_ARRAY":
-            entry_sizes = np.full(card, values.shape[1], dtype=np.int64)
-        else:
-            entry_sizes = np.full(card, _FIXED_DTYPES[ptype].itemsize, dtype=np.int64)
-        cum_entry_sizes = np.cumsum(entry_sizes, dtype=np.int64)
+        cum_entry_sizes = np.cumsum(_leaf_components(dict_arr, ptype)[3], dtype=np.int64)
         dict_size_at_page = np.where(entries_by_page > 0, cum_entry_sizes[entries_by_page - 1], 0)
         over = np.flatnonzero(dict_size_at_page > DICT_FALLBACK_THRESHOLD)
         if len(over):
@@ -796,19 +803,10 @@ def _dict_plan(ptype, values, lengths, payload, nn_page_ends, *, fallback: bool)
             per_page = ["RLE_DICTIONARY" if i <= fb else "PLAIN" for i in range(n_pages)]
             dict_arr = dict_arr.slice(0, int(entries_by_page[fb]))
     bodies = _page_bodies(per_page, ptype, values, lengths, payload, nn_page_ends, codes, entries_by_page)
-    return per_page, _encode_dict_page(ptype, dict_arr), len(dict_arr), bodies
-
-
-def _encode_dict_page(ptype: str, dict_arr: pa.Array) -> bytes:
-    if ptype == "BYTE_ARRAY":
-        d_lengths, d_payload = ba_components(dict_arr)
-        return plain.plain_encode_byte_array(d_lengths, d_payload.tobytes())
-    if ptype == "FIXED_LEN_BYTE_ARRAY":
-        return bytes(dict_arr.buffers()[1])[: len(dict_arr) * dict_arr.type.byte_width]
-    if ptype == "BOOLEAN":
-        return plain.plain_encode_bool(dict_arr.to_numpy(zero_copy_only=False).astype(bool))
-    vals = np.ascontiguousarray(dict_arr.to_numpy(zero_copy_only=False), dtype=_FIXED_DTYPES[ptype])
-    return plain.plain_encode_fixed(vals)
+    # the dictionary page is the entries' PLAIN values (dict_builder,
+    # encoding.cc:710-761)
+    dict_page = _encode_values("PLAIN", ptype, *_leaf_components(dict_arr, ptype)[:3])
+    return per_page, dict_page, len(dict_arr), bodies
 
 
 def _plan_codecs(policy, ptype, values, lengths, payload, nn_page_ends, compression="uncompressed"):
@@ -832,7 +830,11 @@ def policy_codec(policy: str, ptype: str) -> str | None:
     ``CODEC_PTYPES`` takes it, else RLE_DICTIONARY with the 16 KiB
     fallback.  A codec the table does not pair with ``ptype`` raises
     ValueError naming the policy and the type, before any value is
-    encoded."""
+    encoded.  BOOLEAN under 'dict' or 'reference' is RLE_DICTIONARY on
+    purpose (the table and the reference's static policy both allow it):
+    the pages table reads such a chunk, and ``write_parquet_file``
+    refuses it by name, since standard readers do not implement
+    dictionary-encoded BOOLEAN."""
     if policy in ("auto", "auto_fast"):
         return None
     if policy == "reference":
@@ -886,26 +888,6 @@ def _fsst_sample(payload: np.ndarray) -> np.ndarray:
     k = _FSST_SAMPLE // _FSST_PIECE
     starts = np.linspace(0, len(payload) - _FSST_PIECE, num=k, dtype=np.int64)
     return payload[(starts[:, None] + np.arange(_FSST_PIECE)).reshape(-1)]
-
-
-def _ragged_take(lengths: np.ndarray, payload: np.ndarray, idx: np.ndarray) -> pa.Array:
-    """Gather entries ``idx`` of a ragged (lengths, payload) column into a
-    large_binary arrow array (vectorized, no per-row Python)."""
-    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    s_lens = lengths[idx]
-    s_starts = offsets[:-1][idx]
-    total = int(s_lens.sum())
-    base = np.repeat(s_starts, s_lens)
-    off = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(s_lens) - s_lens, s_lens)
-    s_payload = payload[base + off] if total else np.zeros(0, dtype=np.uint8)
-    s_offsets = np.zeros(len(idx) + 1, dtype=np.int64)
-    np.cumsum(s_lens, out=s_offsets[1:])
-    return pa.Array.from_buffers(
-        pa.large_binary(),
-        len(idx),
-        [None, pa.py_buffer(s_offsets.tobytes()), pa.py_buffer(s_payload.tobytes())],
-    )
 
 
 def _page_bodies(encs, ptype, values, lengths, payload, nn_page_ends, codes=None, card_by_page=None, fsst_table=None):
@@ -970,9 +952,7 @@ def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, c
 
     nn = int(nn_page_ends[-1])
     takes = {enc for enc in _AUTO_CANDIDATES if ptype in CODEC_PTYPES[enc]}
-    type_length = (
-        int(values.shape[1]) if ptype == "FIXED_LEN_BYTE_ARRAY" and values is not None and values.ndim == 2 else 0
-    )
+    type_length = values.shape[1] if ptype == "FIXED_LEN_BYTE_ARRAY" else 0
     # PLAIN takes every type: auto always has a candidate
     candidates = {"PLAIN": (_plain_size(ptype, nn, lengths, type_length), _plan("PLAIN", *args))}
 
@@ -984,20 +964,10 @@ def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, c
     # don't implement dictionary-encoded booleans (pyarrow raises), which
     # would poison container export for ~zero ratio gain
     if nn and "RLE_DICTIONARY" in takes and ptype != "BOOLEAN":
-        if ptype == "BYTE_ARRAY":
-            k = min(nn, 512)
-            idx = np.linspace(0, nn - 1, num=k, dtype=np.int64)
-            sample_arr = _ragged_take(lengths, payload, idx)
-            sample_card_ratio = len(sample_arr.unique()) / max(k, 1)
-        elif ptype == "FIXED_LEN_BYTE_ARRAY":
-            k = min(nn, 2048)
-            idx = np.linspace(0, nn - 1, num=k, dtype=np.int64)
-            sample_card_ratio = len(np.unique(values[idx], axis=0)) / k
-        else:
-            k = min(nn, 4096)
-            idx = np.linspace(0, nn - 1, num=k, dtype=np.int64)
-            sample_card_ratio = len(np.unique(values[idx])) / k
-        if sample_card_ratio < 0.98:
+        k = min(nn, {"BYTE_ARRAY": 512, "FIXED_LEN_BYTE_ARRAY": 2048}.get(ptype, 4096))
+        idx = np.linspace(0, nn - 1, num=k, dtype=np.int64)
+        sample = _physical_array(ptype, values, lengths, payload).take(idx)
+        if len(sample.unique()) / k < 0.98:
             candidates["RLE_DICTIONARY"] = sized(_dict_plan(*args, fallback=True))
     if "DELTA_BINARY_PACKED" in takes:
         candidates["DELTA_BINARY_PACKED"] = sized(_plan("DELTA_BINARY_PACKED", *args))
@@ -1098,51 +1068,20 @@ def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, c
 # decode
 
 
-def _load_dict_page(raw, ptype: str, type_length: int, num_values: int):
-    """Decode a PLAIN dictionary page into flat entry form."""
-    if ptype == "BYTE_ARRAY":
-        lengths, payload = plain.plain_decode_byte_array(raw, num_values)
-        return (lengths.astype(np.int64), np.frombuffer(payload, dtype=np.uint8))
-    if ptype == "BOOLEAN":
-        return plain.plain_decode_bool(raw, num_values)
-    if ptype == "FIXED_LEN_BYTE_ARRAY":
-        flat = plain.plain_decode_flba(raw, type_length, num_values)
-        return np.frombuffer(flat, dtype=np.uint8).reshape(num_values, type_length)
-    return plain.plain_decode_fixed(raw, _FIXED_DTYPES[ptype], num_values)
-
-
-def _gather_dict_values(ptype: str, dict_entries, codes, len_parts, payload_parts, fixed_parts):
-    """Append dictionary lookups for one page into the value accumulators."""
-    if ptype == "BYTE_ARRAY":
-        d_lengths, d_payload = dict_entries
-        d_offsets = np.zeros(len(d_lengths) + 1, dtype=np.int64)
-        np.cumsum(d_lengths, out=d_offsets[1:])
-        lens = d_lengths[codes]
-        total = int(lens.sum())
-        idx = np.repeat(d_offsets[codes], lens) + (
-            np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens)
-        )
-        len_parts.append(lens)
-        payload_parts.append(d_payload[idx])
-    else:
-        fixed_parts.append(np.asarray(dict_entries)[codes])
-
-
 def _read_pages(chunk: EncodedChunk, max_def: int):
     """Decode every page of a chunk (column_chunk_reader.hh:101-157): the
-    dictionary page loads the dictionary; a data page yields its rep levels
-    (iff max_rep > 0), def levels, and the values of its def == max_def
-    entries.  Returns (def levels, rep levels or None, (len_parts,
-    payload_parts, fixed_parts))."""
+    dictionary page is PLAIN values, loaded as a physical arrow array
+    (dict_decoder, encoding.cc:117-131, 468-508); a data page yields its
+    rep levels (iff max_rep > 0), def levels, and the values of its def ==
+    max_def entries in the flat form (an RLE_DICTIONARY page gathers them
+    from the dictionary with ``take``).  Returns (def levels, rep levels or
+    None, the flat parts of the pages)."""
     ptype = chunk.ptype
     max_rep = chunk.max_rep
-    dict_entries = None  # decoded dictionary in flat form
-    dict_size = 0
+    dict_arr = None
     rep_parts: list[np.ndarray] = []
     def_parts: list[np.ndarray] = []
-    fixed_parts: list[np.ndarray] = []
-    len_parts: list[np.ndarray] = []
-    payload_parts: list[np.ndarray] = []
+    parts: list[tuple] = []  # per data page: (values, lengths, payload)
     for page in chunk.pages:
         # a stored chunk or a foreign file can declare any pair: one the
         # table does not hold would decode to wrong values, or fail inside
@@ -1151,37 +1090,33 @@ def _read_pages(chunk: EncodedChunk, max_def: int):
             raise ValueError(f"{page.encoding} {page.kind} page in a {ptype} chunk: that codec does not take {ptype}")
         raw = _decompress(page.data, chunk.compression)
         if page.kind == "dict":
-            dict_entries = _load_dict_page(raw, ptype, chunk.type_length, page.num_values)
-            dict_size = page.num_values
+            flat = _decode_values("PLAIN", ptype, raw, page.num_values, chunk.type_length)
+            dict_arr = _physical_array(ptype, *flat)
             continue
         off = 0
         if max_rep > 0:
             rep, off = decode_levels_v1(raw, max_rep, page.num_values)
             rep_parts.append(rep)
         def_, c2 = decode_levels_v1(memoryview(raw)[off:], max_def, page.num_values)
-        body = memoryview(raw)[off + c2 :]
+        body = bytes(memoryview(raw)[off + c2 :])
         nn = int((def_ == max_def).sum())
         # num_non_null == -1: unknown (pages from a standard parquet file,
         # whose DataPageHeader carries only the level count)
         if page.num_non_null >= 0 and nn != page.num_non_null:
             raise ValueError(f"page value count mismatch: {nn} != {page.num_non_null}")
         if page.encoding == "RLE_DICTIONARY":
-            codes = _decode_values("RLE_DICTIONARY", ptype, bytes(body), nn, dict_size)
-            _gather_dict_values(ptype, dict_entries, codes, len_parts, payload_parts, fixed_parts)
+            if dict_arr is None:
+                raise ValueError("RLE_DICTIONARY data page before any dictionary page")
+            codes = dictionary.decode_dict_indices(body, nn, len(dict_arr))
+            parts.append(_leaf_components(dict_arr.take(codes), ptype)[:3])
         else:
-            out = _decode_values(page.encoding, ptype, bytes(body), nn, type_length=chunk.type_length)
-            if ptype == "BYTE_ARRAY":
-                lens, pl = out
-                len_parts.append(lens)
-                payload_parts.append(pl)
-            else:
-                fixed_parts.append(out)
+            parts.append(_decode_values(page.encoding, ptype, body, nn, chunk.type_length))
         def_parts.append(def_)
     def_all = np.concatenate(def_parts) if def_parts else np.zeros(0, dtype=np.int32)
     rep_all = None
     if max_rep > 0:
         rep_all = np.concatenate(rep_parts) if rep_parts else np.zeros(0, dtype=np.int32)
-    return def_all, rep_all, (len_parts, payload_parts, fixed_parts)
+    return def_all, rep_all, parts
 
 
 def effective_max_def(chunk: EncodedChunk) -> int:
@@ -1260,51 +1195,27 @@ def _elem_pa_type(elem_logical: str, type_length: int) -> pa.DataType:
     return _ELEM_PA_TYPES[elem_logical]
 
 
-def _build_leaf_array(
-    ptype: str, logical: str, type_length: int, len_parts: list, payload_parts: list, fixed_parts: list
-) -> pa.Array:
-    """Decoded non-null values -> the typed leaf arrow array, with no
-    nulls: assembly places them (``dremel.assemble_tree``)."""
-    decimal = _parse_decimal(logical) if logical.startswith("decimal(") else None
-    if ptype == "BYTE_ARRAY":
-        lens = np.concatenate(len_parts) if len_parts else np.zeros(0, dtype=np.int64)
-        payload = np.concatenate(payload_parts) if payload_parts else np.zeros(0, dtype=np.uint8)
-        if decimal:
-            leaf = _varbin_to_decimal(lens, payload, *decimal)
-        else:
-            offsets = np.zeros(len(lens) + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
-            if offsets[-1] > np.iinfo(np.int32).max:
-                raise ValueError("BYTE_ARRAY chunk exceeds int32 offsets")
-            leaf = pa.Array.from_buffers(
-                pa.binary(), len(lens), [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(payload)]
-            )
-    elif ptype == "FIXED_LEN_BYTE_ARRAY":
-        k = type_length
-        vals = (
-            np.concatenate(fixed_parts).reshape(-1, k).astype(np.uint8, copy=False)
-            if fixed_parts
-            else np.zeros((0, k), dtype=np.uint8)
-        )
-        if decimal:
-            leaf = _flba_to_decimal(vals, *decimal)
-        else:
-            leaf = pa.Array.from_buffers(pa.binary(k), len(vals), [None, pa.py_buffer(vals.tobytes())])
-    elif ptype == "BOOLEAN":
-        vals = (
-            np.concatenate([np.asarray(p, dtype=bool) for p in fixed_parts])
-            if fixed_parts
-            else np.zeros(0, dtype=bool)
-        )
-        leaf = pa.array(vals, type=pa.bool_())
-    else:
-        dtype = _FIXED_DTYPES[ptype]
-        vals = np.concatenate(fixed_parts).astype(dtype, copy=False) if fixed_parts else np.zeros(0, dtype=dtype)
-        leaf = _int_to_decimal(vals, *decimal) if decimal else pa.array(vals)
+def _build_leaf_array(ptype: str, logical: str, type_length: int, parts: list) -> pa.Array:
+    """The pages' flat parts -> the typed leaf arrow array, with no nulls:
+    assembly places them (``dremel.assemble_tree``).  The parts are
+    concatenated field by field in numpy and Arrow is built once: a fresh
+    multi-MB arrow buffer (``pa.concat_arrays``) comes from Arrow's own
+    pool and page-faults, where numpy reuses the tuned heap (_alloc.py)."""
     target = _elem_pa_type(logical, type_length)
-    if leaf.type != target:
-        leaf = leaf.cast(target)
-    return leaf
+    if not parts:
+        return pa.array([], type=target)
+    values, lengths, payload = (None if f[0] is None else np.concatenate(f) for f in zip(*parts))
+    if logical.startswith("decimal("):
+        decimal = _parse_decimal(logical)
+        if ptype == "BYTE_ARRAY":
+            return _varbin_to_decimal(lengths, payload, *decimal)
+        if ptype == "FIXED_LEN_BYTE_ARRAY":
+            return _flba_to_decimal(values, *decimal)
+        return _int_to_decimal(values, *decimal)
+    if ptype == "BYTE_ARRAY" and len(payload) > np.iinfo(np.int32).max:
+        raise ValueError("BYTE_ARRAY chunk exceeds int32 offsets")
+    leaf = _physical_array(ptype, values, lengths, payload)
+    return leaf if leaf.type == target else leaf.cast(target)
 
 
 # ---------------------------------------------------------------------------
@@ -1504,5 +1415,5 @@ def _decode_dremel_leaf(chunk: "EncodedChunk", leaf_logical: str):
     def_, rep, parts = _read_pages(chunk, effective_max_def(chunk))
     if rep is None:
         rep = np.zeros(len(def_), dtype=np.uint32)
-    vals = _build_leaf_array(chunk.ptype, leaf_logical, chunk.type_length, *parts)
+    vals = _build_leaf_array(chunk.ptype, leaf_logical, chunk.type_length, parts)
     return def_.astype(np.uint32, copy=False), rep.astype(np.uint32, copy=False), vals

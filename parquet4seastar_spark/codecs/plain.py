@@ -17,9 +17,9 @@ pairs -- the same offsets+data layout Arrow uses, so conversion from a
 
 from __future__ import annotations
 
-import numpy as np
+import struct
 
-from .chain import chain_visit
+import numpy as np
 
 __all__ = [
     "plain_encode_fixed",
@@ -32,6 +32,8 @@ __all__ = [
     "plain_decode_flba",
     "byte_array_extremes",
 ]
+
+_U32 = struct.Struct("<I")
 
 
 def plain_encode_fixed(values: np.ndarray) -> bytes:
@@ -102,40 +104,32 @@ def plain_encode_byte_array(lengths: np.ndarray, payload: bytes) -> bytes:
 
 
 def plain_decode_byte_array(buf: bytes, n: int) -> tuple[np.ndarray, bytes]:
-    """Walk the length-prefix chain with pointer doubling (no per-value loop).
+    """Walk the n length prefixes once (each prefix locates the next, a
+    serial chain), then gather the value bytes in one vectorized pass.
 
     Returns (lengths int32[n], payload bytes).
     """
     if n == 0:
         return np.zeros(0, dtype=np.int32), b""
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    size = len(raw)
-    if size < 4:
-        raise ValueError("PLAIN byte-array buffer too short")
-    # u32 at every byte offset (sliding window)
-    padded = np.zeros(size + 3, dtype=np.uint8)
-    padded[:size] = raw
-    win = np.lib.stride_tricks.sliding_window_view(padded, 4)[:size]
-    u32_at = (win.astype(np.uint32) * np.array([1, 1 << 8, 1 << 16, 1 << 24], dtype=np.uint32)).sum(
-        axis=1, dtype=np.uint32
-    )
-    nxt = np.empty(size + 1, dtype=np.int64)
-    nxt[:size] = np.arange(size, dtype=np.int64) + 4 + u32_at.astype(np.int64)
-    nxt[size] = size
-    positions = chain_visit(nxt, 0)
-    if len(positions) < n:
-        raise ValueError(f"PLAIN byte-array buffer truncated: {len(positions)} of {n} values")
-    positions = positions[:n]
-    lengths = u32_at[positions].astype(np.int64)
-    ends = positions + 4 + lengths
-    if len(positions) and ends[-1] > size:
-        raise ValueError("PLAIN byte-array value overruns buffer")
-    total = int(lengths.sum())
-    owner_start = positions + 4
-    idx = np.repeat(owner_start, lengths) + (
-        np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lengths) - lengths, lengths)
-    )
-    payload = raw[idx].tobytes() if total else b""
+    size = len(buf)
+    unpack = _U32.unpack_from
+    starts = []
+    pos = 0
+    for i in range(n):
+        if pos + 4 > size:
+            raise ValueError(f"PLAIN byte-array buffer truncated: {i} of {n} values")
+        (length,) = unpack(buf, pos)
+        pos += 4
+        starts.append(pos)
+        pos += length
+        if pos > size:
+            raise ValueError("PLAIN byte-array value overruns buffer")
+    value_starts = np.array(starts, dtype=np.int64)
+    lengths = np.diff(value_starts, append=pos + 4) - 4
+    # the payload is every byte of buf[:pos] but the length prefixes
+    keep = np.ones(pos, dtype=bool)
+    keep[(value_starts - 4)[:, None] + np.arange(4)] = False
+    payload = np.frombuffer(buf, dtype=np.uint8, count=pos)[keep].tobytes()
     return lengths.astype(np.int32), payload
 
 

@@ -103,3 +103,18 @@ def test_named_policies_resolve_through_the_table(policy, ptype, codecs):
     chunk = encode_chunk(arr, policy=policy)
     assert set(chunk.encodings) == codecs
     assert decode_chunk(chunk).to_pylist() == arr.to_pylist()
+
+
+@pytest.mark.parametrize("policy", ["dict", "reference"])
+def test_boolean_dictionary_chunk_is_refused_by_the_container_writer(tmp_path, policy):
+    # a deliberate limit: these policies write a BOOLEAN dictionary page
+    # that the page reader reads, while standard readers do not implement
+    # it (pyarrow raises), so the container writer refuses the chunk
+    from parquet4seastar_spark.codecs.parquet_file import write_parquet_file
+
+    arr = pa.array([True, False, None, True])
+    chunk = encode_chunk(arr, policy=policy)
+    assert chunk.encodings == ["RLE_DICTIONARY"]
+    assert decode_chunk(chunk).to_pylist() == arr.to_pylist()
+    with pytest.raises(ValueError, match=r"flag.*dictionary-encoded BOOLEAN is not readable by standard readers"):
+        write_parquet_file(str(tmp_path / "flag.parquet"), {"flag": chunk}, len(arr))

@@ -440,6 +440,48 @@ def test_stats_nan_and_nul_edge_cases():
     assert c2.stat_max_bin > b"zz"  # truncate-and-increment upper bound
 
 
+def test_stats_widen_past_dbl_max_without_warning():
+    # the one-ulp widening of a +-DBL_MAX bound overflows to +-inf: the
+    # bound is right, and it must not warn (fatal under -W error)
+    import warnings
+
+    big = np.finfo(np.float64).max
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        hi = encode_chunk(pa.array([1.0, big]), policy="plain")
+        lo = encode_chunk(pa.array([-big, 0.0]), policy="plain")
+    assert (hi.stat_min_num, hi.stat_max_num) == (0.9999999999999999, float("inf"))
+    assert (lo.stat_min_num, lo.stat_max_num) == (float("-inf"), 5e-324)
+
+
+@pytest.mark.parametrize(
+    "buf,n",
+    [
+        (b"\x01\x00", 1),  # under one length prefix
+        (b"\x01\x00\x00\x00a\x02\x00", 2),  # the second length prefix cut short
+        (b"\x05\x00\x00\x00ab", 1),  # a value running past the end
+        (b"\x01\x00\x00\x00a", 2),  # fewer values than n
+        (b"", 1),
+    ],
+    ids=["short", "cut_prefix", "overrun", "too_few", "empty"],
+)
+def test_plain_byte_array_decode_refuses_a_bad_buffer(buf, n):
+    from parquet4seastar_spark.codecs.plain import plain_decode_byte_array
+
+    with pytest.raises(ValueError, match="PLAIN byte-array"):
+        plain_decode_byte_array(buf, n)
+
+
+@pytest.mark.parametrize("arr", [pa.array(["a", "b", "a"]), pa.array([1, 2, 1], pa.int64())], ids=["str", "int"])
+def test_dictionary_data_page_without_its_dictionary_is_refused(arr):
+    # a stored chunk (or a foreign file) can lose its dictionary page
+    chunk = encode_chunk(arr, policy="dict")
+    assert chunk.pages[0].kind == "dict"
+    orphan = dataclasses.replace(chunk, pages=chunk.pages[1:])
+    with pytest.raises(ValueError, match="^RLE_DICTIONARY data page before any dictionary page$"):
+        decode_chunk(orphan)
+
+
 @pytest.mark.parametrize(
     "vals,typ",
     [
