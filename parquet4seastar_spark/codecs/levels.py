@@ -25,11 +25,7 @@ import numpy as np
 from .bitpack import bit_width
 from .rle import rle_decode, rle_encode
 
-__all__ = ["encode_levels_v1", "decode_levels_v1", "level_bit_width"]
-
-
-def level_bit_width(max_level: int) -> int:
-    return bit_width(max_level)
+__all__ = ["encode_levels_v1", "decode_levels_v1"]
 
 
 def encode_levels_v1(levels: np.ndarray, max_level: int) -> bytes:

@@ -23,10 +23,23 @@ columnar batches:
 - One rule, here alone, maps a top-level column to its chunks
   (``encode_column`` and the ``column_*`` helpers): see "top-level
   columns -> chunks" below.
-- Every chunk decodes the same way too (``decode_chunk``): the page
-  reader yields the leaf's level streams and its non-null values, and the
-  walker's assembly (``dremel.assemble_tree``) places them -- a flat
-  column is a leaf with no list above it.
+- One type model.  A leaf's type is decided in one table,
+  ``LOGICAL_TYPES`` (leaf logical -> arrow types, physical type, parquet
+  ConvertedTypes; 'flba' and 'decimal(p,s)' carry parameters and take one
+  helper): the encoder, the decoder, decode planning and the container in
+  both directions read it, and an arrow type with no row raises TypeError
+  naming it.  A new logical type is one row.  A column's shape is decided
+  by one tree rule: ``leaf_spec`` gives every chunk a node path (one 'l'
+  per list level of a standard chunk, '' for a flat one, the walker's path
+  for a Dremel leaf), ``column_opts`` the column's OPTIONAL flags (a
+  standard chunk's from its levels, none for Dremel leaves), and
+  ``decode_column``, ``column_type`` and the container writer build the
+  same ``dremel.build_tree`` tree from them.
+- Every column decodes the same way too (``decode_column``; a chunk is a
+  column of one leaf): the page reader yields each leaf's level streams
+  and its non-null values, and the walker's assembly
+  (``dremel.assemble_tree``) places them -- a flat column is a leaf with
+  no list above it.
 - Values cross between Arrow and the codec kernels in one *flat form*,
   ``(values, lengths, payload)``: numpy values for the fixed-width types
   (an (n, k) uint8 matrix for FIXED_LEN_BYTE_ARRAY), or int64 lengths and
@@ -60,7 +73,6 @@ numpy fallbacks write the same bytes.
 from __future__ import annotations
 
 import hashlib
-import struct
 import zlib
 from dataclasses import dataclass, field
 
@@ -69,13 +81,13 @@ import pyarrow as pa
 
 from . import delta, dictionary, fsst, plain
 from .bitpack import uleb128_decode
-from .dremel import Leaf, assemble, assemble_tree, build_tree, shred, tree_arrow_type
+from .dremel import Leaf, assemble_tree, build_tree, shred, tree_arrow_type
 from .levels import decode_levels_v1, encode_levels_v1
-from .rle import rle_decode, rle_encode
 
 __all__ = ["encode_column", "decode_column", "column_chunks", "column_leaves", "column_type",
-           "content_sha", "leaf_prefix", "leaf_spec", "leaf_ptype", "encode_chunk", "decode_chunk",
-           "chunk_content_sha", "ba_components", "policy_codec", "CODEC_PTYPES", "EncodedChunk", "Page"]
+           "column_opts", "content_sha", "leaf_prefix", "leaf_spec", "leaf_ptype", "encode_chunk",
+           "decode_chunk", "chunk_content_sha", "ba_components", "policy_codec", "logical_row",
+           "annotated_logical", "CODEC_PTYPES", "LOGICAL_TYPES", "EncodedChunk", "Page"]
 
 DICT_FALLBACK_THRESHOLD = 16 * 1024  # dict_or_plain_encoder::fallback_threshold
 
@@ -105,17 +117,32 @@ CODEC_PTYPES = {
     "BYTE_STREAM_SPLIT": frozenset(("INT32", "INT64", "FLOAT", "DOUBLE")),
 }
 
-_PA_TO_PTYPE = {
-    pa.int32(): "INT32",
-    pa.int64(): "INT64",
-    pa.float32(): "FLOAT",
-    pa.float64(): "DOUBLE",
-    pa.bool_(): "BOOLEAN",
-    pa.string(): "BYTE_ARRAY",
-    pa.binary(): "BYTE_ARRAY",
-    pa.large_string(): "BYTE_ARRAY",
-    pa.large_binary(): "BYTE_ARRAY",
+# The one logical-type table: leaf logical -> (its arrow types, physical
+# type, parquet ConvertedTypes).  The reference checks every logical ->
+# physical pairing in one place (logical_type.cc:27-120); here the encoder
+# (``pa_ptype_scalar``), the decoder and decode planning (``logical_row``)
+# and the container in both directions (``parquet_file.leaf_node``, and
+# ``annotated_logical`` for the reader) all read this table.  The first
+# arrow type is the one a decode gives and the first ConvertedType the one
+# an export writes; the others are read as the same logical.  The two
+# logicals with parameters, 'flba' and 'decimal(p,s)', take one helper
+# (``_param_row``).  A new logical type is one row.
+LOGICAL_TYPES = {
+    "bool": ((pa.bool_(),), "BOOLEAN", ()),
+    "int32": ((pa.int32(),), "INT32", ()),
+    "int64": ((pa.int64(),), "INT64", ()),
+    "float": ((pa.float32(),), "FLOAT", ()),
+    "double": ((pa.float64(),), "DOUBLE", ()),
+    "string": ((pa.string(), pa.large_string()), "BYTE_ARRAY", (0, 4, 19)),  # UTF8; ENUM, JSON
+    "binary": ((pa.binary(), pa.large_binary()), "BYTE_ARRAY", ()),
+    "date": ((pa.date32(),), "INT32", (6,)),  # DATE annotates INT32
+    "timestamp_us": ((pa.timestamp("us"),), "INT64", (10,)),  # TIMESTAMP_MICROS on INT64 (logical_type.cc:47)
 }
+_BY_ARROW = {t: logical for logical, (types, _, _) in LOGICAL_TYPES.items() for t in types}
+_BY_ANNOTATION = {
+    (ptype, c): logical for logical, (_, ptype, convs) in LOGICAL_TYPES.items() for c in convs or (None,)
+}
+DECIMAL = 5  # ConvertedType DECIMAL
 
 
 @dataclass
@@ -202,39 +229,51 @@ def _decimal_byte_width(precision: int) -> int:
 
 
 def pa_ptype_scalar(t: pa.DataType) -> tuple[str, str]:
-    if pa.types.is_decimal(t):
-        # DECIMAL annotates INT32 (p<=9), INT64 (p<=18) or FLBA, mirroring
-        # the reference's logical->physical validation (logical_type.cc:94-115)
-        p, s = t.precision, t.scale
-        if p <= 9:
-            return "INT32", f"decimal({p},{s})"
-        if p <= 18:
-            return "INT64", f"decimal({p},{s})"
-        return "FIXED_LEN_BYTE_ARRAY", f"decimal({p},{s})"
-    if pa.types.is_fixed_size_binary(t):
-        return "FIXED_LEN_BYTE_ARRAY", "flba"
-    # logical types layered on INT32/INT64 physical storage, mirroring the
-    # reference's logical_type validation rules ("TIMESTAMP must annotate
-    # INT64", logical_type.cc:47; DATE annotates INT32)
-    if pa.types.is_timestamp(t):
-        if t.unit != "us":
-            raise TypeError(f"timestamp unit {t.unit} unsupported (use us)")
-        return "INT64", "timestamp_us"
-    if pa.types.is_date32(t):
-        return "INT32", "date"
-    if t in _PA_TO_PTYPE:
-        ptype = _PA_TO_PTYPE[t]
-        logical = {
-            "INT32": "int32",
-            "INT64": "int64",
-            "FLOAT": "float",
-            "DOUBLE": "double",
-            "BOOLEAN": "bool",
-        }.get(ptype)
+    """(physical type, leaf logical) of a primitive arrow type, from
+    ``LOGICAL_TYPES``; a type with no row raises TypeError naming it."""
+    if pa.types.is_decimal128(t):
+        logical = f"decimal({t.precision},{t.scale})"
+    elif pa.types.is_fixed_size_binary(t):
+        logical = "flba"
+    else:  # a timestamp's zone is not stored: it reads back naive
+        logical = _BY_ARROW.get(pa.timestamp(t.unit) if pa.types.is_timestamp(t) else t)
         if logical is None:
-            logical = "string" if pa.types.is_string(t) or pa.types.is_large_string(t) else "binary"
-        return ptype, logical
-    raise TypeError(f"unsupported arrow type for chunk encoding: {t}")
+            raise TypeError(f"unsupported arrow type for chunk encoding: {t}")
+    return logical_row(logical)[1], logical
+
+
+def _param_row(logical: str, type_length: int) -> tuple[pa.DataType, str, int | None]:
+    """The ``LOGICAL_TYPES`` row of a logical with parameters: 'flba' is
+    binary(type_length) on FIXED_LEN_BYTE_ARRAY; 'decimal(p,s)' is DECIMAL
+    on INT32 up to 9 digits, INT64 up to 18, else FIXED_LEN_BYTE_ARRAY
+    (logical_type.cc:94-115)."""
+    if logical == "flba":
+        return pa.binary(type_length), "FIXED_LEN_BYTE_ARRAY", None
+    p, s = map(int, logical[8:-1].split(","))
+    return pa.decimal128(p, s), "INT32" if p <= 9 else "INT64" if p <= 18 else "FIXED_LEN_BYTE_ARRAY", DECIMAL
+
+
+def logical_row(logical: str, type_length: int = 0) -> tuple[pa.DataType, str, int | None]:
+    """(arrow type a decode gives, physical type, ConvertedType an export
+    writes) of a leaf logical: its ``LOGICAL_TYPES`` row."""
+    if logical not in LOGICAL_TYPES:
+        return _param_row(logical, type_length)
+    types, ptype, convs = LOGICAL_TYPES[logical]
+    return types[0], ptype, next(iter(convs), None)
+
+
+def annotated_logical(ptype: str, converted: int | None, precision=None, scale=None) -> str:
+    """The leaf logical a parquet leaf of physical type ``ptype`` and
+    ConvertedType ``converted`` reads as: DECIMAL with a precision on any
+    physical type (BYTE_ARRAY too, logical_type.cc:94-115), 'flba' on
+    FIXED_LEN_BYTE_ARRAY, else the ``LOGICAL_TYPES`` row of the pair, or
+    the physical type's bare row (an annotation with no row reads as its
+    storage)."""
+    if converted == DECIMAL and precision is not None:
+        return f"decimal({precision},{scale or 0})"
+    if ptype == "FIXED_LEN_BYTE_ARRAY":
+        return "flba"
+    return _BY_ANNOTATION.get((ptype, converted)) or _BY_ANNOTATION[ptype, None]
 
 
 def flba_width(t: pa.DataType) -> int:
@@ -259,11 +298,6 @@ def ba_components(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     lengths = np.diff(offsets)
     payload = data[offsets[0] : offsets[-1]]
     return lengths.astype(np.int64), payload
-
-
-def _parse_decimal(logical: str) -> tuple[int, int]:
-    p, s = logical[8:-1].split(",")
-    return int(p), int(s)
 
 
 def _decimal_to_physical(arr: pa.Array, ptype: str) -> pa.Array:
@@ -304,50 +338,28 @@ def _to_physical(arr: pa.Array, ptype: str) -> pa.Array:
     return arr
 
 
-def _int_to_decimal(vals: np.ndarray, p: int, s: int) -> pa.Array:
+def _int_to_decimal(vals: np.ndarray, t: pa.Decimal128Type) -> pa.Array:
     n = len(vals)
     pairs = np.empty((n, 2), dtype=np.int64)
     pairs[:, 0] = vals.astype(np.int64)
     pairs[:, 1] = np.where(pairs[:, 0] < 0, np.int64(-1), np.int64(0))
-    return pa.Array.from_buffers(pa.decimal128(p, s), n, [None, pa.py_buffer(pairs.tobytes())])
+    return pa.Array.from_buffers(t, n, [None, pa.py_buffer(pairs.tobytes())])
 
 
-def _varbin_to_decimal(lens: np.ndarray, payload: np.ndarray, p: int, s: int) -> pa.Array:
-    """DECIMAL on BYTE_ARRAY physical (4th mapping, logical_type.cc:94-115):
-    variable-length big-endian two's complement -> decimal128."""
-    n = len(lens)
+def _varbin_to_decimal(lens: np.ndarray, payload: np.ndarray, t: pa.Decimal128Type) -> pa.Array:
+    """Big-endian two's complement of any lengths -> decimal128: DECIMAL on
+    BYTE_ARRAY (4th mapping, logical_type.cc:94-115), and on
+    FIXED_LEN_BYTE_ARRAY with every length equal."""
     if (lens > 16).any():
-        raise ValueError("BYTE_ARRAY decimal wider than 16 bytes")
-    be16 = np.zeros((n, 16), dtype=np.uint8)
-    total = int(lens.sum())
-    if total:
-        starts = np.zeros(n, dtype=np.int64)
-        starts[1:] = np.cumsum(lens)[:-1]
-        rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-        rel = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-        cols = rel + np.repeat(16 - lens, lens)
-        be16[rows, cols] = payload
-        neg = np.zeros(n, dtype=bool)
-        nz = lens > 0
-        neg[nz] = payload[starts[nz]] >= 128
-        pad = np.arange(16)[None, :] < (16 - lens)[:, None]
-        be16[pad & neg[:, None]] = 255
-    le16 = be16[:, ::-1]
-    return pa.Array.from_buffers(
-        pa.decimal128(p, s), n, [None, pa.py_buffer(np.ascontiguousarray(le16).tobytes())]
-    )
-
-
-def _flba_to_decimal(vals: np.ndarray, p: int, s: int) -> pa.Array:
-    n, w = vals.shape
-    be16 = np.empty((n, 16), dtype=np.uint8)
-    sign = vals[:, 0] >= 128
-    be16[:, : 16 - w] = np.where(sign, 255, 0).astype(np.uint8)[:, None]
-    be16[:, 16 - w :] = vals
-    le16 = be16[:, ::-1]
-    return pa.Array.from_buffers(
-        pa.decimal128(p, s), n, [None, pa.py_buffer(np.ascontiguousarray(le16).tobytes())]
-    )
+        raise ValueError(f"{t}: a stored value is wider than 16 bytes")
+    # each value right-aligned in 16 bytes: the mask's cells, read row by
+    # row, are the payload in order; the cells left of a value take its sign
+    own = np.arange(16) >= (16 - lens)[:, None]
+    be16 = np.zeros(own.shape, dtype=np.uint8)
+    be16[own] = payload
+    neg = be16[np.arange(len(lens)), np.minimum(16 - lens, 15)] >= 128  # the first byte (0 when empty)
+    be16[~own & neg[:, None]] = 255
+    return pa.Array.from_buffers(t, len(lens), [None, pa.py_buffer(np.ascontiguousarray(be16[:, ::-1]).tobytes())])
 
 
 def _compress(data: bytes, compression: str) -> bytes:
@@ -413,9 +425,8 @@ def _encode_values(encoding: str, ptype: str, values, lengths=None, payload=None
         # byte length as u32-LE (Encodings.md; levels carry the prefix only
         # in V1 pages).  Interop-fuzz finding: pyarrow V2 boolean pages use
         # exactly this layout, and pyarrow equally expects it when reading
-        # our exports.
-        body = rle_encode(np.asarray(values, dtype=np.uint64), 1)
-        return struct.pack("<I", len(body)) + body
+        # our exports.  It is the V1 level stream of width 1.
+        return encode_levels_v1(values, 1)
     if encoding == "BYTE_STREAM_SPLIT":
         return delta.byte_stream_split_encode(values)
     raise ValueError(f"unknown value encoding {encoding}")
@@ -451,16 +462,8 @@ def _decode_values(encoding: str, ptype: str, buf, n: int, type_length: int = 0)
         payload = fsst.fsst_decode(memoryview(buf)[pos:])
         if len(payload) != int(lengths.astype(np.int64).sum()):
             raise ValueError("FSST payload length mismatch")
-    elif encoding == "RLE":
-        if len(buf) < 4:
-            raise ValueError("RLE boolean truncated")
-        (ln,) = struct.unpack_from("<I", buf, 0)
-        if 4 + ln > len(buf):
-            raise ValueError("RLE boolean truncated")
-        values = rle_decode(bytes(memoryview(buf)[4 : 4 + ln]), 1, n)
-        if len(values) != n:
-            raise ValueError("RLE boolean truncated")
-        values = values.astype(bool)
+    elif encoding == "RLE":  # boolean RLE: a width-1 V1 level stream
+        values = decode_levels_v1(buf, 1, n)[0].astype(bool)
     elif encoding == "BYTE_STREAM_SPLIT":
         values = delta.byte_stream_split_decode(bytes(buf), _FIXED_DTYPES[ptype], n)
     else:
@@ -994,31 +997,13 @@ def _auto_plan(ptype, values, lengths, payload, nn_page_ends, allow_fsst=True, c
         offs = np.zeros(nn + 1, dtype=np.int64)
         np.cumsum(lengths, out=offs[1:])
         cmp_len = np.minimum(np.minimum(lengths[idx], lengths[idx + 1]), 64)
-        tot = int(cmp_len.sum())
-        if tot:
-            rel = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(cmp_len) - cmp_len, cmp_len)
-            a = payload[np.repeat(offs[:-1][idx], cmp_len) + rel]
-            b = payload[np.repeat(offs[:-1][idx + 1], cmp_len) + rel]
-            eq = a == b
-            # mean leading-equality run per sampled pair, vectorized:
-            # the run ends at the segment's first mismatch, located
-            # with one searchsorted over the flat mismatch positions
-            # (the former per-segment np.split + cumprod was ~0.5 s
-            # per 256 MB of fixed overhead at bench chunk counts)
-            seg_starts = np.zeros(k, dtype=np.int64)
-            seg_starts[1:] = np.cumsum(cmp_len)[:-1]
-            seg_ends = seg_starts + cmp_len
-            falses = np.flatnonzero(~eq)
-            first_false = falses[
-                np.searchsorted(falses, seg_starts).clip(0, max(len(falses) - 1, 0))
-            ] if len(falses) else np.full(k, tot, dtype=np.int64)
-            # a segment with no mismatch runs to its end
-            run_end = np.where(
-                (len(falses) > 0) & (first_false >= seg_starts) & (first_false < seg_ends),
-                first_false,
-                seg_ends,
-            )
-            mean_prefix = float(np.mean(run_end - seg_starts))
+        if cmp_len.any():
+            # each pair's shared prefix: one (k x 65) byte-window compare,
+            # column 64 and the bytes past the shorter value forced unequal
+            # (the gather clips them into the payload)
+            win = np.arange(65)
+            a, b = (payload[np.minimum(offs[i][:, None] + win, len(payload) - 1)] for i in (idx, idx + 1))
+            mean_prefix = float(np.argmin((a == b) & (win < cmp_len[:, None]), axis=1).mean())
             mean_len = float(np.mean(lengths[idx])) or 1.0
             # front coding must promise real savings: long values with a
             # short shared header (e.g. source text) skip the extra pass
@@ -1125,74 +1110,10 @@ def effective_max_def(chunk: EncodedChunk) -> int:
     return chunk.max_def if chunk.max_def >= 0 else int(chunk.nullable)
 
 
-def optional_flags(chunk: EncodedChunk) -> list[bool]:
-    """OPTIONAL flag of each node on a flat, list<prim> or list<list<prim>>
-    chunk's path, outermost first: the column, each inner list, then the
-    element.  A flat column is OPTIONAL iff its max_def is positive; a
-    list column follows ``nullable``, its element ``elem_nullable``, and
-    an inner list (list<list>) is OPTIONAL iff the def budget has its
-    level."""
-    if not chunk.max_rep:
-        return [effective_max_def(chunk) > 0]
-    inner = chunk.max_def - chunk.nullable - chunk.elem_nullable - 2 >= 1
-    return [chunk.nullable, *[inner] * (chunk.max_rep - 1), chunk.elem_nullable]
-
-
 def decode_chunk(chunk: EncodedChunk) -> pa.Array:
-    """Decode pages back into a (nullable) arrow array.
-
-    One body for every shape (flat, list<prim>, list<list<prim>>): the
-    leaf's level streams and non-null values (``_decode_dremel_leaf``,
-    column_chunk_reader.hh:101-157: values exist only where def ==
-    max_def), then Dremel assembly (record_reader.hh:469-505) over
-    ``max_rep`` list nodes with the chunk's OPTIONAL flags
-    (``optional_flags``, the rule the container writer's schema follows).
-    A flat chunk is a leaf with no list above it.
-
-    A list leaf read from a standard file can sit under extra OPTIONAL
-    levels (a field of a list<struct>); every def between the element slot
-    and max_def then collapses to a null element.
-    """
-    n_lists = chunk.max_rep
-    paths = _list_paths(n_lists)
-    flags = optional_flags(chunk)
-    leaf_max_def = n_lists + sum(flags)
-    d_elem = leaf_max_def - flags[-1]  # def of an element slot
-    leaf_logical = chunk.logical[5 * n_lists : len(chunk.logical) - n_lists]
-    def_, rep, vals = _decode_dremel_leaf(chunk, leaf_logical)
-    max_def = effective_max_def(chunk)
-    if max_def > leaf_max_def:
-        def_ = np.where(def_ >= max_def, leaf_max_def, np.minimum(def_, d_elem))
-    tree = ("leaf", vals.type)
-    for _ in range(n_lists):
-        tree = ("list", tree)
-    leaf = Leaf(paths[-1], vals, def_, rep, leaf_max_def, n_lists)
-    return assemble_tree(tree, {paths[-1]: leaf}, chunk.num_rows, dict(zip(paths, flags)))
-
-
-_ELEM_PA_TYPES = {
-    "int32": pa.int32(),
-    "int64": pa.int64(),
-    "float": pa.float32(),
-    "double": pa.float64(),
-    "bool": pa.bool_(),
-    "string": pa.string(),
-    "binary": pa.binary(),
-    "timestamp_us": pa.timestamp("us"),
-    "date": pa.date32(),
-}
-
-
-def _elem_pa_type(elem_logical: str, type_length: int) -> pa.DataType:
-    """The one logical -> arrow type map (list<...> logicals included)."""
-    if elem_logical.startswith("list<"):
-        return pa.list_(_elem_pa_type(elem_logical[5:-1], type_length))
-    if elem_logical.startswith("decimal("):
-        p, s = _parse_decimal(elem_logical)
-        return pa.decimal128(p, s)
-    if elem_logical == "flba":
-        return pa.binary(type_length)
-    return _ELEM_PA_TYPES[elem_logical]
+    """Decode pages back into a (nullable) arrow array: a standard chunk
+    (flat, list<prim>, list<list<prim>>) is a column of one leaf."""
+    return decode_column({"": chunk})
 
 
 def _build_leaf_array(ptype: str, logical: str, type_length: int, parts: list) -> pa.Array:
@@ -1201,17 +1122,16 @@ def _build_leaf_array(ptype: str, logical: str, type_length: int, parts: list) -
     concatenated field by field in numpy and Arrow is built once: a fresh
     multi-MB arrow buffer (``pa.concat_arrays``) comes from Arrow's own
     pool and page-faults, where numpy reuses the tuned heap (_alloc.py)."""
-    target = _elem_pa_type(logical, type_length)
+    target = logical_row(logical, type_length)[0]
     if not parts:
         return pa.array([], type=target)
     values, lengths, payload = (None if f[0] is None else np.concatenate(f) for f in zip(*parts))
-    if logical.startswith("decimal("):
-        decimal = _parse_decimal(logical)
-        if ptype == "BYTE_ARRAY":
-            return _varbin_to_decimal(lengths, payload, *decimal)
-        if ptype == "FIXED_LEN_BYTE_ARRAY":
-            return _flba_to_decimal(values, *decimal)
-        return _int_to_decimal(values, *decimal)
+    if pa.types.is_decimal(target):
+        if ptype == "FIXED_LEN_BYTE_ARRAY":  # fixed-length big-endian bytes
+            lengths, payload = np.full(len(values), values.shape[1], dtype=np.int64), values.reshape(-1)
+        if lengths is None:
+            return _int_to_decimal(values, target)
+        return _varbin_to_decimal(lengths, payload, target)
     if ptype == "BYTE_ARRAY" and len(payload) > np.iinfo(np.int32).max:
         raise ValueError("BYTE_ARRAY chunk exceeds int32 offsets")
     leaf = _physical_array(ptype, values, lengths, payload)
@@ -1240,19 +1160,41 @@ def leaf_prefix(column: str) -> str:
     return f"{column}#g"
 
 
-def leaf_spec(logical: str) -> tuple[str | None, str]:
-    """(Dremel node path, leaf logical) of a chunk's logical; the path is
-    None for a standard chunk, whose logical is its leaf logical."""
-    if not logical.startswith("g:"):
-        return None, logical
-    path, leaf_logical = logical[2:].rsplit("|", 1)
-    return path, leaf_logical
+def leaf_spec(logical: str) -> tuple[str, str]:
+    """(node path, leaf logical) of a chunk's logical: a Dremel leaf's
+    'g:<node path>|<leaf logical>', or a standard chunk's 'list<' levels
+    around its leaf logical, one 'l' token each ('' for a flat chunk)."""
+    if logical.startswith("g:"):
+        path, leaf_logical = logical[2:].rsplit("|", 1)
+        return path, leaf_logical
+    n_lists = 0
+    while logical.startswith("list<", 5 * n_lists):
+        n_lists += 1
+    return _list_paths(n_lists)[-1], logical[5 * n_lists : len(logical) - n_lists]
+
+
+def column_opts(chunks) -> dict[str, bool]:
+    """OPTIONAL flag per node path of the tree a column's chunks build, the
+    map ``dremel.assemble_tree`` and the container schema take: none for
+    Dremel leaves (every node OPTIONAL, the walker's geometry).  A standard
+    chunk flags the column, each inner list and the element: a flat column
+    is OPTIONAL iff its max_def is positive, a list column follows
+    ``nullable``, its element ``elem_nullable``, and an inner list
+    (list<list>) is OPTIONAL iff the def budget has its level."""
+    chunk = next(iter(chunks))
+    if chunk.logical.startswith("g:"):
+        return {}
+    if not chunk.max_rep:
+        return {"": effective_max_def(chunk) > 0}
+    inner = chunk.max_def - chunk.nullable - chunk.elem_nullable - 2 >= 1
+    flags = [chunk.nullable, *[inner] * (chunk.max_rep - 1), chunk.elem_nullable]
+    return dict(zip(_list_paths(chunk.max_rep), flags))
 
 
 def leaf_ptype(logical: str, type_length: int) -> str:
     """Physical type of a chunk from its (logical, type_length), the pair
     ``column_leaves`` gives (no data needed)."""
-    return pa_ptype(_elem_pa_type(leaf_spec(logical)[1], type_length))[0]
+    return logical_row(leaf_spec(logical)[1], type_length)[1]
 
 
 def _leaf_logical(leaf: Leaf) -> str:
@@ -1319,38 +1261,35 @@ def column_chunks(column: str, names) -> list[str]:
 
 def column_type(leaves) -> pa.DataType:
     """Arrow type of a column from its chunks' (logical, type_length)
-    pairs, in leaf order (``column_leaves`` values or the lineage's)."""
-    leaves = [(*leaf_spec(logical), type_length) for logical, type_length in leaves]
-    if leaves[0][0] is None:
-        ((_, logical, type_length),) = leaves
-        return _elem_pa_type(logical, type_length)
-    return tree_arrow_type(build_tree([(path, _elem_pa_type(lg, tl)) for path, lg, tl in leaves]))
+    pairs, in leaf order (``column_leaves`` values or the lineage's): the
+    tree ``decode_column`` assembles."""
+    specs = [(leaf_spec(logical), type_length) for logical, type_length in leaves]
+    return tree_arrow_type(build_tree([(path, logical_row(lg, tl)[0]) for (path, lg), tl in specs]))
 
 
 def decode_column(chunks: dict[str, EncodedChunk]) -> pa.Array:
     """{chunk name: chunk} of one column, in leaf order (as
-    ``encode_column`` and ``column_chunks`` give them) -> the column."""
-    first = next(iter(chunks.values()))
-    if leaf_spec(first.logical)[0] is None:
-        (chunk,) = chunks.values()
-        return decode_chunk(chunk)
+    ``encode_column`` and ``column_chunks`` give them) -> the column: each
+    leaf's level streams and non-null values (``_decode_dremel_leaf``),
+    then Dremel assembly (record_reader.hh:469-505) of the ``leaf_spec``
+    tree under the ``column_opts`` flags."""
     leaves: dict[str, Leaf] = {}
     for c in chunks.values():
         path, leaf_logical = leaf_spec(c.logical)
         def_, rep, vals = _decode_dremel_leaf(c, leaf_logical)
-        leaves[path] = Leaf(path, vals, def_, rep, c.max_def, c.max_rep)
-    return assemble(leaves, c.num_rows)
+        leaves[path] = Leaf(path, vals, def_, rep, effective_max_def(c), c.max_rep)
+    tree = build_tree([(path, leaf.values.type) for path, leaf in leaves.items()])
+    return assemble_tree(tree, leaves, c.num_rows, column_opts(chunks.values()))
 
 
 def content_sha(chunk: EncodedChunk) -> str:
     """Decode one chunk and recompute the content sha256 its lineage row
     records (the lineage audit: detects page corruption without the
     source table)."""
-    path, leaf_logical = leaf_spec(chunk.logical)
-    if path is None:
+    if not chunk.logical.startswith("g:"):
         return chunk_content_sha(decode_chunk(chunk))
     # a Dremel leaf: its level streams, then its non-null values
-    def_, rep, vals = _decode_dremel_leaf(chunk, leaf_logical)
+    def_, rep, vals = _decode_dremel_leaf(chunk, leaf_spec(chunk.logical)[1])
     values, lengths, payload, _, _ = _leaf_components(_to_physical(vals, chunk.ptype), chunk.ptype)
     h = _levels_sha(def_, rep)
     _sha_update_values(h, chunk.ptype, values, lengths, payload)

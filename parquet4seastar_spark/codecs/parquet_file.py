@@ -31,7 +31,18 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 
-from .pages import CODEC_PTYPES, EncodedChunk, Page, effective_max_def, leaf_spec, optional_flags
+from .dremel import _join, build_tree
+from .pages import (
+    CODEC_PTYPES,
+    EncodedChunk,
+    Page,
+    _list_paths,
+    annotated_logical,
+    column_opts,
+    effective_max_def,
+    leaf_spec,
+    logical_row,
+)
 from .thrift_compact import (
     CT_BINARY,
     CT_I32,
@@ -59,9 +70,6 @@ ENCODINGS = {
     "BYTE_STREAM_SPLIT": 9,
 }
 ENC_NAME = {v: k for k, v in ENCODINGS.items()}
-
-# ConvertedType enum (subset we annotate)
-CONVERTED = {"string": 0, "date": 6, "timestamp_us": 10, "decimal": 5}
 
 # every codec of the pages table but FSST, which is not parquet
 _STANDARD_ENCODINGS = set(CODEC_PTYPES) - {"FSST"}
@@ -141,29 +149,37 @@ def group_node(name: str, repetition: int, children: list, converted=None) -> di
 
 
 def leaf_node(name: str, chunk: EncodedChunk, repetition: int) -> dict:
-    """A leaf SchemaElement node carrying the chunk written under it; the
-    physical type and annotations come from the chunk."""
-    logical = leaf_spec(chunk.logical)[1]
-    while logical.startswith("list<"):
-        logical = logical[5:-1]
-    el = {1: PHYS_ID[chunk.ptype], 2: chunk.type_length or None, 3: repetition, 4: name}
-    if logical.startswith("decimal("):
-        p, s = logical[8:-1].split(",")
-        el.update({6: CONVERTED["decimal"], 7: int(s), 8: int(p)})
-    else:
-        el[6] = CONVERTED.get(logical)
+    """A leaf SchemaElement node carrying the chunk written under it: the
+    physical type from the chunk, the annotation from its leaf logical's
+    row (``pages.logical_row``)."""
+    t, _, converted = logical_row(leaf_spec(chunk.logical)[1], chunk.type_length)
+    el = {1: PHYS_ID[chunk.ptype], 2: chunk.type_length or None, 3: repetition, 4: name, 6: converted}
+    if pa.types.is_decimal(t):
+        el.update({7: t.scale, 8: t.precision})
     return {"el": {k: v for k, v in el.items() if v is not None}, "children": [], "chunk": chunk}
 
 
-def _chunk_node(name: str, chunk: EncodedChunk) -> dict:
-    """Flat column, or the standard 3-level LIST per list level
-    (writer_schema.cc:30-134), OPTIONAL where ``optional_flags`` says."""
-    *groups, elem = [OPTIONAL if f else REQUIRED for f in optional_flags(chunk)]
-    node = leaf_node("element" if groups else name, chunk, elem)
-    for depth in reversed(range(len(groups))):
-        inner = group_node("list", REPEATED, [node])
-        node = group_node("element" if depth else name, groups[depth], [inner], converted=3)
-    return node
+def _tree_node(name: str, chunks: dict, opts: dict) -> dict:
+    """A column's schema tree from its chunks by node path and its OPTIONAL
+    flags (``pages.column_opts``): the ``dremel.build_tree`` tree
+    ``pages.decode_column`` assembles, each list the standard 3-level LIST
+    (writer_schema.cc:30-134) and each map a LIST of a REQUIRED
+    struct<key, value>."""
+
+    def convert(ename, t, path):
+        rep = OPTIONAL if opts.get(path, True) else REQUIRED
+        if t[0] == "leaf":
+            return leaf_node(ename, t[1], rep)
+        if t[0] == "struct":
+            return group_node(ename, rep, [convert(f, ch, _join(path, f"s{f}")) for f, ch in t[1]])
+        if t[0] == "list":
+            kids = [convert("element", t[1], _join(path, "l"))]
+        else:
+            kv = [convert("key", t[1], _join(path, "k")), convert("value", t[2], _join(path, "v"))]
+            kids = [group_node("element", REQUIRED, kv)]
+        return group_node(ename, rep, [group_node("list", REPEATED, kids)], converted=3)
+
+    return convert(name, build_tree(list(chunks.items())), "")
 
 
 @dataclass
@@ -184,34 +200,16 @@ class DremelColumn:
     leaves: dict[str, EncodedChunk]
 
     def node(self, name: str) -> dict:
-        from .dremel import build_tree
-
-        chunks = list(self.leaves.values())
-        paths = [leaf_spec(c.logical)[0] for c in chunks]
-        if paths == [None]:
-            return _chunk_node(name, chunks[0])
-        tree = build_tree(list(zip(paths, chunks)))
-
-        def convert(ename, t):
-            kind = t[0]
-            if kind == "leaf":
-                return leaf_node(ename, t[1], OPTIONAL)
-            if kind == "struct":
-                return group_node(ename, OPTIONAL, [convert(f, ch) for f, ch in t[1]])
-            if kind == "list":
-                kids = [convert("element", t[1])]
-            else:  # map: LIST of REQUIRED struct<key, value>
-                kv = [convert("key", t[1]), convert("value", t[2])]
-                kids = [group_node("element", REQUIRED, kv)]
-            return group_node(ename, OPTIONAL, [group_node("list", REPEATED, kids)], converted=3)
-
-        return convert(name, tree)
+        chunks = self.leaves.values()
+        return _tree_node(name, {leaf_spec(c.logical)[0]: c for c in chunks}, column_opts(chunks))
 
 
 def _column_node(name: str, spec) -> dict:
-    """One ``{name: spec}`` entry -> its schema tree, named ``name``."""
+    """One ``{name: spec}`` entry -> its schema tree, named ``name``.  A
+    lone chunk keeps its list-level path, so a Dremel leaf passed this way
+    fails the writer's level check instead of writing a struct."""
     if isinstance(spec, EncodedChunk):
-        return _chunk_node(name, spec)
+        return _tree_node(name, {_list_paths(spec.max_rep)[-1]: spec}, column_opts([spec]))
     if isinstance(spec, DremelColumn):
         return spec.node(name)
     return {**spec, "el": {**spec["el"], 4: name}}
@@ -474,23 +472,15 @@ class ParquetFileReader:
 
     @staticmethod
     def _base_logical(leaf: LeafColumn) -> tuple[str, str, int]:
-        """(ptype, base logical, type_length) of a leaf: the one
-        SchemaElement -> logical mapping (INT96 reads as opaque 12-byte
-        FLBA values)."""
-        if (leaf.converted == 5 or 5 in (leaf.logical_raw or {})) and leaf.precision is not None:
-            return leaf.ptype, f"decimal({leaf.precision},{leaf.scale or 0})", leaf.type_length
+        """(ptype, base logical, type_length) of a leaf: its annotation
+        read through the logical-type table (``pages.annotated_logical``;
+        a LogicalType DECIMAL counts as the ConvertedType).  INT96 reads as
+        opaque 12-byte FLBA values."""
         if leaf.ptype == "INT96":
             return "FIXED_LEN_BYTE_ARRAY", "flba", 12
-        if leaf.ptype == "FIXED_LEN_BYTE_ARRAY":
-            return leaf.ptype, "flba", leaf.type_length
-        if leaf.ptype == "BYTE_ARRAY":
-            return leaf.ptype, "string" if leaf.converted in (0, 4, 19) else "binary", 0
-        if leaf.converted == 6:
-            return leaf.ptype, "date", 0
-        if leaf.converted == 10:
-            return leaf.ptype, "timestamp_us", 0
-        return leaf.ptype, {"BOOLEAN": "bool", "INT32": "int32", "INT64": "int64",
-                            "FLOAT": "float", "DOUBLE": "double"}[leaf.ptype], 0
+        converted = 5 if 5 in (leaf.logical_raw or {}) else leaf.converted
+        logical = annotated_logical(leaf.ptype, converted, leaf.precision, leaf.scale)
+        return leaf.ptype, logical, leaf.type_length
 
     def _scan_chunk_pages(self, leaf: LeafColumn, cm: dict) -> EncodedChunk:
         """Incremental Thrift page scan of one leaf chunk -> EncodedChunk
@@ -576,8 +566,6 @@ class ParquetFileReader:
         Both map onto the same Dremel level geometry the modern shapes use
         (legacy 2-level == 3-level with a REQUIRED element), so assembly
         needs no separate path."""
-        from .pages import _elem_pa_type
-
         raw = next(
             (r for r in self.schema if r["el"][4] == name), None
         )
@@ -586,9 +574,6 @@ class ParquetFileReader:
         opts: dict[str, bool] = {}
         leaf_infos: list[tuple[str, int, str]] = []
         leaf_by_path = {tuple(l.path): i for i, l in enumerate(self.leaves)}
-
-        def join(p, tok):
-            return f"{p}.{tok}" if p else tok
 
         def conv_node(node, prefix, spath, rep_consumed=False):
             el = node["el"]
@@ -602,13 +587,13 @@ class ParquetFileReader:
                 # also reads legacy MAP_KEY_VALUE repeated groups, as a
                 # list<struct<key,value>> (the shape maps export as).
                 opts[prefix] = False
-                return ("list", conv_node(node, join(prefix, "l"), spath, True))
+                return ("list", conv_node(node, _join(prefix, "l"), spath, True))
             opts[prefix] = rep == 1
             if not kids:
                 li = leaf_by_path[spath]
                 _, base, tl = self._base_logical(self.leaves[li])
                 leaf_infos.append((prefix, li, base))
-                return ("leaf", _elem_pa_type(base, tl))
+                return ("leaf", logical_row(base, tl)[0])
             # ConvertedType LIST=3 / MAP=1 / MAP_KEY_VALUE=2;
             # LogicalType union: MAP = field 2, LIST = field 3
             is_list = conv == 3 or 3 in lt
@@ -618,9 +603,9 @@ class ParquetFileReader:
                 mkids = mid["children"]
                 mname = mid["el"][4]
                 if is_map and len(mkids) == 2:
-                    k = conv_node(mkids[0], join(prefix, "k"),
+                    k = conv_node(mkids[0], _join(prefix, "k"),
                                   spath + (mname, mkids[0]["el"][4]))
-                    v = conv_node(mkids[1], join(prefix, "v"),
+                    v = conv_node(mkids[1], _join(prefix, "v"),
                                   spath + (mname, mkids[1]["el"][4]))
                     return ("map", k, v)
                 # backward-compat rule 2 name test is EXACT (reader_schema.cc:
@@ -634,18 +619,18 @@ class ParquetFileReader:
                 ):
                     # standard 3-level LIST: the repeated middle group's
                     # single child is the element
-                    child = conv_node(mkids[0], join(prefix, "l"),
+                    child = conv_node(mkids[0], _join(prefix, "l"),
                                       spath + (mname, mkids[0]["el"][4]))
                     return ("list", child)
                 # legacy 2-level list (backward-compat rule 2): the repeated
                 # child (primitive, multi-field group, or array/_tuple-named
                 # group) is itself the REQUIRED element
-                child = conv_node(mid, join(prefix, "l"), spath + (mname,), True)
+                child = conv_node(mid, _join(prefix, "l"), spath + (mname,), True)
                 return ("list", child)
             fields = []
             for k in kids:
                 fname = k["el"][4]
-                fields.append((fname, conv_node(k, join(prefix, f"s{fname}"), spath + (fname,))))
+                fields.append((fname, conv_node(k, _join(prefix, f"s{fname}"), spath + (fname,))))
             return ("struct", fields)
 
         tree = conv_node(raw, "", (name,))

@@ -273,12 +273,16 @@ def _encoded_type(col: str, t: pa.DataType, fixed_len) -> pa.DataType:
 def decoded_schema(types: dict[str, pa.DataType], fixed_len) -> dict[str, tuple[str, int]]:
     """{chunk name: (logical, type_length)} of every chunk an encode of
     columns with these arrow types writes, from the types alone
-    (``pages.column_leaves``: no codec or kernel run)."""
-    return {
-        col + suffix: leaf
-        for col, t in types.items()
-        for suffix, leaf in column_leaves(_encoded_type(col, t, fixed_len)).items()
-    }
+    (``pages.column_leaves``: no codec or kernel run).  A type the codec
+    layer does not take raises TypeError naming the column."""
+    leaves = {}
+    for col, t in types.items():
+        try:
+            col_leaves = column_leaves(_encoded_type(col, t, fixed_len))
+        except TypeError as e:
+            raise TypeError(f"column {col!r}: {e}") from None
+        leaves.update((col + suffix, leaf) for suffix, leaf in col_leaves.items())
+    return leaves
 
 
 def _encode_partition_factory(
