@@ -352,13 +352,25 @@ def _varbin_to_decimal(lens: np.ndarray, payload: np.ndarray, t: pa.Decimal128Ty
     FIXED_LEN_BYTE_ARRAY with every length equal."""
     if (lens > 16).any():
         raise ValueError(f"{t}: a stored value is wider than 16 bytes")
-    # each value right-aligned in 16 bytes: the mask's cells, read row by
-    # row, are the payload in order; the cells left of a value take its sign
-    own = np.arange(16) >= (16 - lens)[:, None]
-    be16 = np.zeros(own.shape, dtype=np.uint8)
-    be16[own] = payload
-    neg = be16[np.arange(len(lens)), np.minimum(16 - lens, 15)] >= 128  # the first byte (0 when empty)
-    be16[~own & neg[:, None]] = 255
+    n = len(lens)
+    if n and (lens == lens[0]).all():
+        # one width k (FLBA): the payload is an (n, k) matrix, right-aligned
+        # by one slice assignment; the bytes left of it take the sign of
+        # its first byte
+        k = int(lens[0])
+        vals = payload.reshape(n, k)
+        be16 = np.empty((n, 16), dtype=np.uint8)
+        be16[:, 16 - k:] = vals
+        be16[:, : 16 - k] = (vals[:, :1] >= 128) * np.uint8(255) if k else 0
+    else:
+        # each value right-aligned in 16 bytes: the mask's cells, read row
+        # by row, are the payload in order; the cells left of a value take
+        # its sign
+        own = np.arange(16) >= (16 - lens)[:, None]
+        be16 = np.zeros(own.shape, dtype=np.uint8)
+        be16[own] = payload
+        neg = be16[np.arange(n), np.minimum(16 - lens, 15)] >= 128  # the first byte (0 when empty)
+        be16[~own & neg[:, None]] = 255
     return pa.Array.from_buffers(t, len(lens), [None, pa.py_buffer(np.ascontiguousarray(be16[:, ::-1]).tobytes())])
 
 

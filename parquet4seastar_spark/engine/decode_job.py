@@ -3,10 +3,18 @@
 Mirrors the reference read path (SURVEY.md §3.2): pages grouped per chunk,
 dictionary page loaded first, values reassembled with nulls from def levels.
 Spark shape (``_by_chunk``, shared with verify.audit_lineage and
-export.export_parquet_files): repartition(part_key, chunk_seq), a sort
-within each partition by (part_key, chunk_seq, column, page_idx), then ONE
-mapInArrow that cuts every Arrow batch into (part_key, chunk_seq) runs --
-one Python call per batch, not one Arrow round trip per chunk.  Output is
+export.export_parquet_files): every (part_key, chunk_seq) group reaches
+the chunk function whole, its rows sorted by (column, page_idx), through
+the same run loop (``_chunk_groups``: one Python call per Arrow batch of
+key runs, not one Arrow round trip per chunk), by one of two paths.  A
+bare, unpersisted parquet scan of local files (``read_store``, or a plain
+``spark.read.parquet`` of a flat or column-partitioned store) is read by
+the Python workers themselves, like the reference's column chunk reader
+(file_reader.cc:114-154): the driver deals the keys to tasks by bytes and
+each task reads the files that hold its keys with pyarrow -- no exchange.
+Any other frame is repartitioned on (part_key, chunk_seq) and sorted
+within each partition by (part_key, chunk_seq, column, page_idx) before
+ONE mapInArrow.  Output is
 (row_id, <column values>) rows over the row_id chunk + the requested
 column chunks, joinable back to the source for the round-trip sha256
 verification (BASELINE.json per-row invariant).
@@ -25,6 +33,7 @@ objects.
 
 from __future__ import annotations
 
+import heapq
 import json
 import operator
 from collections import Counter
@@ -38,6 +47,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
+from pyspark.storagelevel import StorageLevel
 
 from ..codecs.bloom import probe_positions
 from ..codecs.pages import (
@@ -148,6 +158,13 @@ def _chunk_filter(columns: list[str]) -> Column:
     return pred
 
 
+def _is_wanted(name: str | None, columns: list[str]) -> bool:
+    """``_chunk_filter`` for one chunk name, in Python."""
+    return name is not None and (
+        name in ("row_id", *columns) or name.startswith(tuple(leaf_prefix(c) for c in columns))
+    )
+
+
 def _key_runs(batch: pa.RecordBatch) -> list[tuple[int, int]]:
     """[start, end) row ranges of equal (part_key, chunk_seq) in ``batch``.
     A NULL key cuts a run; the caller rejoins runs with equal keys."""
@@ -164,41 +181,156 @@ def _key_runs(batch: pa.RecordBatch) -> list[tuple[int, int]]:
     return list(zip(bounds[:-1], bounds[1:]))
 
 
-def _by_chunk(frame: DataFrame, fn, schema) -> DataFrame:
-    """``fn(_ChunkGroup) -> pa.Table`` (rows of ``schema``) once per
-    (part_key, chunk_seq) group of ``frame``.
+def _chunk_groups(batches, fn):
+    """``fn(_ChunkGroup)``'s batches for each (part_key, chunk_seq) run of
+    ``batches``, which arrive sorted by key.  The run that reaches the end
+    of a batch is carried into the next one, so a group split by a batch
+    boundary still reaches ``fn`` whole; the carry never holds more than
+    one group."""
+    carry: list[pa.RecordBatch] = []
+    key = None
+    for batch in batches:
+        pks, seqs = batch.column("part_key"), batch.column("chunk_seq")
+        for lo, hi in _key_runs(batch):
+            k = (pks[lo].as_py(), seqs[lo].as_py())
+            if carry and k != key:
+                yield from fn(_ChunkGroup(pa.Table.from_batches(carry))).to_batches()
+                carry = []
+            carry.append(batch.slice(lo, hi - lo))
+            key = k
+    if carry:
+        yield from fn(_ChunkGroup(pa.Table.from_batches(carry))).to_batches()
 
-    One exchange on the key with no partition count (AQE may coalesce it),
-    a sort within each partition by key, column and page_idx, then one
-    mapInArrow that cuts each Arrow batch into key runs.  The run that
-    reaches the end of a batch is carried into the next one, so a group
-    split by a batch boundary still reaches ``fn`` whole; the carry never
-    holds more than one group.
+
+# the fields a chunk group's rows carry to ``_ChunkGroup`` and the chunk
+# functions (audit_lineage reads sha256), and the order both paths sort by
+_GROUP_FIELDS = (
+    "part_key", "chunk_seq", "kind", "column", "page_idx", "page_kind", "encoding",
+    "num_values", "num_non_null", "uncompressed_size", "compressed_size", "data",
+    "n_pages", "sha256", *_META_FIELDS,
+)
+_SORT_KEYS = ("part_key", "chunk_seq", "column", "page_idx")
+
+
+def _by_chunk(encoded: DataFrame, fn, schema, columns: list[str] | None = None) -> DataFrame:
+    """``fn(_ChunkGroup) -> pa.Table`` (rows of ``schema``) once per
+    (part_key, chunk_seq) group of ``encoded``'s rows: every row when
+    ``columns`` is None, else the page rows of row_id's and ``columns``'
+    chunks (``_chunk_filter``).
+
+    Each group reaches ``fn`` whole, its rows sorted by column and
+    page_idx, through one of two paths:
+
+    - a bare parquet scan of local files (``_local_scan_files`` resolves:
+      ``read_store``, or ``spark.read.parquet`` of a flat or
+      column-partitioned store) that is not persisted is read by the
+      Python workers themselves (``_by_file_group``), with no exchange;
+    - any other frame (persisted or computed frames, ``prune_chunks``'
+      filtered output, an encode's output) takes one exchange on the key
+      with no partition count (AQE may coalesce it), a sort within each
+      partition by key, column and page_idx, then one mapInArrow that
+      cuts each Arrow batch into key runs.
     """
+    files = None if encoded.storageLevel != StorageLevel.NONE else _local_scan_files(encoded)
+    if files is not None:
+        return _by_file_group(encoded, files, fn, schema, columns)
 
     def by_chunk(batches):
         from parquet4seastar_spark import _alloc
 
         _alloc.tune_allocator()
-        carry: list[pa.RecordBatch] = []
-        key = None
-        for batch in batches:
-            pks, seqs = batch.column("part_key"), batch.column("chunk_seq")
-            for lo, hi in _key_runs(batch):
-                k = (pks[lo].as_py(), seqs[lo].as_py())
-                if carry and k != key:
-                    yield from fn(_ChunkGroup(pa.Table.from_batches(carry))).to_batches()
-                    carry = []
-                carry.append(batch.slice(lo, hi - lo))
-                key = k
-        if carry:
-            yield from fn(_ChunkGroup(pa.Table.from_batches(carry))).to_batches()
+        yield from _chunk_groups(batches, fn)
 
+    if columns is not None:
+        encoded = encoded.filter((F.col("kind") == "page") & _chunk_filter(columns))
     return (
-        frame.repartition("part_key", "chunk_seq")
-        .sortWithinPartitions("part_key", "chunk_seq", "column", "page_idx")
+        encoded.repartition("part_key", "chunk_seq")
+        .sortWithinPartitions(*_SORT_KEYS)
         .mapInArrow(by_chunk, schema)
     )
+
+
+def _by_file_group(encoded: DataFrame, files, fn, schema, columns: list[str] | None) -> DataFrame:
+    """``_by_chunk`` over the local parquet ``files`` of a bare scan, with
+    no exchange.
+
+    The driver reads the (part_key, chunk_seq) and compressed_size of
+    every row of the needed files with pyarrow (``_read_index_local``, the
+    reader prune_chunks uses: no Spark job), sums each key's bytes and deals
+    the keys to ``min(#keys, defaultParallelism)`` tasks by bytes, largest
+    first, each to the least loaded task.  A task's keys are grouped by
+    the set of files that hold them; the task reads one such file group at
+    a time (``_read_group_rows``): its rows of those keys, sorted as the
+    exchange path sorts them, go through the same run loop.  A key spread
+    over several files (two appends that share a part key) meets in one
+    task, so its page set is checked whole.
+    """
+    if columns is not None:  # a partition directory of another column is never read
+        files = [(path, value) for path, value in files if value is None or _is_wanted(value, columns)]
+    keys, _ = _read_index_local(files, None, [], [], encoded.schema)
+    holders: dict[tuple, list[int]] = {}
+    size: Counter = Counter()
+    if keys:
+        per_file = pa.concat_tables(keys).group_by(["part_key", "chunk_seq", "file"]).aggregate(
+            [("bytes", "sum")]
+        )
+        for pk, seq, f, b in zip(*(per_file.column(c).to_pylist() for c in (
+                "part_key", "chunk_seq", "file", "bytes_sum"))):
+            holders.setdefault((pk, seq), []).append(f)
+            size[pk, seq] += b or 0
+    spark = encoded.sparkSession
+    n_tasks = min(len(holders), spark.sparkContext.defaultParallelism)
+    if n_tasks == 0:
+        return spark.createDataFrame([], schema)
+    load = [(0, t) for t in range(n_tasks)]
+    plan: list[dict[tuple, list]] = [{} for _ in range(n_tasks)]
+    for k in sorted(holders, key=lambda k: (-size[k], repr(k))):
+        used, t = heapq.heappop(load)
+        plan[t].setdefault(tuple(sorted(holders[k])), []).append(k)
+        heapq.heappush(load, (used + size[k], t))
+    fields = [c for c in _GROUP_FIELDS if c in encoded.columns]
+    types = {c: to_arrow_type(encoded.schema[c].dataType) for c in fields}
+
+    def by_file_group(batches):
+        from parquet4seastar_spark import _alloc
+
+        _alloc.tune_allocator()
+        for batch in batches:
+            for t in batch.column("id").to_pylist():
+                for group, group_keys in plan[t].items():
+                    rows = _read_group_rows([files[i] for i in group], set(group_keys), columns, types)
+                    yield from _chunk_groups(rows.to_batches(), fn)
+
+    return spark.range(0, n_tasks, 1, n_tasks).mapInArrow(by_file_group, schema)
+
+
+def _read_group_rows(files, keys: set, columns: list[str] | None, types: dict) -> pa.Table:
+    """The rows of ``keys`` in ``files`` (only page rows of ``columns``'
+    chunks unless ``columns`` is None), with the fields of ``types`` (a
+    field a file lacks reads as nulls, ``column`` of a partitioned file is
+    its directory's value), sorted by ``_SORT_KEYS`` as Spark sorts:
+    nulls first."""
+    parts = []
+    for path, value in files:
+        with pq.ParquetFile(path) as pf:
+            have = set(pf.schema_arrow.names)
+            read = [c for c in types if c in have and not (c == "column" and value is not None)]
+            for batch in pf.iter_batches(columns=read):
+                n = batch.num_rows
+                cols = {c: batch.column(c) if c in read else pa.nulls(n, types[c]) for c in types}
+                if value is not None:
+                    cols["column"] = pa.array([value] * n, types["column"])
+                keep = [k in keys for k in zip(cols["part_key"].to_pylist(), cols["chunk_seq"].to_pylist())]
+                if columns is not None:
+                    keep = [
+                        m and kind == "page" and _is_wanted(name, columns)
+                        for m, kind, name in zip(keep, cols["kind"].to_pylist(), cols["column"].to_pylist())
+                    ]
+                part = pa.table(cols)
+                parts.append(part if all(keep) else part.filter(pa.array(keep, pa.bool_())))
+    rows = pa.concat_tables(parts)
+    order = pc.sort_indices(rows, sort_keys=[(c, "ascending") for c in _SORT_KEYS], null_placement="at_start")
+    return rows.take(order)
 
 
 def _cmp(x, op: str, v) -> np.ndarray:
@@ -259,21 +391,33 @@ def _probe_words(bloom: pa.ListArray, words: list[int]) -> dict[str, pa.Array]:
     return {f"w{w}": bloom.values.take(pa.array(starts + w, mask=length <= w)) for w in words}
 
 
-def _read_index_local(files, column: str, want: list[str], words: list[int], schema: StructType):
+def _read_index_local(files, column: str | None, want: list[str], words: list[int], schema: StructType):
     """``(keys, chunks)`` read with pyarrow: the (part_key, chunk_seq) of
-    every row, and (part_key, chunk_seq, *want, probe words) of the
-    ``column`` chunk rows.  A column a file lacks reads as nulls."""
+    every row with its ``file`` (index into ``files``) and ``bytes``
+    (compressed_size), and (part_key, chunk_seq, *want, probe words) of
+    the ``column`` chunk rows (none when ``column`` is None).  A column a
+    file lacks reads as nulls."""
+
+    def get(batch, c):
+        if c in batch.schema.names:
+            return batch.column(c)
+        return pa.nulls(batch.num_rows, to_arrow_type(schema[c].dataType))
+
     keys, chunks = [], []
-    for path, value in files:
+    for i, (path, value) in enumerate(files):
         pf = pq.ParquetFile(path)
         have = set(pf.schema_arrow.names)
-        probed = value is None or value == column
-        cols = ["part_key", "chunk_seq"]
+        probed = column is not None and (value is None or value == column)
+        cols = ["part_key", "chunk_seq", "compressed_size"]
         if probed:
             cols += ["kind", *(["column"] if value is None else []), *want]
             cols += ["bloom"] if words else []
         for batch in pf.iter_batches(columns=[c for c in cols if c in have]):
-            keys.append(pa.table({k: batch.column(k) for k in ("part_key", "chunk_seq")}))
+            keys.append(pa.table({
+                "part_key": batch.column("part_key"), "chunk_seq": batch.column("chunk_seq"),
+                "file": pa.array(np.full(batch.num_rows, i, dtype=np.int32)),
+                "bytes": get(batch, "compressed_size"),
+            }))
             if not probed:
                 continue
             hit = pc.equal(batch.column("kind"), "chunk")
@@ -283,23 +427,18 @@ def _read_index_local(files, column: str, want: list[str], words: list[int], sch
             if not pc.any(hit).as_py():
                 continue
             batch = batch.filter(hit)
-            cols_out = {
-                c: batch.column(c) if c in have
-                else pa.nulls(batch.num_rows, to_arrow_type(schema[c].dataType))
-                for c in ("part_key", "chunk_seq", *want)
-            }
+            cols_out = {c: get(batch, c) for c in ("part_key", "chunk_seq", *want)}
             if words:
-                bloom = batch.column("bloom") if "bloom" in have else pa.nulls(
-                    batch.num_rows, pa.list_(pa.int64()))
-                cols_out.update(_probe_words(bloom, words))
+                cols_out.update(_probe_words(get(batch, "bloom"), words))
             chunks.append(pa.table(cols_out))
     return keys, chunks
 
 
 def _read_index_spark(encoded: DataFrame, column: str, want: list[str], words: list[int]):
-    """``(keys, chunks)`` as ``_read_index_local`` returns them, from ONE
-    ``toArrow()`` of the frame projected to its keys plus, on the
-    ``column`` chunk rows, the index columns."""
+    """``(keys, chunks)`` as ``_read_index_local`` returns them (the keys
+    without ``file`` and ``bytes``), from ONE ``toArrow()`` of the frame
+    projected to its keys plus, on the ``column`` chunk rows, the index
+    columns."""
     hit = F.coalesce((F.col("kind") == "chunk") & (F.col("column") == column), F.lit(False))
     tbl = encoded.select(
         "part_key", "chunk_seq", hit.alias("_hit"),
@@ -484,17 +623,15 @@ def decode_table(
     evaluated once for the collect and again for the decode, unless the
     caller persisted it.
     """
-    wanted = _chunk_filter(columns)
     schema = _planned_schema(encoded, columns)
     if schema is None:
         schema = {
             r["column"]: (r["logical"], int(r["type_length"] or 0))
-            for r in encoded.filter((F.col("kind") == "chunk") & wanted)
+            for r in encoded.filter((F.col("kind") == "chunk") & _chunk_filter(columns))
             .select("column", "logical", "type_length")
             .distinct()
             .collect()
         }
-    pages = encoded.filter((F.col("kind") == "page") & wanted)
     members = {c: column_chunks(c, schema) for c in ["row_id", *columns]}
     for c, names in members.items():
         if not names:
@@ -543,4 +680,4 @@ def decode_table(
             out = {"_part_key": pa.array([pk] * len(out["row_id"]), type=pa.string()), **out}
         return pa.table(out)
 
-    return _by_chunk(pages, decode_group, out_schema)
+    return _by_chunk(encoded, decode_group, out_schema, columns)

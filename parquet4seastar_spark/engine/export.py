@@ -14,8 +14,9 @@ Each column's chunks come from the codec layer's one column rule
 container writer as one ``DremelColumn``: a flat or list<primitive>
 column's single chunk and a nested column's Dremel leaves alike.
 
-Scale shape: the decoder's one per-chunk pass (decode_job._by_chunk: a
-repartition on (part_key, chunk_seq) and one mapInArrow over key runs);
+Scale shape: the decoder's one per-chunk pass (decode_job._by_chunk: the
+workers read a local store's files themselves; any other frame takes a
+repartition on (part_key, chunk_seq); then one mapInArrow over key runs);
 each task writes its own files to the (shared) output directory -- no
 driver-side collection of data.
 """
@@ -25,10 +26,10 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..codecs.parquet_file import DremelColumn, write_parquet_file
-from .decode_job import _by_chunk, _chunk_filter, _ChunkGroup
+from .decode_job import _by_chunk, _ChunkGroup
 
 
 def export_parquet_files(
@@ -37,7 +38,6 @@ def export_parquet_files(
     """Write each (part_key, chunk_seq) chunk group as a standard .parquet
     file under ``out_dir``; returns (part_key, chunk_seq, file, num_rows)."""
     os.makedirs(out_dir, exist_ok=True)
-    pages = encoded.filter((F.col("kind") == "page") & _chunk_filter(columns))
 
     def write_group(group: _ChunkGroup) -> pa.Table:
         chunks = {c: group.column(c) for c in ["row_id", *columns]}
@@ -56,5 +56,5 @@ def export_parquet_files(
         )
 
     return _by_chunk(
-        pages, write_group, "part_key string, chunk_seq int, file string, num_rows long"
+        encoded, write_group, "part_key string, chunk_seq int, file string, num_rows long", columns
     )

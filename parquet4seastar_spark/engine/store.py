@@ -39,12 +39,18 @@ LOCAL-FS LIMITATION (ADVICE r6): :func:`is_column_store`,
 directories with ``os.listdir`` and read that footer from the driver's
 filesystem, so driver-side auto-detection, guaranteed pruning and the
 job-free schema only work for paths the driver's filesystem can see
-(local disk, NFS, fuse mounts).  On HDFS/S3 URLs the CLI's auto-detect
-degrades to the plain-read path — which STILL prunes via Catalyst's
-partition filters (the second read path above), just without the
-``inputFiles``-provable guarantee, and decode_table still plans from the
-recorded schema once Spark has inferred it.  Porting to the Hadoop
-FileSystem API is the known follow-up for remote stores.
+(local disk, NFS, fuse mounts).  The per-chunk passes (decode_table,
+audit_lineage, export_parquet_files) over a bare scan of ``file:`` paths
+go further: the driver reads every file's keys with pyarrow and the
+Python workers open the files themselves (``decode_job._by_chunk``), so
+those paths must be readable at the same place on every worker, as
+Spark's own ``file:`` scan already requires.  On HDFS/S3 URLs the CLI's
+auto-detect degrades to the plain-read path — which STILL prunes via
+Catalyst's partition filters (the second read path above), just without
+the ``inputFiles``-provable guarantee — and the per-chunk passes take
+their exchange path; decode_table still plans from the recorded schema
+once Spark has inferred it.  Porting to the Hadoop FileSystem API is the
+known follow-up for remote stores.
 """
 
 from __future__ import annotations

@@ -164,8 +164,9 @@ def audit_lineage(encoded: DataFrame) -> DataFrame:
     page corruption WITHOUT the source table.  Returns one row per chunk:
     (part_key, chunk_seq, column, ok, stored_sha, recomputed_sha).
 
-    Scale shape: the decoder's one per-chunk pass (decode_job._by_chunk);
-    each group audits independently.
+    Scale shape: the decoder's one per-chunk pass (decode_job._by_chunk:
+    with no exchange over a bare scan of a local store); each group
+    audits independently.
     """
     import pyarrow as pa
 

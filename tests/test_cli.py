@@ -9,16 +9,31 @@ import pytest
 _CLI = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "p4s_cli.py")
 
 
+def _load_cli():
+    spec = importlib.util.spec_from_file_location("p4s_cli", _CLI)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
 @pytest.fixture
 def cli(spark, monkeypatch):
     """The CLI module, its commands running on the test session (which
     they must not stop)."""
-    spec = importlib.util.spec_from_file_location("p4s_cli", _CLI)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _load_cli()
     monkeypatch.setattr(mod, "_spark", lambda args: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
     return mod
+
+
+def test_cql_value_quotes_dates_and_timestamps():
+    # an unquoted 2020-01-02 is arithmetic in CQL, not a date
+    import datetime
+
+    value = _load_cli()._cql_value
+    assert value(datetime.date(2020, 1, 2), "date") == "'2020-01-02'"
+    assert value(datetime.datetime(2020, 1, 2, 3, 4, 5), "timestamp_us") == "'2020-01-02T03:04:05'"
+    assert value([datetime.date(1969, 12, 31), None], "list<date>") == "['1969-12-31', null]"
 
 
 def test_dump_cql_renders_one_chunk_columns_and_refuses_dremel_ones(spark, cli, capsys, tmp_path):

@@ -354,12 +354,25 @@ def test_column_partitioned_store(spark, tmp_path):
     assert m["meta"]["n_chars"] == src["meta"]["n_chars"]
     assert m["meta"]["lang"] == src["meta"]["lang"]
 
-    # plain-read path: directory pruning via Catalyst partition filters
-    d = decode_table(spark.read.parquet(store), ["lang"])
+    # plain read behind a filter (the exchange path): directory pruning
+    # via Catalyst partition filters
+    d = decode_table(spark.read.parquet(store).filter(F.col("part_key").isNotNull()), ["lang"])
     plan = d._jdf.queryExecution().executedPlan().toString()
     assert re.search(
         r"PartitionFilters: \[\(column#\d+ IN \(row_id,lang\)", plan
     ), plan
+
+    # bare plain read (the workers read the files): the driver drops the
+    # other columns' directories, so garbling every text file after the
+    # read is planned leaves the decode untouched
+    plain = spark.read.parquet(store)
+    text_dir = os.path.join(store, "column=text")
+    for name in os.listdir(text_dir):
+        if name.endswith(".parquet"):
+            with open(os.path.join(text_dir, name), "wb") as f:
+                f.write(b"not parquet")
+    got = {r["row_id"]: r["lang"] for r in decode_table(plain, ["lang"]).collect()}
+    assert got == exp
 
 
 def test_twelve_leaf_struct_keeps_leaf_order_in_every_consumer(spark, tmp_path):

@@ -256,36 +256,69 @@ def test_store_and_chained_decodes_launch_no_planning_jobs(spark, tmp_path, jobs
     enc["df"].unpersist()
 
 
-def test_chunk_passes_repartition_once_then_map_in_arrow(spark, tmp_path):
-    # decode, audit and export share one per-chunk pass: a single
-    # repartition on (part_key, chunk_seq) with no partition count (AQE may
-    # coalesce it) and one mapInArrow over key runs -- no grouped-map stage
-    import re
-
+def _chunk_pass_plans(spark, tmp_path, frames) -> dict:
+    """{(frame, pass): executed plan} of decode_table, audit_lineage and
+    export_parquet_files over each of ``frames(store, flat)``, both
+    written from one encode."""
     from parquet4seastar_spark.engine.decode_job import decode_table
     from parquet4seastar_spark.engine.encode_job import encode_table
     from parquet4seastar_spark.engine.export import export_parquet_files
-    from parquet4seastar_spark.engine.store import read_store, write_store
+    from parquet4seastar_spark.engine.store import write_store
     from parquet4seastar_spark.engine.verify import audit_lineage
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         F.col("doc_id").alias("row_id"), "lang", "n_chars", "source"
     )
-    store = str(tmp_path / "store")
-    write_store(
-        encode_table(docs, columns=["lang", "n_chars"], policy="plain", salt_col="source",
-                     num_partitions=2),
-        store,
-    )
-    stored = read_store(spark, store, ["lang", "n_chars"])
-    plans = {
-        "decode": _plan(decode_table(stored, ["lang"])),
-        "audit": _plan(audit_lineage(stored)),
-        "export": _plan(export_parquet_files(stored, ["lang", "n_chars"], str(tmp_path / "x"))),
-    }
+    enc = encode_table(docs, columns=["lang", "n_chars"], policy="plain", salt_col="source",
+                       num_partitions=2).persist()
+    store, flat = str(tmp_path / "store"), str(tmp_path / "flat")
+    write_store(enc, store)
+    enc.write.parquet(flat)
+    enc.unpersist()
+    plans = {}
+    for name, frame in frames(store, flat).items():
+        plans[name, "decode"] = _plan(decode_table(frame, ["lang"]))
+        plans[name, "audit"] = _plan(audit_lineage(frame))
+        plans[name, "export"] = _plan(export_parquet_files(frame, ["lang", "n_chars"], str(tmp_path / "x")))
+    return plans
+
+
+def test_chunk_passes_on_an_in_memory_frame_repartition_once_then_map_in_arrow(spark, tmp_path):
+    # decode, audit and export share one per-chunk pass; over a frame that
+    # is not a bare scan of local files it is a single repartition on
+    # (part_key, chunk_seq) with no partition count (AQE may coalesce it)
+    # and one mapInArrow over key runs -- no grouped-map stage
+    import re
+
+    from parquet4seastar_spark.engine.store import read_store
+
+    persisted = []
+
+    def frames(store, flat):
+        persisted.append(read_store(spark, store, ["lang", "n_chars"]).persist())
+        return {"persisted": persisted[0]}
+
+    plans = _chunk_pass_plans(spark, tmp_path, frames)
+    persisted[0].unpersist()
     for name, plan in plans.items():
         assert "FlatMapGroupsIn" not in plan, (name, plan)
         assert "MapInArrow by_chunk" in plan, (name, plan)
         assert plan.count("Exchange ") == 1, (name, plan)
         pattern = r"Exchange hashpartitioning\(part_key#\d+, chunk_seq#\d+, \d+\), REPARTITION_BY_COL"
         assert len(re.findall(pattern, plan)) == 1, (name, plan)
+
+
+def test_chunk_passes_on_a_store_read_its_files_without_an_exchange(spark, tmp_path):
+    # a bare parquet scan of local files (read_store, or a plain read of a
+    # flat store) is read by the workers: one mapInArrow over a Range, with
+    # no Exchange and no Spark file scan below it
+    from parquet4seastar_spark.engine.store import read_store
+
+    plans = _chunk_pass_plans(spark, tmp_path, lambda store, flat: {
+        "read_store": read_store(spark, store, ["lang", "n_chars"]),
+        "flat": spark.read.parquet(flat),
+    })
+    for name, plan in plans.items():
+        assert "MapInArrow by_file_group" in plan, (name, plan)
+        below = plan[plan.index("MapInArrow by_file_group"):]
+        assert "Exchange" not in below and "FileScan" not in below and "Range (0, " in below, (name, plan)

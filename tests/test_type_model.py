@@ -147,3 +147,27 @@ def test_encode_table_names_the_column_of_an_unsupported_type(spark, jobs_launch
     msg, jobs = jobs_launched(call)
     assert msg == f"column 'small': unsupported arrow type for chunk encoding: {arrow_type}"
     assert jobs == 0
+
+
+@pytest.mark.parametrize("width", range(1, 17))
+def test_one_width_decimal_bytes_match_the_general_path(width):
+    # FLBA decimals (every value one width) take _varbin_to_decimal's
+    # one-slice branch; a trailing value of another width sends the same
+    # bytes down the per-value mask branch, and both must equal the
+    # two's-complement reading of each value
+    import numpy as np
+
+    from parquet4seastar_spark.codecs.pages import _varbin_to_decimal
+
+    t = pa.decimal128(38, 0)
+    top = 2 ** (8 * width - 1)
+    ints = [-top, -1, 0, 1, top - 1, -top // 3, top // 5, -(top // 7) - 1]
+    raw = b"".join(i.to_bytes(width, "big", signed=True) for i in ints)
+    other = 17 - width  # never equal to width
+    tail = (-5).to_bytes(other, "big", signed=True)
+    payload = np.frombuffer(raw + tail, dtype=np.uint8)
+
+    one = _varbin_to_decimal(np.full(len(ints), width), payload[: len(raw)], t)
+    general = _varbin_to_decimal(np.array([width] * len(ints) + [other]), payload, t)
+    assert one.to_pylist() == [Decimal(i) for i in ints]
+    assert one.equals(general.slice(0, len(ints))) and general[-1].as_py() == Decimal(-5)

@@ -77,7 +77,7 @@ def _cql_value(v, logical: str) -> str:
         return "'" + str(v).replace("'", "''") + "'"
     if logical in ("binary", "flba"):
         return "0x" + bytes(v).hex()
-    if logical == "timestamp_us":
+    if logical in ("timestamp_us", "date"):  # a bare 2020-01-02 is arithmetic
         return "'" + v.isoformat() + "'"
     if logical == "bool":
         return "true" if v else "false"
